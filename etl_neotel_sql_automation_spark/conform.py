@@ -50,7 +50,7 @@ def drop_all_null_rows(df: DataFrame) -> DataFrame:
     return df.na.drop(how="all")
 
 
-def conform(df: DataFrame, spec: ConformSpec, *, add_load_date: bool = False) -> DataFrame:
+def conform(df: DataFrame, spec: ConformSpec) -> DataFrame:
     """Conform an arbitrarily-shaped source DataFrame to ``spec``.
 
     Steps (numbering mirrors main.py:1219-1258):
@@ -96,10 +96,6 @@ def conform(df: DataFrame, spec: ConformSpec, *, add_load_date: bool = False) ->
 
     if spec.key_cols:
         df = df.na.drop(subset=[c for c in spec.key_cols if c in spec.final_cols])
-
-    if add_load_date:
-        # S-7 audit column (DDL DEFAULT GETDATE(), main.py:1400, 1439)
-        df = df.withColumn("load_date", F.current_timestamp())
     return df
 
 

@@ -7,6 +7,10 @@ main.py:425, ``procesar_columnas_enteros`` main.py:501,
 handling (main.py:1239, 1295, 1527-1531) as **pure built-in Spark
 column expressions** — no Python UDFs, so whole-stage codegen,
 predicate pushdown and column pruning stay intact (SURVEY.md §2.10).
+Each coercion is repeated once per column (26 time columns in
+``estados_operativos``), so it must stay small enough for the generated
+method to fit the JVM's 64 KB limit: time cells parse with one anchored
+regex rather than a split/trim/cast tree per part.
 
 Every expression is total (never raises) and ANSI-safe: all parsing
 uses ``try_*`` forms, so behavior is identical whether the session has
@@ -25,22 +29,20 @@ from pyspark.sql import functions as F
 # (main.py:442-443).
 TIME_SENTINELS = ("-", "", "nan", "None")
 
-# Python ``int()`` accepts optional sign + digits (after strip); anything
-# else — e.g. "30.5" — raises and the reference returns 0.0
-# (main.py:450-456 ``map(int, parts)``). Spark's string->int cast is more
-# lenient, so we guard with this regex to match Python exactly.
-_INT_RE = r"^[+-]?[0-9]+$"
+# What Python's ``str.strip()`` removes, ASCII part: ``int()`` and
+# ``float()`` strip only the first six (Java regex ``\s``), so the outer
+# strip and the separators of _HMS_RE differ on purpose.
+_PY_STRIP = " \t\n\x0b\x0c\r\x1c\x1d\x1e\x1f"
+
+# ``h:m`` or ``h:m:s``, each part what Python ``int()`` accepts (sign +
+# ASCII digits, whitespace at either end); "30.5" fails int() and the
+# reference returns 0.0 (main.py:450-456 ``map(int, parts)``). ``\z``,
+# not ``$``: Java's ``$`` also matches before a final line terminator.
+_HMS_RE = r"^([+-]?[0-9]+)\s*:\s*([+-]?[0-9]+)(?:\s*:\s*([+-]?[0-9]+))?\z"
 
 
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
-
-
-def _int_part(part: Column) -> Column:
-    """Parse one ``HH``/``MM``/``SS`` fragment exactly like Python int():
-    strip, require pure digits with optional sign, else null."""
-    t = F.trim(part)
-    return F.when(t.rlike(_INT_RE), t.try_cast("long"))
 
 
 def time_str_to_minutes(c: Column | str) -> Column:
@@ -50,33 +52,25 @@ def time_str_to_minutes(c: Column | str) -> Column:
 
     - null, ``'-'``, ``''``, ``'nan'``, ``'None'`` (after strip) -> 0.0
     - ``"01:30:00"`` -> 90.0; ``"02:15"`` -> 135.0 (h*60 + m + s/60)
-    - colon-form with non-integer parts (``"ab:cd"``, ``"1:30.5"``) -> 0.0
+    - colon-form with non-integer parts (``"ab:cd"``, ``"1:30.5"``) or a
+      part or ``h*60 + m`` beyond a long -> 0.0
     - no colon: ``float(str)`` -> value, unparseable -> 0.0
 
     A single per-value expression subsumes the reference's column-level
     autodetect two-pass (``procesar_columnas_tiempo`` main.py:465-498):
     a value without ``:`` falls through to the numeric branch.
     """
-    s = F.trim(_col(c).cast("string"))
-    parts = F.split(s, ":")
-    n = F.size(parts)
-    # F.get (not parts[i]): null-safe on short arrays even under ANSI mode.
-    h = _int_part(F.get(parts, 0))
-    m = _int_part(F.get(parts, 1))
-    sec = _int_part(F.get(parts, 2))
-    hms = (
-        F.when(
-            (n == 3) & h.isNotNull() & m.isNotNull() & sec.isNotNull(),
-            h * 60 + m + sec / F.lit(60.0),
-        )
-        .when((n == 2) & h.isNotNull() & m.isNotNull(), (h * 60 + m).cast("double"))
-        .otherwise(F.lit(0.0))
-    )
+    s = F.trim(_col(c).cast("string"), F.lit(_PY_STRIP))
+    h, m, sec = (F.regexp_extract(s, _HMS_RE, i) for i in (1, 2, 3))
+    # An unmatched group extracts as "": a missing seconds part is 0, a
+    # failed match or a part or sum that overflows a long is null -> 0.0.
+    sec = F.when(sec == "", F.lit(0)).otherwise(sec.try_cast("long"))
+    hm = F.try_add(F.try_multiply(h.try_cast("long"), F.lit(60)), m.try_cast("long"))
+    hms = hm + sec / F.lit(60.0)
     return (
         F.when(s.isNull() | s.isin(*TIME_SENTINELS), F.lit(0.0))
-        .when(s.contains(":"), hms)
+        .when(s.contains(":"), F.coalesce(hms, F.lit(0.0)))
         .otherwise(F.coalesce(s.try_cast("double"), F.lit(0.0)))
-        .cast("double")
     )
 
 
@@ -86,11 +80,12 @@ def int0(c: Column | str) -> Column:
     Parity target: ``pd.to_numeric(errors='coerce').fillna(0).astype(int)``
     (main.py:501-513): ``"3.7"`` -> 3 (numeric-then-truncate), ``"x"``/null
     -> 0. The cast path must go string->double->int — a direct string->int
-    cast would null out ``"3.7"`` instead of truncating.
+    cast would null out ``"3.7"`` instead of truncating. A value outside
+    the INT column's range (``"3e9"``) -> 0: a plain cast would saturate,
+    or raise under ANSI.
     """
-    return (
-        F.coalesce(_col(c).cast("string").try_cast("double"), F.lit(0.0))
-        .cast("int")
+    return F.coalesce(
+        _col(c).cast("string").try_cast("double").try_cast("int"), F.lit(0)
     )
 
 
@@ -131,11 +126,6 @@ def date_to_iso(c: Column | str) -> Column:
     s = _col(c).cast("string")
     parsed = F.try_to_timestamp(F.trim(s), F.lit("d/M/yyyy"))
     return F.coalesce(F.date_format(parsed, "yyyy-MM-dd"), s)
-
-
-def yesterday_ddmmyyyy() -> Column:
-    """``now - 1 day`` formatted ``dd/MM/yyyy`` (main.py:201-209)."""
-    return F.date_format(F.date_sub(F.current_date(), 1), "dd/MM/yyyy")
 
 
 def clean_name(name: object) -> str:

@@ -6,7 +6,7 @@ Parity targets: multi-encoding + delimiter-sniffing CSV read
 dispatch (main.py:1188-1204, applied 1330-1358).
 
 Spark has no ``sep=None`` sniffing, so the dialect sniff runs
-driver-side on the first KB of each file (cheap, one local read), then
+driver-side on the first 8 KB of each file (cheap, one local read), then
 the distributed ``spark.read.csv`` gets explicit ``sep``/``encoding``.
 At scale the landing pattern assumes per-file dialects are uniform
 within a directory batch — matching the reference's one-file-per-report
@@ -15,6 +15,7 @@ model.
 
 from __future__ import annotations
 
+import codecs
 import csv
 import logging
 from pathlib import Path
@@ -36,24 +37,27 @@ _CANDIDATE_DELIMS = ",;\t|"
 def sniff_csv_dialect(path: str | Path, sample_bytes: int = 8192) -> tuple[str, str]:
     """Return (encoding, delimiter) for a CSV file.
 
-    Encoding: first of ENCODINGS that decodes the sample without error
+    Reads only the first ``sample_bytes`` of the file. Encoding: first
+    of ENCODINGS that decodes the sample without error
     (latin-1 never fails, so it acts as the catch-all, as in the
     reference's fallback chain). Delimiter: ``csv.Sniffer`` over the
     decoded sample, falling back to the most frequent candidate in the
     header line, then ','.
     """
-    blob = Path(path).read_bytes()[:sample_bytes]
+    with open(path, "rb") as fh:
+        blob = fh.read(sample_bytes)
+    # A full sample may end inside a multibyte character; only a file
+    # shorter than the sample must end on a character boundary.
+    final = len(blob) < sample_bytes
     encoding = "ISO-8859-1"
     sample = ""
     for py_enc, spark_enc in ENCODINGS:
         try:
-            sample = blob.decode(py_enc)
+            sample = codecs.getincrementaldecoder(py_enc)().decode(blob, final)
             encoding = spark_enc
             break
         except UnicodeDecodeError:
             continue
-    if not sample:
-        sample = blob.decode("latin-1")
     try:
         sep = csv.Sniffer().sniff(sample, delimiters=_CANDIDATE_DELIMS).delimiter
     except csv.Error:

@@ -43,9 +43,8 @@ def infer_landing_schema(spark: SparkSession, landing_dir: str | Path) -> tuple[
     if not files:
         raise FileNotFoundError(f"no csv in {landing_dir} to infer header from")
     encoding, sep = sniff_csv_dialect(files[0])
-    header = (
-        Path(files[0]).read_bytes().split(b"\n", 1)[0].decode(encoding.lower(), "replace")
-    ).rstrip("\r")
+    with open(files[0], "rb") as fh:
+        header = fh.readline().decode(encoding.lower(), "replace").rstrip("\r\n")
     cols = [c.strip() for c in header.split(sep)]
     return T.StructType([T.StructField(c, T.StringType(), True) for c in cols]), encoding, sep
 

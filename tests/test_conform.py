@@ -14,6 +14,7 @@ from etl_neotel_sql_automation_spark.conform import (
     drop_all_null_rows,
     normalize_column_names,
 )
+from etl_neotel_sql_automation_spark.io_sinks import add_audit_column
 from etl_neotel_sql_automation_spark.schema import (
     CONDUCTA_FINAL_COLS,
     CONDUCTA_SPEC,
@@ -92,6 +93,23 @@ def test_conform_estados(spark):
             assert getattr(rows["ana"], c) == 0.0, c
 
 
+def test_conform_estados_compiles(spark):
+    """With all 26 time columns present, the conformed projection must
+    compile: no silent fallback to interpreted execution when the
+    generated method outgrows the JVM's 64 KB limit."""
+    row = ["13/08/2026", "09:00 - 09:30", "1", "ana", "5", "v"]
+    row += ["01:02:03"] * (len(ESTADOS_FINAL_COLS) - len(row))
+    df = spark.createDataFrame([row], ESTADOS_FINAL_COLS)
+    key = "spark.sql.codegen.fallback"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        [out] = conform(df, ESTADOS_SPEC).collect()
+    finally:
+        spark.conf.set(key, before)
+    assert out.t_login == pytest.approx(62.05)
+
+
 def test_normalize_collision_suffix(spark):
     df = spark.createDataFrame([(1, 2)], ["A b", "a_b"])
     out = normalize_column_names(df)
@@ -109,13 +127,13 @@ def test_drop_all_null_rows(spark):
 def test_conform_is_narrow(spark):
     """Conformance must not shuffle: the physical plan should contain
     no Exchange — it's a single projection over the scan."""
-    out = conform(_raw_conducta(spark), CONDUCTA_SPEC, add_load_date=True)
+    out = add_audit_column(conform(_raw_conducta(spark), CONDUCTA_SPEC))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "EvalPython" not in plan
 
 
 def test_conform_load_date(spark):
-    out = conform(_raw_conducta(spark), CONDUCTA_SPEC, add_load_date=True)
+    out = add_audit_column(conform(_raw_conducta(spark), CONDUCTA_SPEC))
     assert out.columns[-1] == "load_date"
     assert all(r.load_date is not None for r in out.collect())

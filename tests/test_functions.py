@@ -40,6 +40,13 @@ TIME_CASES = [
     ("1e2", 100.0),         # float("1e2") in the numeric branch
     ("garbage", 0.0),
     ("123", 123.0),
+    ("01:30:00\t", 90.0),  # str.strip() removes all whitespace, not just ' '
+    ("\t02:15", 135.0),
+    ("1:\t30", 90.0),      # int("\t30") is valid Python
+    ("nan\t", 0.0),        # a sentinel once stripped, not float("nan")
+    ("\x1c1:30\x1f", 90.0),  # str.strip() removes \x1c-\x1f ...
+    ("1:\x1c30", 0.0),       # ... but int() does not
+    ("999999999999999999:00", 0.0),  # h*60 overflows a long
 ]
 
 
@@ -58,6 +65,8 @@ INT_CASES = [
     ("", 0),
     (None, 0),
     ("1e3", 1000),
+    ("3e9", 0),             # outside the INT column's range
+    ("NaN", 0),
 ]
 
 
@@ -128,7 +137,8 @@ def test_ansi_safety(spark):
     the driver's session may have it on)."""
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try:
-        vals = ["ab:cd", "1:2:3:4", "garbage", "", None, "99/99/2026", "3.7"]
+        vals = ["ab:cd", "1:2:3:4", "garbage", "", None, "99/99/2026", "3.7", "3e9",
+                "999999999999999999:00"]
         _eval(spark, ef.time_str_to_minutes("v"), vals)
         _eval(spark, ef.int0("v"), vals)
         _eval(spark, ef.float0("v"), vals)

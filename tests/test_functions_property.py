@@ -14,7 +14,15 @@ from etl_neotel_sql_automation_spark import functions as ef
 
 
 def _py_time_to_minutes(v) -> float:
-    """Python model of main.py:425-462 (test oracle, not engine code)."""
+    """Python model of main.py:425-462 (test oracle, not engine code).
+
+    ``str.strip()`` removes every whitespace character before the
+    sentinel check, so ``"nan\\t"`` is the ``nan`` sentinel (0.0), not
+    ``float("nan")``. It also removes ``\\x1c``-``\\x1f``, which ``int()``
+    and ``float()`` keep: ``"1:\\x1c30"`` is 0.0. The fuzz alphabet has
+    no such characters; TIME_CASES in test_functions.py pins them. A
+    part of 19+ digits is a big int here but 0.0 in the engine (long
+    overflow); the fuzz values are too short to reach it."""
     if v is None or str(v).strip() in ("-", "", "nan", "None"):
         return 0.0
     try:
@@ -35,7 +43,7 @@ def _py_time_to_minutes(v) -> float:
 
 def _fuzz_values(n=3000, seed=42):
     rng = random.Random(seed)
-    alphabet = string.digits + ":.-+ abc"
+    alphabet = string.digits + ":.-+ abc\t\n\rn"
     vals = [None, "-", "", "nan", "None", "00:00:00", "1:2", "1:2:3"]
     while len(vals) < n:
         vals.append("".join(rng.choice(alphabet) for _ in range(rng.randint(0, 12))))
@@ -56,14 +64,17 @@ def test_time_to_minutes_fuzz_parity(spark):
 
 
 def _py_int0(v):
-    """Python model of pd.to_numeric(errors='coerce').fillna(0).astype(int)."""
+    """Python model of pd.to_numeric(errors='coerce').fillna(0).astype(int),
+    landing in a 32-bit INT column: the reference's insert of a value
+    outside that range fails, and the engine coerces it to 0 instead."""
     try:
         f = float(str(v).strip()) if v is not None and str(v).strip() != "" else 0.0
     except (ValueError, TypeError):
         f = 0.0
     if f != f or f in (float("inf"), float("-inf")):
         f = 0.0
-    return int(f)
+    i = int(f)
+    return i if -(2**31) <= i < 2**31 else 0
 
 
 def test_numeric_coercion_fuzz_parity(spark):

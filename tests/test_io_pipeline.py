@@ -70,6 +70,17 @@ def test_cp1252_specific_bytes_map_via_latin1(spark, tmp_path):
     assert row["note"] == "\x80100 \x92quoted\x92 \x97 dash"
 
 
+def test_sniff_utf8_char_straddling_sample_end(spark, tmp_path):
+    """A UTF-8 character cut by the 8 KB sniff sample must not demote
+    the file to ISO-8859-1, which would load every accent as mojibake."""
+    head = "id,name\n1,"
+    p = tmp_path / "conducta.csv"
+    p.write_bytes((head + "a" * (8191 - len(head)) + "é\n").encode("utf-8"))
+    assert sniff_csv_dialect(p) == ("UTF-8", ",")
+    [row] = read_csv_robust(spark, p).collect()
+    assert row["name"].endswith("aé")
+
+
 def test_excel_bridge_gated_without_libs(spark, tmp_path):
     """Without openpyxl/xlrd the bridge must fail with the explicit
     NotImplementedError, not a raw ImportError mid-pipeline."""
