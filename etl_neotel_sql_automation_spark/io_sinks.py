@@ -94,7 +94,10 @@ class JdbcStagingWriter:
           + daily run) never interleave rows or clobber each other;
         - the INSERT names columns explicitly on both sides, so it
           survives target/staging column-order differences;
-        - the staging table is DROPped inside the transaction;
+        - the staging table is DROPped inside the transaction; if the
+          staging append or the transaction fails, it is dropped
+          (``IF EXISTS``) on its own connection before the error
+          propagates, so no failure path leaves it behind;
         - the input is computed ONCE (cheap ``isEmpty`` guard, then the
           Spark write); the returned row count is the DB-reported
           INSERT rowcount (-1 if the driver does not report one).
@@ -108,23 +111,40 @@ class JdbcStagingWriter:
             return 0
         staging = f"{table}__stg_{uuid.uuid4().hex[:12]}"
         write_fn = self.spark_jdbc_write or self._default_spark_write
-        write_fn(df, staging)
         collist = ", ".join(df.columns)
-        conn = self.connect()
         try:
-            cur = conn.cursor()
-            # single transaction: the target never shows a half-loaded date
-            cur.execute(f"DELETE FROM {table} WHERE CAST(fecha AS DATE) = ?", (fecha,))
-            cur.execute(f"INSERT INTO {table} ({collist}) SELECT {collist} FROM {staging}")
-            n = getattr(cur, "rowcount", -1)
-            cur.execute(f"DROP TABLE {staging}")
-            conn.commit()
+            write_fn(df, staging)
+            conn = self.connect()
+            try:
+                cur = conn.cursor()
+                # single transaction: the target never shows a half-loaded date
+                cur.execute(f"DELETE FROM {table} WHERE CAST(fecha AS DATE) = ?", (fecha,))
+                cur.execute(f"INSERT INTO {table} ({collist}) SELECT {collist} FROM {staging}")
+                n = getattr(cur, "rowcount", -1)
+                cur.execute(f"DROP TABLE {staging}")
+                conn.commit()
+            except Exception:
+                conn.rollback()  # also undoes the in-transaction DROP
+                raise
+            finally:
+                conn.close()
         except Exception:
-            conn.rollback()
+            self._drop_staging(staging)
             raise
-        finally:
-            conn.close()
         return n
+
+    def _drop_staging(self, staging: str) -> None:
+        """Drop a failed load's staging table. A failure here is logged,
+        not raised, so the caller sees the load's own error."""
+        try:
+            conn = self.connect()
+            try:
+                conn.cursor().execute(f"DROP TABLE IF EXISTS {staging}")
+                conn.commit()
+            finally:
+                conn.close()
+        except Exception:
+            logger.warning("could not drop staging table %s", staging, exc_info=True)
 
 
 def ensure_partitioned_table(

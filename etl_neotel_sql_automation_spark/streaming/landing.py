@@ -18,6 +18,9 @@ Parity map (reference -> Structured Streaming):
   ``availableNow`` one-shot runs, files land in the archive on the
   following run — same steady-state as the reference's post-load
   cleanup, verified in tests/test_streaming.py.
+
+Every finite stream runs through :func:`run_available_now`, and every
+testdata stream is read through :func:`table_stream`.
 """
 
 from __future__ import annotations
@@ -28,11 +31,13 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from ..conform import conform
 from ..io_sinks import add_audit_column, write_partitioned_idempotent
 from ..io_sources import sniff_csv_dialect
 from ..schema import ConformSpec
+from ..workload import read_events
 
 
 def infer_landing_schema(spark: SparkSession, landing_dir: str | Path) -> tuple[T.StructType, str, str]:
@@ -73,67 +78,117 @@ def stream_landing_csv(
     """
     if clean_source == "archive" and archive_dir is None:
         raise ValueError("clean_source='archive' requires archive_dir")
-    schema, encoding, sep = infer_landing_schema(spark, landing_dir)
-    reader = (
-        spark.readStream.schema(schema)
-        .option("header", True)
-        .option("encoding", encoding)
-        .option("sep", sep)
-        .option("pathGlobFilter", "*.csv")  # ST-1: never read in-flight temp files
-        .option("maxFilesPerTrigger", 16)
-        .option("cleanSource", clean_source)  # ST-4 landing hygiene
-    )
+    options = {"cleanSource": clean_source}  # ST-4 landing hygiene
     if archive_dir is not None:
-        reader = reader.option("sourceArchiveDir", str(archive_dir))
-    src = reader.csv(str(landing_dir))
+        options["sourceArchiveDir"] = str(archive_dir)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         out = add_audit_column(conform(batch_df, spec))
         if not out.isEmpty():
             write_partitioned_idempotent(out, str(output_path), partition_col="fecha")
 
-    writer = (
+    src = _landing_csv_stream(spark, landing_dir, **options)
+    return _start_foreach_batch(src, sink, checkpoint_dir, available_now)
+
+
+def _landing_csv_stream(spark: SparkSession, landing_dir: str | Path, **options) -> DataFrame:
+    """File stream of the completed CSVs in ``landing_dir``, read with the
+    dialect and header of an existing file (:func:`infer_landing_schema`)."""
+    schema, encoding, sep = infer_landing_schema(spark, landing_dir)
+    return (
+        spark.readStream.schema(schema)
+        .option("header", True)
+        .option("encoding", encoding)
+        .option("sep", sep)
+        .option("pathGlobFilter", "*.csv")  # ST-1: never read in-flight temp files
+        .option("maxFilesPerTrigger", 16)
+        .options(**options)
+        .csv(str(landing_dir))
+    )
+
+
+def _start_foreach_batch(src: DataFrame, sink, checkpoint_dir, available_now: bool) -> StreamingQuery:
+    """Start ``src`` into the ``sink(batch_df, epoch_id)`` callback:
+    one availableNow run, or a 30-second processing-time loop."""
+    trigger = {"availableNow": True} if available_now else {"processingTime": "30 seconds"}
+    return (
         src.writeStream.foreachBatch(sink)
         .option("checkpointLocation", str(checkpoint_dir))  # ST-2 seen-file log
+        .trigger(**trigger)
+        .start()
     )
-    trigger = {"availableNow": True} if available_now else {"processingTime": "30 seconds"}
-    return writer.trigger(**trigger).start()
 
 
-def sniff_events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    """Sniff the events.parquet schema from a batch scan (parquet-footer
-    metadata only — no data read). Sets two session confs as a
-    deliberate side effect, required before ANY events scan resolves:
-    UTC session TZ (deterministic window boundaries) and
-    ``nanosAsLong`` (events.parquet has shipped with ``ts`` as INT64
-    TIMESTAMP(NANOS), unreadable otherwise)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(f"{sf_dir}/events.parquet").schema
+def run_available_now(
+    df: DataFrame, mode: str, state_partitions: int | None = None
+) -> DataFrame:
+    """Run the streaming frame ``df`` to completion and return its result:
+    start it into a uniquely named memory sink in output ``mode`` with an
+    availableNow trigger (finite input -> finite run), await it, stop it
+    if it is still active, and return the memory table.
+
+    ``state_partitions`` pins spark.sql.shuffle.partitions — the
+    streaming STATE partition count — for this query's lifetime and
+    restores the previous value afterwards. Each stateful operator opens
+    its state stores per partition, and each store pays checkpoint-dir
+    setup plus a commit per batch: a fixed cost blind to data volume (a
+    stream-stream join opens FOUR per partition; 32 partitions cost ~7 s
+    for one 100k-row availableNow batch vs ~2.3 s at 8, measured warm at
+    sf0.1). State partitioning is frozen into the checkpoint at first
+    start anyway, so it is a per-query deploy knob sized to sustained
+    input volume. The default (None) inherits the session value — a
+    hardcoded count would bottleneck cluster runs; the registered faces
+    pin their measured local-mode optimum at the call site."""
+    spark = df.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    if state_partitions is not None:
+        spark.conf.set(key, str(state_partitions))
+    name = f"stream_{uuid.uuid4().hex[:8]}"
+    try:
+        q = (
+            df.writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination()
+        finally:
+            if q.isActive:
+                q.stop()
+    finally:
+        spark.conf.set(key, old)
+    return spark.table(name)
+
+
+def table_stream(
+    spark: SparkSession, sf_dir: str, name: str, schema: T.StructType | None = None
+) -> DataFrame:
+    """File stream over the testdata table ``<sf_dir>/<name>.parquet``.
+    Streaming file sources need the schema up front: it comes from a
+    batch read of the parquet footer (no data read) unless ``schema`` is
+    given. ``pathGlobFilter`` keeps the stream off the table's siblings
+    in ``sf_dir``."""
+    if schema is None:
+        schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    return (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", f"{name}.parquet")
+        .parquet(sf_dir)
+    )
 
 
 def events_stream(
     spark: SparkSession, sf_dir: str, batch_schema: T.StructType | None = None
 ) -> DataFrame:
-    """Schema-adaptive streaming source for the testdata events table.
-
-    Streaming file sources need the schema up front, so it is sniffed
-    via :func:`sniff_events_schema` (pass ``batch_schema`` to reuse one
-    sniff across several legs of a multi-input query). Either physical
-    ``ts`` form is normalized to a session-TZ (UTC) timestamp. The
-    nanos path floor-divides with ``div`` (ns-since-epoch exceeds 2^53;
-    double division would lose precision).
-    """
-    if batch_schema is None:
-        batch_schema = sniff_events_schema(spark, sf_dir)
-    src = (
-        spark.readStream.schema(batch_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if isinstance(batch_schema["ts"].dataType, T.LongType):
-        return src.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return src.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+    """Schema-adaptive streaming source for the testdata events table:
+    :func:`table_stream` under the shared events ``ts`` rule
+    (:func:`~..workload.read_events` — either physical ``ts`` form
+    becomes a session-TZ (UTC) timestamp). ``batch_schema``, the
+    physical events.parquet schema, skips the footer read."""
+    return read_events(spark, lambda: table_stream(spark, sf_dir, "events", batch_schema))
 
 
 def windowed_event_agg(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
@@ -171,20 +226,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"events_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        dedup.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    return run_available_now(dedup, "append")
 
 
 def stream_stream_signup_purchase(
@@ -198,37 +240,13 @@ def stream_stream_signup_purchase(
     availableNow -> finite; result must equal the batch theta-join
     oracle.
 
-    ``state_partitions`` pins spark.sql.shuffle.partitions for this
-    query's lifetime (r10 VERDICT #6): a stream-stream join opens FOUR
-    state stores per partition (two sides x two join-state stores),
-    each paying checkpoint-dir setup + a commit per batch — a fixed
-    cost blind to data volume, and the session's 32 cost ~7 s for one
-    100k-row availableNow batch vs ~2.3 s at 8 (measured warm at
-    sf0.1). State partitioning is frozen into the checkpoint at first
-    start anyway, so it is a per-query deploy knob, sized to sustained
-    input volume at cluster scale. The default (None) INHERITS the
-    session value — a hardcoded count would bottleneck the join at
-    cluster scale (r11 VERDICT #4); callers size it per deployment
-    (the bench's registered face pins 8, the measured local-mode
-    optimum for one availableNow batch at sf0.1)."""
-    if state_partitions is None:
-        return _stream_stream_signup_purchase(spark, sf_dir)
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        return _stream_stream_signup_purchase(spark, sf_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-
-
-def _stream_stream_signup_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    schema = sniff_events_schema(spark, sf_dir)
-
-    def src() -> DataFrame:
-        return events_stream(spark, sf_dir, batch_schema=schema)
-
+    ``state_partitions`` pins the join's state partition count for this
+    query (r10 VERDICT #6; see :func:`run_available_now`): a
+    stream-stream join opens FOUR state stores per partition (two sides
+    x two join-state stores). The bench's registered face pins 8, the
+    measured local-mode optimum for one availableNow batch at sf0.1."""
     signups = (
-        src()
+        events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "signup")
         .select(
             F.col("user_id").alias("s_user"),
@@ -238,7 +256,7 @@ def _stream_stream_signup_purchase(spark: SparkSession, sf_dir: str) -> DataFram
         .withWatermark("s_ts", "2 hours")
     )
     purchases = (
-        src()
+        events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("user_id").alias("p_user"),
@@ -258,20 +276,7 @@ def _stream_stream_signup_purchase(spark: SparkSession, sf_dir: str) -> DataFram
         "purchase_id",
         (F.unix_micros("p_ts") - F.unix_micros("s_ts")).alias("us_between"),
     )
-    name = f"ss_join_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    return run_available_now(joined, "append", state_partitions)
 
 
 def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -281,20 +286,7 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     match the batch/DuckDB tumbling-window oracle exactly."""
     events = events_stream(spark, sf_dir)
     agg = windowed_event_agg(events)
-    name = f"events_hourly_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    return run_available_now(agg, "complete")
 
 
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -312,20 +304,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = events.join(cust, events.user_id == cust.c_custkey).select(
         "event_id", "user_id", "event_type", "value", "c_mktsegment", "c_nationkey"
     )
-    name = f"events_enrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    return run_available_now(enriched, "append")
 
 
 def stream_landing_to_jdbc(
@@ -346,30 +325,16 @@ def stream_landing_to_jdbc(
     data CONVERGES in SQL Server just as it does in the parquet sink.
     The checkpoint log provides the only other state — no dedup tables,
     no manual bookkeeping. Returns the started StreamingQuery."""
-    schema, encoding, sep = infer_landing_schema(spark, landing_dir)
-    src = (
-        spark.readStream.schema(schema)
-        .option("header", True)
-        .option("encoding", encoding)
-        .option("sep", sep)
-        .option("pathGlobFilter", "*.csv")
-        .option("maxFilesPerTrigger", 16)
-        .csv(str(landing_dir))
-    )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        # an empty batch has no dates; the writer guards each date itself
         out = conform(batch_df, spec)
-        if out.isEmpty():
-            return
         for r in out.select("fecha").distinct().collect():
             fecha = str(r["fecha"])
             writer.write(out.filter(F.col("fecha") == fecha), table, fecha)
 
-    w = src.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", str(checkpoint_dir)
-    )
-    trigger = {"availableNow": True} if available_now else {"processingTime": "30 seconds"}
-    return w.trigger(**trigger).start()
+    src = _landing_csv_stream(spark, landing_dir)
+    return _start_foreach_batch(src, sink, checkpoint_dir, available_now)
 
 
 def stream_anti_new_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -394,20 +359,7 @@ def stream_anti_new_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh = events.join(seen, "user_id", "left_anti").select(
         "event_id", "user_id", "event_type", "value"
     )
-    name = f"events_anti_{uuid.uuid4().hex[:8]}"
-    q = (
-        fresh.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    return run_available_now(fresh, "append")
 
 
 def stream_append_lsh_index(
@@ -429,17 +381,12 @@ def stream_append_lsh_index(
     not the row level (re-delivered FILES are deduped by the log)."""
     from ..ops.similarity import append_lsh_index
 
-    src = spark.readStream.schema(schema).parquet(landing_dir)
-
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.isEmpty():
             append_lsh_index(batch_df, table)
 
-    writer = src.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    trigger = {"availableNow": True} if available_now else {"processingTime": "30 seconds"}
-    return writer.trigger(**trigger).start()
+    src = spark.readStream.schema(schema).parquet(landing_dir)
+    return _start_foreach_batch(src, sink, checkpoint_dir, available_now)
 
 
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -465,20 +412,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"session_windows_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    return run_available_now(agg, "complete")
 
 
 def _doc_grams(df: DataFrame, contam_n: int = 4) -> DataFrame:
@@ -502,30 +436,6 @@ def _doc_grams(df: DataFrame, contam_n: int = 4) -> DataFrame:
     )
 
 
-def _pin_state_partitions(spark: SparkSession, state_partitions: int | None):
-    """Context manager pinning spark.sql.shuffle.partitions (the
-    streaming STATE partition count) for one query's lifetime. None =
-    inherit the session value — state partitioning is a per-query
-    deploy knob sized to sustained input volume (see
-    stream_stream_signup_purchase's docstring for the measured
-    rationale); a hardcoded count would bottleneck cluster runs."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def _ctx():
-        if state_partitions is None:
-            yield
-            return
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-
-    return _ctx()
-
-
 def stream_contamination_guard(
     spark: SparkSession, sf_dir: str, state_partitions: int | None = None
 ) -> DataFrame:
@@ -544,12 +454,7 @@ def stream_contamination_guard(
     land), and contaminated docs divert to quarantine instead of the
     training corpus.
     """
-    docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    src = (
-        spark.readStream.schema(docs_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    src = table_stream(spark, sf_dir, "documents")
 
     # materialize the static gram set ONCE before the stream starts:
     # a batch subtree inside a streaming plan is re-derived (tokenize +
@@ -573,21 +478,7 @@ def stream_contamination_guard(
         .dropDuplicates(["doc_id"])
         .select("doc_id")
     )
-    name = f"contam_guard_{uuid.uuid4().hex[:8]}"
-    with _pin_state_partitions(spark, state_partitions):
-        q = (
-            flagged.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            if q.isActive:
-                q.stop()
-    return spark.table(name)
+    return run_available_now(flagged, "append", state_partitions)
 
 
 def stream_contamination_guard_bloom(
@@ -621,12 +512,7 @@ def stream_contamination_guard_bloom(
         _probe_col,
     )
 
-    docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    src = (
-        spark.readStream.schema(docs_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    src = table_stream(spark, sf_dir, "documents")
 
     # materialize the static side ONCE before the stream starts: the
     # gram set feeds BOTH the Bloom word table and the exact semi-join,
@@ -676,21 +562,7 @@ def stream_contamination_guard_bloom(
         .dropDuplicates(["doc_id"])
         .select("doc_id")
     )
-    name = f"contam_guard_bloom_{uuid.uuid4().hex[:8]}"
-    with _pin_state_partitions(spark, state_partitions):
-        q = (
-            flagged.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            if q.isActive:
-                q.stop()
-    return spark.table(name)
+    return run_available_now(flagged, "append", state_partitions)
 
 
 def stream_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -712,12 +584,7 @@ def stream_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..workload.corpus_stats import _CMS_D, _CMS_W
     from ..ops.text import tokens
 
-    docs_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    src = (
-        spark.readStream.schema(docs_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    src = table_stream(spark, sf_dir, "documents")
     h15 = lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")  # noqa: E731
     tok = src.select(F.explode(tokens(F.col("text"))).alias("term"))
     buckets = F.array(
@@ -731,20 +598,7 @@ def stream_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("r", "b")
         .agg(F.count("*").alias("cnt"))
     )
-    name = f"cms_sketch_{uuid.uuid4().hex[:8]}"
-    q = (
-        cells.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    return run_available_now(cells, "complete")
 
 
 def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -768,20 +622,7 @@ def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    name = f"dyn_sessions_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    return run_available_now(agg, "complete")
 
 
 def stream_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -829,20 +670,7 @@ def stream_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vol_cents",
         )
     )
-    name = f"events_ohlc_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name)
+    return run_available_now(agg, "complete")
 
 
 def stream_type_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -855,20 +683,7 @@ def stream_type_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle."""
     events = events_stream(spark, sf_dir)
     agg = events.groupBy("event_type").agg(F.max("ts").alias("latest"))
-    name = f"events_fresh_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    final = spark.table(name)
+    final = run_available_now(agg, "complete")
     lagged = final.select(
         "event_type",
         F.expr(
@@ -917,12 +732,7 @@ def stream_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("t", F.lit(1).alias("_inv"))
     )
 
-    docs_schema = batch_docs.schema
-    src = (
-        spark.readStream.schema(docs_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    src = table_stream(spark, sf_dir, "documents", batch_docs.schema)
     ev_tok = (
         src.filter(~F.col("source").isin(*_OOV_TRAIN))
         .select("source", F.explode(X.tokens(F.col("text"))).alias("t"))
@@ -937,20 +747,7 @@ def stream_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_oov"),
         )
     )
-    name = f"oov_monitor_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name).select(
+    return run_available_now(agg, "complete").select(
         "source",
         "n_tokens",
         "n_oov",
@@ -972,12 +769,7 @@ def stream_pchart_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: streaming state is one row per (week) — bounded by the
     calendar, not the row count.
     """
-    batch_li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    src = (
-        spark.readStream.schema(batch_li.schema)
-        .option("pathGlobFilter", "lineitem.parquet")
-        .parquet(sf_dir)
-    )
+    src = table_stream(spark, sf_dir, "lineitem")
     weekly = (
         src.select(
             F.date_trunc("week", F.col("l_shipdate")).cast("date").alias("week"),
@@ -989,20 +781,7 @@ def stream_pchart_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("is_r").cast("bigint").alias("r"),
         )
     )
-    name = f"pchart_{uuid.uuid4().hex[:8]}"
-    q = (
-        weekly.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    w = spark.table(name)
+    w = run_available_now(weekly, "complete")
     pool = w.agg(
         F.sum("r").cast("bigint").alias("rt"),
         F.sum("n").cast("bigint").alias("nt"),
@@ -1050,12 +829,7 @@ def stream_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..workload.wave42 import srm_readout
 
-    batch_ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src = (
-        spark.readStream.schema(batch_ev.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = events_stream(spark, sf_dir)
     arm = (
         src.select(
             "user_id", (F.col("user_id") % 2).cast("int").alias("arm")
@@ -1064,20 +838,7 @@ def stream_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("arm")
         .agg(F.count("*").cast("bigint").alias("n_users"))
     )
-    name = f"srm_{uuid.uuid4().hex[:8]}"
-    q = (
-        arm.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    return srm_readout(spark.table(name))
+    return srm_readout(run_available_now(arm, "complete"))
 
 
 def stream_welch_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1097,27 +858,9 @@ def stream_welch_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..workload.wave48 import welch_readout
 
-    batch_ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src = (
-        spark.readStream.schema(batch_ev.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    src = events_stream(spark, sf_dir)
     u = src.groupBy("user_id").agg(
         F.expr("CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)")
         .alias("v")
     )
-    name = f"welch_{uuid.uuid4().hex[:8]}"
-    q = (
-        u.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if q.isActive:
-            q.stop()
-    return welch_readout(spark.table(name))
+    return welch_readout(run_available_now(u, "complete"))

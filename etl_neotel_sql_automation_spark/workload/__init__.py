@@ -97,6 +97,27 @@ def _spread_if_starved(df: DataFrame) -> DataFrame:
     return df if parts >= target else df.repartition(target)
 
 
+def read_events(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
+    """The events ``ts`` rule, shared by the batch :func:`table` and the
+    streaming ``events_stream``. The driver has shipped events.parquet
+    with ts as either INT64 TIMESTAMP(NANOS) — which Spark's parquet
+    reader only accepts as a raw long under nanosAsLong, so the conf is
+    set before ``read`` resolves the file — or plain TIMESTAMP(MICROS).
+    Both are normalized to a session-TZ (UTC) timestamp. Nanos path
+    floor-divides ("div", not "/": ns-since-epoch exceeds 2^53, double
+    division would lose precision); DuckDB's ns->us conversion floors
+    identically."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = read()
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan for one testdata table; pins session TZ to UTC
     so timestamp collection matches the UTC-naive oracle. The
@@ -108,21 +129,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name in ("documents", "embeddings"):
         return _spread_if_starved(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     if name == "events":
-        # The driver has shipped events.parquet with ts as either INT64
-        # TIMESTAMP(NANOS) — which Spark's parquet reader only accepts
-        # as a raw long under nanosAsLong — or plain TIMESTAMP(MICROS).
-        # Sniff the resolved type and normalize both to a session-TZ
-        # (UTC) timestamp. Nanos path floor-divides ("div", not "/":
-        # ns-since-epoch exceeds 2^53, double division would lose
-        # precision); DuckDB's ns->us conversion floors identically.
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+        return read_events(spark, lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 

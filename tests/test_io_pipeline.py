@@ -362,29 +362,61 @@ def test_read_landing_dir_provenance(spark, tmp_path):
 
 def test_jdbc_staging_writer_rolls_back_on_midtxn_failure(spark):
     """R-3 failure path: if any statement inside the transaction throws
-    (here: the INSERT..SELECT), the writer must roll back — the target
-    never shows a half-loaded date — close the connection, and
-    propagate the error to the caller (exit-code path)."""
+    (the INSERT..SELECT, or the in-transaction DROP), the writer must
+    roll back — the target never shows a half-loaded date — close the
+    connection, and propagate the error to the caller (exit-code path).
+    On every failure path, a failed Spark append to staging included,
+    the staging table is then dropped on its own connection: the
+    rollback undid the in-transaction DROP, and a failed append opened
+    no transaction at all."""
 
     class _ExplodingConn(_FakeConn):
+        def __init__(self, log, fail_on):
+            super().__init__(log)
+            self.fail_on = fail_on
+
         def execute(self, sql, params=()):
             super().execute(sql, params)
-            if sql.lstrip().startswith("INSERT"):
+            if self.fail_on and sql.lstrip().startswith(self.fail_on):
                 raise RuntimeError("deadlock victim")
 
-    log: list = []
-    writer = JdbcStagingWriter(
-        url="jdbc:fake",
-        connect=lambda: _ExplodingConn(log),
-        spark_jdbc_write=lambda df, staging: None,
-    )
     df = spark.createDataFrame([("ana", "2026-08-13")], ["agente", "fecha"])
-    with pytest.raises(RuntimeError, match="deadlock victim"):
-        writer.write(df, "tbl_neotel_conducta", "2026-08-13")
-    assert ("rollback",) in log and ("commit",) not in log
-    assert ("close",) in log
-    # the DELETE ran before the blow-up; rollback undoes it atomically
-    assert any(e[0] == "exec" and e[1].startswith("DELETE") for e in log)
+    cases = [
+        # (statement that throws inside the transaction, expected error);
+        # None: the Spark append to staging throws instead
+        ("INSERT", "deadlock victim"),
+        ("DROP TABLE tbl_neotel_conducta__stg_", "deadlock victim"),
+        (None, "staging append failed"),
+    ]
+    for fail_on, err in cases:
+        log: list = []
+        staged: list = []
+
+        def spark_jdbc_write(df, staging):
+            staged.append(staging)
+            if fail_on is None:
+                raise RuntimeError("staging append failed")
+
+        writer = JdbcStagingWriter(
+            url="jdbc:fake",
+            connect=lambda: _ExplodingConn(log, fail_on),
+            spark_jdbc_write=spark_jdbc_write,
+        )
+        with pytest.raises(RuntimeError, match=err):
+            writer.write(df, "tbl_neotel_conducta", "2026-08-13")
+        # the staging table is dropped last, on its own committed connection
+        assert log[-3:] == [
+            ("exec", f"DROP TABLE IF EXISTS {staged[0]}", ()),
+            ("commit",),
+            ("close",),
+        ], fail_on
+        txn = log[:-3]
+        if fail_on is None:
+            assert txn == []  # the append failed before any transaction
+            continue
+        assert txn[-2:] == [("rollback",), ("close",)] and ("commit",) not in txn
+        # the DELETE ran before the blow-up; rollback undoes it atomically
+        assert any(e[0] == "exec" and e[1].startswith("DELETE") for e in txn)
 
 
 def test_orc_roundtrip_preserves_conformed_frame(spark, tmp_path):

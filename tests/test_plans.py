@@ -123,19 +123,29 @@ def test_tripwire_exclusions_are_exact():
     )
 
 
-def test_no_row_udfs_anywhere_in_registry(spark):
+@pytest.fixture(scope="module")
+def registry_frames(spark):
+    """Every registered query outside TRIPWIRE_EXCLUDED, built ONCE for
+    the registry-wide tests: name -> (frame, executed-plan string). The
+    plan is taken right after construction, as each test did when it
+    built its own frames."""
+    frames = {}
+    for name, fn in sorted(queries().items()):
+        if name in TRIPWIRE_EXCLUDED:
+            continue
+        df = fn(spark, SF)
+        frames[name] = (df, df._jdf.queryExecution().executedPlan().toString())
+    return frames
+
+
+def test_no_row_udfs_anywhere_in_registry(registry_frames):
     """REGISTRY-WIDE tripwire: no registered query may plan a
     row-at-a-time Python UDF (BatchEvalPython) — the §2.10 policy,
     enforced for every current and FUTURE query. Only the EXACT names
     in TRIPWIRE_EXCLUDED are skipped (guarded by
     test_tripwire_exclusions_are_exact)."""
-    from etl_neotel_sql_automation_spark.workload import queries as qreg
-
     offenders = []
-    for name, fn in sorted(qreg().items()):
-        if name in TRIPWIRE_EXCLUDED:
-            continue
-        plan = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+    for name, (_, plan) in registry_frames.items():
         if "BatchEvalPython" in plan:
             offenders.append(name)
     assert not offenders, offenders
@@ -443,19 +453,15 @@ def test_corpus_broadcast_checker_detects_the_bug(spark):
     assert count_corpus_pinned_broadcasts(good2) == 0
 
 
-def test_no_pinned_corpus_broadcasts_registry_wide(spark):
+def test_no_pinned_corpus_broadcasts_registry_wide(registry_frames):
     """REGISTRY-WIDE: every registered query (current and future) is
     checked for pinned broadcasts of corpus-scaled frames. Only the
     EXACT names in CORPUS_HINT_ALLOWED may pin hints on frames the
     checker cannot prove bounded, each with a stated construction-level
     bound; everything else must have zero."""
-    from etl_neotel_sql_automation_spark.workload import queries as qreg
-
     offenders = {}
-    for name, fn in sorted(qreg().items()):
-        if name in TRIPWIRE_EXCLUDED:
-            continue
-        n = count_corpus_pinned_broadcasts(fn(spark, SF))
+    for name, (df, _) in registry_frames.items():
+        n = count_corpus_pinned_broadcasts(df)
         if n != CORPUS_HINT_ALLOWED.get(name, 0):
             offenders[name] = n
     assert not offenders, (

@@ -222,3 +222,37 @@ def test_streaming_observe_metrics(spark):
     assert m["max_user"] == batch.agg(F.max("user_id")).first()[0]
     exact_users = batch.select("user_id").distinct().count()
     assert abs(m["users_approx"] - exact_users) <= 0.1 * exact_users
+
+
+def test_monitors_read_nanos_ts_without_prior_conf(spark, tmp_path):
+    """events.parquet has shipped with ``ts`` as INT64 TIMESTAMP(NANOS),
+    which Spark's parquet reader rejects unless nanosAsLong is set. The
+    SRM and Welch streaming monitors must read such a file in a session
+    where no earlier events read has set that conf, and still equal
+    their batch twins."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_neotel_sql_automation_spark.streaming.landing import (
+        stream_srm_monitor,
+        stream_welch_monitor,
+    )
+
+    t = pq.read_table("/root/testdata/sf0.001/events.parquet")
+    t = t.set_column(
+        t.schema.get_field_index("ts"), "ts", t["ts"].cast(pa.timestamp("ns"))
+    )
+    pq.write_table(t, tmp_path / "events.parquet")
+    sf = str(tmp_path)
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        srm = {tuple(r) for r in stream_srm_monitor(spark, sf).collect()}
+        welch = {tuple(r) for r in stream_welch_monitor(spark, sf).collect()}
+    finally:
+        spark.conf.set(key, prev)
+    assert srm == {tuple(r) for r in queries()["events_srm_check"](spark, sf).collect()}
+    assert welch == {tuple(r) for r in queries()["events_welch_ttest"](spark, sf).collect()}
+    assert srm and welch
