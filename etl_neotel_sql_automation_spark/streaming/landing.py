@@ -163,16 +163,12 @@ def run_available_now(
     return spark.table(name)
 
 
-def table_stream(
-    spark: SparkSession, sf_dir: str, name: str, schema: T.StructType | None = None
-) -> DataFrame:
+def table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """File stream over the testdata table ``<sf_dir>/<name>.parquet``.
     Streaming file sources need the schema up front: it comes from a
-    batch read of the parquet footer (no data read) unless ``schema`` is
-    given. ``pathGlobFilter`` keeps the stream off the table's siblings
-    in ``sf_dir``."""
-    if schema is None:
-        schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    batch read of the parquet footer (no data read). ``pathGlobFilter``
+    keeps the stream off the table's siblings in ``sf_dir``."""
+    schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
     return (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", f"{name}.parquet")
@@ -180,15 +176,14 @@ def table_stream(
     )
 
 
-def events_stream(
-    spark: SparkSession, sf_dir: str, batch_schema: T.StructType | None = None
-) -> DataFrame:
+def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-adaptive streaming source for the testdata events table:
     :func:`table_stream` under the shared events ``ts`` rule
-    (:func:`~..workload.read_events` — either physical ``ts`` form
-    becomes a session-TZ (UTC) timestamp). ``batch_schema``, the
-    physical events.parquet schema, skips the footer read."""
-    return read_events(spark, lambda: table_stream(spark, sf_dir, "events", batch_schema))
+    (:func:`~..workload.read_events`). Pins the session TZ to UTC, as
+    the batch ``table()`` does, so either physical ``ts`` form becomes
+    a UTC timestamp and window boundaries are deterministic."""
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    return read_events(spark, lambda: table_stream(spark, sf_dir, "events"))
 
 
 def windowed_event_agg(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
@@ -732,7 +727,7 @@ def stream_oov_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("t", F.lit(1).alias("_inv"))
     )
 
-    src = table_stream(spark, sf_dir, "documents", batch_docs.schema)
+    src = table_stream(spark, sf_dir, "documents")
     ev_tok = (
         src.filter(~F.col("source").isin(*_OOV_TRAIN))
         .select("source", F.explode(X.tokens(F.col("text"))).alias("t"))

@@ -99,18 +99,17 @@ def _spread_if_starved(df: DataFrame) -> DataFrame:
 
 def read_events(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
     """The events ``ts`` rule, shared by the batch :func:`table` and the
-    streaming ``events_stream``. The driver has shipped events.parquet
-    with ts as either INT64 TIMESTAMP(NANOS) — which Spark's parquet
+    streaming ``events_stream``. events.parquet has shipped with ts as
+    either INT64 TIMESTAMP(NANOS) — which Spark's parquet
     reader only accepts as a raw long under nanosAsLong, so the conf is
     set before ``read`` resolves the file — or plain TIMESTAMP(MICROS).
-    Both are normalized to a session-TZ (UTC) timestamp. Nanos path
-    floor-divides ("div", not "/": ns-since-epoch exceeds 2^53, double
-    division would lose precision); DuckDB's ns->us conversion floors
-    identically."""
+    Both are normalized to a session-TZ timestamp; the caller pins the
+    session TZ. Nanos path floor-divides ("div", not "/":
+    ns-since-epoch exceeds 2^53, double division would lose precision);
+    DuckDB's ns->us conversion floors identically."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = read()
     if isinstance(df.schema["ts"].dataType, T.LongType):

@@ -247,12 +247,16 @@ def test_monitors_read_nanos_ts_without_prior_conf(spark, tmp_path):
 
     key = "spark.sql.legacy.parquet.nanosAsLong"
     prev = spark.conf.get(key)
-    spark.conf.unset(key)
+    pairs = [
+        (stream_srm_monitor, "events_srm_check"),
+        (stream_welch_monitor, "events_welch_ttest"),
+    ]
     try:
-        srm = {tuple(r) for r in stream_srm_monitor(spark, sf).collect()}
-        welch = {tuple(r) for r in stream_welch_monitor(spark, sf).collect()}
+        for monitor, twin in pairs:
+            # Unset before each monitor: one monitor's read sets the conf.
+            spark.conf.unset(key)
+            got = {tuple(r) for r in monitor(spark, sf).collect()}
+            assert got == {tuple(r) for r in queries()[twin](spark, sf).collect()}
+            assert got
     finally:
         spark.conf.set(key, prev)
-    assert srm == {tuple(r) for r in queries()["events_srm_check"](spark, sf).collect()}
-    assert welch == {tuple(r) for r in queries()["events_welch_ttest"](spark, sf).collect()}
-    assert srm and welch
