@@ -15,6 +15,15 @@ regex rather than a split/trim/cast tree per part.
 Every expression is total (never raises) and ANSI-safe: all parsing
 uses ``try_*`` forms, so behavior is identical whether the session has
 ``spark.sql.ansi.enabled`` true (Spark 4 default) or false.
+
+The four coercions conform applies per column (``time_str_to_minutes``,
+``int0``, ``float0``, ``date_dayfirst``) take a column name and are built
+as ONE ``F.expr`` of SQL text each. Built from ``Column`` operators, every
+function call, literal and cast is its own py4j round trip to the JVM:
+``time_str_to_minutes`` took ~300 py4j commands and ~38 ms per column,
+``date_dayfirst`` ~100 and ~9 ms (4-core VM, warm session), paid again
+on every run for each of the ~40 coerced columns. As SQL text each takes
+3 commands and ~0.3 ms, and Spark's parser builds the equivalent expression.
 """
 
 from __future__ import annotations
@@ -30,22 +39,34 @@ from pyspark.sql import functions as F
 TIME_SENTINELS = ("-", "", "nan", "None")
 
 # What Python's ``str.strip()`` removes, ASCII part: ``int()`` and
-# ``float()`` strip only the first six (Java regex ``\s``), so the outer
-# strip and the separators of _HMS_RE differ on purpose.
+# ``float()`` strip only the first six (_SPACE, Java regex ``\s``), so
+# the outer strip and the separators of _HMS_RE differ on purpose.
 _PY_STRIP = " \t\n\x0b\x0c\r\x1c\x1d\x1e\x1f"
+_SPACE = f"[{_PY_STRIP[:6]}]*"
 
 # ``h:m`` or ``h:m:s``, each part what Python ``int()`` accepts (sign +
 # ASCII digits, whitespace at either end); "30.5" fails int() and the
-# reference returns 0.0 (main.py:450-456 ``map(int, parts)``). ``\z``,
-# not ``$``: Java's ``$`` also matches before a final line terminator.
-_HMS_RE = r"^([+-]?[0-9]+)\s*:\s*([+-]?[0-9]+)(?:\s*:\s*([+-]?[0-9]+))?\z"
+# reference returns 0.0 (main.py:450-456 ``map(int, parts)``). It ends
+# with ``(?!(?s:.))`` (Java's ``\z``), not ``$``: Java's ``$`` also
+# matches before a final line terminator. The pattern has no backslash,
+# so it reads the same in a SQL string literal whatever
+# ``spark.sql.parser.escapedStringLiterals`` says.
+_HMS_RE = (
+    f"^([+-]?[0-9]+){_SPACE}:{_SPACE}([+-]?[0-9]+)"
+    f"(?:{_SPACE}:{_SPACE}([+-]?[0-9]+))?(?!(?s:.))"
+)
 
 
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def time_str_to_minutes(c: Column | str) -> Column:
+def _ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def time_str_to_minutes(c: str) -> Column:
     """``HH:MM:SS``/``HH:MM``/numeric/sentinel -> decimal minutes (double).
 
     Parity target: ``convertir_tiempo_a_minutos`` (main.py:425-462):
@@ -60,21 +81,21 @@ def time_str_to_minutes(c: Column | str) -> Column:
     autodetect two-pass (``procesar_columnas_tiempo`` main.py:465-498):
     a value without ``:`` falls through to the numeric branch.
     """
-    s = F.trim(_col(c).cast("string"), F.lit(_PY_STRIP))
-    h, m, sec = (F.regexp_extract(s, _HMS_RE, i) for i in (1, 2, 3))
+    s = f"TRIM(BOTH '{_PY_STRIP}' FROM CAST({_ident(c)} AS STRING))"
+    h, m, sec = (f"regexp_extract({s}, '{_HMS_RE}', {i})" for i in (1, 2, 3))
     # An unmatched group extracts as "": a missing seconds part is 0, a
     # failed match or a part or sum that overflows a long is null -> 0.0.
-    sec = F.when(sec == "", F.lit(0)).otherwise(sec.try_cast("long"))
-    hm = F.try_add(F.try_multiply(h.try_cast("long"), F.lit(60)), m.try_cast("long"))
-    hms = hm + sec / F.lit(60.0)
-    return (
-        F.when(s.isNull() | s.isin(*TIME_SENTINELS), F.lit(0.0))
-        .when(s.contains(":"), F.coalesce(hms, F.lit(0.0)))
-        .otherwise(F.coalesce(s.try_cast("double"), F.lit(0.0)))
+    sec = f"CASE WHEN {sec} = '' THEN 0 ELSE TRY_CAST({sec} AS BIGINT) END"
+    hm = f"try_add(try_multiply(TRY_CAST({h} AS BIGINT), 60), TRY_CAST({m} AS BIGINT))"
+    sentinels = ", ".join(f"'{v}'" for v in TIME_SENTINELS)
+    return F.expr(
+        f"CASE WHEN {s} IS NULL OR {s} IN ({sentinels}) THEN 0.0D"
+        f" WHEN contains({s}, ':') THEN coalesce({hm} + {sec} / 60.0D, 0.0D)"
+        f" ELSE coalesce(TRY_CAST({s} AS DOUBLE), 0.0D) END"
     )
 
 
-def int0(c: Column | str) -> Column:
+def int0(c: str) -> Column:
     """Int coercion with 0 default, truncating through double.
 
     Parity target: ``pd.to_numeric(errors='coerce').fillna(0).astype(int)``
@@ -84,15 +105,15 @@ def int0(c: Column | str) -> Column:
     the INT column's range (``"3e9"``) -> 0: a plain cast would saturate,
     or raise under ANSI.
     """
-    return F.coalesce(
-        _col(c).cast("string").try_cast("double").try_cast("int"), F.lit(0)
+    return F.expr(
+        f"coalesce(TRY_CAST(TRY_CAST(CAST({_ident(c)} AS STRING) AS DOUBLE) AS INT), 0)"
     )
 
 
-def float0(c: Column | str) -> Column:
+def float0(c: str) -> Column:
     """Double coercion with 0.0 default
     (``pd.to_numeric(errors='coerce').fillna(0.0)``, main.py:516-528)."""
-    return F.coalesce(_col(c).cast("string").try_cast("double"), F.lit(0.0))
+    return F.expr(f"coalesce(TRY_CAST(CAST({_ident(c)} AS STRING) AS DOUBLE), 0.0D)")
 
 
 # Formats tried in order for day-first parsing. pandas
@@ -109,15 +130,15 @@ _DAYFIRST_FORMATS = (
 )
 
 
-def date_dayfirst(c: Column | str) -> Column:
+def date_dayfirst(c: str) -> Column:
     """Day-first date parse, unparseable -> null (``errors='coerce'``).
 
     ``"13/08/2026"`` -> 2026-08-13; ``"01/02/2026"`` -> Feb 1 (day first);
     ``"99/99/2026"`` -> null. Parity: main.py:1239, 1295.
     """
-    s = F.trim(_col(c).cast("string"))
-    candidates = [F.try_to_timestamp(s, F.lit(fmt)) for fmt in _DAYFIRST_FORMATS]
-    return F.coalesce(*candidates).cast("date")
+    s = f"TRIM(CAST({_ident(c)} AS STRING))"
+    candidates = ", ".join(f"try_to_timestamp({s}, '{fmt}')" for fmt in _DAYFIRST_FORMATS)
+    return F.expr(f"CAST(coalesce({candidates}) AS DATE)")
 
 
 def date_to_iso(c: Column | str) -> Column:

@@ -29,7 +29,7 @@ import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .schema import ALLOWED_TABLES
@@ -59,6 +59,25 @@ def write_partitioned_idempotent(
         .partitionBy(partition_col)
         .parquet(path)
     )
+
+
+def load_partitioned(df: DataFrame, path: str, partition_col: str = "fecha") -> int:
+    """Load ``df`` into the date-partitioned table at ``path`` in one
+    Spark job and return its row count: S-7's ``load_date`` is added,
+    then :func:`write_partitioned_idempotent` replaces the dates present.
+
+    The count is an ``Observation`` on the write job, not a second
+    scan. An empty ``df`` replaces no partition (at a ``path`` not yet
+    written it leaves an empty directory). ``load_date`` goes
+    above the observation, a whole-stage-codegen boundary: the run's
+    timestamp is a literal that codegen inlines, so below it the
+    generated code of the conform projection would differ on every run
+    and compile again, where above it only the small stage that adds
+    the column does."""
+    obs = Observation()
+    observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    write_partitioned_idempotent(add_audit_column(observed), path, partition_col)
+    return int(obs.get["rows"])
 
 
 @dataclass
@@ -98,9 +117,11 @@ class JdbcStagingWriter:
           staging append or the transaction fails, it is dropped
           (``IF EXISTS``) on its own connection before the error
           propagates, so no failure path leaves it behind;
-        - the input is computed ONCE (cheap ``isEmpty`` guard, then the
-          Spark write); the returned row count is the DB-reported
-          INSERT rowcount (-1 if the driver does not report one).
+        - an ``isEmpty`` job runs first, so an empty input opens no
+          staging table or transaction; a non-empty input is then
+          computed a second time by the Spark write. The returned row
+          count is the DB-reported INSERT rowcount (-1 if the driver
+          does not report one).
         """
         validate_table_name(table)
         for c in df.columns:

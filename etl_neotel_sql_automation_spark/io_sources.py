@@ -8,6 +8,10 @@ dispatch (main.py:1188-1204, applied 1330-1358).
 Spark has no ``sep=None`` sniffing, so the dialect sniff runs
 driver-side on the first 8 KB of each file (cheap, one local read), then
 the distributed ``spark.read.csv`` gets explicit ``sep``/``encoding``.
+The header comes from the sniffed file as well: :func:`header_schema`
+names the columns the way Spark's ``header=True`` read does, as an
+all-string schema, so building a landing frame runs no Spark job
+(Spark's own header read runs one per file).
 At scale the landing pattern assumes per-file dialects are uniform
 within a directory batch — matching the reference's one-file-per-report
 model.
@@ -23,6 +27,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 logger = logging.getLogger(__name__)
 
@@ -32,6 +37,9 @@ logger = logging.getLogger(__name__)
 # charset names (Spark accepts ISO-8859-1 but not the 'latin-1' alias).
 ENCODINGS = (("utf-8", "UTF-8"), ("latin-1", "ISO-8859-1"))
 _CANDIDATE_DELIMS = ",;\t|"
+# What Java's String.trim() strips; Spark's CSV reader skips a line
+# that is empty once stripped, so the header is the first other line.
+_JAVA_TRIM = "".join(map(chr, range(33)))
 
 
 def sniff_csv_dialect(path: str | Path, sample_bytes: int = 8192) -> tuple[str, str]:
@@ -67,14 +75,39 @@ def sniff_csv_dialect(path: str | Path, sample_bytes: int = 8192) -> tuple[str, 
     return encoding, sep
 
 
+def header_schema(path: str | Path, encoding: str, sep: str) -> T.StructType:
+    """All-string schema named by a CSV file's header, as Spark's
+    ``header=True`` read names the columns: the header is the first line
+    that is not blank, decoded with ``encoding`` (a Spark charset name;
+    a UTF-8 byte-order mark is dropped) and split on ``sep`` with ``"``
+    quoting; an empty name becomes ``_c{i}`` and names that repeat
+    case-insensitively become ``{name}{i}``, ``i`` being the column's
+    position. Quotes follow RFC 4180, where Spark takes a backslash as
+    the escape: only a name that holds a quote character can differ."""
+    # newline="" ends a line at \n, \r or \r\n, as Hadoop's line reader does
+    with open(path, encoding=encoding.lower(), errors="replace", newline="") as fh:
+        line = next((ln for ln in fh if ln.strip(_JAVA_TRIM)), "")
+    names = next(csv.reader([line.removeprefix("\ufeff").rstrip("\r\n")], delimiter=sep), [])
+    lowered = [n.lower() for n in names]
+    return T.StructType([
+        T.StructField(
+            f"_c{i}" if not n else f"{n}{i}" if lowered.count(n.lower()) > 1 else n,
+            T.StringType(),
+        )
+        for i, n in enumerate(names)
+    ])
+
+
 def read_csv_robust(spark: SparkSession, path: str | Path) -> DataFrame:
     """S-1: read one CSV with sniffed encoding + delimiter; all columns
     arrive as strings (schema conformance owns typing, so the scan never
-    guesses types — and never fails on dirty cells)."""
+    guesses types — and never fails on dirty cells). The header is
+    parsed driver-side (:func:`header_schema`), so the read runs no job."""
     encoding, sep = sniff_csv_dialect(path)
     logger.info("read_csv_robust %s: encoding=%s sep=%r", path, encoding, sep)
     return (
-        spark.read.option("header", True)
+        spark.read.schema(header_schema(path, encoding, sep))
+        .option("header", True)
         .option("encoding", encoding)
         .option("sep", sep)
         .option("mode", "PERMISSIVE")

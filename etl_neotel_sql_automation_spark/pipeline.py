@@ -19,11 +19,10 @@ import time
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from .conform import conform, drop_all_null_rows
-from .io_sinks import add_audit_column, write_partitioned_idempotent
+from .io_sinks import load_partitioned
 from .io_sources import read_landing_dir
 from .schema import SPECS, TABLE_FOR_SPEC
 
@@ -103,25 +102,18 @@ def run_etl(
     if not raw:
         raise FileNotFoundError(f"no report files recognized in {landing_dir}")
 
-    transformed = transform_all(raw)
-    nonempty = {k: df for k, df in transformed.items() if not df.isEmpty()}
-    if not nonempty:
-        raise ValueError("all transforms produced empty outputs; aborting load")
-
     counts: dict[str, int] = {}
-    for kind, df in nonempty.items():
+    for kind, df in transform_all(raw).items():
         table = TABLE_FOR_SPEC[kind]
         target = str(Path(output_base) / table)
-        # Observation rides along with the write job: the row count
-        # comes from the same single computation instead of a second
-        # full scan (df.count() after write would recompute the plan)
-        obs = Observation(f"load_{table}")
-        audited = add_audit_column(df).observe(
-            obs, F.count(F.lit(1)).alias("rows")
-        )
-        write_partitioned_idempotent(audited, target, partition_col="fecha")
-        counts[table] = int(obs.get["rows"])
-        logger.info("loaded %s rows into %s", counts[table], target)
+        # one job per table: an empty frame writes no partition, so no
+        # isEmpty() job has to run before the write
+        n = load_partitioned(df, target, partition_col="fecha")
+        logger.info("loaded %s rows into %s", n, target)
+        if n:
+            counts[table] = n
+    if not counts:
+        raise ValueError("all transforms produced empty outputs; aborting load")
     logger.info("ETL complete in %.1fs: %s", time.time() - t0, counts)
     return counts
 

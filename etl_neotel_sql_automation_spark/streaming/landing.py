@@ -34,8 +34,8 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..conform import conform
-from ..io_sinks import add_audit_column, write_partitioned_idempotent
-from ..io_sources import sniff_csv_dialect
+from ..io_sinks import load_partitioned
+from ..io_sources import header_schema, sniff_csv_dialect
 from ..schema import ConformSpec
 from ..workload import read_events
 
@@ -43,15 +43,14 @@ from ..workload import read_events
 def infer_landing_schema(spark: SparkSession, landing_dir: str | Path) -> tuple[T.StructType, str, str]:
     """Streaming file sources need a schema up front. Sample one
     existing file driver-side: sniff dialect, take its header as an
-    all-string schema (conformance owns typing downstream)."""
+    all-string schema named as the batch read names it
+    (:func:`~etl_neotel_sql_automation_spark.io_sources.header_schema`;
+    conformance owns typing downstream)."""
     files = [p for p in sorted(Path(landing_dir).glob("*.csv")) if p.is_file()]
     if not files:
         raise FileNotFoundError(f"no csv in {landing_dir} to infer header from")
     encoding, sep = sniff_csv_dialect(files[0])
-    with open(files[0], "rb") as fh:
-        header = fh.readline().decode(encoding.lower(), "replace").rstrip("\r\n")
-    cols = [c.strip() for c in header.split(sep)]
-    return T.StructType([T.StructField(c, T.StringType(), True) for c in cols]), encoding, sep
+    return header_schema(files[0], encoding, sep), encoding, sep
 
 
 def stream_landing_csv(
@@ -83,9 +82,7 @@ def stream_landing_csv(
         options["sourceArchiveDir"] = str(archive_dir)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        out = add_audit_column(conform(batch_df, spec))
-        if not out.isEmpty():
-            write_partitioned_idempotent(out, str(output_path), partition_col="fecha")
+        load_partitioned(conform(batch_df, spec), str(output_path), partition_col="fecha")
 
     src = _landing_csv_stream(spark, landing_dir, **options)
     return _start_foreach_batch(src, sink, checkpoint_dir, available_now)

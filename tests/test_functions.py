@@ -9,7 +9,6 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from etl_neotel_sql_automation_spark import functions as ef
 
@@ -150,9 +149,9 @@ def test_ansi_safety(spark):
 def test_time_str_no_python_udf(spark):
     """The coercion expressions must stay JVM-side (no BatchEvalPython /
     ArrowEvalPython in the plan) so codegen and pushdown survive."""
-    df = spark.range(10).select(
-        ef.time_str_to_minutes(F.col("id").cast("string")).alias("m"),
-        ef.int0(F.col("id").cast("string")).alias("i"),
+    df = spark.range(10).selectExpr("CAST(id AS STRING) AS v").select(
+        ef.time_str_to_minutes("v").alias("m"),
+        ef.int0("v").alias("i"),
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan

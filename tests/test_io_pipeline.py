@@ -32,6 +32,20 @@ ESTADOS_CSV = (
 )
 
 
+def _assert_matches_spark_header_read(spark, p):
+    """``read_csv_robust`` (header parsed driver-side) gives the columns
+    and rows of Spark's own ``header=True`` read with the same dialect."""
+    enc, sep = sniff_csv_dialect(p)
+    want = (
+        spark.read.option("header", True).option("encoding", enc).option("sep", sep)
+        .option("mode", "PERMISSIVE").csv(str(p))
+    )
+    got = read_csv_robust(spark, p)
+    assert got.columns == want.columns
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    return got
+
+
 @pytest.mark.parametrize("encoding", ["utf-8", "latin-1", "cp1252"])
 @pytest.mark.parametrize("sep", [",", ";", "\t"])
 def test_sniff_and_read(spark, tmp_path, encoding, sep):
@@ -39,10 +53,37 @@ def test_sniff_and_read(spark, tmp_path, encoding, sep):
     p.write_bytes(CONDUCTA_CSV.format(d=sep).encode(encoding))
     enc, got_sep = sniff_csv_dialect(p)
     assert got_sep == sep
-    df = read_csv_robust(spark, p)
+    df = _assert_matches_spark_header_read(spark, p)
     assert df.count() == 2
     # accented header survived the encoding round-trip
     assert any("Campa" in c for c in df.columns)
+
+
+@pytest.mark.parametrize("sep", [",", ";"])
+@pytest.mark.parametrize(
+    "header,columns",
+    [
+        ('Agente{d}"Campaña{d} tipo"{d}ID', ["Agente", "Campaña{d} tipo", "ID"]),
+        ("{d}Agente{d}{d}ID", ["_c0", "Agente", "_c2", "ID"]),
+        ("id{d}Agente{d}ID{d}agente", ["id0", "Agente1", "ID2", "agente3"]),
+        ("\ufeffAgente{d}ID", ["Agente", "ID"]),
+    ],
+    ids=["quoted_delimiter", "empty_names", "ci_duplicates", "utf8_bom"],
+)
+def test_read_csv_header_like_spark(spark, tmp_path, sep, header, columns):
+    """Header names the driver-side parse must get as Spark does: a
+    quoted name may hold the delimiter, an empty name becomes ``_c{i}``,
+    case-insensitive duplicates get their position appended, a UTF-8
+    byte-order mark is not part of the first name."""
+    p = tmp_path / "conducta.csv"
+    width = len(columns)
+    p.write_text(
+        header.format(d=sep) + "\n" + sep.join(f"v{i}" for i in range(width)) + "\n"
+        + sep.join(["x"] * (width - 1)) + "\n",
+        encoding="utf-8",
+    )
+    df = _assert_matches_spark_header_read(spark, p)
+    assert df.columns == [c.format(d=sep) for c in columns]
 
 
 def test_cp1252_specific_bytes_map_via_latin1(spark, tmp_path):
@@ -270,6 +311,82 @@ def test_run_etl_empty_landing(spark, tmp_path):
     empty.mkdir()
     with pytest.raises(FileNotFoundError):
         run_etl(spark, empty, tmp_path / "o")
+
+
+def test_run_etl_all_rows_keyless_aborts_and_keeps_loaded_dates(spark, tmp_path):
+    """A day whose rows all lose their key (every date unparseable)
+    loads nothing: ``run_etl`` raises ``ValueError``, and the date
+    partition an earlier run wrote is untouched (same rows, same
+    ``load_date``, same files): the empty load replaced no partition."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "conducta.csv").write_text(CONDUCTA_CSV.format(d=";"))
+    out = tmp_path / "warehouse"
+    assert run_etl(spark, landing, out) == {"tbl_neotel_conducta": 2}
+    table = out / "tbl_neotel_conducta"
+
+    def state():
+        rows = sorted(map(tuple, spark.read.parquet(str(table)).collect()))
+        return rows, sorted(str(f.relative_to(table)) for f in table.rglob("*.parquet"))
+
+    before = state()
+    (landing / "conducta.csv").write_text(
+        "Agente;Fecha;ID\nana;99/99/2026;7\nbob;;8\n"
+    )
+    with pytest.raises(ValueError, match="empty"):
+        run_etl(spark, landing, out)
+    assert state() == before
+
+
+_CODEGEN_PER_RUN = """
+import json, sys
+from etl_neotel_sql_automation_spark.pipeline import run_etl
+from etl_neotel_sql_automation_spark.session import get_spark
+
+spark = get_spark(app_name="codegen_reuse", master="local[2]", shuffle_partitions=2)
+size = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_SOURCE_CODE_SIZE()
+chars = []
+for _ in range(2):
+    before = sum(size.getSnapshot().getValues())
+    run_etl(spark, sys.argv[1], sys.argv[2])
+    chars.append(sum(size.getSnapshot().getValues()) - before)
+print(json.dumps({"chars": chars, "compiles": size.getCount()}))
+"""
+
+
+def test_run_etl_reuses_compiled_code(tmp_path):
+    """A second ``run_etl`` in the same session compiles less than a
+    tenth of the generated source the first one compiled: the run's
+    ``load_date`` literal stays out of the conform stage, so that
+    stage's code is the same on every run and comes from the codegen
+    cache. Runs in a fresh JVM, whose source-size histogram (a
+    1028-sample reservoir) then holds every compile exactly."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from etl_neotel_sql_automation_spark.schema import SPECS
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    # every spec column present, so no coercion folds to a constant
+    for kind, spec in SPECS.items():
+        row = ["13/08/2026" if c == "fecha" else "01:30:00" for c in spec.final_cols]
+        (landing / f"{kind}.csv").write_text(
+            ",".join(spec.final_cols) + "\n" + ",".join(row) + "\n"
+        )
+    root = Path(__file__).resolve().parents[1]
+    env = {**os.environ, "PYTHONPATH": str(root), "SPARK_DRIVER_MEMORY": "1g"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _CODEGEN_PER_RUN, str(landing), str(tmp_path / "wh")],
+        cwd=root, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["compiles"] <= 1028, got  # every compile still in the reservoir
+    first, second = got["chars"]
+    assert second * 10 < first, got
 
 
 def test_compact_small_files(spark, tmp_path):

@@ -6,7 +6,9 @@ from __future__ import annotations
 
 import time
 
+from etl_neotel_sql_automation_spark.io_sources import read_csv_robust
 from etl_neotel_sql_automation_spark.streaming.landing import (
+    infer_landing_schema,
     stream_events_hourly,
     stream_landing_csv,
 )
@@ -59,6 +61,29 @@ def test_stream_landing_incremental_and_idempotent(spark, tmp_path):
     _run_stream(spark, landing, out, ckpt)
     rows = {(r.agente, str(r.fecha)) for r in spark.read.parquet(str(out)).collect()}
     assert rows == {("ana", "2026-08-12"), ("eve", "2026-08-13")}
+
+
+def test_stream_landing_quoted_header_name_with_delimiter(spark, tmp_path):
+    """A quoted header name that holds the delimiter is ONE column, in
+    the stream's schema as in the batch read. Splitting the header on
+    the delimiter gave the stream an extra column, so every later value
+    landed one column to the right (here ``Fecha`` got the ID, its date
+    key parsed as null and the key filter dropped the row)."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "conducta_day1.csv").write_text(
+        'Agente;"Nota; libre";Fecha;ID;In\n'
+        "ana;x;12/08/2026;7;12\n"
+    )
+    schema, _, _ = infer_landing_schema(spark, landing)
+    batch = read_csv_robust(spark, landing / "conducta_day1.csv")
+    assert schema.fieldNames() == batch.columns == ["Agente", "Nota; libre", "Fecha", "ID", "In"]
+    _run_stream(spark, landing, tmp_path / "out", tmp_path / "ckpt")
+    rows = [
+        (r.agente, str(r.fecha), r.id, r.in_total)
+        for r in spark.read.parquet(str(tmp_path / "out")).collect()
+    ]
+    assert rows == [("ana", "2026-08-12", 7, 12)]
 
 
 def test_stream_landing_archives_processed_files(spark, tmp_path):
