@@ -61,7 +61,7 @@ def write_partitioned_idempotent(
     )
 
 
-def load_partitioned(df: DataFrame, path: str, partition_col: str = "fecha") -> int:
+def load_partitioned(df: DataFrame, path: str) -> int:
     """Load ``df`` into the date-partitioned table at ``path`` in one
     Spark job and return its row count: S-7's ``load_date`` is added,
     then :func:`write_partitioned_idempotent` replaces the dates present.
@@ -76,7 +76,7 @@ def load_partitioned(df: DataFrame, path: str, partition_col: str = "fecha") -> 
     the column does."""
     obs = Observation()
     observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-    write_partitioned_idempotent(add_audit_column(observed), path, partition_col)
+    write_partitioned_idempotent(add_audit_column(observed), path)
     return int(obs.get["rows"])
 
 

@@ -83,7 +83,11 @@ def header_schema(path: str | Path, encoding: str, sep: str) -> T.StructType:
     quoting; an empty name becomes ``_c{i}`` and names that repeat
     case-insensitively become ``{name}{i}``, ``i`` being the column's
     position. Quotes follow RFC 4180, where Spark takes a backslash as
-    the escape: only a name that holds a quote character can differ."""
+    the escape: only a name that holds a quote character can differ.
+    Duplicates are matched as under the default
+    ``spark.sql.caseSensitive=false``; with it set to true Spark keeps
+    ``Agente;agente`` as they are, where this names them ``Agente0``,
+    ``agente1``."""
     # newline="" ends a line at \n, \r or \r\n, as Hadoop's line reader does
     with open(path, encoding=encoding.lower(), errors="replace", newline="") as fh:
         line = next((ln for ln in fh if ln.strip(_JAVA_TRIM)), "")

@@ -108,7 +108,7 @@ def run_etl(
         target = str(Path(output_base) / table)
         # one job per table: an empty frame writes no partition, so no
         # isEmpty() job has to run before the write
-        n = load_partitioned(df, target, partition_col="fecha")
+        n = load_partitioned(df, target)
         logger.info("loaded %s rows into %s", n, target)
         if n:
             counts[table] = n

@@ -82,7 +82,7 @@ def stream_landing_csv(
         options["sourceArchiveDir"] = str(archive_dir)
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        load_partitioned(conform(batch_df, spec), str(output_path), partition_col="fecha")
+        load_partitioned(conform(batch_df, spec), str(output_path))
 
     src = _landing_csv_stream(spark, landing_dir, **options)
     return _start_foreach_batch(src, sink, checkpoint_dir, available_now)

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pathlib import Path
 
 import pytest
+from pyspark.errors import AnalysisException
 
 from etl_neotel_sql_automation_spark.io_sinks import (
     JdbcStagingWriter,
@@ -317,7 +318,8 @@ def test_run_etl_all_rows_keyless_aborts_and_keeps_loaded_dates(spark, tmp_path)
     """A day whose rows all lose their key (every date unparseable)
     loads nothing: ``run_etl`` raises ``ValueError``, and the date
     partition an earlier run wrote is untouched (same rows, same
-    ``load_date``, same files): the empty load replaced no partition."""
+    ``load_date``, same files): the empty load replaced no partition.
+    At a warehouse never written it leaves no parquet file to read."""
     landing = tmp_path / "landing"
     landing.mkdir()
     (landing / "conducta.csv").write_text(CONDUCTA_CSV.format(d=";"))
@@ -336,6 +338,15 @@ def test_run_etl_all_rows_keyless_aborts_and_keeps_loaded_dates(spark, tmp_path)
     with pytest.raises(ValueError, match="empty"):
         run_etl(spark, landing, out)
     assert state() == before
+
+    # at a warehouse never written, the empty load leaves the table
+    # directory without a parquet file, so a reader finds no table
+    fresh = tmp_path / "fresh" / "tbl_neotel_conducta"
+    with pytest.raises(ValueError, match="empty"):
+        run_etl(spark, landing, fresh.parent)
+    assert not list(fresh.rglob("*.parquet"))
+    with pytest.raises(AnalysisException):
+        spark.read.parquet(str(fresh)).collect()
 
 
 _CODEGEN_PER_RUN = """
