@@ -7,9 +7,11 @@ seam in the reference: a pure DataFrame -> DataFrame function — driven
 by a :class:`~etl_neotel_sql_automation_spark.schema.ConformSpec`.
 
 Scale notes (100 TB posture): every step is a *narrow* transformation —
-column renames, expressions, and filters compose into a single
-projection over the scan; no shuffle is introduced, and Catalyst prunes
-unreferenced source columns down to the reader.
+the names are worked out in Python and applied with one ``toDF``, one
+``select`` pads, projects and coerces, and ``na.drop`` filters keys
+(three eagerly analyzed DataFrames, not one per step); no shuffle is
+introduced, and Catalyst prunes unreferenced source columns down to the
+reader.
 """
 
 from __future__ import annotations
@@ -27,22 +29,26 @@ from .functions import (
 from .schema import ConformSpec
 
 
-def normalize_column_names(df: DataFrame) -> DataFrame:
+def _clean_names(columns: list[str]) -> list[str]:
     """P-1: clean every column name (main.py:1222, 1278). Collisions
     after cleaning get a positional suffix — pandas would silently
     create duplicate labels; Spark cannot, and the suffix keeps the
     data instead of corrupting it."""
-    cleaned = [clean_name(c) for c in df.columns]
     seen: dict[str, int] = {}
     out = []
-    for c in cleaned:
+    for c in map(clean_name, columns):
         if c in seen:
             seen[c] += 1
             out.append(f"{c}_{seen[c]}")
         else:
             seen[c] = 0
             out.append(c)
-    return df.toDF(*out)
+    return out
+
+
+def normalize_column_names(df: DataFrame) -> DataFrame:
+    """:func:`_clean_names` applied to ``df``."""
+    return df.toDF(*_clean_names(df.columns))
 
 
 def drop_all_null_rows(df: DataFrame) -> DataFrame:
@@ -64,26 +70,18 @@ def conform(df: DataFrame, spec: ConformSpec) -> DataFrame:
     6. drop rows with null keys (P-6) — *after* coercion, as in the
        reference, so 0-defaulted numeric keys never drop
     """
-    df = normalize_column_names(df)
+    # Renames apply in map order to every column then carrying the key,
+    # as withColumnsRenamed does; a rename onto a present name makes two
+    # columns of that name, and selecting it fails as ambiguous.
+    names = _clean_names(df.columns)
+    for old, new in [(k, v) for k, v in spec.rename_map.items() if k in names]:
+        names = [new if n == old else n for n in names]
 
-    rename = {k: v for k, v in spec.rename_map.items() if k in df.columns}
-    if rename:
-        df = df.withColumnsRenamed(rename)
-
-    missing = [c for c in spec.final_cols if c not in df.columns]
-    if missing:
-        df = df.withColumns({c: F.lit(None).cast("string") for c in missing})
-
-    df = df.select(*spec.final_cols)
-
-    # Columns we just null-padded are all-null by construction, so each
-    # coercion collapses to its null-input constant (time/int/float -> 0,
-    # date -> null). Emitting the constant directly keeps semantics
-    # identical while shrinking the expression tree ~6x on wide specs
-    # (estados: 22 of 26 time columns are padded) — Catalyst ANALYSIS of
-    # the when-chain forest, rebuilt per query, was the dominant cost.
-    padded = set(missing)
-    coercions = {}
+    # A padded column is all-null, so its coercion is the null-input
+    # constant (time/int/float -> 0, date -> null): a much smaller
+    # expression tree to analyze on wide specs (estados pads 22 of 26).
+    padded = set(spec.final_cols) - set(names)
+    coercions = {c: F.lit(None).cast("string") for c in padded}
     for c in spec.date_cols:
         coercions[c] = F.lit(None).cast("date") if c in padded else date_dayfirst(c)
     for c in spec.int_cols:
@@ -92,7 +90,9 @@ def conform(df: DataFrame, spec: ConformSpec) -> DataFrame:
         coercions[c] = F.lit(0.0) if c in padded else float0(c)
     for c in spec.time_cols:
         coercions[c] = F.lit(0.0) if c in padded else time_str_to_minutes(c)
-    df = df.withColumns(coercions)
+    df = df.toDF(*names).select(
+        *[coercions[c].alias(c) if c in coercions else F.col(c) for c in spec.final_cols]
+    )
 
     if spec.key_cols:
         df = df.na.drop(subset=[c for c in spec.key_cols if c in spec.final_cols])

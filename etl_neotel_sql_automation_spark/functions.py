@@ -135,10 +135,16 @@ def date_dayfirst(c: str) -> Column:
 
     ``"13/08/2026"`` -> 2026-08-13; ``"01/02/2026"`` -> Feb 1 (day first);
     ``"99/99/2026"`` -> null. Parity: main.py:1239, 1295.
+
+    A sign where the year starts gives null up front: ``try_to_timestamp``
+    throws on some signed years (``'-512026-1-2'``: long overflow).
     """
     s = f"TRIM(CAST({_ident(c)} AS STRING))"
     candidates = ", ".join(f"try_to_timestamp({s}, '{fmt}')" for fmt in _DAYFIRST_FORMATS)
-    return F.expr(f"CAST(coalesce({candidates}) AS DATE)")
+    return F.expr(
+        f"CASE WHEN {s} RLIKE '^[+-]|[/-][+-]' THEN NULL"
+        f" ELSE CAST(coalesce({candidates}) AS DATE) END"
+    )
 
 
 def date_to_iso(c: Column | str) -> Column:

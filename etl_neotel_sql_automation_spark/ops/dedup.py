@@ -23,19 +23,20 @@ from .text import normalize_text, tokens
 
 
 def fan_out(df: DataFrame) -> DataFrame:
-    """Repartition up to the cluster's parallelism when the input scan
-    has too few partitions (e.g. one small parquet file) — the
-    explode-heavy stages below would otherwise run on one core. A
-    well-partitioned large input passes through untouched, so this adds
-    no shuffle at scale."""
+    """Repartition ``df`` up to the session's cores when it has fewer
+    partitions: size-based split planning cannot see per-row CPU work
+    (tokenize, hash, dot products, explode), so one single-row-group
+    parquet file would run the pipeline on one core (8x on the sf0.1
+    bigram-LM pass). At scale the scan has more splits than cores and
+    no exchange is added (tests/test_plans.py test_spread_if_starved_*).
+    Uniform, not gated per query: a starved scan pays one extra pass
+    over at most one row group (~0.25 s at sf0.1), a skipped one up to
+    8x. Counting partitions plans ``df``; above a join AQE runs the
+    broadcast stage as a Spark job, so apply it at the scan."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
-
-
-# internal alias kept for call sites predating the public name
-_fan_out = fan_out
 
 
 def dedup_exact(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -85,7 +86,7 @@ def token_jaccard_pairs(
     self-equi-join on token). Output: id_a < id_b, jaccard.
     """
     tok = (
-        _fan_out(df).select(F.col(id_col).alias("id"), F.col(block_col).alias("blk"),
+        fan_out(df).select(F.col(id_col).alias("id"), F.col(block_col).alias("blk"),
                   F.explode(F.array_distinct(tokens(text_col))).alias("tok"))
     )
     sizes = tok.groupBy("id").agg(F.count("*").alias("sz"))
@@ -159,7 +160,7 @@ def minhash_signatures(
         cnt >= shingle_n,
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, shingle_n))),
     ).otherwise(F.array())
-    sh = _fan_out(df).select(
+    sh = fan_out(df).select(
         F.col(id_col).alias("id"), F.explode(raw_shingles).alias("sh")
     ).select("id", F.pmod(hash64("sh", hash_fn), F.lit(_MERSENNE_P)).alias("h"))
     mins = sh.groupBy("id").agg(
@@ -348,7 +349,7 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     ``bit_count(a ^ b)``. With ``hash_fn="md5"`` use ``bits=60`` (the
     md5-derived value carries 60 bits of entropy; see ops.hashing).
     """
-    tok = _fan_out(df).select(
+    tok = fan_out(df).select(
         F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("tok")
     ).select("id", hash64("tok", hash_fn).alias("h"))
     aggs = [
@@ -382,7 +383,7 @@ def token_containment_pairs(
     is 1.0. Same blocked self-equi-join + per-pair count plan as
     :func:`token_jaccard_pairs` (at 100 TB the block is an LSH bucket);
     output: contained_id, container_id, containment (round 6)."""
-    tok = _fan_out(df).select(
+    tok = fan_out(df).select(
         F.col(id_col).alias("id"),
         F.col(block_col).alias("blk"),
         F.explode(F.array_distinct(tokens(text_col))).alias("tok"),
@@ -497,7 +498,7 @@ def jaccard_prefix_pairs(
     # explode(set_expr) form streams the generator output and the
     # second window rides the rn window's existing exchange+sort.
     # The two-window form stays.
-    tok = _fan_out(df).select(
+    tok = fan_out(df).select(
         F.col(id_col).alias("id"),
         blk.alias("blk"),
         F.explode(set_expr).alias("tok_s"),

@@ -17,19 +17,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from .dedup import fan_out
+
 
 def _to_double(c: Column | str) -> Column:
     c = F.col(c) if isinstance(c, str) else c
     return F.transform(c, lambda x: x.cast("double"))
-
-
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Parallelize a corpus scan that arrived as too few partitions
-    (small parquet). No-op for well-partitioned inputs at scale."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -102,7 +95,7 @@ def brute_force_topk(
         F.col(id_col).alias("q_id"), _to_double(F.col(vec_col)).alias("q_vec")
     ).withColumn("q_norm", norm(F.col("q_vec")))
     c = (
-        _fan_out(corpus)
+        fan_out(corpus)
         .select(F.col(id_col).alias("n_id"), _to_double(F.col(vec_col)).alias("n_vec"))
         .withColumn("n_norm", norm(F.col("n_vec")))
     )
@@ -148,7 +141,7 @@ def ivf_topk(
     def nearest_centroids(df: DataFrame, side_id: str, n: int) -> DataFrame:
         return _nearest_cells(df, cents, id_col, vec_col, side_id, n)
 
-    cb = nearest_centroids(_fan_out(corpus), "n_id", 1)  # corpus: home cell only
+    cb = nearest_centroids(fan_out(corpus), "n_id", 1)  # corpus: home cell only
     qb = nearest_centroids(queries, "q_id", n_probe)     # queries: probe n cells
     # cast+norm once per row on each side of the cell join (the
     # brute_force_topk factoring; bit-identical — see
@@ -537,7 +530,7 @@ def pq_topk(
     books = pq_train_codebooks(
         corpus, vec_col, m, n_codes, dim, seed, id_col, train_fraction, train_backend
     )
-    corpus_cached = _fan_out(corpus)
+    corpus_cached = fan_out(corpus)
     cb = pq_encode(corpus_cached, books, id_col, vec_col).select(
         F.col(id_col).alias("n_id"), "codes"
     )
@@ -613,7 +606,7 @@ def ivf_pq_topk(
     books = pq_train_codebooks(
         corpus, vec_col, m, n_codes, dim, seed, id_col, train_fraction, train_backend
     )
-    corpus_f = _fan_out(corpus)
+    corpus_f = fan_out(corpus)
     # corpus side: home cell + PQ codes, joined once on id
     cells = _nearest_cells(corpus_f, cents, id_col, vec_col, "n_id", 1).select(
         "n_id", "cid"
@@ -680,7 +673,7 @@ def cosine_near_dup_pairs(
     # order over the same doubles, and IEEE multiply/divide are exact
     # given the same operands, so the round-6 sims are unchanged.
     a = (
-        _fan_out(df)
+        fan_out(df)
         .select(F.col(id_col).alias("id_a"), _to_double(F.col(vec_col)).alias("va"))
         .withColumn("na", norm(F.col("va")))
     )
@@ -952,7 +945,7 @@ def lsh_near_dup_pairs(
     ~1.0 for genuinely-near pairs.
     """
     banded = multi_table_buckets(
-        _fan_out(df), id_col, vec_col, tables, planes_per_table, seed, dim
+        fan_out(df), id_col, vec_col, tables, planes_per_table, seed, dim
     ).select("id", "t", "bucket")
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -1045,7 +1038,7 @@ def sq8_topk(
     per term) sum exactly in any order and any engine, so unlike float
     scoring the ranking is bit-reproducible end-to-end."""
     stats = sq8_stats(corpus, vec_col, dim)
-    cb = sq8_codes(_fan_out(corpus), stats, id_col, vec_col, dim).select(
+    cb = sq8_codes(fan_out(corpus), stats, id_col, vec_col, dim).select(
         F.col(id_col).alias("n_id"), F.col("codes").alias("n_codes")
     )
     qb = sq8_codes(queries, stats, id_col, vec_col, dim).select(
@@ -1082,7 +1075,7 @@ def lsh_topk(
     # brute_force_topk factoring; bit-identical — see
     # cosine_near_dup_pairs), not per (query, candidate) pair.
     cb = (
-        hyperplane_lsh_buckets(_fan_out(corpus), id_col, vec_col, planes)
+        hyperplane_lsh_buckets(fan_out(corpus), id_col, vec_col, planes)
         .select(
             F.col(id_col).alias("n_id"),
             _to_double(F.col(vec_col)).alias("n_vec"),
@@ -1141,7 +1134,7 @@ def semantic_prune(
     ``dedup_semantic_prune`` (workload/curation.py) with a bit-exact
     DuckDB replay of clustering + verdicts.
     """
-    b = hyperplane_lsh_buckets(_fan_out(df), id_col, vec_col, planes, seed, dim)
+    b = hyperplane_lsh_buckets(fan_out(df), id_col, vec_col, planes, seed, dim)
     # cast+norm once per vector row before the bucket self-join (the
     # brute_force_topk factoring; bit-identical — see
     # cosine_near_dup_pairs): a vector meets every bucket-mate, so
@@ -1195,7 +1188,7 @@ def knn_graph(
     candidate count) constant. Registered as ``sim_knn_graph``
     (workload/curation.py) with a bit-exact oracle.
     """
-    b = hyperplane_lsh_buckets(_fan_out(df), id_col, vec_col, planes, seed, dim)
+    b = hyperplane_lsh_buckets(fan_out(df), id_col, vec_col, planes, seed, dim)
     # cast+norm once per vector row before the bucket self-join — the
     # same bit-identical factoring as semantic_prune above.
     bf = b.select(

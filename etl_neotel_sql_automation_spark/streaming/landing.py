@@ -37,7 +37,7 @@ from ..conform import conform
 from ..io_sinks import load_partitioned
 from ..io_sources import header_schema, sniff_csv_dialect
 from ..schema import ConformSpec
-from ..workload import read_events
+from ..workload import parquet_schema, read_events
 
 
 def infer_landing_schema(spark: SparkSession, landing_dir: str | Path) -> tuple[T.StructType, str, str]:
@@ -162,12 +162,12 @@ def run_available_now(
 
 def table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """File stream over the testdata table ``<sf_dir>/<name>.parquet``.
-    Streaming file sources need the schema up front: it comes from a
-    batch read of the parquet footer (no data read). ``pathGlobFilter``
-    keeps the stream off the table's siblings in ``sf_dir``."""
-    schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    Streaming file sources need the schema up front: it comes from the
+    batch ``table()``'s cache (:func:`~..workload.parquet_schema`).
+    ``pathGlobFilter`` keeps the stream off the table's siblings in
+    ``sf_dir``."""
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(parquet_schema(spark, f"{sf_dir}/{name}.parquet"))
         .option("pathGlobFilter", f"{name}.parquet")
         .parquet(sf_dir)
     )

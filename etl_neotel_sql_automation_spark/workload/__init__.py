@@ -19,10 +19,14 @@ Determinism rules every entry follows:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from ..ops.dedup import fan_out
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -60,43 +64,6 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-def _spread_if_starved(df: DataFrame) -> DataFrame:
-    """Raise scan parallelism for COMPUTE-BOUND corpus inputs when the
-    file layout starves it. Tokenize/hash/dot-product projections cost
-    CPU per row that size-based split planning cannot see (the
-    pandas_grouped_outliers precedent): a small single-row-group
-    parquet file yields ONE input partition, serializing the whole
-    token/embedding pipeline through one core while the rest idle —
-    measured 8x on the sf0.1 bigram-LM training pass (3.7 -> 0.5 s).
-
-    Scale honesty: the repartition fires ONLY when the scan has fewer
-    splits than the session's cores. At 100 TB the corpus scan has
-    thousands of splits, the condition is false, and NO extra exchange
-    appears in the plan — this is the local-file twin of the knob
-    table in SCALING.md, not a pinned shuffle. Both halves of the
-    claim are plan-asserted (tests/test_plans.py
-    test_spread_if_starved_*: a >=cores-split fixture gets no
-    Repartition node; a single-file fixture does).
-
-    The rule is deliberately UNIFORM across consumers rather than
-    gated per query: the exchange costs a starved scan one extra pass
-    over data that fits one row group (<=128 MB — bounded, ~0.25 s
-    measured on the cheapest consumer, dedup_fingerprint_docs at
-    sf0.1), while skipping it costs a compute-bound consumer up to
-    8x wall (quality_gopher_rules 1.61 -> 0.36 s, text_dup_span_stats
-    3.47 -> 1.02 s in BENCH_r05). A per-query opt-out would re-derive
-    "is my projection CPU-heavy?" at every call site and silently rot
-    as queries evolve; the worst case of the uniform rule is bounded
-    by the single-row-group size, the worst case of gating wrong is
-    a serialized pipeline."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        parts = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - defensive: never block a read
-        return df
-    return df if parts >= target else df.repartition(target)
-
-
 def read_events(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
     """The events ``ts`` rule, shared by the batch :func:`table` and the
     streaming ``events_stream``. events.parquet has shipped with ts as
@@ -117,19 +84,60 @@ def read_events(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame
     return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
 
 
+# Session confs that change the schema Spark infers from one parquet file.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, from the cache
+    :func:`table` describes; a path with no local files is not cached."""
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = sorted(os.path.join(d, f) for d, _, names in os.walk(path) for f in names)
+    if not files:
+        return spark.read.parquet(path).schema
+    stats = [(os.path.relpath(f, path), os.stat(f)) for f in files]
+    key = (
+        tuple((rel, st.st_size, st.st_mtime_ns) for rel, st in stats),
+        tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
+    )
+    hit = _SCHEMAS.get(path)
+    if hit is None or hit[0] != key:
+        hit = _SCHEMAS[path] = (key, spark.read.parquet(path).schema)
+    return hit[1]
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan for one testdata table; pins session TZ to UTC
-    so timestamp collection matches the UTC-naive oracle. The
-    compute-heavy corpus tables (documents: tokenization/hashing;
-    embeddings: quantized projections) pass through
-    :func:`_spread_if_starved` so per-row CPU work parallelizes even
-    off a single-row-group local file."""
+    so timestamp collection matches the UTC-naive oracle.
+
+    Schema inference runs a Spark job, so the schema is cached per path
+    (:func:`parquet_schema`), keyed by the relative path, size and
+    ``mtime_ns`` of every file at or under it and the :data:`_SCHEMA_CONFS`
+    values (e.g. ``nanosAsLong``). Every call still sets the TZ, lists the
+    files and returns a fresh relation (new expression ids: two calls
+    self-join); the scan reads the footers when it runs. The CPU-heavy
+    corpus tables (documents, embeddings) pass through
+    :func:`~..ops.dedup.fan_out`."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    path = f"{sf_dir}/{name}.parquet"
+
+    def read() -> DataFrame:
+        return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+
     if name in ("documents", "embeddings"):
-        return _spread_if_starved(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+        return fan_out(read())
     if name == "events":
-        return read_events(spark, lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return read_events(spark, read)
+    return read()
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

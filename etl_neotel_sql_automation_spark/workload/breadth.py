@@ -69,7 +69,7 @@ def etl_conform_estados(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full estados conformance differentially: 26 t_* time coercions,
     null-padding of 22 missing columns, dirty int keys — the reference's
     second pipeline (main.py:1264-1308) end-to-end."""
-    li = table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 19 == 0)
+    li = fan_out(table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 19 == 0))
     two = lambda c: F.lpad(c.cast("string"), 2, "0")  # noqa: E731
     raw = li.select(
         F.date_format("l_shipdate", "dd/MM/yyyy").alias("Fecha"),
@@ -100,10 +100,7 @@ def etl_conform_estados(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("ab:cd"))
         .alias("T Diario Pause"),
     )
-    # single-row-group local files would run the 26-column coercion
-    # projection on one core; fan_out is a no-op on well-partitioned
-    # inputs at scale
-    return conform(fan_out(raw), ESTADOS_SPEC)
+    return conform(raw, ESTADOS_SPEC)
 
 
 # --- remaining join types ------------------------------------------------

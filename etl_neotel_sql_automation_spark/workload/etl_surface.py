@@ -263,7 +263,8 @@ def etl_drop_null_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def etl_conform_conducta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 3 == 0)
+    # fan out at the scan: the broadcast join keeps its partitioning
+    orders = fan_out(table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 3 == 0))
     cust = table(spark, sf_dir, "customer")
     j = orders.join(cust, orders.o_custkey == cust.c_custkey)
     two = lambda c: F.lpad(c.cast("string"), 2, "0")  # noqa: E731
@@ -290,4 +291,4 @@ def etl_conform_conducta(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("-"))
         .alias("Tiempo medio de respuesta IN"),
     )
-    return conform(fan_out(raw), CONDUCTA_SPEC)
+    return conform(raw, CONDUCTA_SPEC)

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from . import query, table
 from ..ops import similarity as S
+from ..ops.dedup import fan_out
 from ..ops.similarity import cosine
 from .llm_ops import _SQL_QV, _sql_bucket
 from .wave71 import CHAPMAN_SQL_TAIL, chapman_frame
@@ -55,7 +56,7 @@ def emb_capture_recapture_frame(
     The registered query keeps the default so the oracle's inlined
     sign literals match."""
     banded = S.multi_table_buckets(
-        S._fan_out(emb), tables=_TABLES, planes_per_table=planes_per_table
+        fan_out(emb), tables=_TABLES, planes_per_table=planes_per_table
     ).select("id", "t", "bucket")
     a, b = banded.alias("a"), banded.alias("b")
     pairs = (

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.utils import AnalysisException
 
 from etl_neotel_sql_automation_spark.conform import (
     conform,
@@ -20,6 +21,7 @@ from etl_neotel_sql_automation_spark.schema import (
     CONDUCTA_SPEC,
     ESTADOS_FINAL_COLS,
     ESTADOS_SPEC,
+    ConformSpec,
 )
 
 
@@ -114,6 +116,28 @@ def test_normalize_collision_suffix(spark):
     df = spark.createDataFrame([(1, 2)], ["A b", "a_b"])
     out = normalize_column_names(df)
     assert out.columns == ["a_b", "a_b_1"]
+
+
+def test_conform_rename_onto_existing_name(spark):
+    """A rename onto a name the source already has (``In`` -> in_total
+    next to an ``In Total`` header) leaves two columns of that name:
+    conform fails as ambiguous when the spec projects it, and keeps
+    going when it does not. Renames are chosen against the cleaned
+    source names and apply in map order, each to every column then
+    carrying its key."""
+    df = spark.createDataFrame([("ana", "13/08/2026", "1", "2")], ["Agente", "Fecha", "In", "In Total"])
+    with pytest.raises(AnalysisException, match="AMBIGUOUS_REFERENCE"):
+        conform(df, CONDUCTA_SPEC)
+
+    src = spark.createDataFrame([("1", "2", "3")], ["A", "B", "C"])
+    spec = ConformSpec(name="t", rename_map={"a": "b", "b": "c"}, final_cols=["d"])
+    assert [tuple(r) for r in conform(src, spec).collect()] == [(None,)]
+    with pytest.raises(AnalysisException, match="AMBIGUOUS_REFERENCE"):
+        conform(src, ConformSpec(name="t", rename_map={"a": "b", "b": "c"}, final_cols=["c"]))
+    # "b" is no source name, so only a -> b applies: no chain on to c
+    spec = ConformSpec(name="t", rename_map={"a": "b", "b": "c"}, final_cols=["b", "c"])
+    out = conform(src.select("A", "C"), spec)
+    assert [tuple(r) for r in out.collect()] == [("1", "3")]
 
 
 def test_drop_all_null_rows(spark):

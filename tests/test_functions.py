@@ -93,6 +93,7 @@ DATE_CASES = [
     ("13/08/2026 14:30:00", "2026-08-13"),
     ("garbage", None),
     (None, None),
+    ("-512026-1-2", None),  # try_to_timestamp throws long overflow on it
 ]
 
 
