@@ -92,7 +92,9 @@ _SCHEMA_CONFS = (
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.parquet.mergeSchema",
 )
-_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+# path -> (file identity, {conf values: schema}): read_events sets
+# nanosAsLong mid-session, so one session reads a file under both values
+_SCHEMAS: dict[str, tuple[tuple, dict[tuple, StructType]]] = {}
 
 
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
@@ -105,14 +107,14 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     if not files:
         return spark.read.parquet(path).schema
     stats = [(os.path.relpath(f, path), os.stat(f)) for f in files]
-    key = (
-        tuple((rel, st.st_size, st.st_mtime_ns) for rel, st in stats),
-        tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
-    )
-    hit = _SCHEMAS.get(path)
-    if hit is None or hit[0] != key:
-        hit = _SCHEMAS[path] = (key, spark.read.parquet(path).schema)
-    return hit[1]
+    identity = tuple((rel, st.st_size, st.st_mtime_ns) for rel, st in stats)
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    entry = _SCHEMAS.get(path)
+    if entry is None or entry[0] != identity:
+        entry = _SCHEMAS[path] = (identity, {})
+    if confs not in entry[1]:
+        entry[1][confs] = spark.read.parquet(path).schema
+    return entry[1][confs]
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

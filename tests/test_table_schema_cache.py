@@ -33,11 +33,22 @@ def _jobs(spark, build):
 
 
 def test_second_read_of_unchanged_file_runs_no_job(spark, tmp_path):
+    """Also across a nanosAsLong flip (``table("events")`` sets it
+    mid-session): each conf value infers once."""
     pq.write_table(pq.read_table(f"{SF}/orders.parquet"), tmp_path / "orders.parquet")
     sf = str(tmp_path)
-    first = table(spark, sf, "orders")
-    second, jobs = _jobs(spark, lambda: table(spark, sf, "orders"))
-    assert jobs == 0
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key)
+    try:
+        for value in ("false", "true"):
+            spark.conf.set(key, value)
+            first = table(spark, sf, "orders")
+        for value in ("false", "true"):
+            spark.conf.set(key, value)
+            second, jobs = _jobs(spark, lambda: table(spark, sf, "orders"))
+            assert jobs == 0, value
+    finally:
+        spark.conf.set(key, prev)
     assert second.schema == first.schema == spark.read.parquet(f"{sf}/orders.parquet").schema
     assert second.count() == first.count() > 0
 
