@@ -77,22 +77,23 @@ def conform(df: DataFrame, spec: ConformSpec) -> DataFrame:
     for old, new in [(k, v) for k, v in spec.rename_map.items() if k in names]:
         names = [new if n == old else n for n in names]
 
-    # A padded column is all-null, so its coercion is the null-input
-    # constant (time/int/float -> 0, date -> null): a much smaller
-    # expression tree to analyze on wide specs (estados pads 22 of 26).
+    # Coercion per column (later lists win) and its value on an all-null
+    # column. A padded column is all-null, so it gets that constant: a
+    # much smaller expression tree to analyze (estados pads 22 of 26).
+    rules = {}
+    for cols, fn, const in (
+        (spec.date_cols, date_dayfirst, "CAST(NULL AS DATE)"),
+        (spec.int_cols, int0, "0"),
+        (spec.float_cols, float0, "0.0D"),
+        (spec.time_cols, time_str_to_minutes, "0.0D"),
+    ):
+        rules.update(dict.fromkeys(cols, (fn, const)))
     padded = set(spec.final_cols) - set(names)
-    coercions = {c: F.lit(None).cast("string") for c in padded}
-    for c in spec.date_cols:
-        coercions[c] = F.lit(None).cast("date") if c in padded else date_dayfirst(c)
-    for c in spec.int_cols:
-        coercions[c] = F.lit(0).cast("int") if c in padded else int0(c)
-    for c in spec.float_cols:
-        coercions[c] = F.lit(0.0) if c in padded else float0(c)
-    for c in spec.time_cols:
-        coercions[c] = F.lit(0.0) if c in padded else time_str_to_minutes(c)
-    df = df.toDF(*names).select(
-        *[coercions[c].alias(c) if c in coercions else F.col(c) for c in spec.final_cols]
-    )
+    projection = []
+    for c in spec.final_cols:
+        fn, const = rules.get(c, (F.col, "CAST(NULL AS STRING)"))
+        projection.append((F.expr(const) if c in padded else fn(c)).alias(c))
+    df = df.toDF(*names).select(*projection)
 
     if spec.key_cols:
         df = df.na.drop(subset=[c for c in spec.key_cols if c in spec.final_cols])

@@ -10,6 +10,10 @@ The engine's own sessions pin the configuration its semantics assume:
   external oracles (DuckDB is UTC-naive).
 - AQE on: runtime shuffle-partition coalescing, skew-join handling and
   join-strategy switching — the 100 TB posture knobs.
+- A 1000-entry generated-code cache (one per JVM): the nine
+  ``analytics_sf01`` benchmark queries alone generate 105 classes, so at
+  Spark's default of 100 the LRU evicted each before its next use and
+  every rerun recompiled all of them.
 """
 
 from __future__ import annotations
@@ -46,6 +50,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

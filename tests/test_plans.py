@@ -701,3 +701,25 @@ def test_streaming_freshness_matches_batch_twin(spark):
         for r in dq_freshness_sla(spark, sf).collect()
     }
     assert got == want
+
+
+def test_analytic_rerun_compiles_no_code(spark):
+    """The engine session's generated-code cache holds a query set larger
+    than Spark's default 100 entries (these nine generate ~105 classes),
+    so a second pass over them compiles nothing."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    qs = queries()
+    names = [
+        "q1_pricing_summary", "q3_top_unshipped", "agg_distinct_priority",
+        "window_topk_per_priority", "json_events_extract", "sessionize_events",
+        "etl_conform_conducta", "etl_conform_estados", "asof_events_orders",
+    ]
+
+    def compiles_in_one_pass() -> int:
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        for n in names:
+            qs[n](spark, SF).write.format("noop").mode("overwrite").save()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    compiles_in_one_pass()
+    assert compiles_in_one_pass() == 0
