@@ -29,7 +29,7 @@ from .functions import (
 from .schema import ConformSpec
 
 
-def _clean_names(columns: list[str]) -> list[str]:
+def normalize_column_names(columns: list[str]) -> list[str]:
     """P-1: clean every column name (main.py:1222, 1278). Collisions
     after cleaning get a positional suffix — pandas would silently
     create duplicate labels; Spark cannot, and the suffix keeps the
@@ -44,11 +44,6 @@ def _clean_names(columns: list[str]) -> list[str]:
             seen[c] = 0
             out.append(c)
     return out
-
-
-def normalize_column_names(df: DataFrame) -> DataFrame:
-    """:func:`_clean_names` applied to ``df``."""
-    return df.toDF(*_clean_names(df.columns))
 
 
 def drop_all_null_rows(df: DataFrame) -> DataFrame:
@@ -73,7 +68,7 @@ def conform(df: DataFrame, spec: ConformSpec) -> DataFrame:
     # Renames apply in map order to every column then carrying the key,
     # as withColumnsRenamed does; a rename onto a present name makes two
     # columns of that name, and selecting it fails as ambiguous.
-    names = _clean_names(df.columns)
+    names = normalize_column_names(df.columns)
     for old, new in [(k, v) for k, v in spec.rename_map.items() if k in names]:
         names = [new if n == old else n for n in names]
 

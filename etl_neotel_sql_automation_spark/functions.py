@@ -141,10 +141,7 @@ def date_dayfirst(c: str) -> Column:
     """
     s = f"TRIM(CAST({_ident(c)} AS STRING))"
     candidates = ", ".join(f"try_to_timestamp({s}, '{fmt}')" for fmt in _DAYFIRST_FORMATS)
-    return F.expr(
-        f"CASE WHEN {s} RLIKE '^[+-]|[/-][+-]' THEN NULL"
-        f" ELSE CAST(coalesce({candidates}) AS DATE) END"
-    )
+    return F.expr(f"IF({s} RLIKE '^[+-]|[/-][+-]', NULL, CAST(coalesce({candidates}) AS DATE))")
 
 
 def date_to_iso(c: Column | str) -> Column:

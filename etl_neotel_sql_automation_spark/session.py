@@ -10,10 +10,9 @@ The engine's own sessions pin the configuration its semantics assume:
   external oracles (DuckDB is UTC-naive).
 - AQE on: runtime shuffle-partition coalescing, skew-join handling and
   join-strategy switching — the 100 TB posture knobs.
-- A 1000-entry generated-code cache (one per JVM): the nine
-  ``analytics_sf01`` benchmark queries alone generate 105 classes, so at
-  Spark's default of 100 the LRU evicted each before its next use and
-  every rerun recompiled all of them.
+- A 1000-entry generated-code cache (one per JVM): nine benchmark queries
+  alone generate 105 classes, and Spark's 100-entry LRU evicted each
+  before its next use, so every rerun recompiled them.
 """
 
 from __future__ import annotations

@@ -131,10 +131,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     :func:`~..ops.dedup.fan_out`."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
-
-    def read() -> DataFrame:
-        return spark.read.schema(parquet_schema(spark, path)).parquet(path)
-
+    read = lambda: spark.read.schema(parquet_schema(spark, path)).parquet(path)  # noqa: E731
     if name in ("documents", "embeddings"):
         return fan_out(read())
     if name == "events":

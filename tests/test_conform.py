@@ -113,9 +113,7 @@ def test_conform_estados_compiles(spark):
 
 
 def test_normalize_collision_suffix(spark):
-    df = spark.createDataFrame([(1, 2)], ["A b", "a_b"])
-    out = normalize_column_names(df)
-    assert out.columns == ["a_b", "a_b_1"]
+    assert normalize_column_names(["A b", "a_b"]) == ["a_b", "a_b_1"]
 
 
 def test_conform_rename_onto_existing_name(spark):
