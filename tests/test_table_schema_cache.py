@@ -14,8 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_neotel_sql_automation_spark.workload import queries, table
-
-SF = "/root/testdata/sf0.001"
+from test_plans import SF  # the sf0.001 test tables
 
 
 def _jobs(spark, build):
