@@ -10,9 +10,6 @@ The engine's own sessions pin the configuration its semantics assume:
   external oracles (DuckDB is UTC-naive).
 - AQE on: runtime shuffle-partition coalescing, skew-join handling and
   join-strategy switching — the 100 TB posture knobs.
-- A 1000-entry generated-code cache (one per JVM): nine benchmark queries
-  alone generate 105 classes, and Spark's 100-entry LRU evicted each
-  before its next use, so every rerun recompiled them.
 """
 
 from __future__ import annotations
@@ -49,7 +46,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

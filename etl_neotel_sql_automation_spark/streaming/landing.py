@@ -163,11 +163,16 @@ def run_available_now(
 def table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """File stream over the testdata table ``<sf_dir>/<name>.parquet``.
     Streaming file sources need the schema up front: it comes from the
-    batch ``table()``'s cache (:func:`~..workload.parquet_schema`).
+    batch ``table()``'s cache (:func:`~..workload.parquet_schema`), or
+    from a batch read of the footers for a path the cache skips.
     ``pathGlobFilter`` keeps the stream off the table's siblings in
     ``sf_dir``."""
+    path = f"{sf_dir}/{name}.parquet"
+    schema = parquet_schema(spark, path)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
     return (
-        spark.readStream.schema(parquet_schema(spark, f"{sf_dir}/{name}.parquet"))
+        spark.readStream.schema(schema)
         .option("pathGlobFilter", f"{name}.parquet")
         .parquet(sf_dir)
     )

@@ -97,15 +97,16 @@ _SCHEMA_CONFS = (
 _SCHEMAS: dict[str, tuple[tuple, dict[tuple, StructType]]] = {}
 
 
-def parquet_schema(spark: SparkSession, path: str) -> StructType:
+def parquet_schema(spark: SparkSession, path: str) -> StructType | None:
     """The schema ``spark.read.parquet(path)`` infers, from the cache
-    :func:`table` describes; a path with no local files is not cached."""
+    :func:`table` describes; None for a path with no local files (a
+    remote URI), which is not cached."""
     if os.path.isfile(path):
         files = [path]
     else:
         files = sorted(os.path.join(d, f) for d, _, names in os.walk(path) for f in names)
     if not files:
-        return spark.read.parquet(path).schema
+        return None
     stats = [(os.path.relpath(f, path), os.stat(f)) for f in files]
     identity = tuple((rel, st.st_size, st.st_mtime_ns) for rel, st in stats)
     confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
@@ -126,12 +127,17 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``mtime_ns`` of every file at or under it and the :data:`_SCHEMA_CONFS`
     values (e.g. ``nanosAsLong``). Every call still sets the TZ, lists the
     files and returns a fresh relation (new expression ids: two calls
-    self-join); the scan reads the footers when it runs. The CPU-heavy
+    self-join); the scan reads the footers when it runs. A path with no
+    local files is read as plain ``spark.read.parquet``. The CPU-heavy
     corpus tables (documents, embeddings) pass through
     :func:`~..ops.dedup.fan_out`."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
-    read = lambda: spark.read.schema(parquet_schema(spark, path)).parquet(path)  # noqa: E731
+
+    def read() -> DataFrame:
+        schema = parquet_schema(spark, path)
+        return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+
     if name in ("documents", "embeddings"):
         return fan_out(read())
     if name == "events":

@@ -553,8 +553,8 @@ def test_pushdown_reaches_scan(spark):
     assert "l_orderkey" not in read_schema and "l_partkey" not in read_schema
 
 def test_spread_if_starved_noop_on_multi_split_scan(spark, tmp_path):
-    """The at-scale no-op claim of _spread_if_starved
-    (workload/__init__.py): when the corpus scan already yields >=
+    """The at-scale no-op claim of :func:`ops.dedup.fan_out`: when the
+    corpus scan already yields >=
     defaultParallelism input partitions — the 100 TB case, where the
     file layout has thousands of splits — table() must add NO
     repartition exchange. Emulated locally by writing a >=cores-file
@@ -586,7 +586,7 @@ def test_spread_if_starved_spreads_single_file_scan(spark, tmp_path):
     """The local counterpart: a single-file (single-row-group) corpus
     scan yields one input partition, so table() must insert the
     repartition that un-serializes tokenize/hash pipelines (measured
-    8x on the sf0.1 bigram-LM pass; see workload/__init__.py)."""
+    8x on the sf0.1 bigram-LM pass; see ops.dedup.fan_out)."""
     from etl_neotel_sql_automation_spark import workload as W
 
     cores = spark.sparkContext.defaultParallelism
@@ -701,25 +701,3 @@ def test_streaming_freshness_matches_batch_twin(spark):
         for r in dq_freshness_sla(spark, sf).collect()
     }
     assert got == want
-
-
-def test_analytic_rerun_compiles_no_code(spark):
-    """The engine session's generated-code cache holds a query set larger
-    than Spark's default 100 entries (these nine generate ~105 classes),
-    so a second pass over them compiles nothing."""
-    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    qs = queries()
-    names = [
-        "q1_pricing_summary", "q3_top_unshipped", "agg_distinct_priority",
-        "window_topk_per_priority", "json_events_extract", "sessionize_events",
-        "etl_conform_conducta", "etl_conform_estados", "asof_events_orders",
-    ]
-
-    def compiles_in_one_pass() -> int:
-        before = metrics.METRIC_COMPILATION_TIME().getCount()
-        for n in names:
-            qs[n](spark, SF).write.format("noop").mode("overwrite").save()
-        return metrics.METRIC_COMPILATION_TIME().getCount() - before
-
-    compiles_in_one_pass()
-    assert compiles_in_one_pass() == 0

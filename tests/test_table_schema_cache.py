@@ -5,6 +5,7 @@ rewritten file is seen."""
 
 from __future__ import annotations
 
+import os
 import uuid
 
 import pyarrow as pa
@@ -13,7 +14,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_neotel_sql_automation_spark.workload import queries, table
+from etl_neotel_sql_automation_spark.streaming.landing import table_stream
+from etl_neotel_sql_automation_spark.workload import parquet_schema, queries, table
 from test_plans import SF  # the sf0.001 test tables
 
 
@@ -91,6 +93,18 @@ def test_events_nanos_ts_stays_timestamp_after_conf_unset(spark, tmp_path):
         assert sorted(second.select("ts").collect()) == sorted(first.select("ts").collect())
     finally:
         spark.conf.set(key, prev)
+
+
+def test_path_without_local_files_reads_uncached(spark):
+    """A URI path (as on HDFS or S3) has no local files to key on: it is
+    not cached, and ``table()`` reads it as a plain parquet read."""
+    sf = "file://" + os.path.abspath(SF)
+    assert parquet_schema(spark, f"{sf}/nation.parquet") is None
+    df = table(spark, sf, "nation")
+    assert df.schema == spark.read.parquet(f"{SF}/nation.parquet").schema
+    assert df.count() == 25
+    stream = table_stream(spark, sf, "nation")
+    assert stream.isStreaming and stream.schema == df.schema
 
 
 def test_two_reads_of_one_table_self_join(spark):
