@@ -134,10 +134,8 @@ def date_dayfirst(c: str) -> Column:
     """Day-first date parse, unparseable -> null (``errors='coerce'``).
 
     ``"13/08/2026"`` -> 2026-08-13; ``"01/02/2026"`` -> Feb 1 (day first);
-    ``"99/99/2026"`` -> null. Parity: main.py:1239, 1295.
-
-    A sign where the year starts gives null up front: ``try_to_timestamp``
-    throws on some signed years (``'-512026-1-2'``: long overflow).
+    ``"99/99/2026"`` -> null; a signed year (``"-512026-1-2"``, on which
+    ``try_to_timestamp`` throws) -> null. Parity: main.py:1239, 1295.
     """
     s = f"TRIM(CAST({_ident(c)} AS STRING))"
     candidates = ", ".join(f"try_to_timestamp({s}, '{fmt}')" for fmt in _DAYFIRST_FORMATS)

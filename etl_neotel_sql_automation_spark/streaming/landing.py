@@ -37,7 +37,7 @@ from ..conform import conform
 from ..io_sinks import load_partitioned
 from ..io_sources import header_schema, sniff_csv_dialect
 from ..schema import ConformSpec
-from ..workload import parquet_schema, read_events
+from ..workload import read_events, read_parquet
 
 
 def infer_landing_schema(spark: SparkSession, landing_dir: str | Path) -> tuple[T.StructType, str, str]:
@@ -163,14 +163,10 @@ def run_available_now(
 def table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """File stream over the testdata table ``<sf_dir>/<name>.parquet``.
     Streaming file sources need the schema up front: it comes from the
-    batch ``table()``'s cache (:func:`~..workload.parquet_schema`), or
-    from a batch read of the footers for a path the cache skips.
+    batch ``table()``'s cache (:func:`~..workload.read_parquet`).
     ``pathGlobFilter`` keeps the stream off the table's siblings in
     ``sf_dir``."""
-    path = f"{sf_dir}/{name}.parquet"
-    schema = parquet_schema(spark, path)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, f"{sf_dir}/{name}.parquet").schema
     return (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", f"{name}.parquet")

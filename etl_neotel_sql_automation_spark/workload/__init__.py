@@ -97,16 +97,16 @@ _SCHEMA_CONFS = (
 _SCHEMAS: dict[str, tuple[tuple, dict[tuple, StructType]]] = {}
 
 
-def parquet_schema(spark: SparkSession, path: str) -> StructType | None:
-    """The schema ``spark.read.parquet(path)`` infers, from the cache
-    :func:`table` describes; None for a path with no local files (a
-    remote URI), which is not cached."""
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema from the cache
+    :func:`table` describes; a path with no local files (a remote URI)
+    is read as is, uncached."""
     if os.path.isfile(path):
         files = [path]
     else:
         files = sorted(os.path.join(d, f) for d, _, names in os.walk(path) for f in names)
     if not files:
-        return None
+        return spark.read.parquet(path)
     stats = [(os.path.relpath(f, path), os.stat(f)) for f in files]
     identity = tuple((rel, st.st_size, st.st_mtime_ns) for rel, st in stats)
     confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
@@ -114,35 +114,28 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType | None:
     if entry is None or entry[0] != identity:
         entry = _SCHEMAS[path] = (identity, {})
     if confs not in entry[1]:
-        entry[1][confs] = spark.read.parquet(path).schema
-    return entry[1][confs]
+        df = spark.read.parquet(path)
+        entry[1][confs] = df.schema
+        return df
+    return spark.read.schema(entry[1][confs]).parquet(path)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan for one testdata table; pins session TZ to UTC
-    so timestamp collection matches the UTC-naive oracle.
-
-    Schema inference runs a Spark job, so the schema is cached per path
-    (:func:`parquet_schema`), keyed by the relative path, size and
-    ``mtime_ns`` of every file at or under it and the :data:`_SCHEMA_CONFS`
-    values (e.g. ``nanosAsLong``). Every call still sets the TZ, lists the
-    files and returns a fresh relation (new expression ids: two calls
-    self-join); the scan reads the footers when it runs. A path with no
-    local files is read as plain ``spark.read.parquet``. The CPU-heavy
-    corpus tables (documents, embeddings) pass through
-    :func:`~..ops.dedup.fan_out`."""
+    so timestamp collection matches the UTC-naive oracle. Schema
+    inference runs a Spark job, so :func:`read_parquet` caches the schema
+    by the relative path, size and ``mtime_ns`` of every file under the
+    path and the :data:`_SCHEMA_CONFS` values; every call still lists the
+    files and returns a fresh relation (two calls self-join), and the scan
+    reads the footers when it runs. The CPU-heavy corpus tables
+    (documents, embeddings) pass through :func:`~..ops.dedup.fan_out`."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
-
-    def read() -> DataFrame:
-        schema = parquet_schema(spark, path)
-        return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
-
     if name in ("documents", "embeddings"):
-        return fan_out(read())
+        return fan_out(read_parquet(spark, path))
     if name == "events":
-        return read_events(spark, read)
-    return read()
+        return read_events(spark, lambda: read_parquet(spark, path))
+    return read_parquet(spark, path)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

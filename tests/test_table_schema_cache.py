@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_neotel_sql_automation_spark.streaming.landing import table_stream
-from etl_neotel_sql_automation_spark.workload import parquet_schema, queries, table
+from etl_neotel_sql_automation_spark import workload as W
+from etl_neotel_sql_automation_spark.workload import queries, table
 from test_plans import SF  # the sf0.001 test tables
 
 
@@ -99,8 +100,8 @@ def test_path_without_local_files_reads_uncached(spark):
     """A URI path (as on HDFS or S3) has no local files to key on: it is
     not cached, and ``table()`` reads it as a plain parquet read."""
     sf = "file://" + os.path.abspath(SF)
-    assert parquet_schema(spark, f"{sf}/nation.parquet") is None
     df = table(spark, sf, "nation")
+    assert f"{sf}/nation.parquet" not in W._SCHEMAS
     assert df.schema == spark.read.parquet(f"{SF}/nation.parquet").schema
     assert df.count() == 25
     stream = table_stream(spark, sf, "nation")
