@@ -124,17 +124,18 @@ def ivf_topk(
     n_probe: int = 8,
     seed: int = 42,
 ) -> DataFrame:
-    """IVF-style ANN: k-means coarse quantizer (pyspark.ml, deterministic
-    seed), corpus partitioned by nearest centroid, each query probing its
-    ``n_probe`` nearest centroids, exact cosine re-rank inside the probed
-    cells.
+    """IVF-style ANN: k-means coarse quantizer (local fit on the capped
+    sample, deterministic seed), corpus partitioned by nearest centroid,
+    each query probing its ``n_probe`` nearest centroids, exact cosine
+    re-rank inside the probed cells.
 
     Scale shape: centroid assignment is a broadcast of ``n_centroids``
     vectors (tiny); the candidate join is an equi-join on centroid id —
     the cross join is gone, recall is tunable via ``n_probe``
-    (measured on the sf0.01 random embeddings: recall@5 = 0.60/0.80/0.88
-    at n_probe 4/8/10 with 16 centroids — random vectors are the hard
-    case; clustered real embeddings do far better).
+    (measured recall@5 at n_probe 8 with 16 centroids: 0.84/0.88/0.84
+    on the sf0.001/sf0.01/sf0.1 random embeddings — random vectors are
+    the hard case; clustered real embeddings do far better). Training
+    is one sample collect (see :func:`_train_centroid_list`).
     """
     cents = _train_centroid_list(corpus, id_col, vec_col, n_centroids, seed)
 
@@ -199,8 +200,9 @@ def _kmeans_local(x, k: int, seed: int, max_iter: int = 20, n_init: int = 4):
     close the quality gap to k-means||. This is the trainer-node half
     of the FAISS deploy shape: the *sample selection* is distributed
     (:func:`hash_sample`), the *fit* runs where the sample fits in
-    RAM — hundreds of tiny per-iteration Spark jobs (pyspark.ml's
-    KMeans on a driver-sized sample) buy nothing at any scale."""
+    RAM — a distributed fit of a driver-sized sample is hundreds of
+    tiny per-iteration Spark jobs that buy nothing at any scale. It is
+    the engine's only k-means trainer."""
     import numpy as np
 
     x = np.asarray(x, dtype=np.float64)
@@ -271,7 +273,6 @@ def _train_centroid_list(
     n_centroids: int,
     seed: int,
     train_fraction: float | None = None,
-    train_backend: str = "ml",
 ) -> list[list[float]]:
     """k-means coarse-quantizer centroids as a driver-side list
     (n_centroids × dim floats — driver-sized by construction, like the
@@ -280,25 +281,12 @@ def _train_centroid_list(
     ``train_fraction`` trains on a deterministic hash-sample (see
     :func:`hash_sample`) — at 100 TB the fit must touch a sample, not
     the corpus; cell ASSIGNMENT always stays full-corpus.
-    ``train_backend="local"`` collects the (capped) sample and fits
-    with :func:`_kmeans_local` — one Spark job for the sample scan
-    instead of ~20 per-iteration jobs; "ml" keeps the pyspark.ml fit
-    for samples that exceed one machine."""
-    if train_backend == "local":
-        sample = _collect_train_sample(corpus, id_col, vec_col, train_fraction)
-        centers = _kmeans_local(sample, n_centroids, seed)
-        return [[float(v) for v in c] for c in centers]
-    try:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-    except ImportError as e:  # pragma: no cover
-        raise NotImplementedError(f"IVF requires pyspark.ml: {e}") from e
-
-    train = hash_sample(corpus, id_col, train_fraction).select(
-        F.col(id_col), array_to_vector(_to_double(vec_col)).alias("features")
-    )
-    km = KMeans(k=n_centroids, seed=seed, maxIter=20).fit(train)
-    return [[float(x) for x in c] for c in km.clusterCenters()]
+    The (capped) sample is collected and fit with :func:`_kmeans_local`:
+    one collect (one Spark job on a plain scan), not one job per Lloyd
+    iteration."""
+    sample = _collect_train_sample(corpus, id_col, vec_col, train_fraction)
+    centers = _kmeans_local(sample, n_centroids, seed)
+    return [[float(v) for v in c] for c in centers]
 
 
 def _nearest_cells(
@@ -362,56 +350,27 @@ def pq_train_codebooks(
     seed: int = 42,
     id_col: str = "vec_id",
     train_fraction: float | None = None,
-    train_backend: str = "ml",
 ) -> list[list[list[float]]]:
     """Train product-quantization codebooks: the vector is cut into
     ``m`` subspaces of ``dim // m`` dims, each with its own ``k``-means
-    codebook (pyspark.ml, seeded). Returns ``codebooks[j][c] ->
-    centroid`` (m × k × dim/m floats — driver-sized by construction,
-    like IVF's centroid list). ``train_fraction`` trains on a
-    deterministic hash-sample (:func:`hash_sample`) — the 100 TB
-    recipe; encoding stays full-scan either way. The sampled frame is
-    cached across the ``m`` fits so the sample filter scans once, not
-    m times. ``train_backend="local"`` collects the capped sample ONCE
-    and fits all ``m`` subspace codebooks in numpy
-    (:func:`_kmeans_local`) — one Spark job total instead of
-    m × maxIter."""
-    if train_backend == "local":
-        import numpy as np
+    codebook (seeded). Returns ``codebooks[j][c] -> centroid``
+    (m × k × dim/m floats — driver-sized by construction, like IVF's
+    centroid list). ``train_fraction`` trains on a deterministic
+    hash-sample (:func:`hash_sample`) — the 100 TB recipe; encoding
+    stays full-scan either way. The capped sample is collected ONCE
+    and all ``m`` subspace codebooks are fit in numpy
+    (:func:`_kmeans_local`) — one collect in total."""
+    import numpy as np
 
-        sample = np.asarray(
-            _collect_train_sample(corpus, id_col, vec_col, train_fraction)
-        )
-        sub = dim // m
-        return [
-            [
-                [float(v) for v in c]
-                for c in _kmeans_local(sample[:, j * sub : (j + 1) * sub], k, seed + j)
-            ]
-            for j in range(m)
-        ]
-    try:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-    except ImportError as e:  # pragma: no cover
-        raise NotImplementedError(f"PQ requires pyspark.ml: {e}") from e
-
+    sample = np.asarray(_collect_train_sample(corpus, id_col, vec_col, train_fraction))
     sub = dim // m
-    v = _to_double(vec_col)
-    base = hash_sample(corpus, id_col, train_fraction)
-    cached = base if train_fraction is None else base.cache()
-    try:
-        books: list[list[list[float]]] = []
-        for j in range(m):
-            train = cached.select(
-                array_to_vector(F.slice(v, j * sub + 1, sub)).alias("features")
-            )
-            km = KMeans(k=k, seed=seed + j, maxIter=20).fit(train)
-            books.append([[float(x) for x in c] for c in km.clusterCenters()])
-    finally:
-        if cached is not base:
-            cached.unpersist()
-    return books
+    return [
+        [
+            [float(v) for v in c]
+            for c in _kmeans_local(sample[:, j * sub : (j + 1) * sub], k, seed + j)
+        ]
+        for j in range(m)
+    ]
 
 
 def pq_encode(
@@ -498,7 +457,6 @@ def pq_topk(
     seed: int = 42,
     rerank: int | None = None,
     train_fraction: float | None = None,
-    train_backend: str = "ml",
 ) -> DataFrame:
     """PQ ANN top-k, two-stage as deployed in practice: (1) asymmetric
     distance computation — each query precomputes a lookup table of
@@ -512,11 +470,10 @@ def pq_topk(
     into high recall@k while still scanning codes, not floats.
     Output: q_id, n_id, rank, sim (exact dot, round 6).
 
-    ``train_fraction`` / ``train_backend`` are threaded to
-    :func:`pq_train_codebooks` — same semantics as :func:`ivf_pq_topk`
-    (hash-sampled training; ``"local"`` = one capped collect + numpy
-    Lloyd's instead of m × maxIter tiny pyspark.ml jobs); ADC scan and
-    exact re-rank stay full-corpus and distributed either way.
+    ``train_fraction`` is threaded to :func:`pq_train_codebooks` — same
+    semantics as :func:`ivf_pq_topk` (hash-sampled training, one capped
+    collect + numpy Lloyd's); ADC scan and exact re-rank stay
+    full-corpus and distributed.
 
     ``rerank`` defaults to max(50, corpus/10): a FIXED rerank budget
     decays as the corpus grows (ADC noise admits more impostors into
@@ -528,7 +485,7 @@ def pq_topk(
     if rerank is None:
         rerank = max(50, -(-corpus.count() // 10))
     books = pq_train_codebooks(
-        corpus, vec_col, m, n_codes, dim, seed, id_col, train_fraction, train_backend
+        corpus, vec_col, m, n_codes, dim, seed, id_col, train_fraction
     )
     corpus_cached = fan_out(corpus)
     cb = pq_encode(corpus_cached, books, id_col, vec_col).select(
@@ -576,7 +533,6 @@ def ivf_pq_topk(
     seed: int = 42,
     rerank: int | None = None,
     train_fraction: float | None = None,
-    train_backend: str = "ml",
 ) -> DataFrame:
     """IVF×PQ composed ANN — the 100 TB deploy shape (FAISS IVFPQ on a
     cluster): the coarse quantizer prunes the corpus to the queries'
@@ -596,15 +552,16 @@ def ivf_pq_topk(
     ``rerank`` defaults to max(50, corpus/10) — see :func:`pq_topk`.
     ``train_fraction`` fits the coarse quantizer AND the codebooks on
     a deterministic hash-sample (:func:`hash_sample`) — the deploy
-    configuration: at 100 TB the k-means iterations must scan a
-    sample, while cell assignment and encoding stay full-corpus."""
+    configuration: at 100 TB the k-means fits must see a sample, while
+    cell assignment and encoding stay full-corpus. Each trainer collects
+    its capped sample once and fits it with :func:`_kmeans_local`."""
     if rerank is None:
         rerank = max(50, -(-corpus.count() // 10))
     cents = _train_centroid_list(
-        corpus, id_col, vec_col, n_centroids, seed, train_fraction, train_backend
+        corpus, id_col, vec_col, n_centroids, seed, train_fraction
     )
     books = pq_train_codebooks(
-        corpus, vec_col, m, n_codes, dim, seed, id_col, train_fraction, train_backend
+        corpus, vec_col, m, n_codes, dim, seed, id_col, train_fraction
     )
     corpus_f = fan_out(corpus)
     # corpus side: home cell + PQ codes, joined once on id

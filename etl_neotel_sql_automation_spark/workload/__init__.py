@@ -41,6 +41,9 @@ TABLES = (
 # SF >= ~0.67. Every graph oracle interpolates the same constant.
 GRAPH_SUPP_OFFSET = 1_000_000_000
 
+# DuckDB token list mirroring ops.text.tokens; every text oracle splices it.
+_SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
+
 
 @dataclass(frozen=True)
 class Workload:

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from ..conform import conform_with_quarantine
 from ..ops import text as X
 from ..schema import CONDUCTA_SPEC
-from . import query, table
+from . import _SQL_TOKS, query, table
 
 _RANGE_US = 600 * 1_000_000  # 10 minutes
 
@@ -86,8 +86,6 @@ def etl_quarantine_rejects(spark: SparkSession, sf_dir: str) -> DataFrame:
     _good, bad = conform_with_quarantine(raw, CONDUCTA_SPEC)
     return bad.select("agente", "reject_reason")
 
-
-_SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 _WINNOW_ORACLE = f"""
 WITH t AS (SELECT doc_id AS id, {_SQL_TOKS} AS toks FROM documents),

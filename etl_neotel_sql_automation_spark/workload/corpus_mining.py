@@ -25,11 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_TOKS, query, table
 from ..ops.similarity import dot, norm
 from ..ops.text import tokens
-
-_SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 # ---------------------------------------------------------------------------
 # Duplicated-span statistics (the span-level exact-dedup signal of

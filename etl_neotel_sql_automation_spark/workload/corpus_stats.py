@@ -21,10 +21,7 @@ from pyspark.sql import functions as F
 
 from ..ops import text as X
 from ..ops.similarity import dot, norm
-from . import query, table
-
-# DuckDB token list mirroring ops.text.tokens (same as llm_ops._SQL_TOKS)
-_SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
+from . import _SQL_TOKS, query, table
 
 
 @query(

@@ -20,10 +20,7 @@ from ..ops import similarity as S
 from ..ops import text as X
 from ..ops.dedup import _MERSENNE_P, _minhash_coeffs
 from ..ops.hashing import sql_md5_long
-from . import query, table
-
-# DuckDB token list mirroring ops.text.tokens
-_SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
+from . import _SQL_TOKS, query, table
 
 
 def _minhash_oracle(num_hashes: int = 32, bands: int = 8, shingle_n: int = 3) -> str:
@@ -1128,23 +1125,17 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE single deliberate pyspark.ml-KMeans recall baseline — by
-    r10 VERDICT #3 decision this is the ONLY registered query allowed
-    to train a quantizer through the ml backend (its distributed-fit
-    coverage cost, ~13 s at sf0.1, is the price of keeping one
-    ml-trainer recall reference alive; every other trainer-bearing
-    query uses the capped local fit, and
-    tests/test_ml_trainer_baseline.py enforces exactly this set).
-
-    IVF (k-means coarse quantizer) ANN under a derived-property
+    """IVF (k-means coarse quantizer) ANN under a derived-property
     oracle: k-means centroids are engine-specific so the ANN rows
     cannot be hash-compared, but their quality can — the query runs
     IVF top-5 AND the exact brute-force top-5 over the same 10 query
     vectors and emits booleans the DuckDB oracle reproduces as TRUE:
     every query returns exactly k results (results_ok) and mean
-    recall@5 >= 0.6 (recall_ok; measured 0.8 at sf0.001/sf0.01 with
-    n_probe=8 on random vectors — the hard case). The row listing
-    itself stays available via ops.similarity.ivf_topk."""
+    recall@5 >= 0.6 (recall_ok; measured 0.84/0.88/0.84 at
+    sf0.001/sf0.01/sf0.1 with n_probe=8 on random vectors — the hard
+    case). The centroids come from the capped local fit on the full
+    corpus, like every other ANN trainer. The row listing itself stays
+    available via ops.similarity.ivf_topk."""
     emb = table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
     ivf = S.ivf_topk(emb, q, k=5)
@@ -1217,15 +1208,10 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     no sample) through the capped LOCAL fit (_kmeans_local; the corpus
     is below _LOCAL_TRAIN_CAP at every test SF, and past it the cap
     deterministically downsamples to the trainer-RAM bound, so the
-    query keeps running at any SF). The previous full pyspark.ml fit
-    spent ~25 s at
-    sf0.1 on 8 codebooks × 20 tiny per-iteration jobs over 2k vectors
-    — pure scheduler overhead, no statistical benefit (r9 VERDICT #1).
-    ADC scan and exact re-rank stay full-corpus and distributed."""
+    query keeps running at any SF). ADC scan and exact re-rank stay
+    full-corpus and distributed."""
     emb = table(spark, sf_dir, "embeddings")
-    pq = S.pq_topk(
-        emb, emb.filter(F.col("vec_id") < 10), k=5, train_backend="local"
-    )
+    pq = S.pq_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
     return _recall_property(pq, _exact_ip_topk(emb, k=5), k=5)
 
 
@@ -1249,14 +1235,10 @@ def sim_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Trainer: full-corpus TRAINING DATA (the recall baseline — no
     sample, unlike sim_ivf_pq_sampled's 25% hash-sample) through the
-    capped LOCAL fit — the 1+8 full pyspark.ml KMeans fits cost ~25 s
-    at sf0.1 in 9 × 20 tiny per-iteration jobs over 2k vectors, pure
-    scheduler overhead (r9 VERDICT #1). Cell assignment, ADC scan and
-    exact re-rank stay full-corpus and distributed."""
+    capped LOCAL fit. Cell assignment, ADC scan and exact re-rank stay
+    full-corpus and distributed."""
     emb = table(spark, sf_dir, "embeddings")
-    ann = S.ivf_pq_topk(
-        emb, emb.filter(F.col("vec_id") < 10), k=5, train_backend="local"
-    )
+    ann = S.ivf_pq_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
     return _recall_property(ann, _exact_ip_topk(emb, k=5), k=5)
 
 
@@ -1275,11 +1257,9 @@ def sim_ivf_pq_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible across runs, partitionings, and appends), then all 9
     k-means fits (1 coarse + 8 codebooks) run where the sample fits in
     RAM (ops.similarity._kmeans_local: seeded k-means++, matmul
-    Lloyd's, hard row cap guarding the trainer) — ONE Spark job for
-    the sample scan instead of 9 × maxIter tiny per-iteration jobs,
-    which is what pyspark.ml's KMeans costs on a trainer-sized sample
-    at any scale. Cell ASSIGNMENT and PQ ENCODING stay full-corpus
-    and distributed. Same derived-property oracle as the full-training
+    Lloyd's, hard row cap guarding the trainer) — one sample collect
+    per trainer, not one Spark job per Lloyd iteration. Cell
+    ASSIGNMENT and PQ ENCODING stay full-corpus and distributed. Same derived-property oracle as the full-training
     twin (sim_ivf_pq_topk): every query returns exactly k rows and
     mean recall@5 vs exact inner-product search >= 0.6.
 
@@ -1297,7 +1277,6 @@ def sim_ivf_pq_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < 10),
         k=5,
         train_fraction=0.25,
-        train_backend="local",
         rerank=max(100, emb.count() // 5),
     )
     return _recall_property(ann, _exact_ip_topk(emb, k=5), k=5)

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_TOKS, query, table
 from ..ops import text as X
 from ..ops.hashing import md5_long, sql_md5_long
 
@@ -167,14 +167,11 @@ def text_bigram_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_TOKS2 = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
-
-
 @query(
     "pack_sequences",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, source, len({_SQL_TOKS2}) AS n_tok FROM documents
+      SELECT doc_id, source, len({_SQL_TOKS}) AS n_tok FROM documents
     ),
     c AS (
       SELECT doc_id, source, n_tok,
@@ -228,7 +225,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "decontaminate_train",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKS2} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
     sh AS (
       SELECT doc_id, unnest(CASE WHEN len(toks) >= 4 THEN
           list_distinct(list_transform(
@@ -277,7 +274,7 @@ def decontaminate_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "chunk_documents",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKS2} AS toks FROM documents),
+    WITH t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
     starts AS (
       SELECT doc_id, toks, unnest(range(1, len(toks) + 1, 24)) AS st FROM t
     )
@@ -316,7 +313,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH feat AS (
       SELECT doc_id, source,
-             CAST(len({_SQL_TOKS2}) AS BIGINT) AS nt,
+             CAST(len({_SQL_TOKS}) AS BIGINT) AS nt,
              {sql_md5_long("'budget:' || CAST(doc_id AS VARCHAR)")} AS h
       FROM documents
     ),
@@ -368,7 +365,7 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH feat AS (
       SELECT doc_id, source,
-             CAST(len({_SQL_TOKS2}) AS BIGINT) AS nt,
+             CAST(len({_SQL_TOKS}) AS BIGINT) AS nt,
              {sql_md5_long("'wps:' || CAST(doc_id AS VARCHAR)")} % 1000000 AS u
       FROM documents
     ),
@@ -423,7 +420,7 @@ def sample_weighted_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH s AS (
       SELECT source,
              count(*) AS n_docs,
-             CAST(sum(len({_SQL_TOKS2})) AS BIGINT) AS n_tokens
+             CAST(sum(len({_SQL_TOKS})) AS BIGINT) AS n_tokens
       FROM documents GROUP BY source
     ),
     w AS (
@@ -483,7 +480,7 @@ def mixture_weights_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH feat AS (
       SELECT doc_id, source,
-             CAST(len({_SQL_TOKS2}) AS BIGINT) AS nt,
+             CAST(len({_SQL_TOKS}) AS BIGINT) AS nt,
              {sql_md5_long("'es:' || CAST(doc_id AS VARCHAR)")} % 1048576 AS r
       FROM documents
     )

@@ -22,11 +22,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_TOKS, query, table
 from ..ops import text as X
 from ..ops.zorder import sql_z_value, z_value
 
-_SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 _SQL_STOPS = (
     "len(list_filter({toks}, x -> lower(x) IN "
     "('a','an','the','of','and','to','in','is','it')))"

@@ -22,11 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_TOKS, query, table
 from ..ops import text as X
 from ..ops.hashing import md5_long
-
-_SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 # ---------------------------------------------------------------------------
 # diag_join_size_estimate — |orders JOIN lineitem ON orderkey| without

@@ -19,9 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from . import query, table
-
-_SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
+from . import _SQL_TOKS, query, table
 
 # ---------------------------------------------------------------------------
 # alloc_water_filling — spend HALF the corpus's token budget across

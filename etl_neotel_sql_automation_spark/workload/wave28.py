@@ -23,12 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_TOKS, query, table
 from ..ops import dedup as D
 from ..ops import text as X
 from .llm_ops import _minhash_oracle
-
-_SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 # 32 hashes / 8 bands -> r = 4 rows per band
 _SC_BANDS = 8

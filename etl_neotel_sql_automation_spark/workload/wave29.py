@@ -25,10 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_TOKS, query, table
 from ..ops import text as X
-
-_SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 # ---------------------------------------------------------------------------
 # orders_price_volume_mix — per priority segment: 1997 vs 1998

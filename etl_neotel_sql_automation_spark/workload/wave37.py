@@ -30,9 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_TOKS, query, table
 from ..ops import text as X
-from .wave12 import _SQL_STOPS, _SQL_TOKS
+from .wave12 import _SQL_STOPS
 
 # ---------------------------------------------------------------------------
 # quality_gate_sweep

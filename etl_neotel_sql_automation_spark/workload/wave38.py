@@ -37,9 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_TOKS, query, table
 from ..ops import text as X
-from .wave12 import _SQL_TOKS
 
 _HW_S = 1_000_000
 _M = 7

@@ -37,9 +37,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_TOKS, query, table
 from ..ops import dedup as D
-from .llm_ops import _SQL_TOKS, _minhash_oracle
+from .llm_ops import _minhash_oracle
 
 _DTS_BUCKETS = 10  # ppm deciles; thresholds are k * 100000, k = 1..9
 

@@ -58,10 +58,8 @@ def reconcile_hierarchy_frame(
     cust: DataFrame,
     nation: DataFrame,
     region: DataFrame,
-    materialize: bool = True,
 ) -> DataFrame:
-    """Frame core of forecast_reconcile_hierarchy (probe entry).
-    ``materialize=False`` skips the localCheckpoint (probe knob)."""
+    """Frame core of forecast_reconcile_hierarchy (probe entry)."""
     monthly = (
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .join(nation, cust.c_nationkey == nation.n_nationkey)
@@ -83,10 +81,9 @@ def reconcile_hierarchy_frame(
         F.sort_array(F.collect_list(F.struct("m", "y"))).alias("seq"),
         F.sum("y").cast("bigint").alias("tot"),
     )
-    if materialize:
-        # both level folds consume this 25-row frame; checkpoint so the
-        # orders star join runs once (the margin-miner house pattern)
-        nation_series = nation_series.localCheckpoint()
+    # both level folds consume this 25-row frame; checkpoint so the
+    # orders star join runs once (the margin-miner house pattern)
+    nation_series = nation_series.localCheckpoint()
     n_fold = nation_series.select(
         "r_name",
         "n_name",

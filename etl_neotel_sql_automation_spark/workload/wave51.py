@@ -31,8 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
-from .curation import _SQL_TOKS, _W_BUCKETS
+from . import _SQL_TOKS, query, table
+from .curation import _W_BUCKETS
 from ..ops import text as X
 
 _DEC = "DECIMAL(38,0)"

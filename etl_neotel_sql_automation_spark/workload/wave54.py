@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
-from .wave12 import _SQL_STOPS, _SQL_TOKS
+from . import _SQL_TOKS, query, table
+from .wave12 import _SQL_STOPS
 from ..ops import text as X
 
 

@@ -15,14 +15,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import GRAPH_SUPP_OFFSET, query, table
+from . import GRAPH_SUPP_OFFSET, _SQL_TOKS, query, table
 from ..ops import dedup as D
 from ..ops.geo import grid_nearest
 from ..ops.graph import kcore_peel
 from ..ops.hashing import md5_long, sql_md5_long
 from ..ops.text import sparse_cosine_topk
-
-_SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 # ---------------------------------------------------------------------------
 # dedup_jaccard_prefix — prefix-filtered exact Jaccard threshold join.

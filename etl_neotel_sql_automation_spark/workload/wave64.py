@@ -32,8 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
-from .curation import _SQL_TOKS
+from . import _SQL_TOKS, query, table
 from ..ops import text as X
 
 _SEGS = 8

@@ -14,11 +14,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_TOKS, query, table
 from ..ops.dedup import _MERSENNE_P, _minhash_coeffs, shingles
 from ..ops.hashing import md5_long, sql_md5_long
 
-_SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 _NUM_HASHES = 32
 
 # ---------------------------------------------------------------------------

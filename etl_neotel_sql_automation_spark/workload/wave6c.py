@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_TOKS, query, table
 from .quality import SNAP_NEW_SQL, SNAP_OLD_SQL
 from ..ops.hashing import md5_long, sql_md5_long
 
@@ -483,7 +483,7 @@ _TR_SCALE = 10**12
 
 
 def _textrank_oracle(iters: int = 3, scale: int = _TR_SCALE) -> str:
-    toks = _SQL_TOKS_TR
+    toks = _SQL_TOKS
     head = f"""
     WITH t AS (SELECT {toks} AS toks FROM documents),
     pr0 AS (
@@ -530,9 +530,6 @@ def _textrank_oracle(iters: int = 3, scale: int = _TR_SCALE) -> str:
     LIMIT 20
     """
     )
-
-
-_SQL_TOKS_TR = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 
 @query("text_textrank_keywords", oracle=_textrank_oracle())

@@ -22,14 +22,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_TOKS, query, table
 from ..ops import similarity as S
 from ..ops import text as X
 from .corpus_mining import BM25_SCORED_SQL, bm25_doc_scores
 from .llm_ops import _SQL_QUALITY
 from .wave6d import _EDGES_SQL, _SUPP_OFFSET, _purchase_edges
-
-_SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 # ---------------------------------------------------------------------------
 # sim_rrf_fusion — hybrid search: the lexical BM25 ranking and the

@@ -29,11 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_TOKS, query, table
 from ..ops import dedup as D
 from ..ops.hashing import sql_md5_long
 from ..ops.dedup import _MERSENNE_P, _minhash_coeffs
-from .llm_ops import _SQL_TOKS
 
 _JACC_PPM = 500_000  # the incremental-dedup 0.5 threshold
 _SPLIT_BAND = 4  # bands 0-3 = occasion A (h0-15), 4-7 = B (h16-31)

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_TOKS, query, table
 from ..ops.hashing import md5_long, sql_md5_long
 
 _RES_K = 20
@@ -231,8 +231,6 @@ def agg_median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
 # an equi-join of doc tokens against the count table, a 1-row corpus
 # total broadcast, one per-doc combinable aggregate. No driver math.
 # ---------------------------------------------------------------------------
-
-_SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 
 def doc_perplexity_frame(docs: DataFrame) -> DataFrame:

@@ -20,11 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_TOKS, query, table
 from ..ops import text as X
 from .wave8 import _MONTHLY_SQL, _monthly_segment_series
-
-_SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
 
 # ---------------------------------------------------------------------------
 # corpus_cross_bleu — per-source novelty: the BLEU-2-style clipped

@@ -10,3 +10,19 @@ def spark():
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
     yield s
     # keep session alive across test modules; stopped at interpreter exit
+
+
+@pytest.fixture(scope="session")
+def registry_sf0001(spark):
+    """Every registered query built once on sf0.001 for the registry-wide
+    tests: name -> its DataFrame, or the exception its build raised."""
+    from etl_neotel_sql_automation_spark.workload import queries
+    from test_plans import SF  # the sf0.001 test tables
+
+    built = {}
+    for name, fn in queries().items():
+        try:
+            built[name] = fn(spark, SF)
+        except Exception as e:  # noqa: BLE001
+            built[name] = e
+    return built

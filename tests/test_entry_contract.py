@@ -10,8 +10,6 @@ sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod
 
-SF = "/root/testdata/sf0.001"
-
 
 def test_entry_returns_rows(spark):
     df = entrymod.entry(spark)
@@ -48,16 +46,19 @@ EMPTY_OK_SF0001 = {
 }
 
 
-def test_all_queries_run_sf0001(spark):
-    """Every registered query runs at sf0.001, and — except for the
-    documented allowlist — returns at least one row (the nonzero-row
-    floor: an empty result can match an empty oracle and go green
-    vacuously)."""
+def test_all_queries_run_sf0001(registry_sf0001):
+    """Every registered query builds and runs at sf0.001, and — except
+    for the documented allowlist — returns at least one row (the
+    nonzero-row floor: an empty result can match an empty oracle and go
+    green vacuously)."""
+    assert set(registry_sf0001) == set(entrymod.queries())
     failures = {}
     empty = set()
-    for name, fn in entrymod.queries().items():
+    for name, df in registry_sf0001.items():
         try:
-            if not fn(spark, SF).limit(1).collect():
+            if isinstance(df, Exception):
+                raise df
+            if not df.limit(1).collect():
                 empty.add(name)
         except Exception as e:  # noqa: BLE001
             failures[name] = f"{type(e).__name__}: {e}"

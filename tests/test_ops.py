@@ -674,7 +674,7 @@ def test_local_kmeans_deterministic_and_complete():
 
 
 def test_local_train_sample_cap_guard(spark):
-    """train_backend='local' never collects more than the trainer cap:
+    """The k-means trainer never collects more than its cap:
     an over-cap sample is downsampled to EXACTLY the cap by a
     deterministic hash-order top-k (r10 ADVICE: raising here made the
     registered local-backend queries stop working past SF~10), and the
@@ -700,6 +700,40 @@ def test_local_train_sample_cap_guard(spark):
         assert len(S._collect_train_sample(small, "vec_id", "embedding", None)) == 500
     finally:
         S._LOCAL_TRAIN_CAP = old
+
+
+def _sf0001_embeddings(spark):
+    from test_plans import SF
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    return emb, emb.filter(F.col("vec_id") < 10)
+
+
+def test_ivf_topk_trains_in_one_spark_job(spark):
+    """Building the IVF plan fits the coarse quantizer locally: the
+    capped sample collect is the only Spark job, where a distributed
+    k-means ran one job per iteration."""
+    from test_table_schema_cache import _jobs
+
+    emb, q = _sf0001_embeddings(spark)
+    _, jobs = _jobs(spark, lambda: S.ivf_topk(emb, q, k=5))
+    assert jobs == 1
+
+
+def test_ivf_topk_recall_vs_brute_force(spark):
+    """IVF with the default 16 centroids / 8 probes recovers >= 0.6 of
+    the exact cosine top-5 (the sim_ivf_topk property floor) and
+    returns exactly k rows per query."""
+    emb, q = _sf0001_embeddings(spark)
+    ann = S.ivf_topk(emb, q, k=5).collect()
+    exact = S.brute_force_topk(emb, q, k=5).collect()
+    per_q: dict[int, int] = {}
+    for r in ann:
+        per_q[r.q_id] = per_q.get(r.q_id, 0) + 1
+    assert set(per_q.values()) == {5} and len(per_q) == 10
+    a = {(r.q_id, r.n_id) for r in ann}
+    b = {(r.q_id, r.n_id) for r in exact}
+    assert len(a & b) / len(b) >= 0.6
 
 
 def test_ivf_cell_assignment_is_scan_side(spark):

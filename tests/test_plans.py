@@ -123,30 +123,24 @@ def test_tripwire_exclusions_are_exact():
     )
 
 
-@pytest.fixture(scope="module")
-def registry_frames(spark):
-    """Every registered query outside TRIPWIRE_EXCLUDED, built ONCE for
-    the registry-wide tests: name -> (frame, executed-plan string). The
-    plan is taken right after construction, as each test did when it
-    built its own frames."""
-    frames = {}
-    for name, fn in sorted(queries().items()):
-        if name in TRIPWIRE_EXCLUDED:
-            continue
-        df = fn(spark, SF)
-        frames[name] = (df, df._jdf.queryExecution().executedPlan().toString())
+def _tripwire_frames(registry_sf0001) -> dict:
+    """The session's sf0.001 registry build outside TRIPWIRE_EXCLUDED:
+    name -> frame. A query whose build raised fails the caller."""
+    frames = {n: df for n, df in registry_sf0001.items() if n not in TRIPWIRE_EXCLUDED}
+    failed = {n: repr(df) for n, df in frames.items() if isinstance(df, Exception)}
+    assert not failed, failed
     return frames
 
 
-def test_no_row_udfs_anywhere_in_registry(registry_frames):
+def test_no_row_udfs_anywhere_in_registry(registry_sf0001):
     """REGISTRY-WIDE tripwire: no registered query may plan a
     row-at-a-time Python UDF (BatchEvalPython) — the §2.10 policy,
     enforced for every current and FUTURE query. Only the EXACT names
     in TRIPWIRE_EXCLUDED are skipped (guarded by
     test_tripwire_exclusions_are_exact)."""
     offenders = []
-    for name, (_, plan) in registry_frames.items():
-        if "BatchEvalPython" in plan:
+    for name, df in _tripwire_frames(registry_sf0001).items():
+        if "BatchEvalPython" in df._jdf.queryExecution().executedPlan().toString():
             offenders.append(name)
     assert not offenders, offenders
 
@@ -453,14 +447,14 @@ def test_corpus_broadcast_checker_detects_the_bug(spark):
     assert count_corpus_pinned_broadcasts(good2) == 0
 
 
-def test_no_pinned_corpus_broadcasts_registry_wide(registry_frames):
+def test_no_pinned_corpus_broadcasts_registry_wide(registry_sf0001):
     """REGISTRY-WIDE: every registered query (current and future) is
     checked for pinned broadcasts of corpus-scaled frames. Only the
     EXACT names in CORPUS_HINT_ALLOWED may pin hints on frames the
     checker cannot prove bounded, each with a stated construction-level
     bound; everything else must have zero."""
     offenders = {}
-    for name, (df, _) in registry_frames.items():
+    for name, df in _tripwire_frames(registry_sf0001).items():
         n = count_corpus_pinned_broadcasts(df)
         if n != CORPUS_HINT_ALLOWED.get(name, 0):
             offenders[name] = n

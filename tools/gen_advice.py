@@ -28,7 +28,7 @@ LEDGER = [
         "severity": "low",
         "anchor": "etl_neotel_sql_automation_spark/workload/llm_ops.py:1260",
         "ask": (
-            "sim_pq_topk / sim_ivf_pq_topk hardcode train_backend='local' "
+            "sim_pq_topk / sim_ivf_pq_topk hardcode the local trainer "
             "with no train_fraction; past _LOCAL_TRAIN_CAP the query raises "
             "where the ml path still worked."
         ),

@@ -234,7 +234,6 @@ def main() -> None:
                 emb.filter(F.col("vec_id") < 10),
                 k=5,
                 train_fraction=0.25,
-                train_backend="local",
                 rerank=max(100, n // 5),
             )
             t1 = time.perf_counter()
