@@ -1,7 +1,15 @@
-"""Connected components over candidate-pair graphs — the clustering
-step a dedup pipeline runs after candidate generation (pairs -> groups
--> one keeper per group).
+"""Iterative graph algorithms, one implementation each:
 
+- :func:`connected_components` (with :func:`dedup_clusters` and
+  :func:`canonical_docs` on top): min-label propagation to a fixpoint;
+- :func:`pagerank_int`: fixed-round PageRank in exact integers, uniform
+  or personalized to a seed set;
+- :func:`label_propagation`: majority-vote community labels;
+- :func:`kcore_peel`: fixed-round k-core peeling;
+- :func:`bfs`: bounded-depth multi-source breadth-first search.
+
+Connected components is the clustering step a dedup pipeline runs
+after candidate generation (pairs -> groups -> one keeper per group).
 Algorithm: iterative min-label propagation. Each node starts labeled
 with itself; every round each node takes the min label among itself
 and its neighbors; fixpoint = components labeled by their min node id.
@@ -22,7 +30,7 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 logger = logging.getLogger(__name__)
@@ -142,11 +150,9 @@ def canonical_docs(
     quality plus one per-cluster window — both shuffles keyed on
     id/cluster, no pair amplification. Returns (doc_id, cluster_id,
     quality_col, is_canonical)."""
-    from pyspark.sql import Window as W
-
     cc = connected_components(nodes, pairs, id_col, src_col, dst_col)
     q = nodes.select(F.col(id_col).alias("id"), F.col(quality_col).alias("__q"))
-    w = W.partitionBy("component").orderBy(F.desc("__q"), "id")
+    w = Window.partitionBy("component").orderBy(F.desc("__q"), "id")
     return (
         cc.join(q, "id")
         .withColumn("__rn", F.row_number().over(w))
@@ -163,11 +169,13 @@ def pagerank_int(
     edges: DataFrame,
     iters: int = 3,
     scale: int = 10**12,
+    seeds: DataFrame | None = None,
     damping_pct: int = 85,
     src_col: str = "src",
     dst_col: str = "dst",
 ) -> DataFrame:
-    """Fixed-iteration PageRank in EXACT integer arithmetic.
+    """Fixed-iteration PageRank in EXACT integer arithmetic, uniform or
+    personalized.
 
     Ranks are bigints in units of 1/``scale``: contributions use
     integer division (``rank div out_degree``), and the damped update
@@ -176,6 +184,13 @@ def pagerank_int(
     bit-identical regardless of partitioning/summation order, which
     makes a cross-engine differential oracle possible for an iterative
     algorithm (3 unrolled CTE rounds on the SQL side).
+
+    ``seeds`` (one ``id`` column) makes it personalized PageRank: the
+    initial mass and the teleport term go to the seed ids only, with
+    N = the number of distinct seeds; every other node starts at 0 and
+    receives only walked mass. Without ``seeds`` every node is a
+    teleport target and N = the node count. An empty seed set keeps
+    SQL ``div`` semantics — nothing teleports and every rank is 0.
 
     Scale design: each iteration is one equi-join of (edges x ranks) on
     src plus one groupBy on dst — the standard distributed PageRank
@@ -196,16 +211,31 @@ def pagerank_int(
         sym.select(F.col(src_col).alias("id"))
         .union(sym.select(F.col(dst_col).alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    n_nodes = nodes.count()  # one scalar; drives exact integer literals
+    if seeds is None:
+        nodes = nodes.select("id", F.lit(True).alias("seed"))
+        nodes = nodes.localCheckpoint(eager=True)
+        n = nodes.count()  # one scalar; drives exact integer literals
+    else:
+        seeds = seeds.select("id").distinct()
+        n = seeds.count()
+        nodes = nodes.join(
+            seeds.select("id", F.lit(True).alias("seed")), "id", "left"
+        ).localCheckpoint(eager=True)
     deg = (
         sym.groupBy(src_col)
         .agg(F.count("*").alias("out_deg"))
         .localCheckpoint(eager=True)
     )
-    base = int(15 * scale) // (100 * n_nodes)
-    ranks = nodes.select("id", F.lit(scale // n_nodes).cast("long").alias("rank"))
+
+    def teleport(numerator: int, denominator: int = 1) -> Column:
+        # numerator div (denominator * n) on seed nodes, 0 elsewhere.
+        # n = 0 means no node is a seed, so the quotient is never used:
+        # 0 stands in for SQL's x div 0 where Python's // would raise
+        q = numerator // (denominator * n) if n else 0
+        return F.when(F.col("seed"), F.lit(q)).otherwise(F.lit(0)).cast("long")
+
+    ranks = nodes.select("id", teleport(scale).alias("rank"))
     ranks = ranks.localCheckpoint(eager=True)
     for _ in range(iters):
         contribs = (
@@ -219,7 +249,7 @@ def pagerank_int(
             .select(
                 "id",
                 (
-                    F.lit(base).cast("long")
+                    teleport((100 - damping_pct) * scale, 100)
                     + F.expr(f"({damping_pct} * coalesce(s, 0L)) div 100")
                 ).alias("rank"),
             )
@@ -323,3 +353,48 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
         )
         surv = deg.select(F.col("src").alias("id"))
     return deg.select(F.col("src").alias("id"), "core_deg")
+
+
+def bfs(edges: DataFrame, seeds: DataFrame, depth: int) -> DataFrame:
+    """Bounded-depth multi-source breadth-first search: (seed, id, dist)
+    for every node within ``depth`` hops of a seed, at its shortest hop
+    distance.
+
+    ``seeds`` has (seed, id) rows: ``seed`` is a key, so one pass runs
+    any number of independent searches (one key per literal source), and
+    a key with several ids is one search from that whole cohort (the
+    distance is to the nearest member). Seeds themselves come back at
+    dist 0. ``edges`` are directed (src, dst) pairs; pass both
+    directions for an undirected graph.
+
+    Per round: frontier ⋈ edges on the node id, distinct (seed, id),
+    anti-join against the visited set on the composite key — a node
+    reached earlier never re-enters, so min-distance dedup holds by
+    construction — and a per-round ``localCheckpoint`` of the new
+    frontier and the visited set so the lineage stays flat. O(edges)
+    per round, ``depth`` rounds.
+    """
+    # materialize the edge frame once (r11, the connected_components
+    # lesson): every round checkpoints eagerly, and an expression-backed
+    # edge frame (orders x lineitem distinct for the purchase graph)
+    # re-executes per round otherwise — measured 4.9 -> ~2.5 s for
+    # graph_closeness_bfs at sf0.1
+    edges = edges.select(F.col("src").alias("id"), "dst").localCheckpoint(eager=True)
+    visited = (
+        seeds.select("seed", "id")
+        .distinct()
+        .select("seed", "id", F.lit(0).alias("dist"))
+        .localCheckpoint(eager=True)
+    )
+    frontier = visited
+    for d in range(1, depth + 1):
+        frontier = (
+            frontier.join(edges, "id")
+            .select("seed", F.col("dst").alias("id"))
+            .distinct()
+            .join(visited.select("seed", "id"), ["seed", "id"], "left_anti")
+            .select("seed", "id", F.lit(d).alias("dist"))
+            .localCheckpoint(eager=True)
+        )
+        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
+    return visited

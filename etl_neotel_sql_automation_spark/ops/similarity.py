@@ -135,9 +135,11 @@ def ivf_topk(
     (measured recall@5 at n_probe 8 with 16 centroids: 0.84/0.88/0.84
     on the sf0.001/sf0.01/sf0.1 random embeddings — random vectors are
     the hard case; clustered real embeddings do far better). Training
-    is one sample collect (see :func:`_train_centroid_list`).
+    is one sample collect (see :func:`_fit_centroids`).
     """
-    cents = _train_centroid_list(corpus, id_col, vec_col, n_centroids, seed)
+    cents = _fit_centroids(
+        _collect_train_sample(corpus, id_col, vec_col, None), n_centroids, seed
+    )
 
     def nearest_centroids(df: DataFrame, side_id: str, n: int) -> DataFrame:
         return _nearest_cells(df, cents, id_col, vec_col, side_id, n)
@@ -266,27 +268,17 @@ def _collect_train_sample(
     return [r.v for r in rows]
 
 
-def _train_centroid_list(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_centroids: int,
-    seed: int,
-    train_fraction: float | None = None,
-) -> list[list[float]]:
-    """k-means coarse-quantizer centroids as a driver-side list
+def _fit_centroids(sample, n_centroids: int, seed: int) -> list[list[float]]:
+    """k-means coarse-quantizer centroids of a collected training
+    sample (:func:`_collect_train_sample`) as a driver-side list
     (n_centroids × dim floats — driver-sized by construction, like the
     LSH sign matrices), inlined as literals at use sites. Shared by
-    :func:`ivf_topk` and :func:`ivf_pq_topk`.
-    ``train_fraction`` trains on a deterministic hash-sample (see
-    :func:`hash_sample`) — at 100 TB the fit must touch a sample, not
-    the corpus; cell ASSIGNMENT always stays full-corpus.
-    The (capped) sample is collected and fit with :func:`_kmeans_local`:
-    one collect (one Spark job on a plain scan), not one job per Lloyd
-    iteration."""
-    sample = _collect_train_sample(corpus, id_col, vec_col, train_fraction)
-    centers = _kmeans_local(sample, n_centroids, seed)
-    return [[float(v) for v in c] for c in centers]
+    :func:`ivf_topk` and :func:`ivf_pq_topk`. At 100 TB the fit must
+    touch a sample, not the corpus (``train_fraction``, see
+    :func:`hash_sample`); cell ASSIGNMENT always stays full-corpus.
+    The fit is :func:`_kmeans_local`: one sample collect (one Spark job
+    on a plain scan), not one job per Lloyd iteration."""
+    return [[float(v) for v in c] for c in _kmeans_local(sample, n_centroids, seed)]
 
 
 def _nearest_cells(
@@ -359,10 +351,21 @@ def pq_train_codebooks(
     hash-sample (:func:`hash_sample`) — the 100 TB recipe; encoding
     stays full-scan either way. The capped sample is collected ONCE
     and all ``m`` subspace codebooks are fit in numpy
-    (:func:`_kmeans_local`) — one collect in total."""
+    (:func:`_fit_codebooks`) — one collect in total."""
+    return _fit_codebooks(
+        _collect_train_sample(corpus, id_col, vec_col, train_fraction), m, k, dim, seed
+    )
+
+
+def _fit_codebooks(
+    sample, m: int, k: int, dim: int, seed: int
+) -> list[list[list[float]]]:
+    """The ``m`` subspace codebooks of :func:`pq_train_codebooks`, fit
+    by :func:`_kmeans_local` on a collected training sample (subspace
+    ``j`` with seed ``seed + j``)."""
     import numpy as np
 
-    sample = np.asarray(_collect_train_sample(corpus, id_col, vec_col, train_fraction))
+    sample = np.asarray(sample)
     sub = dim // m
     return [
         [
@@ -553,16 +556,13 @@ def ivf_pq_topk(
     ``train_fraction`` fits the coarse quantizer AND the codebooks on
     a deterministic hash-sample (:func:`hash_sample`) — the deploy
     configuration: at 100 TB the k-means fits must see a sample, while
-    cell assignment and encoding stay full-corpus. Each trainer collects
-    its capped sample once and fits it with :func:`_kmeans_local`."""
+    cell assignment and encoding stay full-corpus. The capped sample is
+    collected once and both quantizers are fit from it."""
     if rerank is None:
         rerank = max(50, -(-corpus.count() // 10))
-    cents = _train_centroid_list(
-        corpus, id_col, vec_col, n_centroids, seed, train_fraction
-    )
-    books = pq_train_codebooks(
-        corpus, vec_col, m, n_codes, dim, seed, id_col, train_fraction
-    )
+    sample = _collect_train_sample(corpus, id_col, vec_col, train_fraction)
+    cents = _fit_centroids(sample, n_centroids, seed)
+    books = _fit_codebooks(sample, m, n_codes, dim, seed)
     corpus_f = fan_out(corpus)
     # corpus side: home cell + PQ codes, joined once on id
     cells = _nearest_cells(corpus_f, cents, id_col, vec_col, "n_id", 1).select(

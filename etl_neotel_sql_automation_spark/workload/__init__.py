@@ -34,15 +34,49 @@ TABLES = (
 )
 
 # Shared node-id offset for the bipartite customer-supplier purchase
-# graph (graph_ops / wave6 / wave6d / wave77): supplier s becomes node
+# graph (see purchase_graph): supplier s becomes node
 # GRAPH_SUPP_OFFSET + s. Far above any TPC-H custkey (150k rows/SF —
 # 1e9 covers SF ~6666) so customer and supplier keyspaces can never
 # collide; the r9 ADVICE flagged the old 100000 offset colliding at
 # SF >= ~0.67. Every graph oracle interpolates the same constant.
 GRAPH_SUPP_OFFSET = 1_000_000_000
 
+
+def purchase_pairs(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
+    """Distinct (c, s) customer-supplier purchase pairs, orders ⋈
+    lineitem on the order key: the one source of every purchase-graph
+    query. Pass a filtered ``lineitem`` for a sub-graph."""
+    from pyspark.sql import functions as F
+
+    return (
+        orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
+        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
+        .distinct()
+    )
+
+
+def purchase_graph(pairs: DataFrame) -> DataFrame:
+    """The undirected purchase graph as (src, dst) edges: supplier ids
+    shifted by GRAPH_SUPP_OFFSET into their own key space, every
+    :func:`purchase_pairs` pair listed in both directions."""
+    from pyspark.sql import functions as F
+
+    supp = F.lit(GRAPH_SUPP_OFFSET) + F.col("s")
+    return pairs.select(F.col("c").alias("src"), supp.alias("dst")).union(
+        pairs.select(supp.alias("src"), F.col("c").alias("dst"))
+    )
+
 # DuckDB token list mirroring ops.text.tokens; every text oracle splices it.
 _SQL_TOKS = "list_filter(string_split_regex(trim(text), '\\s+'), x -> x <> '')"
+
+# Quantized embedding (integer-valued doubles make hyperplane projections
+# order-independent-exact, hence engine-reproducible); every LSH oracle
+# splices it.
+_SQL_QV = "list_transform(CAST(embedding AS DOUBLE[]), x -> round(x * 1000000))"
+
+# Exact wide integer for moment sums and closed forms, cast identically on
+# both engines (DuckDB maps it to HUGEINT-range decimals).
+_DEC = "DECIMAL(38,0)"
 
 
 @dataclass(frozen=True)

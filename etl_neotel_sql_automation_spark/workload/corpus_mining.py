@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from . import _SQL_TOKS, query, table
+from . import _SQL_QV, _SQL_TOKS, query, table
 from ..ops.similarity import dot, norm
 from ..ops.text import tokens
 
@@ -1194,7 +1194,6 @@ def bloom_fp_frame(docs: DataFrame, bits: int = _BLOOM_BITS) -> DataFrame:
 
 _MT_TABLES = 16
 _MT_PLANES = 3
-_SQL_QV = "list_transform(CAST(embedding AS DOUBLE[]), x -> round(x * 1000000))"
 _MARGIN_COS_U = (
     "CAST(round(round(list_cosine_similarity(a.av, b.bv), 6)"
     " * 1000000.0e0) AS BIGINT)"

@@ -35,9 +35,8 @@ from pyspark.sql import functions as F
 
 from ..ops import similarity as S
 from ..ops import text as X
-from . import _SQL_TOKS, query, table
+from . import _SQL_QV, _SQL_TOKS, query, table
 
-_SQL_QV = "list_transform(CAST(embedding AS DOUBLE[]), x -> round(x * 1000000))"
 
 # ---------------------------------------------------------------------------
 # SemDeDup-style semantic pruning

@@ -12,17 +12,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import GRAPH_SUPP_OFFSET, query, table
-from ..ops.graph import pagerank_int
+from . import GRAPH_SUPP_OFFSET, purchase_graph, purchase_pairs, query, table
+from ..ops.graph import label_propagation, pagerank_int
 
 _SCALE = 10**12
-_SUPP_OFFSET = GRAPH_SUPP_OFFSET  # shared graph keyspace offset
 
 
 def _pagerank_oracle(iters: int = 3, scale: int = _SCALE) -> str:
     head = f"""
     WITH raw AS (
-      SELECT DISTINCT o_custkey AS a, {_SUPP_OFFSET} + l_suppkey AS b
+      SELECT DISTINCT o_custkey AS a, {GRAPH_SUPP_OFFSET} + l_suppkey AS b
       FROM orders JOIN lineitem ON o_orderkey = l_orderkey
     ),
     edges AS (SELECT a AS src, b AS dst FROM raw
@@ -64,20 +63,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     customers and the suppliers they bought from (supplier ids offset
     so the two key spaces stay disjoint). Exact integer arithmetic
     end-to-end — see ops.graph.pagerank_int."""
-    orders = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    raw = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("a"),
-            (F.lit(_SUPP_OFFSET) + F.col("l_suppkey")).alias("b"),
-        )
-        .distinct()
+    pairs = purchase_pairs(
+        table(spark, sf_dir, "orders"), table(spark, sf_dir, "lineitem")
     )
-    edges = raw.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-        raw.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    return pagerank_int(edges, iters=3, scale=_SCALE).select(
+    return pagerank_int(purchase_graph(pairs), iters=3, scale=_SCALE).select(
         "id", F.col("rank").alias("rank_int")
     )
 
@@ -85,7 +74,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lpa_oracle(iters: int = 3) -> str:
     head = f"""
     WITH raw AS (
-      SELECT DISTINCT o_custkey AS a, {_SUPP_OFFSET} + l_suppkey AS b
+      SELECT DISTINCT o_custkey AS a, {GRAPH_SUPP_OFFSET} + l_suppkey AS b
       FROM orders JOIN lineitem ON o_orderkey = l_orderkey
     ),
     edges0 AS (SELECT a AS src, b AS dst FROM raw
@@ -129,24 +118,10 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit. See ops.graph.label_propagation for the at-scale
     shape (one edge join + combinable vote count + argmax window per
     round, lineage checkpoint-truncated)."""
-    from ..ops.graph import label_propagation
-
-    orders = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    raw = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("a"),
-            (F.lit(_SUPP_OFFSET) + F.col("l_suppkey")).alias("b"),
-        )
-        .distinct()
+    edges = purchase_graph(
+        purchase_pairs(table(spark, sf_dir, "orders"), table(spark, sf_dir, "lineitem"))
     )
-    edges = raw.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    nodes = edges.select(F.col("src").alias("id")).distinct()
     return label_propagation(nodes, edges, iters=3)
 
 

@@ -20,7 +20,7 @@ from ..ops import similarity as S
 from ..ops import text as X
 from ..ops.dedup import _MERSENNE_P, _minhash_coeffs
 from ..ops.hashing import sql_md5_long
-from . import _SQL_TOKS, query, table
+from . import _SQL_QV, _SQL_TOKS, query, table
 
 
 def _minhash_oracle(num_hashes: int = 32, bands: int = 8, shingle_n: int = 3) -> str:
@@ -1015,11 +1015,6 @@ def pretrain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     return S.brute_force_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
-
-
-# Quantized embedding: integer-valued doubles make hyperplane
-# projections order-independent-exact, hence engine-reproducible.
-_SQL_QV = "list_transform(CAST(embedding AS DOUBLE[]), x -> round(x * 1000000))"
 
 
 def _sql_bucket(sign_rows: list[list[int]]) -> str:

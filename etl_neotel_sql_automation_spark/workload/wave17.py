@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from . import _SQL_TOKS, query, table
+from . import _SQL_TOKS, purchase_pairs, query, table
 from ..ops import text as X
 
 # ---------------------------------------------------------------------------
@@ -368,14 +368,10 @@ def modularity_frame(
     nation: DataFrame,
 ) -> DataFrame:
     """Frame core of graph_modularity_nations (scaling-probe entry)."""
-    raw = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("ck"), F.col("l_suppkey").alias("sk"))
-        .distinct()
-    )
+    raw = purchase_pairs(orders, li)
     e = (
-        raw.join(cust, raw.ck == cust.c_custkey)
-        .join(supp, raw.sk == supp.s_suppkey)
+        raw.join(cust, raw.c == cust.c_custkey)
+        .join(supp, raw.s == supp.s_suppkey)
         .select(
             F.col("c_nationkey").alias("cn"), F.col("s_nationkey").alias("sn")
         )

@@ -28,9 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
-
-_PS_DEC = "DECIMAL(38,0)"
+from . import _DEC, query, table
 
 
 def post_stratified_frame(ev: DataFrame) -> DataFrame:
@@ -54,8 +52,8 @@ def post_stratified_frame(ev: DataFrame) -> DataFrame:
     terms = cellw.select(
         "arm",
         F.expr(
-            f"CAST((CAST(n_s AS {_PS_DEC}) * s_as * 1000000)"
-            f" div (CAST(n AS {_PS_DEC}) * n_as) AS BIGINT)"
+            f"CAST((CAST(n_s AS {_DEC}) * s_as * 1000000)"
+            f" div (CAST(n AS {_DEC}) * n_as) AS BIGINT)"
         ).alias("term_micro"),
         "n_as",
         "s_as",

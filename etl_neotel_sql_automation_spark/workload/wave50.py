@@ -31,9 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
-
-_DEC = "DECIMAL(38,0)"
+from . import _DEC, query, table
 
 
 def anova_frame(ev: DataFrame) -> DataFrame:

@@ -31,11 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import _SQL_TOKS, query, table
+from . import _DEC, _SQL_TOKS, query, table
 from .curation import _W_BUCKETS
 from ..ops import text as X
-
-_DEC = "DECIMAL(38,0)"
 
 
 def roc_auc_frame(docs: DataFrame) -> DataFrame:

@@ -29,9 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _DEC, query, table
 
-_DEC = "DECIMAL(38,0)"
 _NAT_X = "NATION_1"
 _NAT_Y = "NATION_2"
 _MAX_LAG = 7

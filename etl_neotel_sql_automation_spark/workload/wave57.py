@@ -28,9 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
-
-_DEC = "DECIMAL(38,0)"
+from . import _DEC, query, table
 
 
 def elasticity_frame(li: DataFrame) -> DataFrame:

@@ -26,9 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
-
-_DEC = "DECIMAL(38,0)"
+from . import _DEC, query, table
 
 
 def tukey_frame(ev: DataFrame) -> DataFrame:

@@ -32,9 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _DEC, query, table
 
-_DEC = "DECIMAL(38,0)"
 _PRIO_X = "1-URGENT"
 _PRIO_Y = "5-LOW"
 

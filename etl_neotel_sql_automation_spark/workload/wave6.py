@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import GRAPH_SUPP_OFFSET, _SQL_TOKS, query, table
+from . import GRAPH_SUPP_OFFSET, _SQL_TOKS, purchase_graph, purchase_pairs, query, table
 from ..ops import dedup as D
 from ..ops.geo import grid_nearest
 from ..ops.graph import kcore_peel
@@ -86,7 +86,6 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # replayable oracle), over the customer-supplier purchase graph.
 # ---------------------------------------------------------------------------
 
-_SUPP_OFFSET = GRAPH_SUPP_OFFSET  # shared graph keyspace offset
 # k chosen where peeling actually CASCADES on this graph (sf0.01:
 # 1600 -> 193 -> 148 -> 55 nodes over the 3 rounds — each round's
 # removals push new nodes below k); at k <= 45 the first round is
@@ -98,7 +97,7 @@ _ROUNDS = 3
 def _kcore_oracle(k: int = _K, rounds: int = _ROUNDS) -> str:
     head = f"""
     WITH raw AS (
-      SELECT DISTINCT o_custkey AS a, {_SUPP_OFFSET} + l_suppkey AS b
+      SELECT DISTINCT o_custkey AS a, {GRAPH_SUPP_OFFSET} + l_suppkey AS b
       FROM orders JOIN lineitem ON o_orderkey = l_orderkey
     ),
     edges AS (SELECT a AS src, b AS dst FROM raw
@@ -136,20 +135,10 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard corpus/author-graph curation filter. Integer counts
     end-to-end; the oracle unrolls the rounds as CTEs.
     See ops.graph.kcore_peel for the at-scale shape."""
-    orders = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    raw = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("a"),
-            (F.lit(_SUPP_OFFSET) + F.col("l_suppkey")).alias("b"),
-        )
-        .distinct()
+    pairs = purchase_pairs(
+        table(spark, sf_dir, "orders"), table(spark, sf_dir, "lineitem")
     )
-    edges = raw.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-        raw.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    return kcore_peel(edges, k=_K, rounds=_ROUNDS)
+    return kcore_peel(purchase_graph(pairs), k=_K, rounds=_ROUNDS)
 
 
 # ---------------------------------------------------------------------------

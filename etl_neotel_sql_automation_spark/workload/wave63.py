@@ -33,9 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import query, table
-
-_DEC = "DECIMAL(38,0)"
+from . import _DEC, query, table
 
 
 def cluster_se_frame(ev: DataFrame) -> DataFrame:

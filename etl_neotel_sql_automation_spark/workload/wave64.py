@@ -32,11 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import _SQL_TOKS, query, table
+from . import _DEC, _SQL_TOKS, query, table
 from ..ops import text as X
 
 _SEGS = 8
-_DEC = "DECIMAL(38,0)"
 
 
 def heaps_frame(docs: DataFrame) -> DataFrame:

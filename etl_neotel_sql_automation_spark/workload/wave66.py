@@ -35,10 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import _SQL_TOKS, query, table
+from . import _DEC, _SQL_TOKS, query, table
 from ..ops import text as X
 
-_DEC = "DECIMAL(38,0)"
 _TOP = 8
 
 

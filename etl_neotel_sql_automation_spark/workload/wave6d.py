@@ -10,26 +10,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import GRAPH_SUPP_OFFSET, query, table
+from . import GRAPH_SUPP_OFFSET, purchase_graph, purchase_pairs, query, table
+from ..ops.graph import pagerank_int
 
 _SCALE = 10**12
-_SUPP_OFFSET = GRAPH_SUPP_OFFSET  # shared graph keyspace offset
 
 _EDGES_SQL = f"""
     raw AS (
       SELECT DISTINCT o_custkey AS c, l_suppkey AS s
       FROM orders JOIN lineitem ON o_orderkey = l_orderkey
     )"""
-
-
-def _purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    return (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -93,7 +83,9 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subtrees in the one-action plan, and eager checkpoints serialize
     # a pipeline that otherwise overlaps on idle cores (the
     # jaccard_prefix_pairs materialize-knob lesson)
-    raw = _purchase_edges(spark, sf_dir)
+    raw = purchase_pairs(
+        table(spark, sf_dir, "orders"), table(spark, sf_dir, "lineitem")
+    )
     hub = raw.select("c").distinct().select("c", F.lit(_HITS_SCALE).alias("hub"))
     auth = None
     for _ in range(_HITS_ROUNDS):
@@ -127,8 +119,8 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # segment: the random walk teleports back to the SEED set (not
 # uniformly), so mass concentrates around the seeds' neighborhood —
 # the standard graph recommendation primitive ("suppliers the
-# AUTOMOBILE segment is close to"). Same exact-integer round shape as
-# graph_pagerank with the teleport term restricted to seeds; excludes
+# AUTOMOBILE segment is close to"). The rounds are graph_pagerank's
+# (ops.graph.pagerank_int, called with the seed set); excludes
 # suppliers the seeds already buy from (anti join) — recommendations,
 # not restatements.
 # ---------------------------------------------------------------------------
@@ -143,7 +135,7 @@ def _ppr_oracle(rounds: int = _PPR_ROUNDS, scale: int = _SCALE) -> str:
       SELECT DISTINCT c_custkey AS id FROM customer
       WHERE c_mktsegment = 'AUTOMOBILE' AND c_custkey % 50 = 0
     ),
-    raw2 AS (SELECT c, {_SUPP_OFFSET} + s AS s FROM raw),
+    raw2 AS (SELECT c, {GRAPH_SUPP_OFFSET} + s AS s FROM raw),
     edges AS (SELECT c AS src, s AS dst FROM raw2
               UNION ALL SELECT s, c FROM raw2),
     nodes AS (SELECT DISTINCT src AS id FROM edges),
@@ -177,10 +169,10 @@ def _ppr_oracle(rounds: int = _PPR_ROUNDS, scale: int = _SCALE) -> str:
     return (
         head + "," + ",".join(rounds_sql)
         + f"""
-    SELECT id - {_SUPP_OFFSET} AS suppkey, CAST(rank AS BIGINT) AS ppr_rank
+    SELECT id - {GRAPH_SUPP_OFFSET} AS suppkey, CAST(rank AS BIGINT) AS ppr_rank
     FROM r{rounds}
-    WHERE id >= {_SUPP_OFFSET}
-      AND id NOT IN (SELECT {_SUPP_OFFSET} + r.s FROM raw r
+    WHERE id >= {GRAPH_SUPP_OFFSET}
+      AND id NOT IN (SELECT {GRAPH_SUPP_OFFSET} + r.s FROM raw r
                      JOIN seeds sd ON r.c = sd.id)
     ORDER BY ppr_rank DESC, suppkey
     LIMIT 25
@@ -196,90 +188,31 @@ def graph_ppr_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer rounds; at 100 TB each round is the pagerank shuffle pair
     and the seed set rides a hash join (never a broadcast hint — AQE
     sizes it)."""
-    # materialize the purchase-pair frame once (r11, the
-    # connected_components lesson): raw feeds edges/nodes/deg AND the
-    # bought anti-join side, and every PPR round's eager checkpoint is
-    # an action that would otherwise re-run the orders x lineitem
-    # distinct join per round — measured 11.4 -> ~4 s at sf0.1
-    raw = _purchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    # the pair frame feeds both the graph and the anti-join side, so it
+    # is materialized once (r11, the connected_components lesson)
+    pairs = purchase_pairs(
+        table(spark, sf_dir, "orders"), table(spark, sf_dir, "lineitem")
+    ).localCheckpoint(eager=True)
     cust = table(spark, sf_dir, "customer")
     # a SMALL cohort (every 50th AUTOMOBILE customer): with the whole
     # segment as seeds, every supplier is already bought by someone in
     # the seed set and the anti join leaves nothing to recommend
-    seeds = (
-        cust.filter(
-            (F.col("c_mktsegment") == "AUTOMOBILE") & (F.col("c_custkey") % 50 == 0)
-        )
-        .select(F.col("c_custkey").alias("id"))
-        .distinct()
+    seeds = cust.filter(
+        (F.col("c_mktsegment") == "AUTOMOBILE") & (F.col("c_custkey") % 50 == 0)
+    ).select(F.col("c_custkey").alias("id"))
+    rank = pagerank_int(
+        purchase_graph(pairs), iters=_PPR_ROUNDS, scale=_SCALE, seeds=seeds
     )
-    raw2 = raw.select("c", (F.lit(_SUPP_OFFSET) + F.col("s")).alias("s"))
-    edges = raw2.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        raw2.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    ).localCheckpoint(eager=True)
-    # nodes/deg/seed_mark are consumed by every round's rank rebuild;
-    # all three are O(nodes) after the edge materialization
-    nodes = edges.select(F.col("src").alias("id")).distinct().localCheckpoint(
-        eager=True
-    )
-    deg = (
-        edges.groupBy("src")
-        .agg(F.count("*").alias("out_deg"))
-        .localCheckpoint(eager=True)
-    )
-    ns = seeds.agg(F.count("*").alias("n"))
-    seed_mark = seeds.select("id", F.lit(1).alias("is_seed")).localCheckpoint(
-        eager=True
-    )
-    rank = (
-        nodes.join(seed_mark, "id", "left")
-        .crossJoin(F.broadcast(ns))
-        .select(
-            "id",
-            F.when(
-                F.col("is_seed").isNotNull(), F.expr(f"{_SCALE} div n")
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("rank"),
-        )
-    )
-    for _ in range(_PPR_ROUNDS):
-        contrib = (
-            edges.join(rank.select(F.col("id").alias("src"), "rank"), "src")
-            .join(deg, "src")
-            .select(F.col("dst").alias("id"), F.expr("rank div out_deg").alias("m"))
-            .groupBy("id")
-            .agg(F.sum("m").alias("m"))
-        )
-        rank = (
-            nodes.join(seed_mark, "id", "left")
-            .crossJoin(F.broadcast(ns))
-            .join(contrib, "id", "left")
-            .select(
-                "id",
-                (
-                    F.when(
-                        F.col("is_seed").isNotNull(),
-                        F.expr(f"(15 * {_SCALE}) div (100 * n)"),
-                    ).otherwise(F.lit(0))
-                    + F.expr("(85 * COALESCE(m, 0)) div 100")
-                )
-                .cast("long")
-                .alias("rank"),
-            )
-        )
-        rank = rank.localCheckpoint(eager=True)
     bought = (
-        raw.join(seeds, raw.c == seeds.id)
-        .select((F.lit(_SUPP_OFFSET) + F.col("s")).alias("id"))
+        pairs.join(seeds, pairs.c == seeds.id)
+        .select((F.lit(GRAPH_SUPP_OFFSET) + F.col("s")).alias("id"))
         .distinct()
     )
     return (
-        rank.filter(F.col("id") >= _SUPP_OFFSET)
+        rank.filter(F.col("id") >= GRAPH_SUPP_OFFSET)
         .join(bought, "id", "left_anti")
         .select(
-            (F.col("id") - _SUPP_OFFSET).alias("suppkey"),
+            (F.col("id") - GRAPH_SUPP_OFFSET).alias("suppkey"),
             F.col("rank").cast("bigint").alias("ppr_rank"),
         )
         .orderBy(F.desc("ppr_rank"), "suppkey")

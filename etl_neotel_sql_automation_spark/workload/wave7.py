@@ -22,12 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from . import _SQL_TOKS, query, table
+from . import GRAPH_SUPP_OFFSET, _SQL_TOKS, purchase_graph, purchase_pairs, query, table
 from ..ops import similarity as S
 from ..ops import text as X
+from ..ops.graph import bfs
 from .corpus_mining import BM25_SCORED_SQL, bm25_doc_scores
 from .llm_ops import _SQL_QUALITY
-from .wave6d import _EDGES_SQL, _SUPP_OFFSET, _purchase_edges
+from .wave6d import _EDGES_SQL
 
 # ---------------------------------------------------------------------------
 # sim_rrf_fusion — hybrid search: the lexical BM25 ranking and the
@@ -390,7 +391,9 @@ def graph_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared suppliers. Three equi-joins on the supplier key + one
     combinable aggregate; the supplier-degree table joins on the same
     key the candidates shuffle on, so AQE can co-plan them."""
-    return link_predict_frame(_purchase_edges(spark, sf_dir))
+    return link_predict_frame(
+        purchase_pairs(table(spark, sf_dir, "orders"), table(spark, sf_dir, "lineitem"))
+    )
 
 
 def link_predict_frame(raw: DataFrame) -> DataFrame:
@@ -1089,13 +1092,12 @@ def lineitem_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # graph_bfs_hops — breadth-first shortest hop distance from a seed
 # customer cohort over the bipartite purchase graph, 4 rounds — the
 # shortest-path modality the graph family was missing (beside CC,
-# label propagation, PageRank/PPR, triangles, k-core, HITS). Each
-# round is one frontier equi-join + a min-combinable aggregate, the
-# pagerank_int iteration convention with min(dist) in place of sums;
-# rounds are localCheckpointed so the lineage stays flat. Output is
-# the reachability histogram: how many SUPPLIERS sit at each hop
-# distance from the cohort (odd hops only, by bipartiteness), the
-# "supply-chain blast radius" readout.
+# label propagation, PageRank/PPR, triangles, k-core, HITS). The
+# search is ops.graph.bfs (graph_closeness_bfs's too) with the whole
+# cohort under one seed key, so a supplier's distance is to the
+# nearest cohort member. Output is the reachability histogram: how
+# many SUPPLIERS sit at each hop distance from the cohort (odd hops
+# only, by bipartiteness), the "supply-chain blast radius" readout.
 #
 # Edges are the LARGE-quantity purchases (l_quantity >= 45) and the
 # seed cohort is small (every 997th buyer): the full purchase graph
@@ -1117,7 +1119,7 @@ _BFS_SEED_MOD = 997
       FROM orders JOIN lineitem ON o_orderkey = l_orderkey
       WHERE l_quantity >= {_BFS_QTY}
     ),
-    raw2 AS (SELECT c, {_SUPP_OFFSET} + s AS s FROM raw),
+    raw2 AS (SELECT c, {GRAPH_SUPP_OFFSET} + s AS s FROM raw),
     edges AS (SELECT c AS src, s AS dst FROM raw2
               UNION ALL SELECT s, c FROM raw2),
     seeds AS (SELECT DISTINCT c FROM raw WHERE c % {_BFS_SEED_MOD} = 1),
@@ -1130,45 +1132,28 @@ _BFS_SEED_MOD = 997
     ),
     d AS (SELECT id, CAST(min(hops) AS BIGINT) AS hops FROM walk GROUP BY id)
     SELECT hops, CAST(count(*) AS BIGINT) AS n_suppliers
-    FROM d WHERE id >= {_SUPP_OFFSET}
+    FROM d WHERE id >= {GRAPH_SUPP_OFFSET}
     GROUP BY hops ORDER BY hops
     """,
 )
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supplier counts by minimum hop distance (<= 4 rounds) from the
-    seed cohort over the large-quantity purchase graph. Per round:
-    frontier join + min aggregate; the frontier is the full
-    known-distance set, so a node discovered at hop 1 is never
-    re-labeled at hop 3 (min wins, matching the recursive-CTE
-    oracle's UNION + min)."""
-    orders = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= _BFS_QTY)
-    raw = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
+    seed cohort over the large-quantity purchase graph. ops.graph.bfs
+    anti-joins each round's frontier against the visited set, so a
+    node discovered at hop 1 is never re-labeled at hop 3 (the
+    recursive-CTE oracle's UNION + min)."""
+    pairs = purchase_pairs(
+        table(spark, sf_dir, "orders"),
+        table(spark, sf_dir, "lineitem").filter(F.col("l_quantity") >= _BFS_QTY),
     )
-    raw2 = raw.select("c", (F.lit(_SUPP_OFFSET) + F.col("s")).alias("s"))
-    edges = raw2.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        raw2.select(F.col("s").alias("src"), F.col("c").alias("dst"))
+    # the whole cohort is one search: one seed key, nearest-member hops
+    cohort = pairs.filter(F.col("c") % _BFS_SEED_MOD == 1).select(
+        F.lit(0).alias("seed"), F.col("c").alias("id")
     )
-    dist = (
-        raw.filter(F.col("c") % _BFS_SEED_MOD == 1)
-        .select(F.col("c").alias("id"))
-        .distinct()
-        .select("id", F.lit(0).alias("hops"))
-    )
-    for _ in range(_BFS_ROUNDS):
-        nxt = (
-            edges.join(dist.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"), (F.col("hops") + 1).alias("hops"))
-        )
-        dist = (
-            dist.union(nxt).groupBy("id").agg(F.min("hops").alias("hops"))
-        ).localCheckpoint(eager=False)
     return (
-        dist.filter(F.col("id") >= _SUPP_OFFSET)
-        .groupBy(F.col("hops").cast("bigint").alias("hops"))
+        bfs(purchase_graph(pairs), cohort, _BFS_ROUNDS)
+        .filter(F.col("id") >= GRAPH_SUPP_OFFSET)
+        .groupBy(F.col("dist").cast("bigint").alias("hops"))
         .agg(F.count("*").cast("bigint").alias("n_suppliers"))
         .orderBy("hops")
     )

@@ -17,8 +17,9 @@
   a date-descending prefix min decides dominance for every point at
   once.
 
-Determinism: BFS distances are integers from unrolled min-joins
-(identical round structure on both engines); the skyline is exact
+Determinism: BFS distances are integers from the same fixed-depth
+frontier rounds on both engines (ops.graph.bfs on Spark, unrolled
+NOT EXISTS rounds in the oracle); the skyline is exact
 integer cents with explicit tie semantics (equal (date, price) points
 are mutually non-dominating and all kept, counted).
 """
@@ -29,63 +30,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from . import GRAPH_SUPP_OFFSET, query, table
+from . import GRAPH_SUPP_OFFSET, purchase_graph, purchase_pairs, query, table
+from ..ops.graph import bfs
 
-_SUPP_OFFSET = GRAPH_SUPP_OFFSET  # the graph_ops key-space offset, same graph
 _SEEDS = (1, 2, 3, 5)  # literal seed customers (present at every SF)
 _DEPTH = 4
 
 
-def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = table(spark, sf_dir, "orders")
-    li = table(spark, sf_dir, "lineitem")
-    raw = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("a"),
-            (F.lit(_SUPP_OFFSET) + F.col("l_suppkey")).alias("b"),
-        )
-        .distinct()
-    )
-    return raw.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-        raw.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-
-
 def closeness_bfs_frame(edges: DataFrame) -> DataFrame:
     """Frame core of graph_closeness_bfs (scaling-probe entry): BFS
-    from the literal seeds to depth _DEPTH=4, all seeds in ONE pass (seed is
-    a key column on the visited frame). Per round: frontier ⋈ edges,
-    min-dist dedup, localCheckpoint (the ops/graph.py round pattern —
-    lineage must not grow with rounds)."""
-    spark = edges.sparkSession
-    # materialize the edge frame once (r11, the connected_components
-    # lesson): every BFS round checkpoints its frontier eagerly, and an
-    # expression-backed edge frame (orders x lineitem distinct for the
-    # purchase graph) re-executes per round otherwise — measured
-    # 4.9 -> ~2.5 s at sf0.1
-    edges = edges.localCheckpoint(eager=True)
-    seeds = spark.createDataFrame(
-        [(s, s, 0) for s in _SEEDS], "seed long, id long, dist int"
+    from the literal seeds to depth _DEPTH=4, all seeds in ONE pass
+    (seed is a key column of ops.graph.bfs)."""
+    seeds = edges.sparkSession.createDataFrame(
+        [(s, s) for s in _SEEDS], "seed long, id long"
     )
-    visited = seeds.localCheckpoint(eager=True)
-    frontier = visited
-    for depth in range(1, _DEPTH + 1):
-        # frontier expansion, then anti-join the visited set on the
-        # composite (seed, id) key — min-dist dedup by construction
-        # (a node reached earlier never re-enters)
-        nxt = (
-            frontier.join(edges, frontier["id"] == edges["src"])
-            .select("seed", F.col("dst").alias("id"))
-            .distinct()
-            .join(visited.select("seed", "id"), ["seed", "id"], "left_anti")
-            .select("seed", "id", F.lit(depth).cast("int").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
     per_depth = (
-        visited.groupBy("seed", "dist")
+        bfs(edges, seeds, _DEPTH)
+        .groupBy("seed", "dist")
         .agg(F.count("*").cast("bigint").alias("n_at_depth"))
         .select(
             "seed",
@@ -133,7 +94,7 @@ def _bfs_oracle() -> str:
     rounds_sql = ",\n".join(rounds)
     return f"""
     WITH raw AS (
-      SELECT DISTINCT o_custkey AS a, {_SUPP_OFFSET} + l_suppkey AS b
+      SELECT DISTINCT o_custkey AS a, {GRAPH_SUPP_OFFSET} + l_suppkey AS b
       FROM orders JOIN lineitem ON o_orderkey = l_orderkey
     ),
     edges AS (SELECT a AS src, b AS dst FROM raw
@@ -160,10 +121,13 @@ def graph_closeness_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-depth multi-source BFS over the customer-supplier
     purchase graph: 4 literal seeds ride one pass as a key column;
     per (seed, depth) reached counts plus the running closeness
-    numerator (sum of distances). Frontier ⋈ edges per round with
-    min-dist dedup and per-round localCheckpoint — O(edges) per round,
-    constant rounds, the scalable BFS shape."""
-    return closeness_bfs_frame(_edges(spark, sf_dir))
+    numerator (sum of distances). The search is ops.graph.bfs:
+    O(edges) per round, constant rounds, the scalable BFS shape."""
+    return closeness_bfs_frame(
+        purchase_graph(
+            purchase_pairs(table(spark, sf_dir, "orders"), table(spark, sf_dir, "lineitem"))
+        )
+    )
 
 
 # ---------------------------------------------------------------------------

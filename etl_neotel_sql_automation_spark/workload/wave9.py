@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from . import _SQL_TOKS, query, table
+from . import GRAPH_SUPP_OFFSET, _SQL_TOKS, purchase_graph, purchase_pairs, query, table
 from ..ops import text as X
 from .wave8 import _MONTHLY_SQL, _monthly_segment_series
 
@@ -342,14 +342,14 @@ def agg_percentile_cont_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # float, rounded identically on both sides (the agg_corr precedent).
 # ---------------------------------------------------------------------------
 
-from .wave6d import _EDGES_SQL, _SUPP_OFFSET, _purchase_edges  # noqa: E402
+from .wave6d import _EDGES_SQL  # noqa: E402
 
 
 @query(
     "graph_degree_assortativity",
     oracle=f"""
     WITH {_EDGES_SQL},
-    raw2 AS (SELECT c, {_SUPP_OFFSET} + s AS s FROM raw),
+    raw2 AS (SELECT c, {GRAPH_SUPP_OFFSET} + s AS s FROM raw),
     edges AS (SELECT c AS src, s AS dst FROM raw2
               UNION ALL SELECT s, c FROM raw2),
     deg AS (SELECT src AS id, CAST(count(*) AS BIGINT) AS d
@@ -364,10 +364,8 @@ from .wave6d import _EDGES_SQL, _SUPP_OFFSET, _purchase_edges  # noqa: E402
 def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity (Pearson corr of endpoint degrees) of the
     symmetrized customer-supplier purchase graph."""
-    raw = _purchase_edges(spark, sf_dir)
-    raw2 = raw.select("c", (F.lit(_SUPP_OFFSET) + F.col("s")).alias("s"))
-    edges = raw2.select(F.col("c").alias("src"), F.col("s").alias("dst")).union(
-        raw2.select(F.col("s").alias("src"), F.col("c").alias("dst"))
+    edges = purchase_graph(
+        purchase_pairs(table(spark, sf_dir, "orders"), table(spark, sf_dir, "lineitem"))
     )
     deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
     ds = deg.select(F.col("id").alias("id_s"), F.col("d").alias("d_s"))

@@ -379,19 +379,43 @@ def test_pagerank_int_matches_python_model(spark):
     )
     got = {r.id: r.rank for r in pagerank_int(edges, iters=3, scale=10**12).collect()}
 
-    # independent python model of the same integer recurrence
-    scale, n = 10**12, 5
+    # independent python model of the same integer recurrence; teleport
+    # (and the initial mass) goes to the `seeds` nodes only, n of them
+    scale = 10**12
     adj = {0: [1, 2, 3, 4], 1: [0], 2: [0], 3: [0], 4: [0]}
-    rank = {v: scale // n for v in adj}
-    for _ in range(3):
-        contrib = {v: 0 for v in adj}
-        for u, ns in adj.items():
-            c = rank[u] // len(ns)
-            for v in ns:
-                contrib[v] += c
-        rank = {v: (15 * scale) // (100 * n) + (85 * contrib[v]) // 100 for v in adj}
-    assert got == rank
+
+    def model(seeds):
+        n = len(seeds)
+        rank = {v: scale // n if v in seeds else 0 for v in adj}
+        for _ in range(3):
+            contrib = {v: 0 for v in adj}
+            for u, ns in adj.items():
+                c = rank[u] // len(ns)
+                for v in ns:
+                    contrib[v] += c
+            rank = {
+                v: ((15 * scale) // (100 * n) if v in seeds else 0)
+                + (85 * contrib[v]) // 100
+                for v in adj
+            }
+        return rank
+
+    assert got == model(set(adj))
     assert got[0] > got[1]  # hub outranks leaves
+
+    # personalized: seeds {1, 2} — the seeds outrank the unseeded leaves
+    seeds = spark.createDataFrame([(1,), (2,)], ["id"])
+    ppr = {
+        r.id: r.rank
+        for r in pagerank_int(edges, iters=3, scale=scale, seeds=seeds).collect()
+    }
+    assert ppr == model({1, 2})
+    assert ppr[1] == ppr[2] > ppr[3] == ppr[4]
+
+    # an empty seed set keeps SQL div semantics: all-zero ranks, no raise
+    none = spark.createDataFrame([], "id long")
+    empty = pagerank_int(edges, iters=3, scale=scale, seeds=none).collect()
+    assert {r.id: r.rank for r in empty} == {v: 0 for v in adj}
 
 
 def test_split_assignment_stable_under_append(spark):
@@ -717,6 +741,18 @@ def test_ivf_topk_trains_in_one_spark_job(spark):
 
     emb, q = _sf0001_embeddings(spark)
     _, jobs = _jobs(spark, lambda: S.ivf_topk(emb, q, k=5))
+    assert jobs == 1
+
+
+def test_ivf_pq_topk_trains_in_one_spark_job(spark):
+    """IVF×PQ fits the coarse quantizer AND the PQ codebooks from one
+    capped sample collect, where each trainer used to collect its own
+    copy of the same sample (``rerank`` is given so the default's
+    corpus count does not run)."""
+    from test_table_schema_cache import _jobs
+
+    emb, q = _sf0001_embeddings(spark)
+    _, jobs = _jobs(spark, lambda: S.ivf_pq_topk(emb, q, k=5, rerank=50))
     assert jobs == 1
 
 

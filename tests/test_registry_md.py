@@ -1,28 +1,22 @@
 """REGISTRY.md sync check (r9 VERDICT #8): the committed index must
-list exactly the registered queries — regenerate with
-``python tools/gen_registry.py`` whenever the registry changes."""
+be exactly what ``python tools/gen_registry.py`` writes — the names,
+and every bench, probe and summary cell — so it is regenerated whenever
+the registry, a docstring or a bench/scaling record changes."""
 
 from __future__ import annotations
 
 import os
-import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_registry_md_in_sync():
-    from etl_neotel_sql_automation_spark import workload
+    from tools import gen_registry
 
     path = os.path.join(REPO, "REGISTRY.md")
     assert os.path.exists(path), "REGISTRY.md missing - run tools/gen_registry.py"
     with open(path) as f:
-        listed = {
-            m.group(1)
-            for m in re.finditer(r"^\| (\w+) \|", f.read(), re.MULTILINE)
-        }
-    listed.discard("query")  # header row
-    registered = set(workload.queries())
-    assert listed == registered, (
-        f"REGISTRY.md out of sync - missing: {sorted(registered - listed)[:5]}, "
-        f"stale: {sorted(listed - registered)[:5]} - run tools/gen_registry.py"
+        committed = f.read()
+    assert committed == gen_registry.build(), (
+        "REGISTRY.md is stale - run python tools/gen_registry.py"
     )

@@ -36,6 +36,24 @@ def test_bfs_distances_on_path_graph(spark):
     assert (5, 1) not in rows
 
 
+def test_bfs_cohort_under_one_seed_key_takes_nearest_distance(spark):
+    from etl_neotel_sql_automation_spark.ops.graph import bfs
+
+    # cohort {1, 2} under seed key 0. Node 5 is 1 hop from 2 and 3 hops
+    # from 1 (1-3-4-5), so it must come back at dist 1; 6 hangs off 5.
+    und = [(1, 3), (3, 4), (4, 5), (2, 5), (5, 6), (7, 8)]
+    edges = spark.createDataFrame(
+        und + [(b, a) for a, b in und], "src long, dst long"
+    )
+    seeds = spark.createDataFrame([(0, 1), (0, 2), (0, 2)], "seed long, id long")
+    got = {(r["seed"], r["id"]): r["dist"] for r in bfs(edges, seeds, 4).collect()}
+    assert got == {
+        (0, 1): 0, (0, 2): 0,  # duplicate seed rows collapse
+        (0, 3): 1, (0, 5): 1,
+        (0, 4): 2, (0, 6): 2,
+    }  # 7-8 is unreachable
+
+
 def test_pareto_front_hand_case(spark):
     import datetime
 
