@@ -660,6 +660,21 @@ def _load_queries_from(repo_root: str):
     return qs, mods
 
 
+def _ab_members(set_names: list[str], old_qs, new_qs) -> dict[str, list[str]]:
+    """``--ab-sets`` name -> its queries: a frozen set's members, or the
+    name itself as a one-query set when either side registers it."""
+    unknown = [
+        s for s in set_names
+        if s not in FROZEN_SETS and s not in old_qs and s not in new_qs
+    ]
+    if unknown:
+        raise ValueError(
+            f"--ab-sets: {unknown} are neither frozen sets nor queries "
+            "registered on either side"
+        )
+    return {s: FROZEN_SETS.get(s, [s]) for s in set_names}
+
+
 def ab_main(ref: str, out_path: str, n_passes: int, set_names: list[str]) -> None:
     import subprocess
 
@@ -680,9 +695,10 @@ def ab_main(ref: str, out_path: str, n_passes: int, set_names: list[str]) -> Non
         new_qs = dict(workload.queries())
         new_mods = _grab_modules()
         side_env = {"new": (repo, new_mods), "old": (wt, old_mods)}
+        members = _ab_members(set_names, old_qs, new_qs)
         wanted = []
         for s in set_names:
-            for n in FROZEN_SETS[s]:
+            for n in members[s]:
                 if n not in wanted:
                     wanted.append(n)
         # EXTRA_QUERIES close over the current package at call time, so
@@ -740,7 +756,7 @@ def ab_main(ref: str, out_path: str, n_passes: int, set_names: list[str]) -> Non
 
         sets_out = {}
         for s in set_names:
-            names = [n for n in FROZEN_SETS[s] if n in runnable]
+            names = [n for n in members[s] if n in runnable]
             a = round(sum(best["new"][n] for n in names), 3)
             b = round(sum(best["old"][n] for n in names), 3)
             sets_out[s] = {

@@ -39,11 +39,6 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df
 
 
-def dedup_exact(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Exact dedup (hash groupBy under the hood)."""
-    return df.dropDuplicates(cols)
-
-
 def exact_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Duplicate groups by exact text: keeper id + multiplicity."""
     return df.groupBy(text_col).agg(

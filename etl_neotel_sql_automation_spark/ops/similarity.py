@@ -49,7 +49,8 @@ def cosine_to_fixed_pandas(query_vec: list[float], vec_col: str = "embedding"):
     width, so the JVM-side expression stays the default (no Python
     worker dependency). This alternative exists for fatter per-row math
     (e.g. 1k+-dim vectors or matrix ops), where the batch-matrix
-    multiply pulls ahead. Numbers via tools/scale_probe.py.
+    multiply pulls ahead. (A one-off measurement; no scaling-probe
+    family re-runs it.)
     """
     import numpy as np
     import pandas as pd

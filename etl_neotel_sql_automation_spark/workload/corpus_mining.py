@@ -681,7 +681,7 @@ def quality_dsir_weights_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dsir_hashed_frame(docs: DataFrame) -> DataFrame:
     """Frame-level body of quality_dsir_weights_hashed over any
     (doc_id, source, text) frame — shared by the registered query and
-    the scaling probe (tools/scale_hashed_probe.py)."""
+    the scaling probe (tools/scale_probe.py hashed)."""
     bucket = (
         F.conv(F.substring(F.md5(F.col("term")), 1, 15), 16, 10).cast("long")
         % _DSIR_BUCKETS
@@ -982,7 +982,7 @@ def decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bloom_prefilter_frame(docs: DataFrame, bits: int = _BLOOM_BITS) -> DataFrame:
     """Frame-level body of decontam_bloom_prefilter over any
     (doc_id, text) frame — shared by the registered query and the
-    scaling probe (tools/scale_hashed_probe.py), which sizes ``bits``
+    scaling probe (tools/scale_probe.py hashed), which sizes ``bits``
     to the synthetic eval corpus per the docstring's deploy rule."""
     g = _windows_frame(docs, span_n=_CONTAM_N).select("doc_id", "gram")
     ev = g.filter(F.col("doc_id") % 50 == 0).select("gram").distinct()
@@ -1190,7 +1190,7 @@ def bloom_fp_frame(docs: DataFrame, bits: int = _BLOOM_BITS) -> DataFrame:
 # 20/20 + 19/20 for 2.2 s (and its 16-table oracle SQL is ~2.5x
 # cheaper in DuckDB) — chosen. Both meet the >=0.90 target at both
 # SFs; at 100 TB planes scale with log2(population) regardless (the
-# occupancy rule, tools/scale_hashed_probe.py).
+# occupancy rule, tools/scale_probe.py hashed).
 
 _MT_TABLES = 16
 _MT_PLANES = 3
@@ -1312,7 +1312,7 @@ def margin_cand_frame_from(
     sample BEFORE bucket assignment — querying the production index
     with a sampled endpoint set, the 100 TB metering recipe.
     ``tables``/``planes`` are the registered knobs, overridable so the
-    scaling probe (tools/scale_hashed_probe.py) can apply the deploy
+    scaling probe (tools/scale_probe.py hashed) can apply the deploy
     rule — planes track log2(corpus) so bucket occupancy stays flat.
 
     ``materialize`` localCheckpoints the candidate matrix: the margin
@@ -1870,7 +1870,7 @@ def pretrain_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def pretrain_frame(docs: DataFrame) -> DataFrame:
     """The composed pipeline over any documents-shaped frame (doc_id,
-    source, lang, text) — exposed so tools/scale_curation_probe.py can
+    source, lang, text) — exposed so tools/scale_probe.py curation can
     drive the COMPOSITION (stage-boundary skew, AQE interactions) at
     1x/10x/100x, not just its stages in isolation."""
     from ..ops.text import fingerprint_md5

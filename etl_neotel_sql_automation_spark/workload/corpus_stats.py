@@ -499,7 +499,7 @@ def text_bigram_lm_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bigram_lm_hashed_frame(docs: DataFrame) -> DataFrame:
     """Frame-level body of text_bigram_lm_hashed over any
     (doc_id, text) frame — shared by the registered query and the
-    scaling probe (tools/scale_hashed_probe.py)."""
+    scaling probe (tools/scale_probe.py hashed)."""
     toks = X.tokens(F.col("text"))
     cnt = F.size(toks)
     idx = F.when(cnt >= 2, F.sequence(F.lit(1), cnt - 1)).otherwise(
@@ -987,7 +987,7 @@ def text_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cms_heavy_hitters_frame(docs: DataFrame) -> DataFrame:
     """Frame-level body of text_heavy_hitters_cms over any
     (doc_id, text) frame — shared by the registered query and the
-    scaling probe (tools/scale_hashed_probe.py)."""
+    scaling probe (tools/scale_probe.py hashed)."""
     h15 = lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")  # noqa: E731
     tok = docs.select(F.explode(X.tokens(F.col("text"))).alias("term"))
     buckets = F.array(

@@ -208,7 +208,7 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def gopher_frame(docs: DataFrame) -> DataFrame:
     """The gate itself over any documents-shaped frame (doc_id, text) —
-    shared by the registered query and tools/scale_curation_probe.py."""
+    shared by the registered query and tools/scale_probe.py curation."""
     toks = X.tokens("text")
     n_words = F.size(toks).cast("long")
     n_chars = F.aggregate(
@@ -298,7 +298,7 @@ def quality_hashed_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def classifier_frame(docs: DataFrame) -> DataFrame:
     """The scorer over any documents-shaped frame (doc_id, text) —
-    shared by the registered query and tools/scale_curation_probe.py."""
+    shared by the registered query and tools/scale_probe.py curation."""
     toks = X.tokens("text")
     weights = F.transform(
         toks,

@@ -90,7 +90,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def funnel_frame(ev: DataFrame) -> DataFrame:
     """The events_funnel plan over any events-shaped frame (user_id,
-    ts, event_type) — shared with tools/scale_events_probe.py so the
+    ts, event_type) — shared with tools/scale_probe.py events so the
     scaling probe measures exactly the registered query's plan."""
     signup = (
         ev.filter(F.col("event_type") == "signup")

@@ -59,7 +59,7 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def markov_frame(ev: DataFrame) -> DataFrame:
     """The transition matrix over any events-shaped frame — shared by
-    the registered query and tools/scale_events_probe.py."""
+    the registered query and tools/scale_probe.py events."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
         "user_id",
@@ -662,7 +662,7 @@ def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ab_test_frame(ev: DataFrame) -> DataFrame:
     """The events_ab_test plan over any events-shaped frame (user_id,
-    event_type, value) — shared with tools/scale_events_probe.py so
+    event_type, value) — shared with tools/scale_probe.py events so
     the scaling probe measures the registered query's exact plan."""
     even = F.col("user_id") % 2 == 0
     purch = (F.col("event_type") == "purchase") & (F.col("value") > 150.0)

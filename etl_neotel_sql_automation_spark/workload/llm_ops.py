@@ -1307,7 +1307,7 @@ def agg_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coverage entry because countDistinct forces the Expand/two-level
     # distinct plan and every percentile buffer rides through it —
     # measured 13.9 s for the combined form vs 2.6 s for the SUM of
-    # its aggregates in isolation (tools/probe_agg_approx.py). Split
+    # its aggregates in isolation (a one-off sf0.1 probe). Split
     # into three combinable passes joined on the 3-row group key:
     #   base  — count + HLL + GK sketch on raw rows (one hash agg, no
     #           Expand; the sketches are fed the same row stream, so

@@ -494,7 +494,7 @@ def wau_sketch_frame(ev: DataFrame) -> DataFrame:
     """The scale path of events_rolling_wau over any events-shaped
     frame: one mergeable HLL sketch per day, 7-sketch union per
     calendar RANGE window -> (day, est). Shared with
-    tools/scale_events_probe.py so the scaling probe measures exactly
+    tools/scale_probe.py events so the scaling probe measures exactly
     the registered query's sketch plan (the exact-distinct checker
     half stays in the registered query — it exists to gate the
     estimate, not to run at scale)."""

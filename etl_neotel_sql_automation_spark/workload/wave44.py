@@ -12,7 +12,7 @@ The sweep runs over the LSH CANDIDATE set, not the block self-join —
 the 100 TB shape (enumerating block pairs is the quadratic failure
 mode banding exists to avoid; the r8 probe measured the brute form
 OOMing at 500k synthetic docs while the banded form holds the
-scale_dedup_probe line). Below the banding S-curve's recall floor the
+tools/scale_probe.py dedup line). Below the banding S-curve's recall floor the
 counts are candidate-limited — dedup_minhash_s_curve is the
 registered meter that quantifies exactly that recall per true
 Jaccard, so the two tables read together.

@@ -178,7 +178,7 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def inverted_index_frame(docs: DataFrame) -> DataFrame:
     """text_inverted_index over any documents-shaped frame (probed at
-    1x/10x/100x by tools/scale_wave7_probe.py)."""
+    1x/10x/100x by tools/scale_probe.py wave7)."""
     tok = docs.select("doc_id", F.explode(X.tokens(F.col("text"))).alias("term"))
     tf = tok.groupBy("term", "doc_id").agg(F.count("*").alias("tf"))
     stats = tf.groupBy("term").agg(

@@ -5,9 +5,10 @@ tools/check_oracle.py at all three SFs.)"""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_neotel_sql_automation_spark.workload.corpus_mining import (
     contam_span_frame,

@@ -634,7 +634,7 @@ def test_dedup_probe_corpus_plants_are_found(spark):
     exact_groups, near-copies surface as MinHash-LSH candidate pairs —
     so the probe measures real dedup work, not scans over structureless
     noise (the events-probe funnel taught this lesson)."""
-    from tools.scale_dedup_probe import BASE_DOCS, synth_docs
+    from tools.synth import BASE_DOCS, synth_docs
 
     docs = synth_docs(spark, 1000).cache()
     try:
@@ -659,14 +659,13 @@ def test_ann_probe_corpus_plants_are_found(spark):
     near-duplicates that the LSH path actually finds at the probe's own
     scaled-planes configuration — same discipline as the dedup/events
     probes: measure real retrieval work, not scans over noise."""
-    from tools.scale_ann_probe import ops_for, planes_for, synth_embeddings
+    from tools.scale_probe import FAMILIES, Tables, planes_for
+    from tools.synth import synth_embeddings
 
     emb = synth_embeddings(spark, 2000).cache()
     try:
-        pairs = {
-            (r.id_a, r.id_b): r.sim
-            for r in ops_for(1)["lsh_near_dup"](emb).collect()
-        }
+        lsh = FAMILIES["ann"]["lsh_near_dup"](Tables(spark, 1, embeddings=emb))
+        pairs = {(r.id_a, r.id_b): r.sim for r in lsh.collect()}
         planted = {(d - 1, d) for d in range(1, 2000, 50)}
         found = planted & set(pairs)
         assert len(found) / len(planted) >= 0.9   # cosine ~0.999 pairs

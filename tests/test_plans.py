@@ -213,6 +213,21 @@ def test_bench_headline_subset_of_registry(spark):
     assert len(qreg()) >= 77
 
 
+def test_bench_ab_sets_take_query_names():
+    """``bench.py --ab-sets`` takes a frozen-set name or a query name
+    registered on either side (a one-query set); any other name raises
+    instead of being skipped."""
+    import bench
+
+    old, new = {"q_old": None, "q_both": None}, {"q_both": None, "q_new": None}
+    got = bench._ab_members(["stable27", "q_old", "q_new"], old, new)
+    assert got == {
+        "stable27": bench.FROZEN_SETS["stable27"], "q_old": ["q_old"], "q_new": ["q_new"],
+    }
+    with pytest.raises(ValueError, match="q_typo"):
+        bench._ab_members(["q_both", "q_typo"], old, new)
+
+
 @pytest.mark.parametrize(
     ("name", "n_pinned_dims"),
     [

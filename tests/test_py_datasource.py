@@ -33,19 +33,22 @@ def test_synthetic_datasource_partitioned_and_deterministic(spark):
 
 def test_scale_probe_ops_run_over_synthetic_events(spark):
     """The scaling probe's operator bindings (the registered queries'
-    shared frames) must run over the synthetic source — keeps
-    tools/scale_events_probe.py from rotting as operators evolve, and
-    pins the source's events-shaped schema contract (ts included)."""
+    shared frames) must run over the synthetic source — keeps the
+    events family of tools/scale_probe.py from rotting as operators
+    evolve, and pins the source's events-shaped schema contract (ts
+    included)."""
     from etl_neotel_sql_automation_spark.py_datasource import (
         SyntheticEventsDataSource,
     )
-    from tools.scale_events_probe import OPS, events_at
+    from tools.scale_probe import FAMILIES, Tables
+    from tools.synth import events_at
 
     spark.dataSource.register(SyntheticEventsDataSource)
     ev = events_at(spark, 1).limit(2000).cache()
     try:
-        for name, op in OPS.items():
-            assert op(ev).count() > 0, name
+        t = Tables(spark, 1, events=ev)
+        for name, leg in FAMILIES["events"].items():
+            assert leg(t).count() > 0, name
     finally:
         ev.unpersist()
 

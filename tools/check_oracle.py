@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
@@ -29,7 +30,7 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _USAGE = "usage: python tools/check_oracle.py [sf_dir] [--json out.json] [query ...]"
 

@@ -19,9 +19,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _first_sentence(doc: str | None) -> str:

@@ -15,10 +15,11 @@ Usage: python tools/plan_audit.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 and "/" in sys.argv[1] else "/root/testdata/sf0.01"
 ONLY = [a for a in sys.argv[1:] if "/" not in a]
