@@ -1,5 +1,12 @@
 """Similarity search over embedding columns (``array<float>``).
 
+Every top-k search here is three stages: candidate pruning, exact
+verification, top-k selection. Only the first differs between
+variants (broadcast all-pairs, IVF cells, LSH buckets, PQ/SQ8 code
+scans); the other two are shared: :func:`unit` and :func:`cos6` are
+the exact cosine (the PQ searches re-rank on the exact dot instead),
+:func:`top_k` the per-key selection.
+
 Baseline: brute-force cosine top-k with the *query* side broadcast —
 the corpus scan stays distributed and shuffle-free; per-row work is a
 codegen'd higher-order-function dot product (no Python).
@@ -33,44 +40,49 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Cosine similarity of two float-array columns, computed in double."""
-    a, b = _to_double(a), _to_double(b)
-    return dot(a, b) / (norm(a) * norm(b))
+def unit(df: DataFrame, vec_col: str, side: str) -> DataFrame:
+    """``df`` plus ``{side}v`` (``vec_col`` cast to double) and
+    ``{side}n`` (its norm): one side of an exact cosine (:func:`cos6`).
+
+    Cast and norm run ONCE per row, before the candidate join, not per
+    (row, candidate) pair: a row meets many candidates, so scoring the
+    raw vectors re-evaluated 2 array casts + 2 norm folds per pair. The
+    per-pair work left is one zip_with/aggregate dot fold and a divide.
+    The arithmetic is bit-identical to the per-pair form: the same
+    sequential folds over the same doubles, and IEEE multiply and
+    divide are exact given the same operands, so round-6 sims do not
+    move. Columns are added, never selected, so candidate keys
+    (``cid``, ``bucket``, ``tb``) reach the join."""
+    v = f"{side}v"
+    return df.withColumn(v, _to_double(vec_col)).withColumn(f"{side}n", norm(F.col(v)))
 
 
-def cosine_to_fixed_pandas(query_vec: list[float], vec_col: str = "embedding"):
-    """Arrow-vectorized cosine against ONE fixed query vector: a
-    numpy-matrix Pandas UDF.
+def cos6(a: str, b: str) -> Column:
+    """Cosine of two :func:`unit` sides rounded to 6 decimals, the rule
+    every similarity oracle replays as ``round(list_cosine_similarity(
+    a, b), 6)``. ``a``/``b`` are the ``side`` prefixes given to
+    :func:`unit`, or, on a self-join of one ``unit`` frame, the join
+    aliases with their dot (``"a."``)."""
+    return F.round(dot(F.col(f"{a}v"), F.col(f"{b}v")) / (F.col(f"{a}n") * F.col(f"{b}n")), 6)
 
-    Measured (100k x 64-dim, local[32], warm): HOF expression ~0.3-0.8s,
-    pandas UDF ~0.3-0.5s after a ~5s Python-worker warmup — Arrow
-    transfer of the array column roughly cancels the numpy win at this
-    width, so the JVM-side expression stays the default (no Python
-    worker dependency). This alternative exists for fatter per-row math
-    (e.g. 1k+-dim vectors or matrix ops), where the batch-matrix
-    multiply pulls ahead. (A one-off measurement; no scaling-probe
-    family re-runs it.)
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-
-    # no type annotations: under `from __future__ import annotations`
-    # the hint strings reference the locally-imported pd and the UDF
-    # type-hint inferrer cannot resolve them; the explicit returnType
-    # carries the typing instead
-    def cos(s):
-        m = np.asarray(s.to_list(), dtype=np.float64)  # (batch, dim)
-        dots = m @ q
-        norms = np.linalg.norm(m, axis=1) * qn
-        return pd.Series(dots / norms)
-
-    cos_udf = F.pandas_udf(cos, returnType=T.DoubleType())
-    return cos_udf(F.col(vec_col))
+def top_k(
+    scored: DataFrame,
+    k: int,
+    score: str = "sim",
+    key: str = "q_id",
+    other: str = "n_id",
+    rank: str = "rank",
+) -> DataFrame:
+    """The ``k`` best rows of each ``key``: ``rank`` numbers them 1..k
+    by ``score`` descending, ties to the smaller ``other``. Output:
+    (key, other, rank, score)."""
+    w = W.partitionBy(key).orderBy(F.desc(score), other)
+    return (
+        scored.withColumn(rank, F.row_number().over(w))
+        .filter(F.col(rank) <= k)
+        .select(key, other, rank, score)
+    )
 
 
 def brute_force_topk(
@@ -85,34 +97,12 @@ def brute_force_topk(
     Output: q_id, n_id, rank (1..k), sim. Self-matches excluded. Rank
     ties broken by neighbor id so results are deterministic.
     """
-    # Double-cast and norm are factored out to ONCE per row on each side
-    # of the join (they sat inside cosine() before, re-evaluated for
-    # every (query, corpus) pair — 2 array casts + 2 norm folds x |q|
-    # per corpus row). The per-pair work left is one zip_with/aggregate
-    # dot product + a divide. Arithmetic is bit-identical: same
-    # sequential fold order, and IEEE multiply/divide are exact given
-    # the same operands, so the round-6 oracle comparison is unaffected.
-    q = queries.select(
-        F.col(id_col).alias("q_id"), _to_double(F.col(vec_col)).alias("q_vec")
-    ).withColumn("q_norm", norm(F.col("q_vec")))
-    c = (
-        fan_out(corpus)
-        .select(F.col(id_col).alias("n_id"), _to_double(F.col(vec_col)).alias("n_vec"))
-        .withColumn("n_norm", norm(F.col("n_vec")))
-    )
+    q = unit(queries, vec_col, "q").select(F.col(id_col).alias("q_id"), "qv", "qn")
+    c = unit(fan_out(corpus), vec_col, "n").select(F.col(id_col).alias("n_id"), "nv", "nn")
     scored = c.join(F.broadcast(q), F.col("q_id") != F.col("n_id")).select(
-        "q_id",
-        "n_id",
-        F.round(
-            dot(F.col("q_vec"), F.col("n_vec")) / (F.col("q_norm") * F.col("n_norm")), 6
-        ).alias("sim"),
+        "q_id", "n_id", cos6("q", "n").alias("sim")
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "sim")
-    )
+    return top_k(scored, k)
 
 
 def ivf_topk(
@@ -145,37 +135,15 @@ def ivf_topk(
     def nearest_centroids(df: DataFrame, side_id: str, n: int) -> DataFrame:
         return _nearest_cells(df, cents, id_col, vec_col, side_id, n)
 
-    cb = nearest_centroids(fan_out(corpus), "n_id", 1)  # corpus: home cell only
-    qb = nearest_centroids(queries, "q_id", n_probe)     # queries: probe n cells
-    # cast+norm once per row on each side of the cell join (the
-    # brute_force_topk factoring; bit-identical — see
-    # cosine_near_dup_pairs), not per (query, candidate) pair
-    cb = cb.select(
-        "n_id", "cid", _to_double(F.col("n_id_vec")).alias("n_vec")
-    ).withColumn("n_norm", norm(F.col("n_vec")))
-    qb = qb.select(
-        "q_id", "cid", _to_double(F.col("q_id_vec")).alias("q_vec")
-    ).withColumn("q_norm", norm(F.col("q_vec")))
+    cb = unit(nearest_centroids(fan_out(corpus), "n_id", 1), "n_id_vec", "n")  # home cell
+    qb = unit(nearest_centroids(queries, "q_id", n_probe), "q_id_vec", "q")  # probed cells
     scored = (
         cb.join(F.broadcast(qb), "cid")
         .filter(F.col("q_id") != F.col("n_id"))
-        .select(
-            "q_id",
-            "n_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("n_vec"))
-                / (F.col("q_norm") * F.col("n_norm")),
-                6,
-            ).alias("sim"),
-        )
+        .select("q_id", "n_id", cos6("q", "n").alias("sim"))
         .dropDuplicates(["q_id", "n_id"])
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "sim")
-    )
+    return top_k(scored, k)
 
 
 def hash_sample(df: DataFrame, id_col: str, fraction: float | None) -> DataFrame:
@@ -503,10 +471,7 @@ def pq_topk(
     pre = cb.join(F.broadcast(qb.select("q_id", "lut")), F.col("q_id") != F.col("n_id")).select(
         "q_id", "n_id", adc.alias("adc")
     )
-    wpre = W.partitionBy("q_id").orderBy(F.desc("adc"), "n_id")
-    cand = pre.withColumn("crank", F.row_number().over(wpre)).filter(
-        F.col("crank") <= rerank
-    )
+    cand = top_k(pre, rerank, score="adc", rank="crank")
     nv = corpus_cached.select(
         F.col(id_col).alias("n_id"), _to_double(vec_col).alias("n_vec")
     )
@@ -515,12 +480,7 @@ def pq_topk(
         .join(qb.select("q_id", "q_vec"), "q_id")
         .select("q_id", "n_id", F.round(dot(F.col("q_vec"), F.col("n_vec")), 6).alias("sim"))
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "sim")
-    )
+    return top_k(exact, k)
 
 
 def ivf_pq_topk(
@@ -589,22 +549,14 @@ def ivf_pq_topk(
         .join(F.broadcast(q_lut.select("q_id", "lut")), "q_id")
         .select("q_id", "n_id", _pq_adc(m).alias("adc"))
     )
-    wpre = W.partitionBy("q_id").orderBy(F.desc("adc"), "n_id")
-    cand = pre.withColumn("crank", F.row_number().over(wpre)).filter(
-        F.col("crank") <= rerank
-    )
+    cand = top_k(pre, rerank, score="adc", rank="crank")
     nv = corpus_f.select(F.col(id_col).alias("n_id"), _to_double(vec_col).alias("n_vec"))
     exact = (
         cand.join(nv, "n_id")
         .join(q_lut.select("q_id", "q_vec"), "q_id")
         .select("q_id", "n_id", F.round(dot(F.col("q_vec"), F.col("n_vec")), 6).alias("sim"))
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "sim")
-    )
+    return top_k(exact, k)
 
 
 def cosine_near_dup_pairs(
@@ -624,29 +576,11 @@ def cosine_near_dup_pairs(
     :func:`hyperplane_lsh_buckets` first (bucket equi-join), with this
     exact scoring applied only inside buckets.
     """
-    # double-cast and norm factored to ONCE per row on each side (the
-    # brute_force_topk lesson, r12): inside cosine() they re-evaluated
-    # per PAIR — 2 array casts + 2 norm folds x O(N) per row on an
-    # all-pairs join. Arithmetic is bit-identical: same sequential fold
-    # order over the same doubles, and IEEE multiply/divide are exact
-    # given the same operands, so the round-6 sims are unchanged.
-    a = (
-        fan_out(df)
-        .select(F.col(id_col).alias("id_a"), _to_double(F.col(vec_col)).alias("va"))
-        .withColumn("na", norm(F.col("va")))
-    )
-    b = df.select(
-        F.col(id_col).alias("id_b"), _to_double(F.col(vec_col)).alias("vb")
-    ).withColumn("nb", norm(F.col("vb")))
+    a = unit(fan_out(df), vec_col, "a").select(F.col(id_col).alias("id_a"), "av", "an")
+    b = unit(df, vec_col, "b").select(F.col(id_col).alias("id_b"), "bv", "bn")
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-            ).alias("sim"),
-        )
+        .select("id_a", "id_b", cos6("a", "b").alias("sim"))
         .filter(F.col("sim") >= threshold)
     )
 
@@ -855,24 +789,14 @@ def lsh_near_dup_pairs_indexed(spark, table: str, threshold: float = 0.35) -> Da
     leaves this session's cached file listing stale, and reads would
     silently miss the appended files."""
     spark.catalog.refreshTable(table)
-    # cast+norm once per index row before the self-join (the
-    # brute_force_topk factoring; bit-identical — see
-    # cosine_near_dup_pairs): an index row meets every bucket-mate, so
-    # hoisting divides the cast + norm-fold work by bucket occupancy.
-    b = spark.table(table).withColumn("vd", _to_double(F.col("vec"))).withColumn(
-        "nrm", norm(F.col("vd"))
-    )
+    b = unit(spark.table(table), "vec", "")
     a, c = b.alias("a"), b.alias("b")
     scored = (
         a.join(c, (F.col("a.tb") == F.col("b.tb")) & (F.col("a.id") < F.col("b.id")))
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            F.round(
-                dot(F.col("a.vd"), F.col("b.vd"))
-                / (F.col("a.nrm") * F.col("b.nrm")),
-                6,
-            ).alias("sim"),
+            cos6("a.", "b.").alias("sim"),
         )
         .filter(F.col("sim") >= threshold)
     )
@@ -912,27 +836,12 @@ def lsh_near_dup_pairs(
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    # cast+norm once per vector row, not per candidate pair (the
-    # brute_force_topk factoring; bit-identical — see
-    # cosine_near_dup_pairs): a vector joins into MANY candidate pairs,
-    # so hoisting its cast and norm fold above the join divides that
-    # work by its pair multiplicity.
-    ea = df.select(
-        F.col(id_col).alias("id_a"), _to_double(F.col(vec_col)).alias("va")
-    ).withColumn("na", norm(F.col("va")))
-    eb = df.select(
-        F.col(id_col).alias("id_b"), _to_double(F.col(vec_col)).alias("vb")
-    ).withColumn("nb", norm(F.col("vb")))
+    ea = unit(df, vec_col, "a").select(F.col(id_col).alias("id_a"), "av", "an")
+    eb = unit(df, vec_col, "b").select(F.col(id_col).alias("id_b"), "bv", "bn")
     return (
         cand.join(ea, "id_a")
         .join(eb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-            ).alias("sim"),
-        )
+        .select("id_a", "id_b", cos6("a", "b").alias("sim"))
         .filter(F.col("sim") >= threshold)
     )
 
@@ -1010,12 +919,7 @@ def sq8_topk(
     scored = cb.join(F.broadcast(qb), F.col("q_id") != F.col("n_id")).select(
         "q_id", "n_id", score.alias("score")
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("score"), "n_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "score")
-    )
+    return top_k(scored, k, score="score")
 
 
 def lsh_topk(
@@ -1029,46 +933,16 @@ def lsh_topk(
     """ANN top-k: hyperplane-LSH bucket equi-join, then exact re-rank
     inside the bucket. Recall < 1.0 by construction; bucket join replaces
     the cross join, which is the move that survives 100 TB."""
-    # cast+norm once per row on each side of the bucket join (the
-    # brute_force_topk factoring; bit-identical — see
-    # cosine_near_dup_pairs), not per (query, candidate) pair.
-    cb = (
-        hyperplane_lsh_buckets(fan_out(corpus), id_col, vec_col, planes)
-        .select(
-            F.col(id_col).alias("n_id"),
-            _to_double(F.col(vec_col)).alias("n_vec"),
-            "bucket",
-        )
-        .withColumn("n_norm", norm(F.col("n_vec")))
-    )
-    qb = (
-        hyperplane_lsh_buckets(queries, id_col, vec_col, planes)
-        .select(
-            F.col(id_col).alias("q_id"),
-            _to_double(F.col(vec_col)).alias("q_vec"),
-            "bucket",
-        )
-        .withColumn("q_norm", norm(F.col("q_vec")))
-    )
+    cb = unit(hyperplane_lsh_buckets(fan_out(corpus), id_col, vec_col, planes), vec_col, "n")
+    qb = unit(hyperplane_lsh_buckets(queries, id_col, vec_col, planes), vec_col, "q")
+    cb = cb.select(F.col(id_col).alias("n_id"), "bucket", "nv", "nn")
+    qb = qb.select(F.col(id_col).alias("q_id"), "bucket", "qv", "qn")
     scored = (
         cb.join(F.broadcast(qb), "bucket")
         .filter(F.col("q_id") != F.col("n_id"))
-        .select(
-            "q_id",
-            "n_id",
-            F.round(
-                dot(F.col("q_vec"), F.col("n_vec"))
-                / (F.col("q_norm") * F.col("n_norm")),
-                6,
-            ).alias("sim"),
-        )
+        .select("q_id", "n_id", cos6("q", "n").alias("sim"))
     )
-    w = W.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "rank", "sim")
-    )
+    return top_k(scored, k)
 
 
 def semantic_prune(
@@ -1093,13 +967,7 @@ def semantic_prune(
     DuckDB replay of clustering + verdicts.
     """
     b = hyperplane_lsh_buckets(fan_out(df), id_col, vec_col, planes, seed, dim)
-    # cast+norm once per vector row before the bucket self-join (the
-    # brute_force_topk factoring; bit-identical — see
-    # cosine_near_dup_pairs): a vector meets every bucket-mate, so
-    # hoisting divides the cast + norm-fold work by bucket occupancy.
-    bf = b.select(
-        id_col, "bucket", _to_double(F.col(vec_col)).alias("vd")
-    ).withColumn("nrm", norm(F.col("vd")))
+    bf = unit(b, vec_col, "")
     a, c = bf.alias("a"), bf.alias("c")
     pruned = (
         a.join(
@@ -1107,14 +975,7 @@ def semantic_prune(
             (F.col("a.bucket") == F.col("c.bucket"))
             & (F.col(f"c.{id_col}") < F.col(f"a.{id_col}")),
         )
-        .filter(
-            F.round(
-                dot(F.col("a.vd"), F.col("c.vd"))
-                / (F.col("a.nrm") * F.col("c.nrm")),
-                6,
-            )
-            >= threshold
-        )
+        .filter(cos6("a.", "c.") >= threshold)
         .select(F.col(f"a.{id_col}").alias(id_col))
         .distinct()
         .withColumn("hit", F.lit(True))
@@ -1147,11 +1008,7 @@ def knn_graph(
     (workload/curation.py) with a bit-exact oracle.
     """
     b = hyperplane_lsh_buckets(fan_out(df), id_col, vec_col, planes, seed, dim)
-    # cast+norm once per vector row before the bucket self-join — the
-    # same bit-identical factoring as semantic_prune above.
-    bf = b.select(
-        id_col, "bucket", _to_double(F.col(vec_col)).alias("vd")
-    ).withColumn("nrm", norm(F.col("vd")))
+    bf = unit(b, vec_col, "")
     a, c = bf.alias("a"), bf.alias("c")
     scored = a.join(
         c,
@@ -1160,14 +1017,6 @@ def knn_graph(
     ).select(
         F.col(f"a.{id_col}").alias("src_id"),
         F.col(f"c.{id_col}").alias("n_id"),
-        F.round(
-            dot(F.col("a.vd"), F.col("c.vd")) / (F.col("a.nrm") * F.col("c.nrm")),
-            6,
-        ).alias("sim"),
+        cos6("a.", "c.").alias("sim"),
     )
-    w = W.partitionBy("src_id").orderBy(F.desc("sim"), "n_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("src_id", "n_id", "rank", "sim")
-    )
+    return top_k(scored, k, key="src_id")

@@ -21,12 +21,12 @@ sums) or fixed in textual order (BM25's three-term total).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from . import _SQL_QV, _SQL_TOKS, query, table
-from ..ops.similarity import dot, norm
+from ..ops.similarity import cos6, unit
 from ..ops.text import tokens
 
 # ---------------------------------------------------------------------------
@@ -788,29 +788,32 @@ def sim_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan it once.
     """
     emb = table(spark, sf_dir, "embeddings")
-    a = emb.filter(F.col("label") == 0).select(
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").cast("array<double>").alias("av"),
-    ).withColumn("a_norm", norm(F.col("av")))
-    b = emb.filter(F.col("label") == 1).select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").cast("array<double>").alias("bv"),
-    ).withColumn("b_norm", norm(F.col("bv")))
-    # Both label populations scale with the corpus, so the cross join
-    # carries no pinned broadcast hint (the optimizer still broadcasts
-    # whichever side is small enough; at scale you don't run this shape
-    # at all — sim_margin_pairs_indexed is the candidate-join twin).
-    m = b.crossJoin(a).select(
-        "a_id",
-        "b_id",
-        F.round(
-            F.round(dot(F.col("av"), F.col("bv")) / (F.col("a_norm") * F.col("b_norm")), 6)
-            * F.lit(1000000.0)
-        )
-        .cast("long")
-        .alias("cos_u"),
-    )
-    return _margin_topk(m)
+    return _margin_topk(_margin_exact(emb.filter(F.col("label") == 0), emb))
+
+
+def _cos_u(a: str, b: str) -> Column:
+    """:func:`cos6` of two ``unit`` sides in BIGINT micro-units, so
+    neighborhood sums are order-free integer arithmetic."""
+    return F.round(cos6(a, b) * F.lit(1000000.0)).cast("long")
+
+
+def _margin_sides(a_pop: DataFrame, emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The ``unit`` sides of the margin matrix: (a_id, av, an) over
+    ``a_pop`` and (b_id, bv, bn) over the label-1 rows of ``emb``."""
+    a = unit(a_pop, "embedding", "a").select(F.col("vec_id").alias("a_id"), "av", "an")
+    b = unit(emb.filter(F.col("label") == 1), "embedding", "b")
+    return a, b.select(F.col("vec_id").alias("b_id"), "bv", "bn")
+
+
+def _margin_exact(a_pop: DataFrame, emb: DataFrame) -> DataFrame:
+    """(a_id, b_id, cos_u) over every a x b pair: the brute-force
+    matrix. Both label populations scale with the corpus, so the cross
+    join carries no pinned broadcast hint (the optimizer still
+    broadcasts whichever side is small enough; at scale you don't run
+    this shape at all — sim_margin_pairs_indexed is the candidate-join
+    twin)."""
+    a, b = _margin_sides(a_pop, emb)
+    return b.crossJoin(a).select("a_id", "b_id", _cos_u("a", "b").alias("cos_u"))
 
 
 def _margin_topk(m: DataFrame, k: int = 20) -> DataFrame:
@@ -1344,23 +1347,9 @@ def margin_cand_frame_from(
         .select("a_id", "b_id")
         .dropDuplicates(["a_id", "b_id"])
     )
-    av = a_pop.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").cast("array<double>").alias("av"),
-    ).withColumn("a_norm", norm(F.col("av")))
-    bv = emb.filter(F.col("label") == 1).select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").cast("array<double>").alias("bv"),
-    ).withColumn("b_norm", norm(F.col("bv")))
+    av, bv = _margin_sides(a_pop, emb)
     m = cand.join(av, "a_id").join(bv, "b_id").select(
-        "a_id",
-        "b_id",
-        F.round(
-            F.round(dot(F.col("av"), F.col("bv")) / (F.col("a_norm") * F.col("b_norm")), 6)
-            * F.lit(1000000.0)
-        )
-        .cast("long")
-        .alias("cos_u"),
+        "a_id", "b_id", _cos_u("a", "b").alias("cos_u")
     )
     return m.localCheckpoint() if materialize else m
 
@@ -1463,24 +1452,7 @@ def sim_margin_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the production path.
     """
     emb = table(spark, sf_dir, "embeddings")
-    a = emb.filter(F.col("label") == 0).select(
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").cast("array<double>").alias("av"),
-    ).withColumn("a_norm", norm(F.col("av")))
-    b = emb.filter(F.col("label") == 1).select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").cast("array<double>").alias("bv"),
-    ).withColumn("b_norm", norm(F.col("bv")))
-    m = b.crossJoin(a).select(
-        "a_id",
-        "b_id",
-        F.round(
-            F.round(dot(F.col("av"), F.col("bv")) / (F.col("a_norm") * F.col("b_norm")), 6)
-            * F.lit(1000000.0)
-        )
-        .cast("long")
-        .alias("cos_u"),
-    )
+    m = _margin_exact(emb.filter(F.col("label") == 0), emb)
     exact = _margin_topk(m).select("a_id", "b_id")
     indexed = _margin_topk(_margin_cand_frame(spark, sf_dir)).select("a_id", "b_id")
     n_exact = exact.agg(F.count("*").alias("n_exact"))
@@ -1547,30 +1519,8 @@ def sim_margin_quality_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate, bit-exact buckets, micro-unit cosines, fully-tiebroken
     top-k), so even the SAMPLED meter is differentially checked."""
     emb = table(spark, sf_dir, "embeddings")
-    a = (
-        emb.filter(F.col("label") == 0)
-        .filter(_margin_sample_pred(_MARGIN_SAMPLE_MOD))
-        .select(
-            F.col("vec_id").alias("a_id"),
-            F.col("embedding").cast("array<double>").alias("av"),
-        )
-        .withColumn("a_norm", norm(F.col("av")))
-    )
-    b = emb.filter(F.col("label") == 1).select(
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").cast("array<double>").alias("bv"),
-    ).withColumn("b_norm", norm(F.col("bv")))
-    m = b.crossJoin(a).select(
-        "a_id",
-        "b_id",
-        F.round(
-            F.round(dot(F.col("av"), F.col("bv")) / (F.col("a_norm") * F.col("b_norm")), 6)
-            * F.lit(1000000.0)
-        )
-        .cast("long")
-        .alias("cos_u"),
-    )
-    exact = _margin_topk(m).select("a_id", "b_id")
+    a_pop = emb.filter(F.col("label") == 0).filter(_margin_sample_pred(_MARGIN_SAMPLE_MOD))
+    exact = _margin_topk(_margin_exact(a_pop, emb)).select("a_id", "b_id")
     indexed = _margin_topk(
         _margin_cand_frame(spark, sf_dir, a_sample_mod=_MARGIN_SAMPLE_MOD)
     ).select("a_id", "b_id")
@@ -2016,18 +1966,12 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly where sequential logic belongs at scale.
     """
     emb = table(spark, sf_dir, "embeddings")
-    ev = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    qv = ev.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
-    cos_u = lambda a, b: (  # noqa: E731
-        F.round(
-            F.round(dot(F.col(a), F.col(b)) / (norm(F.col(a)) * norm(F.col(b))), 6)
-            * F.lit(1000000.0)
-        ).cast("long")
-    )
+    ev = unit(emb.select("vec_id", "embedding"), "embedding", "")
+    qv = ev.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"), F.col("n").alias("qn"))
     cand = (
         ev.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(qv))
-        .select("vec_id", "v", cos_u("qv", "v").alias("rel_u"))
+        .select("vec_id", "v", "n", _cos_u("q", "").alias("rel_u"))
         .orderBy(F.desc("rel_u"), "vec_id")
         .limit(_MMR_POOL)
         # materialize the pool: the corpus-wide brute-force subtree is
@@ -2037,11 +1981,11 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cheap and ReusedExchange already deduped it.
         .localCheckpoint()
     )
-    a = cand.select(F.col("vec_id").alias("a_id"), F.col("v").alias("av"), "rel_u")
-    b = cand.select(F.col("vec_id").alias("b_id"), F.col("v").alias("bv"))
+    a = cand.select(F.col("vec_id").alias("a_id"), F.col("v").alias("av"), F.col("n").alias("an"))
+    b = cand.select(F.col("vec_id").alias("b_id"), F.col("v").alias("bv"), F.col("n").alias("bn"))
     pair = (
         a.join(F.broadcast(b), F.col("a_id") != F.col("b_id"))
-        .select("a_id", "b_id", cos_u("av", "bv").alias("s_u"))
+        .select("a_id", "b_id", _cos_u("a", "b").alias("s_u"))
         .localCheckpoint()
     )
     chosen = (

@@ -20,7 +20,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..ops import text as X
-from ..ops.similarity import dot, norm
+from ..ops.similarity import cos6, unit
 from . import _SQL_TOKS, query, table
 
 
@@ -860,24 +860,10 @@ def emb_intrinsic_dim_two_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimator arithmetic unchanged.
     """
     emb = table(spark, sf_dir, "embeddings")
-    ev = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    a = ev.filter(F.col("vec_id") < 1000).select(
-        F.col("vec_id").alias("a_id"), F.col("v").alias("av")
-    ).withColumn("a_norm", norm(F.col("av")))
-    b = ev.select(F.col("vec_id").alias("b_id"), F.col("v").alias("bv")).withColumn(
-        "b_norm", norm(F.col("bv"))
-    )
-    # norms factored to ONCE per row per side (the brute_force_topk
-    # lesson): the per-pair work is one codegen'd dot fold + a divide,
-    # not three folds — measured ~2x on the sample x corpus pass
-    # (44 -> 24 s at sf0.1).
-    d_u = (
-        F.lit(1000000)
-        - F.round(
-            F.round(dot(F.col("av"), F.col("bv")) / (F.col("a_norm") * F.col("b_norm")), 6)
-            * F.lit(1000000.0)
-        ).cast("long")
-    )
+    a = unit(emb.filter(F.col("vec_id") < 1000), "embedding", "a")
+    a = a.select(F.col("vec_id").alias("a_id"), "av", "an")
+    b = unit(emb, "embedding", "b").select(F.col("vec_id").alias("b_id"), "bv", "bn")
+    d_u = F.lit(1000000) - F.round(cos6("a", "b") * F.lit(1000000.0)).cast("long")
     # Broadcast the SAMPLE side (a: vec_id < 1000 — bounded by the
     # literal filter, not by the corpus) and stream the corpus side b.
     # The r4 shape broadcast b — the whole corpus — which would OOM at

@@ -575,29 +575,12 @@ def dedup_semantic_quality_sampled(spark: SparkSession, sf_dir: str) -> DataFram
     against the global all-pairs ground truth; see
     dedup_semantic_quality.)"""
     emb = table(spark, sf_dir, "embeddings")
-    # cast+norm once per vector row before the pair join (the
-    # brute_force_topk factoring, bit-identical — see
-    # ops.similarity.cosine_near_dup_pairs)
-    a = (
-        emb.filter(_sem_sample_pred())
-        .select(
-            F.col("vec_id").alias("a_id"),
-            S._to_double(F.col("embedding")).alias("va"),
-        )
-        .withColumn("na", S.norm(F.col("va")))
-    )
-    c = emb.select(
-        F.col("vec_id").alias("c_id"),
-        S._to_double(F.col("embedding")).alias("vc"),
-    ).withColumn("nc", S.norm(F.col("vc")))
+    a = S.unit(emb.filter(_sem_sample_pred()), "embedding", "a")
+    a = a.select(F.col("vec_id").alias("a_id"), "av", "an")
+    c = S.unit(emb, "embedding", "c").select(F.col("vec_id").alias("c_id"), "cv", "cn")
     exact_n = (
         a.join(c, F.col("c_id") < F.col("a_id"))
-        .filter(
-            F.round(
-                S.dot(F.col("va"), F.col("vc")) / (F.col("na") * F.col("nc")), 6
-            )
-            >= _SEM_THRESHOLD
-        )
+        .filter(S.cos6("a", "c") >= _SEM_THRESHOLD)
         .select("a_id")
         .distinct()
         .agg(F.count("*").alias("n_exact_pruned"))

@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 from . import query, table
 from ..ops import similarity as S
 from ..ops.dedup import fan_out
-from ..ops.similarity import cosine
 from .llm_ops import _SQL_QV, _sql_bucket
 from .wave71 import CHAPMAN_SQL_TAIL, chapman_frame
 
@@ -80,26 +79,12 @@ def emb_capture_recapture_frame(
         # wave71 lesson)
         .localCheckpoint()
     )
-    # cast+norm once per vector row, not per candidate pair (the
-    # brute_force_topk factoring, bit-identical — see
-    # ops.similarity.cosine_near_dup_pairs)
-    ea = emb.select(
-        F.col("vec_id").alias("id_a"),
-        S._to_double(F.col("embedding")).alias("va"),
-    ).withColumn("na", S.norm(F.col("va")))
-    eb = emb.select(
-        F.col("vec_id").alias("id_b"),
-        S._to_double(F.col("embedding")).alias("vb"),
-    ).withColumn("nb", S.norm(F.col("vb")))
+    ea = S.unit(emb, "embedding", "a").select(F.col("vec_id").alias("id_a"), "av", "an")
+    eb = S.unit(emb, "embedding", "b").select(F.col("vec_id").alias("id_b"), "bv", "bn")
     dup = (
         pairs.join(ea, "id_a")
         .join(eb, "id_b")
-        .filter(
-            F.round(
-                S.dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-            )
-            >= _THRESHOLD
-        )
+        .filter(S.cos6("a", "b") >= _THRESHOLD)
         .select("cap_a", "cap_b")
     )
     return chapman_frame(dup)

@@ -10,6 +10,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
+from __spark_entry__ import EMPTY_OK_SF0001
 
 
 def test_entry_returns_rows(spark):
@@ -24,27 +25,6 @@ def test_oracle_keys_subset_of_queries():
     assert len(qs) >= 30
     # every oracle is non-trivial SQL
     assert all("SELECT" in s.upper() for s in oracles.values())
-
-
-# Queries legitimately empty at the tiny sf0.001 fixture (selective
-# predicates over ~1.5k orders); all three are nonzero at sf0.01, where
-# tools/check_oracle.py enforces the hard floor. This list must stay
-# EXACT: an entry that starts returning rows here is stale and must be
-# removed, and a new empty query must be consciously added (or fixed).
-EMPTY_OK_SF0001 = {
-    "q11_important_parts",
-    "q21_waiting_supplier",
-    "set_except_lapsed_buyers",
-    # k=48 peels the whole sf0.001 purchase graph (degrees scale with
-    # SF; the k is pinned where sf0.01 shows a genuine 3-round cascade
-    # — see workload/wave6.py _K); nonzero at sf0.01 per the
-    # one-scale-up rule below
-    "graph_kcore",
-    # sf0.001 events are too sparse for any cross-type session pair to
-    # overlap in time (sessions are near-singleton points); 1 row at
-    # sf0.01, 9 at sf0.1
-    "events_session_overlap",
-}
 
 
 def test_all_queries_run_sf0001(registry_sf0001):

@@ -102,6 +102,58 @@ def test_brute_force_topk_ranks_planted_neighbor(spark):
     assert top[0].sim <= 1.0
 
 
+def test_top_k_ties_ranks_and_short_keys(spark):
+    """top_k: equal scores rank the smaller id first, ranks run 1..k,
+    and a key with fewer than k rows keeps them all."""
+    rows = [(1, 30, 0.5), (1, 10, 0.5), (1, 20, 0.9), (1, 40, 0.1), (2, 7, 0.3)]
+    scored = spark.createDataFrame(rows, "q_id long, n_id long, sim double")
+    top = S.top_k(scored, 3)
+    assert top.columns == ["q_id", "n_id", "rank", "sim"]
+    got = sorted(tuple(r) for r in top.collect())
+    assert got == [(1, 10, 2, 0.5), (1, 20, 1, 0.9), (1, 30, 3, 0.5), (2, 7, 1, 0.3)]
+    named = scored.toDF("src_id", "dst", "adc")
+    top = S.top_k(named, 1, score="adc", key="src_id", other="dst", rank="crank")
+    assert top.columns == ["src_id", "dst", "crank", "adc"]
+    assert sorted(tuple(r) for r in top.collect()) == [(1, 20, 1, 0.9), (2, 7, 1, 0.3)]
+
+
+def test_cos6_matches_duckdb_round6_cosine(spark, tmp_path):
+    """cos6 of two unit sides equals DuckDB's
+    round(list_cosine_similarity(a, b), 6) bit for bit on every pair of
+    50 seeded float32 vectors: the rule every similarity oracle replays."""
+    import duckdb
+    import numpy as np
+
+    vecs = np.random.RandomState(11).standard_normal((50, 64)).astype(np.float32)
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    path = str(tmp_path / "emb.parquet")
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").coalesce(
+        1
+    ).write.parquet(path)
+    emb = spark.read.parquet(path)
+    a = S.unit(emb, "embedding", "a").select(F.col("vec_id").alias("a_id"), "av", "an")
+    b = S.unit(emb, "embedding", "b").select(F.col("vec_id").alias("b_id"), "bv", "bn")
+    got = {
+        (r.a_id, r.b_id): r.sim
+        for r in a.join(b, F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id", S.cos6("a", "b").alias("sim"))
+        .collect()
+    }
+    want = {
+        (x, y): s
+        for x, y, s in duckdb.connect().execute(
+            f"""
+            WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+                       FROM read_parquet('{path}/*.parquet'))
+            SELECT a.vec_id, b.vec_id, round(list_cosine_similarity(a.v, b.v), 6)
+            FROM e a JOIN e b ON a.vec_id < b.vec_id
+            """
+        ).fetchall()
+    }
+    assert len(got) == 50 * 49 // 2
+    assert got == want
+
+
 def test_lsh_topk_subset_of_exact(spark):
     sf = "/root/testdata/sf0.001"
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")

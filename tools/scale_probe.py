@@ -702,6 +702,12 @@ def _noop(df: DataFrame) -> None:
 
 def run_family(family: str, scales: list[int]) -> None:
     legs = FAMILIES[family]
+    # Python workers (the events family's DataSource) import the package
+    # too; they inherit the JVM's environment, not this sys.path, and the
+    # JVM copies os.environ when get_spark starts it.
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark(app_name=f"scale_probe_{family}")
     try:
         warm = Tables(spark, 1)
