@@ -11,6 +11,14 @@ Scale design (100 TB):
   construction.
 - exact Jaccard is reserved for verifying candidate pairs (or small
   blocked domains), never all-pairs.
+
+Every variant is candidate generation (blocking, LSH, prefix filter)
+followed by exact verification, and only the candidate stage differs.
+The shared stages: :func:`shingles` (the distinct word n-grams of
+``ops.text.ngrams``), :func:`overlap_pairs` (the exact set-overlap
+self-join) and :func:`jaccard6` (the round-6 Jaccard every oracle
+replays). One MinHash shape, :data:`NUM_HASHES` hashes in :data:`BANDS`
+bands over :data:`SHINGLE_N`-word shingles, serves every LSH operator.
 """
 
 from __future__ import annotations
@@ -19,7 +27,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .hashing import HashFn, hash64
-from .text import normalize_text, tokens
+from .text import ngrams, normalize_text, tokens
+
+NUM_HASHES = 32
+BANDS = 8
+SHINGLE_N = 3
 
 
 def fan_out(df: DataFrame) -> DataFrame:
@@ -57,14 +69,54 @@ def fingerprint_groups(
     )
 
 
-def shingles(c, n: int = 3) -> F.Column:
+def shingles(c, n: int = SHINGLE_N) -> F.Column:
     """Word n-gram shingle set (distinct) as array<string>."""
-    toks = tokens(c)
-    cnt = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(cnt - (n - 1), F.lit(0)))
-    return F.array_distinct(
-        F.when(cnt >= n, F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))))
-        .otherwise(F.array())
+    return F.array_distinct(ngrams(tokens(c), n))
+
+
+def overlap_pairs(elems: DataFrame) -> DataFrame:
+    """Exact set overlap of every pair of sets sharing an element.
+
+    Input: one row per distinct ``(id, el)``, plus an optional ``blk``
+    column; pairs form only inside a block. Output: ``(id_a, id_b,
+    n_inter, sz_a, sz_b)`` with id_a < id_b, the shared-element count
+    and both set sizes. This is the uncapped postings self-join: an
+    element held by k sets emits k^2/2 rows, so use it only on blocked
+    or small domains; at scale the candidates come from LSH or
+    :func:`jaccard_prefix_pairs`."""
+    sizes = elems.groupBy("id").agg(F.count("*").alias("sz"))
+    a, b = elems.alias("a"), elems.alias("b")
+    on = F.col("a.el") == F.col("b.el")
+    if "blk" in elems.columns:
+        on = on & (F.col("a.blk") == F.col("b.blk"))
+    inter = (
+        a.join(b, on & (F.col("a.id") < F.col("b.id")))
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count("*").alias("n_inter"))
+    )
+    sa, sb = sizes.alias("sa"), sizes.alias("sb")
+    return (
+        inter.join(sa, F.col("id_a") == F.col("sa.id"))
+        .join(sb, F.col("id_b") == F.col("sb.id"))
+        .select(
+            "id_a", "id_b", "n_inter", F.col("sa.sz").alias("sz_a"), F.col("sb.sz").alias("sz_b")
+        )
+    )
+
+
+def jaccard6(n_inter: str, sz_a: str, sz_b: str) -> F.Column:
+    """Jaccard from the named overlap and set-size columns, rounded to
+    6 places: the rule ``round(n / (a + b - n), 6)`` every Jaccard
+    oracle replays."""
+    return F.round(F.col(n_inter) / (F.col(sz_a) + F.col(sz_b) - F.col(n_inter)), 6)
+
+
+def _token_sets(df: DataFrame, text_col: str, id_col: str, block_col: str) -> DataFrame:
+    """(id, blk, el): each document's distinct tokens, for overlap_pairs."""
+    return fan_out(df).select(
+        F.col(id_col).alias("id"),
+        F.col(block_col).alias("blk"),
+        F.explode(F.array_distinct(tokens(text_col))).alias("el"),
     )
 
 
@@ -80,31 +132,8 @@ def token_jaccard_pairs(
     is impossible; within a block — source, domain, LSH bucket — it is a
     self-equi-join on token). Output: id_a < id_b, jaccard.
     """
-    tok = (
-        fan_out(df).select(F.col(id_col).alias("id"), F.col(block_col).alias("blk"),
-                  F.explode(F.array_distinct(tokens(text_col))).alias("tok"))
-    )
-    sizes = tok.groupBy("id").agg(F.count("*").alias("sz"))
-    a, b = tok.alias("a"), tok.alias("b")
-    inter = (
-        a.join(b, (F.col("a.tok") == F.col("b.tok")) & (F.col("a.blk") == F.col("b.blk"))
-               & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
-    return (
-        inter.join(sa, F.col("id_a") == F.col("sa.id"))
-        .join(sb, F.col("id_b") == F.col("sb.id"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("n_inter")
-                / (F.col("sa.sz") + F.col("sb.sz") - F.col("n_inter")),
-                6,
-            ).alias("jaccard"),
-        )
+    return overlap_pairs(_token_sets(df, text_col, id_col, block_col)).select(
+        "id_a", "id_b", jaccard6("n_inter", "sz_a", "sz_b").alias("jaccard")
     )
 
 
@@ -130,14 +159,12 @@ def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 32,
-    shingle_n: int = 3,
     hash_fn: HashFn = "xxhash64",
 ) -> DataFrame:
     """MinHash signature per document. One explode + one groupBy —
-    shuffle size is O(docs × num_hashes), independent of pair count.
+    shuffle size is O(docs × NUM_HASHES), independent of pair count.
 
-    Each shingle is hashed ONCE; the ``num_hashes`` hash family is the
+    Each shingle is hashed ONCE; the ``NUM_HASHES`` hash family is the
     standard linear-permutation trick h_i(x) = a_i*x + b_i over a 2^31
     prime modulus — 32 multiply-adds per shingle instead of 32 string
     hashes. Duplicate shingles are left in (min is
@@ -147,14 +174,8 @@ def minhash_signatures(
     DuckDB oracle (see ops.hashing); ``xxhash64`` is the faster
     Spark-only production default.
     """
-    coeffs = _minhash_coeffs(num_hashes)
-    toks = tokens(F.col(text_col))
-    cnt = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(cnt - (shingle_n - 1), F.lit(0)))
-    raw_shingles = F.when(
-        cnt >= shingle_n,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, shingle_n))),
-    ).otherwise(F.array())
+    coeffs = _minhash_coeffs(NUM_HASHES)
+    raw_shingles = ngrams(tokens(F.col(text_col)), SHINGLE_N)
     sh = fan_out(df).select(
         F.col(id_col).alias("id"), F.explode(raw_shingles).alias("sh")
     ).select("id", F.pmod(hash64("sh", hash_fn), F.lit(_MERSENNE_P)).alias("h"))
@@ -165,7 +186,7 @@ def minhash_signatures(
         ]
     )
     return mins.select(
-        "id", F.array(*[f"h{s}" for s in range(num_hashes)]).alias("signature")
+        "id", F.array(*[f"h{s}" for s in range(NUM_HASHES)]).alias("signature")
     )
 
 
@@ -173,22 +194,19 @@ def banded_buckets(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
     hash_fn: HashFn = "xxhash64",
 ) -> DataFrame:
     """(id, band, bucket) rows from banded MinHash signatures — the
     join key surface of LSH. Factored out so self-dedup
     (:func:`minhash_lsh_candidates`) and incremental new-vs-corpus
     dedup (:func:`incremental_dedup`) share one signature pipeline."""
-    rows_per_band = num_hashes // bands
-    sig = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n, hash_fn)
+    rows_per_band = NUM_HASHES // BANDS
+    sig = minhash_signatures(df, text_col, id_col, hash_fn)
     return sig.select(
         "id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(BANDS - 1)),
                 lambda b: F.struct(
                     b.alias("band"),
                     hash64(
@@ -205,18 +223,15 @@ def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
     hash_fn: HashFn = "xxhash64",
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash-LSH.
 
-    Signature is cut into ``bands`` bands of ``num_hashes // bands``
+    Signature is cut into ``BANDS`` bands of ``NUM_HASHES // BANDS``
     rows; documents sharing any band hash become a candidate pair.
     Output: id_a < id_b, n_bands (how many bands matched).
     """
-    banded = banded_buckets(df, text_col, id_col, num_hashes, bands, shingle_n, hash_fn)
+    banded = banded_buckets(df, text_col, id_col, hash_fn)
     x, y = banded.alias("x"), banded.alias("y")
     return (
         x.join(y, (F.col("x.band") == F.col("y.band")) & (F.col("x.bucket") == F.col("y.bucket"))
@@ -232,9 +247,6 @@ def incremental_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
     hash_fn: HashFn = "xxhash64",
 ) -> DataFrame:
     """Dedup a NEW batch against a historical corpus — the production
@@ -266,8 +278,8 @@ def incremental_dedup(
     surv = new_df.join(
         exact_ids.withColumnRenamed("id", id_col), id_col, "left_anti"
     )
-    bn = banded_buckets(surv, text_col, id_col, num_hashes, bands, shingle_n, hash_fn)
-    bc = banded_buckets(corpus_df, text_col, id_col, num_hashes, bands, shingle_n, hash_fn)
+    bn = banded_buckets(surv, text_col, id_col, hash_fn)
+    bc = banded_buckets(corpus_df, text_col, id_col, hash_fn)
     cand = (
         bn.alias("x")
         .join(
@@ -298,9 +310,7 @@ def incremental_dedup(
         .select(
             "new_id",
             "corp_id",
-            F.round(
-                F.col("n_inter") / (F.col("sz_n") + F.col("sz_c") - F.col("n_inter")), 6
-            ).alias("jaccard"),
+            jaccard6("n_inter", "sz_n", "sz_c").alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )
@@ -378,32 +388,12 @@ def token_containment_pairs(
     is 1.0. Same blocked self-equi-join + per-pair count plan as
     :func:`token_jaccard_pairs` (at 100 TB the block is an LSH bucket);
     output: contained_id, container_id, containment (round 6)."""
-    tok = fan_out(df).select(
-        F.col(id_col).alias("id"),
-        F.col(block_col).alias("blk"),
-        F.explode(F.array_distinct(tokens(text_col))).alias("tok"),
-    )
-    sizes = tok.groupBy("id").agg(F.count("*").alias("sz"))
-    a, b = tok.alias("a"), tok.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(F.col("a.id").alias("id_x"), F.col("b.id").alias("id_y"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sx, sy = sizes.alias("sx"), sizes.alias("sy")
-    j = inter.join(sx, F.col("id_x") == F.col("sx.id")).join(
-        sy, F.col("id_y") == F.col("sy.id")
-    )
+    j = overlap_pairs(_token_sets(df, text_col, id_col, block_col))
     # the smaller token set is the contained side; ties -> lower id
-    small_first = F.col("sx.sz") <= F.col("sy.sz")
-    contained = F.when(small_first, F.col("id_x")).otherwise(F.col("id_y"))
-    container = F.when(small_first, F.col("id_y")).otherwise(F.col("id_x"))
-    denom = F.least(F.col("sx.sz"), F.col("sy.sz"))
+    small_first = F.col("sz_a") <= F.col("sz_b")
+    contained = F.when(small_first, F.col("id_a")).otherwise(F.col("id_b"))
+    container = F.when(small_first, F.col("id_b")).otherwise(F.col("id_a"))
+    denom = F.least(F.col("sz_a"), F.col("sz_b"))
     return (
         j.select(
             contained.alias("contained_id"),
@@ -579,10 +569,4 @@ def jaccard_prefix_pairs(
     return scored.filter(
         F.col("n_inter") * den
         >= num * (F.col("sza") + F.col("szb") - F.col("n_inter"))
-    ).select(
-        "id_a",
-        "id_b",
-        F.round(
-            F.col("n_inter") / (F.col("sza") + F.col("szb") - F.col("n_inter")), 6
-        ).alias("jaccard"),
-    )
+    ).select("id_a", "id_b", jaccard6("n_inter", "sza", "szb").alias("jaccard"))

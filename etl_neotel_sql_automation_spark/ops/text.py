@@ -37,6 +37,21 @@ def tokens(c: Column | str) -> Column:
     return F.filter(F.split(F.trim(c), _WS), lambda t: t != "")
 
 
+def ngrams(toks: Column, n: int) -> Column:
+    """Word n-grams of a token array, repeats kept, in order: each run
+    of ``n`` consecutive tokens joined on one space; an empty array
+    when there are fewer than ``n`` tokens."""
+    cnt = F.size(toks)
+    idx = F.sequence(F.lit(1), F.greatest(cnt - (n - 1), F.lit(0)))
+    # the bare F.array() keeps the elements non-null: a cast to
+    # array<string> makes them nullable, and the isnotnull filter then
+    # inferred under an overlap join stops exchange reuse (one more
+    # Exchange in corpus_source_minhash)
+    return F.when(
+        cnt >= n, F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n)))
+    ).otherwise(F.array())
+
+
 def token_count(c: Column | str) -> Column:
     return F.size(tokens(c)).cast("int")
 
@@ -206,14 +221,7 @@ def sparse_cosine_topk(
     The capped tf table is localCheckpointed: four consumers (the dot
     product's two aliases + both norm joins) would otherwise re-run
     the tokenize/shingle/groupBy pipeline per subtree scan."""
-    c = F.col(text_col)
-    toks = tokens(c)
-    cnt = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(cnt - (shingle_n - 1), F.lit(0)))
-    sh_arr = F.when(
-        cnt >= shingle_n,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, shingle_n))),
-    ).otherwise(F.array().cast("array<string>"))
+    sh_arr = ngrams(tokens(F.col(text_col)), shingle_n)
     sh = df.select(F.col(id_col).alias("id"), F.explode(sh_arr).alias("sh"))
     tf = sh.groupBy("id", "sh").agg(F.count("*").alias("tf"))
     dfreq = (

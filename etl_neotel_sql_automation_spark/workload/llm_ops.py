@@ -23,16 +23,16 @@ from ..ops.hashing import sql_md5_long
 from . import _SQL_QV, _SQL_TOKS, query, table
 
 
-def _minhash_oracle(num_hashes: int = 32, bands: int = 8, shingle_n: int = 3) -> str:
+def _minhash_oracle() -> str:
     """DuckDB twin of ops.dedup.minhash_lsh_candidates(hash_fn="md5"):
     same shingles, same md5-derived base hash, same (a,b) permutation
     coefficients (both sides generate them from random.Random(42)),
     same banded bucket hash — candidates match bit-for-bit."""
     p = _MERSENNE_P
-    r = num_hashes // bands
+    r = D.NUM_HASHES // D.BANDS
     mins = ",\n             ".join(
         f"min((h * {a} + {b}) % {p}) AS h{i}"
-        for i, (a, b) in enumerate(_minhash_coeffs(num_hashes))
+        for i, (a, b) in enumerate(_minhash_coeffs(D.NUM_HASHES))
     )
     band_rows = "\n      UNION ALL ".join(
         "SELECT id, {band} AS band, {bucket} AS bucket FROM sig".format(
@@ -41,14 +41,14 @@ def _minhash_oracle(num_hashes: int = 32, bands: int = 8, shingle_n: int = 3) ->
                 "concat_ws(',', " + ", ".join(f"h{b * r + j}" for j in range(r)) + ")"
             ),
         )
-        for b in range(bands)
+        for b in range(D.BANDS)
     )
     return f"""
     WITH t AS (SELECT doc_id AS id, {_SQL_TOKS} AS toks FROM documents),
     sh0 AS (
-      SELECT id, unnest(CASE WHEN len(toks) >= {shingle_n} THEN
-          list_transform(range(1, greatest(len(toks) - {shingle_n - 1}, 0) + 1),
-                         i -> array_to_string(list_slice(toks, i, i + {shingle_n - 1}), ' '))
+      SELECT id, unnest(CASE WHEN len(toks) >= {D.SHINGLE_N} THEN
+          list_transform(range(1, greatest(len(toks) - {D.SHINGLE_N - 1}, 0) + 1),
+                         i -> array_to_string(list_slice(toks, i, i + {D.SHINGLE_N - 1}), ' '))
           ELSE CAST([] AS VARCHAR[]) END) AS sh
       FROM t
     ),
@@ -182,18 +182,16 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_band_ctes(
-    src: str, pfx: str, num_hashes: int = 32, bands: int = 8, shingle_n: int = 3
-) -> str:
+def _minhash_band_ctes(src: str, pfx: str) -> str:
     """CTE chain (shingle -> md5 hash -> signature -> band rows) for one
     named source CTE, prefixed so two sides can coexist in one oracle —
     the building block the incremental new-vs-corpus dedup oracle uses
     twice. Mirrors ops.dedup.banded_buckets(hash_fn="md5") exactly."""
     p = _MERSENNE_P
-    r = num_hashes // bands
+    r = D.NUM_HASHES // D.BANDS
     mins = ",\n             ".join(
         f"min((h * {a} + {b}) % {p}) AS h{i}"
-        for i, (a, b) in enumerate(_minhash_coeffs(num_hashes))
+        for i, (a, b) in enumerate(_minhash_coeffs(D.NUM_HASHES))
     )
     band_rows = "\n      UNION ALL ".join(
         "SELECT id, {band} AS band, {bucket} AS bucket FROM {pfx}sig".format(
@@ -203,14 +201,14 @@ def _minhash_band_ctes(
                 "concat_ws(',', " + ", ".join(f"h{b * r + j}" for j in range(r)) + ")"
             ),
         )
-        for b in range(bands)
+        for b in range(D.BANDS)
     )
     return f"""
     {pfx}t AS (SELECT id, {_SQL_TOKS} AS toks FROM {src}),
     {pfx}sh0 AS (
-      SELECT id, unnest(CASE WHEN len(toks) >= {shingle_n} THEN
-          list_transform(range(1, greatest(len(toks) - {shingle_n - 1}, 0) + 1),
-                         i -> array_to_string(list_slice(toks, i, i + {shingle_n - 1}), ' '))
+      SELECT id, unnest(CASE WHEN len(toks) >= {D.SHINGLE_N} THEN
+          list_transform(range(1, greatest(len(toks) - {D.SHINGLE_N - 1}, 0) + 1),
+                         i -> array_to_string(list_slice(toks, i, i + {D.SHINGLE_N - 1}), ' '))
           ELSE CAST([] AS VARCHAR[]) END) AS sh
       FROM {pfx}t
     ),
@@ -349,33 +347,10 @@ def dedup_minhash_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ground truth in SHINGLE space — the set family MinHash actually
     # sketches (token-set Jaccard is a different, laxer similarity) —
     # and GLOBAL, because the LSH buckets are global (no source blocks)
-    toks = X.tokens("text")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - 2, F.lit(0)))
-    shingles = F.when(
-        F.size(toks) >= 3,
-        F.array_distinct(
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, 3)))
-        ),
-    ).otherwise(F.array())
-    sh = docs.select(F.col("doc_id").alias("id"), F.explode(shingles).alias("sh"))
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
+    sh = docs.select(F.col("doc_id").alias("id"), F.explode(D.shingles("text", 3)).alias("el"))
     truth = (
-        inter.join(sizes.alias("sa"), F.col("id_a") == F.col("sa.id"))
-        .join(sizes.alias("sb"), F.col("id_b") == F.col("sb.id"))
-        .filter(
-            F.round(
-                F.col("n_inter")
-                / (F.col("sa.sz") + F.col("sb.sz") - F.col("n_inter")),
-                6,
-            )
-            >= 0.5
-        )
+        D.overlap_pairs(sh)
+        .filter(D.jaccard6("n_inter", "sz_a", "sz_b") >= 0.5)
         .select("id_a", "id_b")
     )
     cand = D.minhash_lsh_candidates(docs, hash_fn="md5").select("id_a", "id_b")
@@ -822,16 +797,8 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     moves only the >=5-df survivors. At 100 TB the shingle strings
     become md5_long keys and df>=K prunes before the sort."""
     docs = table(spark, sf_dir, "documents")
-    toks = X.tokens("text")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - 2, F.lit(0)))
-    shingles = F.when(
-        F.size(toks) >= 3,
-        F.array_distinct(
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, 3)))
-        ),
-    ).otherwise(F.array())
     return (
-        docs.select(F.explode(shingles).alias("ngram"))
+        docs.select(F.explode(D.shingles("text", 3)).alias("ngram"))
         .groupBy("ngram")
         .agg(F.count("*").alias("df"))
         .filter(F.col("df") >= 5)

@@ -25,12 +25,11 @@ from pyspark.sql import functions as F
 
 from . import _SQL_TOKS, query, table
 from ..ops import dedup as D
-from ..ops import text as X
 from .llm_ops import _minhash_oracle
 
-# 32 hashes / 8 bands -> r = 4 rows per band
-_SC_BANDS = 8
-_SC_ROWS = 4
+# the candidates' MinHash shape: b bands of r rows each
+_SC_BANDS = D.BANDS
+_SC_ROWS = D.NUM_HASHES // D.BANDS
 
 
 @query(
@@ -86,44 +85,13 @@ def dedup_minhash_s_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def minhash_s_curve_frame(docs: DataFrame) -> DataFrame:
     """Frame core of dedup_minhash_s_curve (scaling-probe entry)."""
-    toks = X.tokens("text")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - 2, F.lit(0)))
-    shingles = F.when(
-        F.size(toks) >= 3,
-        F.array_distinct(
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, 3)))
-        ),
-    ).otherwise(F.array())
-    sh = docs.select(F.col("doc_id").alias("id"), F.explode(shingles).alias("sh"))
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id"))
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("n_inter"))
-    )
-    jpairs = (
-        inter.join(sizes.alias("sa"), F.col("id_a") == F.col("sa.id"))
-        .join(sizes.alias("sb"), F.col("id_b") == F.col("sb.id"))
-        .select(
-            "id_a",
-            "id_b",
-            F.least(
-                F.floor(
-                    F.round(
-                        F.col("n_inter")
-                        / (F.col("sa.sz") + F.col("sb.sz") - F.col("n_inter")),
-                        6,
-                    )
-                    * 10
-                ),
-                F.lit(9),
-            )
-            .cast("int")
-            .alias("bucket"),
-        )
+    sh = docs.select(F.col("doc_id").alias("id"), F.explode(D.shingles("text", 3)).alias("el"))
+    jpairs = D.overlap_pairs(sh).select(
+        "id_a",
+        "id_b",
+        F.least(F.floor(D.jaccard6("n_inter", "sz_a", "sz_b") * 10), F.lit(9))
+        .cast("int")
+        .alias("bucket"),
     )
     cand = D.minhash_lsh_candidates(docs, hash_fn="md5").select(
         "id_a", "id_b", F.lit(1).alias("flagged")

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from . import _SQL_TOKS, query, table
 from ..ops import dedup as D
+from ..ops import text as X
 from .llm_ops import _minhash_oracle
 
 _DTS_BUCKETS = 10  # ppm deciles; thresholds are k * 100000, k = 1..9
@@ -53,14 +54,7 @@ def _scored_candidates(docs: DataFrame) -> DataFrame:
     )
     tok = docs.select(
         F.col("doc_id").alias("id"),
-        F.explode(
-            F.array_distinct(
-                F.filter(
-                    F.split(F.lower(F.trim("text")), r"\s+"),
-                    lambda t: t != "",
-                )
-            )
-        ).alias("tok"),
+        F.explode(F.array_distinct(X.tokens(F.lower(F.col("text"))))).alias("tok"),
     )
     sizes = tok.groupBy("id").agg(F.count("*").alias("sz"))
     ta = tok.select(F.col("id").alias("id_a"), F.col("tok").alias("tok_a"))

@@ -15,10 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import _SQL_TOKS, query, table
-from ..ops.dedup import _MERSENNE_P, _minhash_coeffs, shingles
+from ..ops import dedup as D
+from ..ops.dedup import NUM_HASHES, _MERSENNE_P, _minhash_coeffs, shingles
 from ..ops.hashing import md5_long, sql_md5_long
-
-_NUM_HASHES = 32
 
 # ---------------------------------------------------------------------------
 # corpus_source_minhash — source-pair Jaccard similarity, estimated
@@ -44,10 +43,10 @@ def _source_minhash_oracle() -> str:
     h = sql_md5_long("sh")
     mins = ",\n             ".join(
         f"min((h * {a} + {b}) % {p}) AS h{i}"
-        for i, (a, b) in enumerate(_minhash_coeffs(_NUM_HASHES))
+        for i, (a, b) in enumerate(_minhash_coeffs(NUM_HASHES))
     )
     agree = " + ".join(
-        f"(CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END)" for i in range(_NUM_HASHES)
+        f"(CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END)" for i in range(NUM_HASHES)
     )
     return f"""
     WITH t AS (SELECT source AS src, {_SQL_TOKS} AS toks FROM documents),
@@ -62,7 +61,7 @@ def _source_minhash_oracle() -> str:
     sig AS (SELECT src, {mins} FROM gh GROUP BY src),
     est AS (
       SELECT a.src AS src_a, b.src AS src_b,
-             CAST(({agree}) * 1000000 // {_NUM_HASHES} AS BIGINT) AS est_jaccard_ppm
+             CAST(({agree}) * 1000000 // {NUM_HASHES} AS BIGINT) AS est_jaccard_ppm
       FROM sig a JOIN sig b ON a.src < b.src
     ),
     sizes AS (SELECT src, count(*) AS sz FROM g0 GROUP BY src),
@@ -100,40 +99,31 @@ def corpus_source_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = gh.groupBy("src").agg(
         *[
             F.min((F.col("h") * F.lit(a) + F.lit(b)) % _MERSENNE_P).alias(f"h{i}")
-            for i, (a, b) in enumerate(_minhash_coeffs(_NUM_HASHES))
+            for i, (a, b) in enumerate(_minhash_coeffs(NUM_HASHES))
         ]
     )
     a, b = sig.alias("a"), sig.alias("b")
     agree = sum(
         F.when(F.col(f"a.h{i}") == F.col(f"b.h{i}"), 1).otherwise(0)
-        for i in range(_NUM_HASHES)
+        for i in range(NUM_HASHES)
     )
     est = a.join(b, F.col("a.src") < F.col("b.src")).select(
         F.col("a.src").alias("src_a"),
         F.col("b.src").alias("src_b"),
-        (agree * 1000000 / F.lit(_NUM_HASHES))
+        (agree * 1000000 / F.lit(NUM_HASHES))
         .cast("bigint")
         .alias("est_jaccard_ppm"),
     )
-    sizes = g0.groupBy("src").agg(F.count("*").alias("sz"))
-    ga, gb = g0.alias("ga"), g0.alias("gb")
-    inter = (
-        ga.join(
-            gb,
-            (F.col("ga.sh") == F.col("gb.sh")) & (F.col("ga.src") < F.col("gb.src")),
-        )
-        .groupBy(F.col("ga.src").alias("src_a"), F.col("gb.src").alias("src_b"))
-        .agg(F.count("*").alias("n"))
-    )
-    sa = sizes.select(F.col("src").alias("src_a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col("src").alias("src_b"), F.col("sz").alias("szb"))
+    inter = D.overlap_pairs(g0.select(F.col("src").alias("id"), F.col("sh").alias("el")))
     exact_ppm = F.coalesce(
-        F.expr("n * 1000000 div (sza + szb - n)"), F.lit(0)
+        F.expr("n_inter * 1000000 div (sz_a + sz_b - n_inter)"), F.lit(0)
     )
     return (
-        est.join(inter, ["src_a", "src_b"], "left")
-        .join(sa, "src_a")
-        .join(sb, "src_b")
+        est.join(
+            inter.withColumnsRenamed({"id_a": "src_a", "id_b": "src_b"}),
+            ["src_a", "src_b"],
+            "left",
+        )
         .select(
             "src_a",
             "src_b",

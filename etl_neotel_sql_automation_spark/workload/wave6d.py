@@ -334,31 +334,21 @@ def corpus_source_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     are one feed" readout. Exact integer Jaccard accept test on the
     per-source distinct-gram join, then
     ops.graph.connected_components to the fixpoint."""
-    from ..ops.dedup import shingles
+    from ..ops.dedup import overlap_pairs, shingles
     from ..ops.graph import connected_components
     from pyspark.sql import Window as W
 
     docs = table(spark, sf_dir, "documents")
     g0 = docs.select(
-        F.col("source").alias("src"), F.explode(shingles("text", 3)).alias("sh")
+        F.col("source").alias("id"), F.explode(shingles("text", 3)).alias("el")
     ).distinct()
-    sizes = g0.groupBy("src").agg(F.count("*").alias("sz"))
-    a, b = g0.alias("a"), g0.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.src") < F.col("b.src")))
-        .groupBy(F.col("a.src").alias("sa"), F.col("b.src").alias("sb"))
-        .agg(F.count("*").alias("n"))
-    )
-    za = sizes.select(F.col("src").alias("sa"), F.col("sz").alias("za"))
-    zb = sizes.select(F.col("src").alias("sb"), F.col("sz").alias("zb"))
     e0 = (
-        inter.join(za, "sa")
-        .join(zb, "sb")
+        overlap_pairs(g0)
         .filter(
-            F.col("n") * _SRC_J_DEN
-            >= _SRC_J_NUM * (F.col("za") + F.col("zb") - F.col("n"))
+            F.col("n_inter") * _SRC_J_DEN
+            >= _SRC_J_NUM * (F.col("sz_a") + F.col("sz_b") - F.col("n_inter"))
         )
-        .select("sa", "sb")
+        .select(F.col("id_a").alias("sa"), F.col("id_b").alias("sb"))
     )
     nodes = docs.select(F.col("source").alias("id")).distinct()
     cc = connected_components(nodes, e0, src_col="sa", dst_col="sb")

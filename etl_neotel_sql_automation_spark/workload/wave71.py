@@ -31,11 +31,12 @@ from pyspark.sql import functions as F
 
 from . import _SQL_TOKS, query, table
 from ..ops import dedup as D
+from ..ops import text as X
 from ..ops.hashing import sql_md5_long
 from ..ops.dedup import _MERSENNE_P, _minhash_coeffs
 
 _JACC_PPM = 500_000  # the incremental-dedup 0.5 threshold
-_SPLIT_BAND = 4  # bands 0-3 = occasion A (h0-15), 4-7 = B (h16-31)
+_SPLIT_BAND = D.BANDS // 2  # bands 0-3 = occasion A (h0-15), 4-7 = B (h16-31)
 
 
 def capture_recapture_frame(docs: DataFrame) -> DataFrame:
@@ -79,12 +80,7 @@ def capture_recapture_frame(docs: DataFrame) -> DataFrame:
     # The floor-div ppm test is equivalent to exact J >= 1/2
     # (floor(x/u) >= k <=> x >= k*u), so the Chapman outputs — and the
     # oracle, which keeps the explode-join verification — are unchanged.
-    toks = F.array_distinct(
-        F.filter(
-            F.split(F.lower(F.trim("text")), r"\s+"),
-            lambda t: t != "",
-        )
-    )
+    toks = F.array_distinct(X.tokens(F.lower(F.col("text"))))
     sets = docs.select(
         F.col("doc_id").alias("id"),
         toks.alias("toks"),
@@ -187,12 +183,12 @@ CHAPMAN_SQL_TAIL = """
     """
 
 
-def _cr_oracle(num_hashes: int = 32, bands: int = 8, shingle_n: int = 3) -> str:
+def _cr_oracle() -> str:
     p = _MERSENNE_P
-    r = num_hashes // bands
+    r = D.NUM_HASHES // D.BANDS
     mins = ",\n             ".join(
         f"min((h * {a} + {b}) % {p}) AS h{i}"
-        for i, (a, b) in enumerate(_minhash_coeffs(num_hashes))
+        for i, (a, b) in enumerate(_minhash_coeffs(D.NUM_HASHES))
     )
     band_rows = "\n      UNION ALL ".join(
         "SELECT id, {band} AS band, {bucket} AS bucket FROM sig".format(
@@ -203,14 +199,14 @@ def _cr_oracle(num_hashes: int = 32, bands: int = 8, shingle_n: int = 3) -> str:
                 + ")"
             ),
         )
-        for b in range(bands)
+        for b in range(D.BANDS)
     )
     return f"""
     WITH t AS (SELECT doc_id AS id, {_SQL_TOKS} AS toks FROM documents),
     sh0 AS (
-      SELECT id, unnest(CASE WHEN len(toks) >= {shingle_n} THEN
-          list_transform(range(1, greatest(len(toks) - {shingle_n - 1}, 0) + 1),
-                         i -> array_to_string(list_slice(toks, i, i + {shingle_n - 1}), ' '))
+      SELECT id, unnest(CASE WHEN len(toks) >= {D.SHINGLE_N} THEN
+          list_transform(range(1, greatest(len(toks) - {D.SHINGLE_N - 1}, 0) + 1),
+                         i -> array_to_string(list_slice(toks, i, i + {D.SHINGLE_N - 1}), ' '))
           ELSE CAST([] AS VARCHAR[]) END) AS sh
       FROM t
     ),

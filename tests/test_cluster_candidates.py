@@ -10,7 +10,8 @@ prefix filtering bounds candidates by the threshold structure with no
 false negatives (so the DuckDB oracles stayed verbatim).
 
 Three layers:
-- a TRIPWIRE: token_jaccard_pairs is patched to raise and all four
+- a TRIPWIRE: token_jaccard_pairs and the postings join it runs
+  (ops.dedup.overlap_pairs) are patched to raise and all four
   query frames are constructed end-to-end — any regression back to
   the postings join trips at construction;
 - a PLAN assertion that the prefix machinery (df-ordered row_number
@@ -42,12 +43,13 @@ def test_cluster_family_never_uses_postings_self_join(spark, monkeypatch):
 
     def _trip(*a, **k):
         raise AssertionError(
-            "token_jaccard_pairs (uncapped postings self-join) reached "
+            "token_jaccard_pairs / overlap_pairs (uncapped postings self-join) reached "
             "from the cluster family - r10 VERDICT #1 requires the "
             "prefix-filtered candidate path"
         )
 
     monkeypatch.setattr(D, "token_jaccard_pairs", _trip)
+    monkeypatch.setattr(D, "overlap_pairs", _trip)
     qs = workload.queries()
     for name in CLUSTER_FAMILY:
         # constructing the frame runs the candidate subtree (the

@@ -45,6 +45,88 @@ def test_token_jaccard_finds_near_dup(spark, docs):
     assert pairs.get((1, 4), 0.0) < 0.2  # unrelated
 
 
+def test_overlap_pairs_blocked_and_unblocked(spark):
+    """overlap_pairs: per pair the shared-element count and both set
+    sizes, id_a < id_b, no pair without a shared element, and with a
+    ``blk`` column no pair across blocks."""
+    rows = [
+        (3, "x", "b"), (3, "w", "b"),
+        (1, "x", "a"), (1, "y", "a"), (1, "z", "a"),
+        (2, "y", "a"), (2, "z", "a"),
+        (4, "q", "a"),  # shares nothing
+    ]
+    elems = spark.createDataFrame(rows, "id long, el string, blk string")
+
+    def pairs(df):
+        out = D.overlap_pairs(df)
+        assert out.columns == ["id_a", "id_b", "n_inter", "sz_a", "sz_b"]
+        return sorted(tuple(r) for r in out.collect())
+
+    assert pairs(elems.select("id", "el")) == [(1, 2, 2, 3, 2), (1, 3, 1, 3, 2)]
+    assert pairs(elems) == [(1, 2, 2, 3, 2)]
+
+
+def test_jaccard6_matches_duckdb_round6(spark):
+    """jaccard6 equals DuckDB's round(n / (a + b - n), 6) on seeded
+    (n, a, b) triples, edge cases included: the rule every Jaccard
+    oracle replays."""
+    import random
+
+    import duckdb
+
+    rng = random.Random(13)
+    rows = [(0, 1, 1), (1, 1, 1), (3, 3, 7), (0, 40, 2)]
+    for _ in range(196):
+        a, b = rng.randint(1, 60), rng.randint(1, 60)
+        rows.append((rng.randint(0, min(a, b)), a, b))
+    df = spark.createDataFrame(rows, "n long, a long, b long")
+    got = [r.j for r in df.select(D.jaccard6("n", "a", "b").alias("j")).collect()]
+    values = ", ".join(f"({n}, {a}, {b}, {i})" for i, (n, a, b) in enumerate(rows))
+    want = [
+        r[0]
+        for r in duckdb.connect().execute(
+            f"SELECT round(n / (a + b - n), 6) FROM (VALUES {values}) t(n, a, b, i)"
+            " ORDER BY i"
+        ).fetchall()
+    ]
+    assert len(got) == 200
+    assert got == want
+
+
+def test_ngrams_keep_repeats_and_shingles_are_distinct(spark):
+    df = spark.createDataFrame(
+        [(1, "a b a b a"), (2, "a b"), (3, "   ")], "doc_id long, text string"
+    )
+    out = {
+        r.doc_id: (r.g3, r.g1, r.sh)
+        for r in df.select(
+            "doc_id",
+            X.ngrams(X.tokens("text"), 3).alias("g3"),
+            X.ngrams(X.tokens("text"), 1).alias("g1"),
+            D.shingles("text", 3).alias("sh"),
+        ).collect()
+    }
+    assert out[1] == (["a b a", "b a b", "a b a"], ["a", "b", "a", "b", "a"], ["a b a", "b a b"])
+    assert out[2] == ([], ["a", "b"], [])  # fewer than n tokens
+    assert out[3] == ([], [], [])
+
+
+def test_token_containment_pairs(spark):
+    """The smaller token set is the contained side (a subset scores
+    1.0 whichever id it has); equal sizes put the lower id on the
+    contained side; no pair forms across blocks."""
+    rows = [
+        (1, "a b c d e", "s1"),
+        (2, "a b c", "s1"),  # subset of 1
+        (3, "p q r", "s1"),
+        (4, "p q s", "s1"),  # same size as 3
+        (5, "a b c", "s2"),  # subset of 1 and equal to 2, other block
+    ]
+    docs = spark.createDataFrame(rows, ["doc_id", "text", "source"])
+    got = sorted(tuple(r) for r in D.token_containment_pairs(docs, threshold=0.5).collect())
+    assert got == [(2, 1, 1.0), (3, 4, 0.666667)]
+
+
 def test_minhash_lsh_finds_near_dup(spark, docs):
     cand = {(r.id_a, r.id_b): r.n_bands for r in D.minhash_lsh_candidates(docs).collect()}
     assert (1, 2) in cand and cand[(1, 2)] == 8   # identical -> all bands
