@@ -20,10 +20,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions import (
+    _ident,
     clean_name,
     date_dayfirst,
     float0,
     int0,
+    time_minutes_sql,
     time_str_to_minutes,
 )
 from .schema import ConformSpec
@@ -84,11 +86,28 @@ def conform(df: DataFrame, spec: ConformSpec) -> DataFrame:
     ):
         rules.update(dict.fromkeys(cols, (fn, const)))
     padded = set(spec.final_cols) - set(names)
-    projection = []
+    projection, times = [], []
     for c in spec.final_cols:
         fn, const = rules.get(c, (F.col, "CAST(NULL AS STRING)"))
-        projection.append((F.expr(const) if c in padded else fn(c)).alias(c))
-    df = df.toDF(*names).select(*projection)
+        if c in padded:
+            projection.append(F.expr(const).alias(c))
+        elif fn is time_str_to_minutes:
+            times.append(c)
+        else:
+            projection.append(fn(c).alias(c))
+    df = df.toDF(*names)
+    if times:
+        # The present time columns parse as one array under ONE copy of
+        # the time rule, then a second select reads them back by
+        # position. Catalyst keeps the two selects apart, as it does not
+        # inline an expression read once per column.
+        arr = "_times"
+        while arr in spec.final_cols:
+            arr += "_"
+        cells = ", ".join(f"CAST({_ident(c)} AS STRING)" for c in times)
+        df = df.select(*projection, F.expr(f"transform(array({cells}), x -> {time_minutes_sql('x')})").alias(arr))
+        projection = [F.col(arr)[times.index(c)].alias(c) if c in times else c for c in spec.final_cols]
+    df = df.select(*projection)
 
     if spec.key_cols:
         df = df.na.drop(subset=[c for c in spec.key_cols if c in spec.final_cols])

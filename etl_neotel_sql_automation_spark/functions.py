@@ -81,14 +81,21 @@ def time_str_to_minutes(c: str) -> Column:
     autodetect two-pass (``procesar_columnas_tiempo`` main.py:465-498):
     a value without ``:`` falls through to the numeric branch.
     """
-    s = f"TRIM(BOTH '{_PY_STRIP}' FROM CAST({_ident(c)} AS STRING))"
+    return F.expr(time_minutes_sql(f"CAST({_ident(c)} AS STRING)"))
+
+
+def time_minutes_sql(x: str) -> str:
+    """The rule of :func:`time_str_to_minutes` as SQL text over the
+    STRING-typed SQL expression ``x``; ``conform`` applies it once, as
+    a lambda over all of a report's time columns."""
+    s = f"TRIM(BOTH '{_PY_STRIP}' FROM {x})"
     h, m, sec = (f"regexp_extract({s}, '{_HMS_RE}', {i})" for i in (1, 2, 3))
     # An unmatched group extracts as "": a missing seconds part is 0, a
     # failed match or a part or sum that overflows a long is null -> 0.0.
     sec = f"CASE WHEN {sec} = '' THEN 0 ELSE TRY_CAST({sec} AS BIGINT) END"
     hm = f"try_add(try_multiply(TRY_CAST({h} AS BIGINT), 60), TRY_CAST({m} AS BIGINT))"
     sentinels = ", ".join(f"'{v}'" for v in TIME_SENTINELS)
-    return F.expr(
+    return (
         f"CASE WHEN {s} IS NULL OR {s} IN ({sentinels}) THEN 0.0D"
         f" WHEN contains({s}, ':') THEN coalesce({hm} + {sec} / 60.0D, 0.0D)"
         f" ELSE coalesce(TRY_CAST({s} AS DOUBLE), 0.0D) END"

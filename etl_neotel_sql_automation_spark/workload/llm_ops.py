@@ -28,6 +28,21 @@ def _minhash_oracle() -> str:
     same shingles, same md5-derived base hash, same (a,b) permutation
     coefficients (both sides generate them from random.Random(42)),
     same banded bucket hash — candidates match bit-for-bit."""
+    return f"""
+    WITH {_minhash_band_ctes("doc_id AS id", "documents", "", 12)}
+    SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_bands
+    FROM bands a JOIN bands b
+      ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
+    GROUP BY a.id, b.id
+    """
+
+
+def _minhash_band_ctes(id_expr: str, src: str, pfx: str, indent: int) -> str:
+    """CTE chain (shingle -> md5 hash -> signature -> band rows) over the
+    source ``src``, whose row id is ``id_expr``; the DuckDB twin of
+    ops.dedup.banded_buckets(hash_fn="md5"), bit for bit. ``pfx``
+    prefixes the CTE names so two chains can share one query, and
+    ``indent`` is the signature CTE's continuation indent."""
     p = _MERSENNE_P
     r = D.NUM_HASHES // D.BANDS
     mins = ",\n             ".join(
@@ -35,32 +50,27 @@ def _minhash_oracle() -> str:
         for i, (a, b) in enumerate(_minhash_coeffs(D.NUM_HASHES))
     )
     band_rows = "\n      UNION ALL ".join(
-        "SELECT id, {band} AS band, {bucket} AS bucket FROM sig".format(
+        "SELECT id, {band} AS band, {bucket} AS bucket FROM {pfx}sig".format(
             band=b,
+            pfx=pfx,
             bucket=sql_md5_long(
                 "concat_ws(',', " + ", ".join(f"h{b * r + j}" for j in range(r)) + ")"
             ),
         )
         for b in range(D.BANDS)
     )
-    return f"""
-    WITH t AS (SELECT doc_id AS id, {_SQL_TOKS} AS toks FROM documents),
-    sh0 AS (
+    return f"""{pfx}t AS (SELECT {id_expr}, {_SQL_TOKS} AS toks FROM {src}),
+    {pfx}sh0 AS (
       SELECT id, unnest(CASE WHEN len(toks) >= {D.SHINGLE_N} THEN
           list_transform(range(1, greatest(len(toks) - {D.SHINGLE_N - 1}, 0) + 1),
                          i -> array_to_string(list_slice(toks, i, i + {D.SHINGLE_N - 1}), ' '))
           ELSE CAST([] AS VARCHAR[]) END) AS sh
-      FROM t
+      FROM {pfx}t
     ),
-    sh AS (SELECT id, {sql_md5_long("sh")} % {p} AS h FROM sh0),
-    sig AS (SELECT id, {mins}
-            FROM sh GROUP BY id),
-    bands AS ({band_rows})
-    SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_bands
-    FROM bands a JOIN bands b
-      ON a.band = b.band AND a.bucket = b.bucket AND a.id < b.id
-    GROUP BY a.id, b.id
-    """
+    {pfx}sh AS (SELECT id, {sql_md5_long("sh")} % {p} AS h FROM {pfx}sh0),
+    {pfx}sig AS (SELECT id, {mins}
+{" " * indent}FROM {pfx}sh GROUP BY id),
+    {pfx}bands AS ({band_rows})"""
 
 
 def _simhash_oracle(bits: int = 60) -> str:
@@ -182,46 +192,14 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_band_ctes(src: str, pfx: str) -> str:
-    """CTE chain (shingle -> md5 hash -> signature -> band rows) for one
-    named source CTE, prefixed so two sides can coexist in one oracle —
-    the building block the incremental new-vs-corpus dedup oracle uses
-    twice. Mirrors ops.dedup.banded_buckets(hash_fn="md5") exactly."""
-    p = _MERSENNE_P
-    r = D.NUM_HASHES // D.BANDS
-    mins = ",\n             ".join(
-        f"min((h * {a} + {b}) % {p}) AS h{i}"
-        for i, (a, b) in enumerate(_minhash_coeffs(D.NUM_HASHES))
-    )
-    band_rows = "\n      UNION ALL ".join(
-        "SELECT id, {band} AS band, {bucket} AS bucket FROM {pfx}sig".format(
-            band=b,
-            pfx=pfx,
-            bucket=sql_md5_long(
-                "concat_ws(',', " + ", ".join(f"h{b * r + j}" for j in range(r)) + ")"
-            ),
-        )
-        for b in range(D.BANDS)
-    )
-    return f"""
-    {pfx}t AS (SELECT id, {_SQL_TOKS} AS toks FROM {src}),
-    {pfx}sh0 AS (
-      SELECT id, unnest(CASE WHEN len(toks) >= {D.SHINGLE_N} THEN
-          list_transform(range(1, greatest(len(toks) - {D.SHINGLE_N - 1}, 0) + 1),
-                         i -> array_to_string(list_slice(toks, i, i + {D.SHINGLE_N - 1}), ' '))
-          ELSE CAST([] AS VARCHAR[]) END) AS sh
-      FROM {pfx}t
-    ),
-    {pfx}sh AS (SELECT id, {sql_md5_long("sh")} % {p} AS h FROM {pfx}sh0),
-    {pfx}sig AS (SELECT id, {mins}
-                 FROM {pfx}sh GROUP BY id),
-    {pfx}bands AS ({band_rows})"""
-
-
 _FP_SQL = "md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))"
 
 
 def _incremental_oracle(threshold: float = 0.5) -> str:
+    # each chain opens on a new line, after a blank one
+    n_bands, c_bands = (
+        f"\n    {_minhash_band_ctes('id', src, pfx, 17)}" for src, pfx in (("surv", "n_"), ("corp", "c_"))
+    )
     return f"""
     WITH newd AS (SELECT doc_id AS id, text FROM documents WHERE source = 'src0'),
     corp AS (SELECT doc_id AS id, text FROM documents WHERE source <> 'src0'),
@@ -229,8 +207,8 @@ def _incremental_oracle(threshold: float = 0.5) -> str:
     cfp AS (SELECT DISTINCT {_FP_SQL} AS fp FROM corp),
     exact AS (SELECT id FROM nfp WHERE fp IN (SELECT fp FROM cfp)),
     surv AS (SELECT * FROM newd WHERE id NOT IN (SELECT id FROM exact)),
-    {_minhash_band_ctes("surv", "n_")},
-    {_minhash_band_ctes("corp", "c_")},
+    {n_bands},
+    {c_bands},
     cand AS (
       SELECT DISTINCT a.id AS new_id, b.id AS corp_id
       FROM n_bands a JOIN c_bands b

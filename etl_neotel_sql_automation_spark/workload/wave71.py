@@ -29,11 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import _SQL_TOKS, query, table
+from . import query, table
 from ..ops import dedup as D
 from ..ops import text as X
-from ..ops.hashing import sql_md5_long
-from ..ops.dedup import _MERSENNE_P, _minhash_coeffs
+from .llm_ops import _minhash_band_ctes
 
 _JACC_PPM = 500_000  # the incremental-dedup 0.5 threshold
 _SPLIT_BAND = D.BANDS // 2  # bands 0-3 = occasion A (h0-15), 4-7 = B (h16-31)
@@ -184,36 +183,8 @@ CHAPMAN_SQL_TAIL = """
 
 
 def _cr_oracle() -> str:
-    p = _MERSENNE_P
-    r = D.NUM_HASHES // D.BANDS
-    mins = ",\n             ".join(
-        f"min((h * {a} + {b}) % {p}) AS h{i}"
-        for i, (a, b) in enumerate(_minhash_coeffs(D.NUM_HASHES))
-    )
-    band_rows = "\n      UNION ALL ".join(
-        "SELECT id, {band} AS band, {bucket} AS bucket FROM sig".format(
-            band=b,
-            bucket=sql_md5_long(
-                "concat_ws(',', "
-                + ", ".join(f"h{b * r + j}" for j in range(r))
-                + ")"
-            ),
-        )
-        for b in range(D.BANDS)
-    )
     return f"""
-    WITH t AS (SELECT doc_id AS id, {_SQL_TOKS} AS toks FROM documents),
-    sh0 AS (
-      SELECT id, unnest(CASE WHEN len(toks) >= {D.SHINGLE_N} THEN
-          list_transform(range(1, greatest(len(toks) - {D.SHINGLE_N - 1}, 0) + 1),
-                         i -> array_to_string(list_slice(toks, i, i + {D.SHINGLE_N - 1}), ' '))
-          ELSE CAST([] AS VARCHAR[]) END) AS sh
-      FROM t
-    ),
-    sh AS (SELECT id, {sql_md5_long("sh")} % {p} AS h FROM sh0),
-    sig AS (SELECT id, {mins}
-            FROM sh GROUP BY id),
-    bands AS ({band_rows}),
+    WITH {_minhash_band_ctes("doc_id AS id", "documents", "", 12)},
     pairs AS (
       SELECT a.id AS id_a, b.id AS id_b,
              CAST(max(CASE WHEN a.band < {_SPLIT_BAND} THEN 1 ELSE 0 END)

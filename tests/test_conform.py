@@ -112,6 +112,52 @@ def test_conform_estados_compiles(spark):
     assert out.t_login == pytest.approx(62.05)
 
 
+def _count_nodes(plan, name: str) -> int:
+    """Expression nodes of class ``name`` in a logical plan, lambda
+    bodies included: counted on the trees, as the plan's string form
+    truncates long projections."""
+    plans, exprs = [plan], []
+    while plans:
+        node = plans.pop()
+        for seq, into in ((node.children(), plans), (node.expressions(), exprs)):
+            into.extend(seq.apply(i) for i in range(seq.size()))
+    n = 0
+    while exprs:
+        node = exprs.pop()
+        n += node.getClass().getSimpleName() == name
+        seq = node.children()
+        exprs.extend(seq.apply(i) for i in range(seq.size()))
+    return n
+
+
+def test_conform_parses_time_columns_under_one_rule(spark):
+    """The 26 present estados time columns parse under ONE copy of the
+    time rule (a lambda over an array of the columns), not one copy per
+    column, and the stage generates at most a quarter of the Java the
+    per-column projection generates."""
+    from etl_neotel_sql_automation_spark.functions import time_str_to_minutes
+
+    row = ["13/08/2026", "09:00 - 09:30", "1", "ana", "5", "v"]
+    row += ["01:02:03"] * (len(ESTADOS_FINAL_COLS) - len(row))
+    df = spark.createDataFrame([row], ESTADOS_FINAL_COLS)
+    times = [c for c in ESTADOS_FINAL_COLS if c in ESTADOS_SPEC.time_cols]
+    assert len(times) == 26
+    shared = conform(df, ESTADOS_SPEC)
+    per_column = df.select(*[time_str_to_minutes(c).alias(c) if c in times else c for c in ESTADOS_FINAL_COLS])
+    one_rule = _count_nodes(df.select(time_str_to_minutes(times[0]))._jdf.queryExecution().optimizedPlan(), "RegExpExtract")
+    assert one_rule > 0
+    assert _count_nodes(shared._jdf.queryExecution().optimizedPlan(), "RegExpExtract") == one_rule
+    assert _count_nodes(per_column._jdf.queryExecution().optimizedPlan(), "RegExpExtract") == 26 * one_rule
+
+    debug = spark._jvm.org.apache.spark.sql.execution.debug.package
+
+    def java_chars(frame) -> int:
+        code = debug.codegenStringSeq(frame._jdf.queryExecution().executedPlan())
+        return sum(len(code.apply(i)._2()) for i in range(code.size()))
+
+    assert java_chars(shared) * 4 <= java_chars(per_column)
+
+
 def test_normalize_collision_suffix(spark):
     assert normalize_column_names(["A b", "a_b"]) == ["a_b", "a_b_1"]
 

@@ -11,6 +11,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from etl_neotel_sql_automation_spark import functions as ef
+from etl_neotel_sql_automation_spark.conform import conform
+from etl_neotel_sql_automation_spark.schema import ConformSpec
 
 
 def _py_time_to_minutes(v) -> float:
@@ -50,6 +52,16 @@ def _fuzz_values(n=3000, seed=42):
     return vals
 
 
+# Cells the fuzz alphabet cannot make: a trailing empty part, the
+# whitespace only ``str.strip()`` removes, and a long overflow in each
+# part and in ``h*60 + m``.
+_EDGE_CELLS = [
+    "1:2:", ":", "1::2", "\x1c1:30\x1f", "1:\x1c30", " \x0b1:30\x0c",
+    "9223372036854775808:0", "0:9223372036854775808", "0:0:9223372036854775808",
+    "153722867280912931:0", "-153722867280912931:0", "1e400", "nan\t", "None ",
+]
+
+
 def test_time_to_minutes_fuzz_parity(spark):
     vals = _fuzz_values()
     df = spark.createDataFrame([(v,) for v in vals], "v string")
@@ -61,6 +73,32 @@ def test_time_to_minutes_fuzz_parity(spark):
             assert g != g, f"{v!r}: spark={g} python=NaN"
         else:
             assert abs(g - want) < 1e-9, f"{v!r}: spark={g} python={want}"
+
+    # ``conform`` parses a report's time columns under one shared copy
+    # of the rule: every cell equals ``time_str_to_minutes`` on that
+    # column, with ANSI on and off, and a padded time column is 0.0.
+    vals += _EDGE_CELLS
+    cols = ["a", "b", "c"]
+    rows = [(str(i), *(vals[(i + 7 * k) % len(vals)] for k in range(len(cols)))) for i in range(len(vals))]
+    df = spark.createDataFrame(rows, "id string, a string, b string, c string")
+    spec = ConformSpec(name="t", rename_map={}, final_cols=["id", *cols, "padded"], time_cols=[*cols, "padded"])
+    key = "spark.sql.ansi.enabled"
+    before = spark.conf.get(key)
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set(key, ansi)
+            shared = {r.id: r for r in conform(df, spec).collect()}
+            per_col = df.select("id", *[ef.time_str_to_minutes(c).alias(c) for c in cols]).collect()
+            assert len(shared) == len(per_col) == len(vals)
+            for r in per_col:
+                got = shared[r.id]
+                assert got.padded == 0.0
+                for k, c in enumerate(cols, 1):
+                    g, want = getattr(got, c), getattr(r, c)
+                    cell = rows[int(r.id)][k]
+                    assert g == want or (g != g and want != want), f"ansi={ansi} {cell!r}: shared={g} per-column={want}"
+    finally:
+        spark.conf.set(key, before)
 
 
 def _py_int0(v):

@@ -710,3 +710,52 @@ def test_streaming_freshness_matches_batch_twin(spark):
         for r in dq_freshness_sla(spark, sf).collect()
     }
     assert got == want
+
+
+# The nine analytics_sf01 benchmark queries, two passes in one fresh
+# JVM: the compilations the second pass adds.
+_WARM_PASS_COMPILES = """
+import json, sys
+from etl_neotel_sql_automation_spark.session import get_spark
+from etl_neotel_sql_automation_spark.workload import queries
+
+spark = get_spark(app_name="warm_mix", master="local[2]", shuffle_partitions=2)
+compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+qs = queries()
+added = []
+for _ in range(2):
+    before = compiles.getCount()
+    for name in sys.argv[2:]:
+        qs[name](spark, sys.argv[1]).write.format("noop").mode("overwrite").save()
+    added.append(compiles.getCount() - before)
+print(json.dumps(added))
+"""
+
+
+def test_analytic_rerun_compiles_no_code(tmp_path):
+    """The engine session's generated-code cache holds a warm query mix:
+    these nine queries generate over 100 classes, Spark's default cache
+    size, so at that size every pass recompiles about half of them. A
+    second pass in the same JVM compiles nothing."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    names = [
+        "q1_pricing_summary", "q3_top_unshipped", "agg_distinct_priority",
+        "window_topk_per_priority", "json_events_extract", "sessionize_events",
+        "etl_conform_conducta", "etl_conform_estados", "asof_events_orders",
+    ]
+    root = Path(__file__).resolve().parents[1]
+    env = {**os.environ, "PYTHONPATH": str(root), "SPARK_DRIVER_MEMORY": "1g",
+           "SPARK_LOCAL_DIRS": str(tmp_path)}
+    proc = subprocess.run(
+        [sys.executable, "-c", _WARM_PASS_COMPILES, SF, *names],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    first, second = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert first > 100, (first, second)
+    assert second == 0, (first, second)
