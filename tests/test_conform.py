@@ -134,7 +134,8 @@ def test_conform_parses_time_columns_under_one_rule(spark):
     """The 26 present estados time columns parse under ONE copy of the
     time rule (a lambda over an array of the columns), not one copy per
     column, and the stage generates at most a quarter of the Java the
-    per-column projection generates."""
+    per-column projection generates. The parsed columns stay
+    non-nullable."""
     from etl_neotel_sql_automation_spark.functions import time_str_to_minutes
 
     row = ["13/08/2026", "09:00 - 09:30", "1", "ana", "5", "v"]
@@ -156,6 +157,8 @@ def test_conform_parses_time_columns_under_one_rule(spark):
         return sum(len(code.apply(i)._2()) for i in range(code.size()))
 
     assert java_chars(shared) * 4 <= java_chars(per_column)
+    # non-null, as per column: later stages' code has no null checks
+    assert not any(f.nullable for f in shared.schema.fields if f.name in times)
 
 
 def test_normalize_collision_suffix(spark):
