@@ -20,7 +20,8 @@ The engine's own sessions pin the configuration its semantics assume:
   segments of a quarter each, so a segment evicts before the whole is
   full: a warm stable27 + ETL pass recompiled 282 classes at 100
   entries, 73 at 300 and none at 350 or 400, beyond the 4 small classes
-  of the stage that adds ``load_date``, which differ on every run.
+  that then still carried each run's ``load_date`` literal (see
+  ``io_sinks.add_audit_column``).
   Cost, after a full GC:
   the whole registry retains about 32 KB of heap and 8 KB of metaspace
   per cached class (390 MB heap and 251 MB metaspace unbounded, 208 and
