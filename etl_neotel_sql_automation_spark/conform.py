@@ -106,10 +106,10 @@ def conform(df: DataFrame, spec: ConformSpec) -> DataFrame:
     if times:
         # The present time columns parse as one array under ONE copy of
         # the time rule, then a second select reads them back by
-        # position. Catalyst keeps the two selects apart, as it does not
-        # inline an expression read once per column. The rule never
-        # yields null, and coalesce says so: a nullable column costs a
-        # null check in every later stage's generated code.
+        # position. Catalyst keeps the two selects apart: it does not
+        # copy a costly expression into each of its readers. The rule
+        # never yields null, and coalesce says so: a nullable column
+        # costs a null check in every later stage's generated code.
         arr = "_times"
         while arr in spec.final_cols:
             arr += "_"

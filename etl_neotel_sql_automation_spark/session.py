@@ -19,12 +19,9 @@ The engine's own sessions pin the configuration its semantics assume:
   working set with 37% headroom. It is a Guava cache of four LRU
   segments of a quarter each, so a segment evicts before the whole is
   full: a warm stable27 + ETL pass recompiled 282 classes at 100
-  entries, 73 at 300 and none at 350 or 400, beyond the 4 small classes
-  that then still carried each run's ``load_date`` literal (see
-  ``io_sinks.add_audit_column``).
-  Cost, after a full GC:
-  the whole registry retains about 32 KB of heap and 8 KB of metaspace
-  per cached class (390 MB heap and 251 MB metaspace unbounded, 208 and
+  entries, 73 at 300 and none at 350 or 400. Cost, after a full GC: the
+  whole registry retains about 32 KB of heap and 8 KB of metaspace per
+  cached class (390 MB heap and 251 MB metaspace unbounded, 208 and
   206 MB at 100 entries), so 300 more entries cost about 10 MB of heap
   and 2.4 MB of metaspace; a cache that held the registry would cost
   180 MB of heap.

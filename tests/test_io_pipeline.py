@@ -398,6 +398,7 @@ def test_run_etl_reuses_compiled_code(tmp_path):
     assert got["compiles"] <= 1028, got  # every compile still in the reservoir
     first, second = got["chars"]
     assert second * 10 < first, got
+    assert second == 0, got  # load_date reaches the code as a reference, not a literal
 
 
 def test_compact_small_files(spark, tmp_path):
