@@ -28,7 +28,7 @@ from __future__ import annotations
 import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
@@ -36,6 +36,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..conform import conform
 from ..io_sinks import load_partitioned
 from ..io_sources import header_schema, sniff_csv_dialect
+from ..ops.hashing import BLOOM_K, TABLE_BITS, WORD_BITS, bit_cell, bit_words, bloom_probes
 from ..schema import ConformSpec
 from ..workload import read_events, read_parquet
 
@@ -408,25 +409,32 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(agg, "complete")
 
 
-def _doc_grams(df: DataFrame, contam_n: int = 4) -> DataFrame:
-    """(doc_id, gram) sliding token windows — the shared gram builder
-    of both contamination guards (identical to the batch
-    _windows_frame shape at the guard's n)."""
-    from ..ops.text import tokens
+def _eval_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The static side of both contamination guards: the distinct
+    4-grams of the eval slice (doc_id ≡ 0 mod 50), materialized ONCE
+    before the stream starts. A batch subtree inside a streaming plan is
+    re-derived (tokenize + explode + distinct) on EVERY micro-batch
+    re-plan otherwise; the deployed shape recomputes it only when the
+    blocklist updates between batches, which is exactly what an
+    explicit materialization point models (r11 VERDICT #4)."""
+    from ..workload.corpus_mining import _CONTAM_N, _windows_frame
 
-    toks = tokens(F.col("text"))
-    cnt = F.size(toks)
-    idx = F.when(
-        cnt >= contam_n, F.sequence(F.lit(1), cnt - (contam_n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return df.select(
-        "doc_id", toks.alias("toks"), F.explode(idx).alias("pos")
-    ).select(
-        "doc_id",
-        F.concat_ws(" ", F.slice(F.col("toks"), F.col("pos"), contam_n)).alias(
-            "gram"
-        ),
+    ev = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(F.col("doc_id") % 50 == 0)
+    return (
+        _windows_frame(ev, span_n=_CONTAM_N)
+        .select("gram")
+        .distinct()
+        .localCheckpoint(eager=True)
     )
+
+
+def _train_grams(src: DataFrame) -> DataFrame:
+    """(doc_id, gram) of the streamed training docs (doc_id ≢ 0 mod 50)."""
+    from ..workload.corpus_mining import _CONTAM_N, _windows_frame
+
+    return _windows_frame(
+        src.filter(F.col("doc_id") % 50 != 0), span_n=_CONTAM_N
+    ).select("doc_id", "gram")
 
 
 def stream_contamination_guard(
@@ -448,26 +456,9 @@ def stream_contamination_guard(
     training corpus.
     """
     src = table_stream(spark, sf_dir, "documents")
-
-    # materialize the static gram set ONCE before the stream starts:
-    # a batch subtree inside a streaming plan is re-derived (tokenize +
-    # explode + distinct) on EVERY micro-batch re-plan otherwise. The
-    # deployed shape recomputes it only when the blocklist actually
-    # updates between batches — which is exactly what an explicit
-    # materialization point models (r11 VERDICT #4).
-    static_eval = (
-        _doc_grams(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
-                F.col("doc_id") % 50 == 0
-            )
-        )
-        .select("gram")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
     flagged = (
-        _doc_grams(src.filter(F.col("doc_id") % 50 != 0))
-        .join(static_eval, "gram", "left_semi")
+        _train_grams(src)
+        .join(_eval_grams(spark, sf_dir), "gram", "left_semi")
         .dropDuplicates(["doc_id"])
         .select("doc_id")
     )
@@ -480,82 +471,59 @@ def stream_contamination_guard_bloom(
     """The BLOOM-PREFILTERED streaming twin of
     :func:`stream_contamination_guard` — completing the batch/stream
     pairing of decontam_bloom_prefilter: the static eval gram set
-    builds the fixed-size 60-bit-word Bloom table ONCE (<= 1093 rows
-    by modulus, the construction bound that makes its broadcast
-    legitimate at any corpus size), every streamed gram is screened
-    scan-side through 3 stateless broadcast word-lookups (one per md5
-    probe — no explode+groupBy, which would be a stateful streaming
-    aggregation; the k probes become k tiny equi-joins instead), and
-    only the surviving candidates reach the exact stream-static
-    semi-join. A Bloom filter has no false negatives, so the flagged
-    doc set is IDENTICAL to the unfiltered guard's — same oracle, the
-    same output-invariance argument as the batch twin (whose FP rate
-    decontam_bloom_quality meters differentially every round).
+    builds the fixed-size 60-bit-word Bloom table ONCE (<= 1093 words
+    by modulus, the construction bound that makes it legitimate to
+    collect at any corpus size), every streamed gram is screened
+    scan-side against that table inlined as a literal array (one
+    stateless filter — no explode+groupBy, which would be a stateful
+    streaming aggregation), and only the surviving candidates reach
+    the exact stream-static semi-join. A Bloom filter has no false
+    negatives, so the flagged doc set is IDENTICAL to the unfiltered
+    guard's — same oracle, the same output-invariance argument as the
+    batch twin (whose FP rate decontam_bloom_quality meters
+    differentially every round).
 
     Scale: at 100 TB the ~100% of clean streamed grams stop at the
-    broadcast screen and never reach the semi-join's exchange; the
-    word table rebuilds between micro-batches when the blocklist
-    updates, exactly like the gram set it summarizes.
+    screen and never reach the semi-join's exchange; the word table
+    rebuilds between micro-batches when the blocklist updates, exactly
+    like the gram set it summarizes.
     """
-    from ..workload.corpus_mining import (
-        _BLOOM_K,
-        _BLOOM_WBITS,
-        _bloom_probe_pred,
-        _bloom_words_array,
-        _probe_col,
-    )
-
     src = table_stream(spark, sf_dir, "documents")
-
-    # materialize the static side ONCE before the stream starts: the
-    # gram set feeds BOTH the Bloom word table and the exact semi-join,
-    # and batch subtrees inside a streaming plan are re-derived per
-    # micro-batch re-plan — without the checkpoint the distinct-gram
-    # build ran (2 consumers) x (per-batch re-plan) times and the word
-    # table was rebuilt per probe broadcast (r11 VERDICT #4: "check the
-    # bloom build isn't rebuilt per micro-batch"). At deploy scale the
-    # blocklist updates between batches; an explicit materialization
-    # point is exactly the hook that refresh uses.
-    static_eval = (
-        _doc_grams(
-            spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
-                F.col("doc_id") % 50 == 0
-            )
-        )
-        .select("gram")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    probes = F.array(*[_probe_col(i) for i in range(_BLOOM_K)])
-    words = (
-        static_eval.select(F.explode(probes).alias("idx"))
-        .select(
-            F.expr(f"idx div {_BLOOM_WBITS}").alias("w"),
-            F.expr(f"CAST(idx % {_BLOOM_WBITS} AS INT)").alias("b"),
-        )
-        .groupBy("w")
-        .agg(F.expr("bit_or(shiftleft(1L, b))").alias("bits"))
-    )
-    # r12 (guide §2.4): the word table — <= 1093 rows by the modulus
-    # bound, never by the data — is collected once and inlined as a
-    # literal long array (the sign-matrix pattern), so the K probe
-    # screens are ONE stateless codegen'd filter in the streamed scan
-    # instead of K broadcast-join stages per micro-batch (each stage
-    # cost ~0.5-2 s of fixed latency; measured 7.9 -> ~4.5 s warm at
-    # sf0.1). Identical bits, identical survivor set, and the literal
-    # rebuilds between micro-batches exactly when the blocklist does.
-    warr_sql = _bloom_words_array(words)
-    g = _doc_grams(src.filter(F.col("doc_id") % 50 != 0))
-    pred = _bloom_probe_pred(0, warr_sql)
-    for i in range(1, _BLOOM_K):
-        pred = pred & _bloom_probe_pred(i, warr_sql)
+    # the gram set feeds BOTH the Bloom word table and the exact
+    # semi-join; without the materialization the distinct-gram build ran
+    # (2 consumers) x (per-batch re-plan) times (r11 VERDICT #4)
+    static_eval = _eval_grams(spark, sf_dir)
+    words = bit_words(static_eval, F.explode(bloom_probes("gram")))
     flagged = (
-        g.filter(pred)
+        _train_grams(src)
+        .filter(_bloom_literal_hit(words))
         .join(static_eval, "gram", "left_semi")
         .dropDuplicates(["doc_id"])
         .select("doc_id")
     )
     return run_available_now(flagged, "append", state_partitions)
+
+
+def _bloom_literal_hit(words: DataFrame) -> Column:
+    """True iff all ``BLOOM_K`` probes of ``gram`` hit a set bit of the
+    word table ``words``, collected once and inlined as a literal long
+    array (the sign-matrix pattern; unset words read 0).
+
+    r12 (guide §2.4): the K probe screens become ONE stateless codegen'd
+    filter in the streamed scan instead of K broadcast-join stages per
+    micro-batch (each stage cost ~0.5-2 s of fixed latency; measured
+    7.9 -> ~4.5 s warm at sf0.1). The batch twins keep the join screen
+    (corpus_mining._bloom_legs), where the literal measured slower."""
+    arr = [0] * -(-TABLE_BITS // WORD_BITS)
+    for r in words.collect():
+        arr[int(r["w"])] = int(r["bits"])
+    warr = F.expr("array(" + ",".join(f"{v}L" for v in arr) + ")")
+    probes = bloom_probes("gram")
+    hit = F.lit(True)
+    for i in range(BLOOM_K):
+        w, mask = bit_cell(probes[i])
+        hit = hit & (F.element_at(warr, (w + 1).cast("int")).bitwiseAND(mask) != 0)
+    return hit
 
 
 def stream_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -574,20 +542,13 @@ def stream_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells merge across shards/streams by sum, and point queries hit
     the store without replaying history.
     """
-    from ..workload.corpus_stats import _CMS_D, _CMS_W
+    from ..workload.corpus_stats import _cms_buckets
     from ..ops.text import tokens
 
     src = table_stream(spark, sf_dir, "documents")
-    h15 = lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")  # noqa: E731
     tok = src.select(F.explode(tokens(F.col("text"))).alias("term"))
-    buckets = F.array(
-        *[
-            h15(F.concat(F.col("term"), F.lit(f":cms{r}"))) % _CMS_W
-            for r in range(_CMS_D)
-        ]
-    )
     cells = (
-        tok.select(F.posexplode(buckets).alias("r", "b"))
+        tok.select(F.posexplode(_cms_buckets()).alias("r", "b"))
         .groupBy("r", "b")
         .agg(F.count("*").alias("cnt"))
     )

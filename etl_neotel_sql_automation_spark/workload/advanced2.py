@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from ..conform import conform_with_quarantine
 from ..ops import text as X
+from ..ops.hashing import sql_md5_long
 from ..schema import CONDUCTA_SPEC
 from . import _SQL_TOKS, query, table
 
@@ -92,8 +93,7 @@ WITH t AS (SELECT doc_id AS id, {_SQL_TOKS} AS toks FROM documents),
 win AS (
   SELECT id, unnest(list_distinct(list_transform(
       range(0, greatest(len(toks) - 8, 0) + 1),
-      i -> CAST(('0x' || substr(md5(array_to_string(list_slice(toks, i + 1, i + 8),
-                                                    chr(1))), 1, 15)) AS BIGINT)
+      i -> {sql_md5_long("array_to_string(list_slice(toks, i + 1, i + 8), chr(1))")}
   ))) AS h
   FROM t
 )

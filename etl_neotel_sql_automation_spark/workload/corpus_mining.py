@@ -26,6 +26,17 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from . import _SQL_QV, _SQL_TOKS, query, table
+from ..ops.hashing import (
+    TABLE_BITS,
+    bit_words,
+    bloom_probes,
+    bloom_screen,
+    md5_long,
+    sql_bit_words,
+    sql_bloom_probes,
+    sql_bloom_screen,
+    sql_md5_long,
+)
 from ..ops.similarity import cos6, unit
 from ..ops.text import tokens
 
@@ -615,9 +626,7 @@ _DSIR_LR_HASHED = (
     f" / ((all_tf + 1) * 1.0e0 / (all_tot + {_DSIR_BUCKETS}))) * 1.0e6) AS BIGINT)"
 )
 
-_SQL_BUCKET = (
-    f"CAST(('0x' || substr(md5(term), 1, 15)) AS BIGINT) % {_DSIR_BUCKETS}"
-)
+_SQL_BUCKET = f"{sql_md5_long('term')} % {_DSIR_BUCKETS}"
 
 
 @query(
@@ -682,13 +691,9 @@ def dsir_hashed_frame(docs: DataFrame) -> DataFrame:
     """Frame-level body of quality_dsir_weights_hashed over any
     (doc_id, source, text) frame — shared by the registered query and
     the scaling probe (tools/scale_probe.py hashed)."""
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("term")), 1, 15), 16, 10).cast("long")
-        % _DSIR_BUCKETS
-    )
     tb = docs.select(
         "doc_id", "source", F.explode(tokens(F.col("text"))).alias("term")
-    ).select("doc_id", "source", bucket.alias("b"))
+    ).select("doc_id", "source", (md5_long("term") % _DSIR_BUCKETS).alias("b"))
     allc = tb.groupBy("b").agg(F.count("*").alias("all_tf"))
     tgtc = (
         tb.filter(F.col("source") == _DSIR_TARGET_SOURCE)
@@ -859,81 +864,8 @@ def _margin_topk(m: DataFrame, k: int = 20) -> DataFrame:
 # form — built from md5-derived probes and BIGINT bit arithmetic so
 # DuckDB replays the WHOLE filter (bits, probes, false positives)
 # bit-for-bit, which the JVM-internal might_contain cannot offer.
-# 60 bits per word keep every shifted value positive on both engines
-# (the ops/hashing 60-bit rule; 1<<63 wraps negative).
+# The probes, the 60-bit word table and the screen are ops.hashing's.
 # ---------------------------------------------------------------------------
-
-_BLOOM_BITS = 65536     # m: filter size in bits
-_BLOOM_K = 3            # probes per gram
-_BLOOM_WBITS = 60       # bits packed per BIGINT word (sign-safe)
-
-
-def _probe_sql(i: int) -> str:
-    """DuckDB bit index of probe ``i`` for column ``gram``."""
-    return (
-        f"CAST(('0x' || substr(md5(gram || ':{i}'), 1, 15)) AS BIGINT)"
-        f" % {_BLOOM_BITS}"
-    )
-
-
-def _probe_col(i: int, bits: int = _BLOOM_BITS):
-    """Spark twin of :func:`_probe_sql` (same md5 arithmetic).
-    ``bits`` overrides the filter size for the scaling probe, which
-    applies the documented deploy rule — size m to the eval corpus so
-    kn/m (and the FP rate) stays constant as the eval set grows."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.col("gram"), F.lit(f":{i}"))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % bits
-    )
-
-
-# literal-inlining cutoff for the Bloom word table: the default filter
-# is ceil(65536/60) = 1093 words; probe runs that scale m with a bigger
-# eval corpus keep the broadcast-join form past this (a multi-MB plan
-# literal would shift cost into parsing/codegen)
-_BLOOM_LIT_MAX_WORDS = 4096
-
-
-def _bloom_words_array(words, bits: int = _BLOOM_BITS):
-    """The Bloom word table as a literal long array Column, or None
-    when it is too large to inline (see _BLOOM_LIT_MAX_WORDS).
-
-    The table is bounded by the MODULUS (ceil(bits/60) words), never by
-    the data, so collecting it driver-side is as legitimate as
-    broadcasting it (guide §5) — and inlining it as one array literal
-    (the hyperplane sign-matrix pattern, ops/similarity.py) turns the
-    K probe screens from K broadcast-join stages into a single
-    codegen'd filter projection: measured 7.9 -> ~4 s on the streaming
-    guard at sf0.1, where each extra join stage cost ~0.5-2 s of fixed
-    stage latency while the probe arithmetic itself was nearly free.
-    Unset words read 0 (no bits set -> probe fails), exactly the
-    semantics the left-join + IS NOT NULL form had."""
-    n_words = (bits + _BLOOM_WBITS - 1) // _BLOOM_WBITS
-    if n_words > _BLOOM_LIT_MAX_WORDS:
-        return None
-    arr = [0] * n_words
-    for r in words.collect():
-        arr[int(r["w"])] = int(r["bits"])
-    return "array(" + ",".join(f"{v}L" for v in arr) + ")"
-
-
-def _bloom_probe_pred(i: int, warr_sql: str, bits: int = _BLOOM_BITS):
-    """Filter predicate Column: probe ``i`` of column ``gram`` hits a
-    set bit in the literal word array — the exact _probe_col / join
-    form arithmetic, as one SQL expression."""
-    idx = (
-        f"(CAST(conv(substring(md5(concat(gram, ':{i}')), 1, 15), 16, 10)"
-        f" AS BIGINT) % {bits})"
-    )
-    return F.expr(
-        f"(element_at({warr_sql}, CAST({idx} div {_BLOOM_WBITS} AS INT) + 1)"
-        f" & shiftleft(1L, CAST({idx} % {_BLOOM_WBITS} AS INT))) != 0"
-    )
-
 
 _CONTAM_GUARD_ORACLE = f"""
     WITH tok AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
@@ -982,58 +914,34 @@ def decontam_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bloom_prefilter_frame(table(spark, sf_dir, "documents"))
 
 
-def bloom_prefilter_frame(docs: DataFrame, bits: int = _BLOOM_BITS) -> DataFrame:
+def _bloom_legs(docs: DataFrame, bits: int) -> tuple[DataFrame, ...]:
+    """(tg, ev, tgd, cand) of the batch Bloom screen: the training
+    (doc_id, gram) rows, the distinct eval grams, the distinct training
+    grams, and those of them that pass the filter the eval grams build.
+    The build is <= ceil(m / 60) = 1093 words, bounded by the modulus, so
+    the screen's pinned broadcast is the fixed-memory production shape.
+
+    r12 MEASURED AND DECLINED (guide §1): inlining the word table as a
+    literal array (the streaming guard's form) regressed the batch
+    prefilter 1.26x in a same-session A/B — the collect() is a separate
+    action that re-derives the eval gram tree, while the batch join
+    screen folds into the one AQE-planned job and shares the ev subtree
+    via exchange reuse. Per-stage fixed cost is what the literal
+    removes, and only micro-batch re-planning pays it."""
+    g = _windows_frame(docs, span_n=_CONTAM_N).select("doc_id", "gram")
+    ev = g.filter(F.col("doc_id") % 50 == 0).select("gram").distinct()
+    tg = g.filter(F.col("doc_id") % 50 != 0)
+    tgd = tg.select("gram").distinct()
+    words = bit_words(ev, F.explode(bloom_probes("gram", bits)))
+    return tg, ev, tgd, bloom_screen(tgd, "gram", words, bits)
+
+
+def bloom_prefilter_frame(docs: DataFrame, bits: int = TABLE_BITS) -> DataFrame:
     """Frame-level body of decontam_bloom_prefilter over any
     (doc_id, text) frame — shared by the registered query and the
     scaling probe (tools/scale_probe.py hashed), which sizes ``bits``
     to the synthetic eval corpus per the docstring's deploy rule."""
-    g = _windows_frame(docs, span_n=_CONTAM_N).select("doc_id", "gram")
-    ev = g.filter(F.col("doc_id") % 50 == 0).select("gram").distinct()
-    tg = g.filter(F.col("doc_id") % 50 != 0)
-
-    probes = F.array(*[_probe_col(i, bits) for i in range(_BLOOM_K)])
-    # build: <= ceil(m / 60) = 1093 words, bounded by the modulus —
-    # the pinned broadcast below is the fixed-memory production shape
-    words = (
-        ev.select(F.explode(probes).alias("idx"))
-        .select(
-            F.expr(f"idx div {_BLOOM_WBITS}").alias("w"),
-            F.expr(f"CAST(idx % {_BLOOM_WBITS} AS INT)").alias("b"),
-        )
-        .groupBy("w")
-        .agg(F.expr("bit_or(shiftleft(1L, b))").alias("bits"))
-    )
-    # screen: every distinct training gram probes the word table; a
-    # gram is a candidate iff ALL K probed bits are set.
-    # r12 MEASURED AND DECLINED (guide §1): inlining the word table as
-    # a literal array (the streaming guard's r12 move) regressed THIS
-    # batch form 1.26x in a same-session A/B — the collect() is a
-    # separate action that re-derives the eval gram tree, while the
-    # batch join screen folds into the one AQE-planned job and shares
-    # the ev subtree via exchange reuse. The join/literal split is a
-    # batch-vs-streaming distinction: per-stage fixed cost is what the
-    # literal removes, and only micro-batch re-planning pays it.
-    tgd = tg.select("gram").distinct()
-    pr = tgd.select("gram", F.posexplode(probes).alias("i", "idx")).select(
-        "gram",
-        F.expr(f"idx div {_BLOOM_WBITS}").alias("w"),
-        F.expr(f"CAST(idx % {_BLOOM_WBITS} AS INT)").alias("b"),
-    )
-    hits = (
-        pr.join(F.broadcast(words), "w", "left")
-        .select(
-            "gram",
-            F.when(
-                F.expr("bits IS NOT NULL AND (bits & shiftleft(1L, b)) != 0"), 1
-            )
-            .otherwise(0)
-            .alias("hit"),
-        )
-        .groupBy("gram")
-        .agg(F.sum("hit").alias("n_hit"))
-        .filter(F.col("n_hit") == _BLOOM_K)
-        .select("gram")
-    )
+    tg, ev, _, hits = _bloom_legs(docs, bits)
     # exact verification on survivors only — removes false positives,
     # so the output is the exact join's output
     return (
@@ -1044,9 +952,7 @@ def bloom_prefilter_frame(docs: DataFrame, bits: int = _BLOOM_BITS) -> DataFrame
     )
 
 
-def _bloom_quality_oracle() -> str:
-    probes = ", ".join(_probe_sql(i) for i in range(_BLOOM_K))
-    return f"""
+_BLOOM_QUALITY_ORACLE = f"""
     WITH tok AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
     pg AS (
       SELECT doc_id,
@@ -1061,25 +967,8 @@ def _bloom_quality_oracle() -> str:
     ),
     ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % 50 = 0),
     tgd AS (SELECT DISTINCT gram FROM g WHERE doc_id % 50 <> 0),
-    evp AS (SELECT unnest([{probes}]) AS idx FROM ev),
-    words AS (
-      SELECT idx // {_BLOOM_WBITS} AS w,
-             bit_or(CAST(1 AS BIGINT) << CAST(idx % {_BLOOM_WBITS} AS INTEGER)) AS bits
-      FROM evp GROUP BY w
-    ),
-    tp AS (SELECT gram, unnest([{probes}]) AS idx FROM tgd),
-    hits AS (
-      SELECT tp.gram,
-             CASE WHEN words.bits IS NOT NULL
-                       AND (words.bits
-                            & (CAST(1 AS BIGINT)
-                               << CAST(tp.idx % {_BLOOM_WBITS} AS INTEGER))) != 0
-                  THEN 1 ELSE 0 END AS hit
-      FROM tp LEFT JOIN words ON tp.idx // {_BLOOM_WBITS} = words.w
-    ),
-    cand AS (
-      SELECT gram FROM hits GROUP BY gram HAVING sum(hit) = {_BLOOM_K}
-    ),
+    words AS ({sql_bit_words("ev", f"unnest({sql_bloom_probes('gram')})")}),
+    cand AS ({sql_bloom_screen("tgd", "gram", "words")}),
     truth AS (SELECT gram FROM tgd JOIN ev USING (gram))
     SELECT CAST((SELECT count(*) FROM tgd) AS BIGINT) AS n_train_grams,
            CAST((SELECT count(*) FROM ev) AS BIGINT) AS n_eval_grams,
@@ -1092,7 +981,7 @@ def _bloom_quality_oracle() -> str:
     """
 
 
-@query("decontam_bloom_quality", oracle=_bloom_quality_oracle())
+@query("decontam_bloom_quality", oracle=_BLOOM_QUALITY_ORACLE)
 def decontam_bloom_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Differential QUALITY meter for the Bloom pre-filter: candidate
     count vs ground-truth shared-gram count, and the false-positive
@@ -1114,45 +1003,12 @@ def decontam_bloom_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bloom_fp_frame(table(spark, sf_dir, "documents"))
 
 
-def bloom_fp_frame(docs: DataFrame, bits: int = _BLOOM_BITS) -> DataFrame:
+def bloom_fp_frame(docs: DataFrame, bits: int = TABLE_BITS) -> DataFrame:
     """Frame-level body of decontam_bloom_quality over any
     (doc_id, text) frame — shared by the registered query and the
     scaling probe (which records fp_ppm at every scale, sizing
     ``bits`` to the eval corpus per the deploy rule)."""
-    g = _windows_frame(docs, span_n=_CONTAM_N).select("doc_id", "gram")
-    ev = g.filter(F.col("doc_id") % 50 == 0).select("gram").distinct()
-    tgd = g.filter(F.col("doc_id") % 50 != 0).select("gram").distinct()
-
-    probes = F.array(*[_probe_col(i, bits) for i in range(_BLOOM_K)])
-    words = (
-        ev.select(F.explode(probes).alias("idx"))
-        .select(
-            F.expr(f"idx div {_BLOOM_WBITS}").alias("w"),
-            F.expr(f"CAST(idx % {_BLOOM_WBITS} AS INT)").alias("b"),
-        )
-        .groupBy("w")
-        .agg(F.expr("bit_or(shiftleft(1L, b))").alias("bits"))
-    )
-    pr = tgd.select("gram", F.explode(probes).alias("idx")).select(
-        "gram",
-        F.expr(f"idx div {_BLOOM_WBITS}").alias("w"),
-        F.expr(f"CAST(idx % {_BLOOM_WBITS} AS INT)").alias("b"),
-    )
-    cand = (
-        pr.join(F.broadcast(words), "w", "left")
-        .select(
-            "gram",
-            F.when(
-                F.expr("bits IS NOT NULL AND (bits & shiftleft(1L, b)) != 0"), 1
-            )
-            .otherwise(0)
-            .alias("hit"),
-        )
-        .groupBy("gram")
-        .agg(F.sum("hit").alias("n_hit"))
-        .filter(F.col("n_hit") == _BLOOM_K)
-        .select("gram")
-    )
+    _, ev, tgd, cand = _bloom_legs(docs, bits)
     truth = tgd.join(ev, "gram")
     n_train = tgd.agg(F.count("*").alias("n_train_grams"))
     n_eval = ev.agg(F.count("*").alias("n_eval_grams"))
@@ -1228,8 +1084,7 @@ def _margin_sides_sql(a_sample_mod: int | None = None) -> str:
     samp = (
         ""
         if a_sample_mod is None
-        else f" AND CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))"
-        f" AS BIGINT) % {a_sample_mod} = 0"
+        else f" AND {sql_md5_long('vec_id')} % {a_sample_mod} = 0"
     )
     return f"""
     a AS (SELECT vec_id AS a_id, CAST(embedding AS DOUBLE[]) AS av, {_SQL_QV} AS qv
@@ -1291,15 +1146,9 @@ def _margin_rank_sql(mname: str, tag: str) -> str:
 
 def _margin_sample_pred(mod: int):
     """Deterministic md5 hash-sample predicate over vec_id — the Spark
-    twin of the ``a_sample_mod`` clause in :func:`_margin_sides_sql`
-    (same 15-hex-digit md5 prefix arithmetic, so both engines keep the
-    same endpoints)."""
-    return (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        % mod
-        == 0
-    )
+    twin of the ``a_sample_mod`` clause in :func:`_margin_sides_sql`,
+    so both engines keep the same endpoints."""
+    return md5_long("vec_id") % mod == 0
 
 
 def margin_cand_frame_from(

@@ -20,6 +20,15 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..ops import text as X
+from ..ops.hashing import (
+    TABLE_BITS,
+    bit_words,
+    md5_long,
+    salted_bucket,
+    sql_bit_words,
+    sql_md5_long,
+    sql_salted_bucket,
+)
 from ..ops.similarity import cos6, unit
 from . import _SQL_TOKS, query, table
 
@@ -443,13 +452,8 @@ _BIGRAM_LR_HASHED = (
     " * 1.0e6) AS BIGINT)"
 )
 
-_SQL_B1 = (
-    f"CAST(('0x' || substr(md5(w1), 1, 15)) AS BIGINT) % {_LM_UNI_BUCKETS}"
-)
-_SQL_PB = (
-    "CAST(('0x' || substr(md5(w1 || ' ' || w2), 1, 15)) AS BIGINT)"
-    f" % {_LM_PAIR_BUCKETS}"
-)
+_SQL_B1 = f"{sql_md5_long('w1')} % {_LM_UNI_BUCKETS}"
+_SQL_PB = sql_md5_long("w1 || ' ' || w2") + f" % {_LM_PAIR_BUCKETS}"
 
 
 @query(
@@ -505,7 +509,6 @@ def bigram_lm_hashed_frame(docs: DataFrame) -> DataFrame:
     idx = F.when(cnt >= 2, F.sequence(F.lit(1), cnt - 1)).otherwise(
         F.array().cast("array<int>")
     )
-    h15 = lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")  # noqa: E731
     b = (
         docs.select("doc_id", toks.alias("toks"), F.explode(idx).alias("pos"))
         .select(
@@ -515,8 +518,8 @@ def bigram_lm_hashed_frame(docs: DataFrame) -> DataFrame:
         )
         .select(
             "doc_id",
-            (h15(F.col("w1")) % _LM_UNI_BUCKETS).alias("b1"),
-            (h15(F.concat_ws(" ", "w1", "w2")) % _LM_PAIR_BUCKETS).alias("pb"),
+            (md5_long("w1") % _LM_UNI_BUCKETS).alias("b1"),
+            (md5_long(F.concat_ws(" ", "w1", "w2")) % _LM_PAIR_BUCKETS).alias("pb"),
         )
     )
     # BOTH LM tables from ONE pass over the bigram stream via grouping
@@ -909,12 +912,14 @@ _CMS_D = 4      # hash rows
 _CMS_W = 1024   # buckets per row
 
 
-def _cms_bucket_sql(term_expr: str) -> str:
-    """DuckDB bucket id of ``term_expr`` for CMS row ``r`` (column in
-    scope) — the literal twin of the Spark probe below."""
-    return (
-        f"CAST(('0x' || substr(md5({term_expr} || ':cms' || r), 1, 15))"
-        f" AS BIGINT) % {_CMS_W}"
+_SQL_CMS_BUCKET = sql_salted_bucket("term", ":cms", _CMS_W)
+
+
+def _cms_buckets():
+    """The _CMS_D sketch-row buckets of column ``term``, as one array
+    (Spark twin of _SQL_CMS_BUCKET); posexplode yields (r, b)."""
+    return F.array(
+        *[salted_bucket(F.col("term"), ":cms", F.lit(r), _CMS_W) for r in range(_CMS_D)]
     )
 
 
@@ -923,14 +928,14 @@ def _cms_bucket_sql(term_expr: str) -> str:
     oracle=f"""
     WITH tok AS (SELECT unnest({_SQL_TOKS}) AS term FROM documents),
     pr AS (SELECT term, unnest([0, 1, 2, 3]) AS r FROM tok),
-    tb AS (SELECT r, {_cms_bucket_sql('term')} AS b FROM pr),
+    tb AS (SELECT r, {_SQL_CMS_BUCKET} AS b FROM pr),
     sk AS (SELECT r, b, CAST(count(*) AS BIGINT) AS cnt FROM tb GROUP BY r, b),
     exact AS (SELECT term, CAST(count(*) AS BIGINT) AS n_exact
               FROM tok GROUP BY term),
     top AS (SELECT term, n_exact FROM exact
             ORDER BY n_exact DESC, term LIMIT 20),
     cand AS (SELECT term, n_exact, unnest([0, 1, 2, 3]) AS r FROM top),
-    cj AS (SELECT term, n_exact, r, {_cms_bucket_sql('term')} AS b FROM cand),
+    cj AS (SELECT term, n_exact, r, {_SQL_CMS_BUCKET} AS b FROM cand),
     est AS (
       SELECT cj.term, cj.n_exact, CAST(min(sk.cnt) AS BIGINT) AS n_cms_est
       FROM cj JOIN sk USING (r, b)
@@ -974,14 +979,8 @@ def cms_heavy_hitters_frame(docs: DataFrame) -> DataFrame:
     """Frame-level body of text_heavy_hitters_cms over any
     (doc_id, text) frame — shared by the registered query and the
     scaling probe (tools/scale_probe.py hashed)."""
-    h15 = lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")  # noqa: E731
     tok = docs.select(F.explode(X.tokens(F.col("text"))).alias("term"))
-    buckets = F.array(
-        *[
-            h15(F.concat(F.col("term"), F.lit(f":cms{r}"))) % _CMS_W
-            for r in range(_CMS_D)
-        ]
-    )
+    buckets = _cms_buckets()
     sk = (
         tok.select(F.posexplode(buckets).alias("r", "b"))
         .groupBy("r", "b")
@@ -1012,11 +1011,8 @@ def cms_heavy_hitters_frame(docs: DataFrame) -> DataFrame:
 # --- Linear-counting distinct estimation (Whang et al. 1990): the
 # replayable cardinality sketch completing the family — membership
 # (Bloom, corpus_mining), frequency (count-min, above), cardinality
-# (here). Same 60-bit word packing as the Bloom filter; the one float
-# is a single ln over an exact integer ratio.
-
-_LC_BITS = 65536
-_LC_WBITS = 60
+# (here). The same ops.hashing bit table as the Bloom filter; the one
+# float is a single ln over an exact integer ratio.
 
 
 @query(
@@ -1033,28 +1029,18 @@ _LC_WBITS = 60
       SELECT array_to_string(list_slice(toks, pos, pos + 3), ' ') AS term
       FROM pg
     ),
-    idx AS (
-      SELECT CAST(('0x' || substr(md5(term), 1, 15)) AS BIGINT) % {_LC_BITS}
-             AS i
-      FROM g
-    ),
-    words AS (
-      SELECT i // {_LC_WBITS} AS w,
-             bit_or(CAST(1 AS BIGINT) << CAST(i % {_LC_WBITS} AS INTEGER))
-               AS bits
-      FROM idx GROUP BY w
-    ),
+    words AS ({sql_bit_words("g", f"{sql_md5_long('term')} % {TABLE_BITS}")}),
     setb AS (SELECT CAST(sum(bit_count(bits)) AS BIGINT) AS n_set FROM words),
     ex AS (SELECT CAST(count(DISTINCT term) AS BIGINT) AS n_exact FROM g)
     SELECT ex.n_exact, setb.n_set,
-           CAST(round(-{_LC_BITS}.0e0
-                      * ln(({_LC_BITS} - setb.n_set) * 1.0e0 / {_LC_BITS}))
+           CAST(round(-{TABLE_BITS}.0e0
+                      * ln(({TABLE_BITS} - setb.n_set) * 1.0e0 / {TABLE_BITS}))
                 AS BIGINT) AS lc_est,
-           CAST(round(-{_LC_BITS}.0e0
-                      * ln(({_LC_BITS} - setb.n_set) * 1.0e0 / {_LC_BITS}))
+           CAST(round(-{TABLE_BITS}.0e0
+                      * ln(({TABLE_BITS} - setb.n_set) * 1.0e0 / {TABLE_BITS}))
                 AS BIGINT) - ex.n_exact AS est_minus_exact,
-           abs(CAST(round(-{_LC_BITS}.0e0
-                      * ln(({_LC_BITS} - setb.n_set) * 1.0e0 / {_LC_BITS}))
+           abs(CAST(round(-{TABLE_BITS}.0e0
+                      * ln(({TABLE_BITS} - setb.n_set) * 1.0e0 / {TABLE_BITS}))
                 AS BIGINT) - ex.n_exact) * 1000000 // ex.n_exact
              AS abs_err_ppm
     FROM ex CROSS JOIN setb
@@ -1102,25 +1088,12 @@ def lc_distinct_frame(docs: DataFrame) -> DataFrame:
 
     tok = docs.select("doc_id", "text")
     g = _windows_frame(tok, span_n=4).select(F.col("gram").alias("term"))
-    idx = g.select(
-        (
-            F.conv(F.substring(F.md5(F.col("term")), 1, 15), 16, 10).cast("long")
-            % _LC_BITS
-        ).alias("i")
-    )
-    words = (
-        idx.select(
-            F.expr(f"i div {_LC_WBITS}").alias("w"),
-            F.expr(f"CAST(i % {_LC_WBITS} AS INT)").alias("b"),
-        )
-        .groupBy("w")
-        .agg(F.expr("bit_or(shiftleft(1L, b))").alias("bits"))
-    )
+    words = bit_words(g, md5_long("term") % TABLE_BITS)
     setb = words.agg(F.sum(F.bit_count("bits")).cast("long").alias("n_set"))
     ex = g.agg(F.count_distinct("term").cast("long").alias("n_exact"))
     lc = (
-        f"CAST(round(-{_LC_BITS}.0e0"
-        f" * ln(({_LC_BITS} - n_set) * 1.0e0 / {_LC_BITS})) AS BIGINT)"
+        f"CAST(round(-{TABLE_BITS}.0e0"
+        f" * ln(({TABLE_BITS} - n_set) * 1.0e0 / {TABLE_BITS})) AS BIGINT)"
     )
     return ex.crossJoin(F.broadcast(setb)).select(
         "n_exact",
@@ -1273,7 +1246,7 @@ def text_gram_js_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tok AS (SELECT unnest({_SQL_TOKS}) AS term FROM documents),
     pr AS (SELECT term, unnest([0, 1, 2, 3]) AS r FROM tok),
-    tb AS (SELECT r, {_cms_bucket_sql('term')} AS b FROM pr)
+    tb AS (SELECT r, {_SQL_CMS_BUCKET} AS b FROM pr)
     SELECT r, b, CAST(count(*) AS BIGINT) AS cnt
     FROM tb GROUP BY r, b
     """,

@@ -30,11 +30,12 @@ round-6 convention shared by the other embedding queries.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ops import similarity as S
 from ..ops import text as X
+from ..ops.hashing import md5_long, sql_md5_long
 from . import _SQL_QV, _SQL_TOKS, query, table
 
 
@@ -259,18 +260,27 @@ def gopher_frame(docs: DataFrame) -> DataFrame:
 _W_BUCKETS = 2001  # odd => weights symmetric around 0 in [-1000, 1000]
 
 
+def hashed_logit(toks: Column) -> Column:
+    """BIGINT logit of token array ``toks``: the exact sum of its token
+    weights ``md5_long(lower(t)) % 2001 - 1000``."""
+    weights = F.transform(toks, lambda t: md5_long(F.lower(t)) % _W_BUCKETS - 1000)
+    return F.aggregate(weights, F.lit(0).cast("long"), lambda acc, x: acc + x)
+
+
+def sql_hashed_logit(toks: str) -> str:
+    """DuckDB twin of :func:`hashed_logit`."""
+    w = f"{sql_md5_long('lower(t)')} % {_W_BUCKETS} - 1000"
+    return f"CAST(coalesce(list_sum(list_transform({toks}, t -> {w})), 0) AS BIGINT)"
+
+
 @query(
     "quality_hashed_classifier",
     oracle=f"""
     WITH feat AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents)
     SELECT doc_id,
            CAST(len(toks) AS BIGINT) AS n_tokens,
-           CAST(coalesce(list_sum(list_transform(toks,
-                 t -> CAST(('0x' || substr(md5(lower(t)), 1, 15)) AS BIGINT)
-                      % {_W_BUCKETS} - 1000)), 0) AS BIGINT) AS logit,
-           (CAST(coalesce(list_sum(list_transform(toks,
-                 t -> CAST(('0x' || substr(md5(lower(t)), 1, 15)) AS BIGINT)
-                      % {_W_BUCKETS} - 1000)), 0) AS BIGINT) > 0) AS keep
+           {sql_hashed_logit("toks")} AS logit,
+           ({sql_hashed_logit("toks")} > 0) AS keep
     FROM feat
     """,
 )
@@ -300,13 +310,7 @@ def classifier_frame(docs: DataFrame) -> DataFrame:
     """The scorer over any documents-shaped frame (doc_id, text) —
     shared by the registered query and tools/scale_probe.py curation."""
     toks = X.tokens("text")
-    weights = F.transform(
-        toks,
-        lambda t: F.conv(F.substring(F.md5(F.lower(t)), 1, 15), 16, 10).cast("long")
-        % _W_BUCKETS
-        - 1000,
-    )
-    logit = F.aggregate(weights, F.lit(0).cast("long"), lambda acc, x: acc + x)
+    logit = hashed_logit(toks)
     return docs.select(
         "doc_id",
         F.size(toks).cast("long").alias("n_tokens"),
@@ -513,21 +517,7 @@ def dedup_semantic_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SEM_SAMPLE_MOD = 4
 
-_SQL_SEM_SAMPLE = (
-    "CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT)"
-    f" % {_SEM_SAMPLE_MOD} = 0"
-)
-
-
-def _sem_sample_pred():
-    """Spark twin of ``_SQL_SEM_SAMPLE`` (deterministic md5
-    hash-sample over vec_id, same 15-hex-digit prefix arithmetic)."""
-    return (
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        % _SEM_SAMPLE_MOD
-        == 0
-    )
+_SQL_SEM_SAMPLE = f"{sql_md5_long('vec_id')} % {_SEM_SAMPLE_MOD} = 0"
 
 
 @query(
@@ -575,7 +565,8 @@ def dedup_semantic_quality_sampled(spark: SparkSession, sf_dir: str) -> DataFram
     against the global all-pairs ground truth; see
     dedup_semantic_quality.)"""
     emb = table(spark, sf_dir, "embeddings")
-    a = S.unit(emb.filter(_sem_sample_pred()), "embedding", "a")
+    sample = md5_long("vec_id") % _SEM_SAMPLE_MOD == 0  # Spark twin of _SQL_SEM_SAMPLE
+    a = S.unit(emb.filter(sample), "embedding", "a")
     a = a.select(F.col("vec_id").alias("a_id"), "av", "an")
     c = S.unit(emb, "embedding", "c").select(F.col("vec_id").alias("c_id"), "cv", "cn")
     exact_n = (
@@ -588,7 +579,7 @@ def dedup_semantic_quality_sampled(spark: SparkSession, sf_dir: str) -> DataFram
     lsh_n = (
         S.semantic_prune(emb, planes=_SEM_PLANES, threshold=_SEM_THRESHOLD)
         .filter(F.col("pruned"))
-        .filter(_sem_sample_pred())
+        .filter(sample)
         .agg(F.count("*").alias("n_lsh_pruned"))
     )
     return exact_n.crossJoin(lsh_n).select(

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import _SQL_TOKS, query, table
+from ..ops.hashing import md5_long, sql_md5_long
 
 
 @query(
@@ -269,11 +270,10 @@ def lifecycle_frame(ev: DataFrame) -> DataFrame:
 
 @query(
     "sample_stratified_exact_k",
-    oracle="""
+    oracle=f"""
     WITH keyed AS (
       SELECT doc_id, source,
-             CAST(('0x' || substr(md5(concat('topk:', CAST(doc_id AS VARCHAR))), 1, 15))
-                  AS BIGINT) AS hk
+             {sql_md5_long("concat('topk:', CAST(doc_id AS VARCHAR))")} AS hk
       FROM documents
     ),
     ranked AS (
@@ -300,8 +300,6 @@ def sample_stratified_exact_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     same semantics can pre-prune with an approximate hash threshold
     before ranking — the window stays the canonical form.
     """
-    from ..ops.hashing import md5_long
-
     docs = table(spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",

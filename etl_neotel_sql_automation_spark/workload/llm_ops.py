@@ -19,7 +19,7 @@ from ..ops import dedup as D
 from ..ops import similarity as S
 from ..ops import text as X
 from ..ops.dedup import _MERSENNE_P, _minhash_coeffs
-from ..ops.hashing import sql_md5_long
+from ..ops.hashing import md5_long, sql_md5_long
 from . import _SQL_QV, _SQL_TOKS, query, table
 
 
@@ -678,11 +678,10 @@ def emb_duplicate_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sample_hash_stratified",
-    oracle="""
+    oracle=f"""
     SELECT doc_id, source
     FROM documents
-    WHERE CAST(('0x' || substr(md5(concat('sample:', CAST(doc_id AS VARCHAR))), 1, 15))
-               AS BIGINT) % 100
+    WHERE {sql_md5_long("concat('sample:', CAST(doc_id AS VARCHAR))")} % 100
           < CASE WHEN source IN ('src0', 'src1', 'src2') THEN 50
                  WHEN source IN ('src3', 'src4') THEN 25 ELSE 10 END
     """,
@@ -695,8 +694,6 @@ def sample_hash_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     (id, salt), so re-runs, retried tasks, and other engines select
     the IDENTICAL sample (the DuckDB oracle proves it). Zero shuffle:
     the filter runs inside the scan projection."""
-    from ..ops.hashing import md5_long
-
     docs = table(spark, sf_dir, "documents")
     rate = (
         F.when(F.col("source").isin("src0", "src1", "src2"), 50)

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from . import _SQL_TOKS, query, table
 from ..ops import text as X
-from ..ops.hashing import md5_long, sql_md5_long
+from ..ops.hashing import hash_split, md5_long, sql_hash_split, sql_md5_long
 
 
 @query(
@@ -70,9 +70,7 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH assigned AS (
       SELECT doc_id, lang,
-             CASE WHEN {sql_md5_long("doc_id")} % 100 < 90 THEN 'train'
-                  WHEN {sql_md5_long("doc_id")} % 100 < 95 THEN 'eval'
-                  ELSE 'test' END AS split
+             {sql_hash_split("doc_id")} AS split
       FROM documents
     )
     SELECT lang, split, count(*) AS n_docs
@@ -86,14 +84,8 @@ def split_train_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed as one codegen'd expression with no shuffle beyond the
     verification count."""
     docs = table(spark, sf_dir, "documents")
-    bucket = md5_long(F.col("doc_id")) % 100
-    split = (
-        F.when(bucket < 90, F.lit("train"))
-        .when(bucket < 95, F.lit("eval"))
-        .otherwise(F.lit("test"))
-    )
     return (
-        docs.select("lang", split.alias("split"))
+        docs.select("lang", hash_split("doc_id").alias("split"))
         .groupBy("lang", "split")
         .agg(F.count("*").alias("n_docs"))
     )

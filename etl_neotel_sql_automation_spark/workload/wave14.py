@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from . import _SQL_TOKS, query, table
 from ..ops import text as X
-from ..ops.hashing import md5_long
+from ..ops.hashing import salted_bucket, sql_salted_bucket
 
 # ---------------------------------------------------------------------------
 # diag_join_size_estimate — |orders JOIN lineitem ON orderkey| without
@@ -43,19 +43,7 @@ from ..ops.hashing import md5_long
 
 _JSE_D = 4
 _JSE_W = 2048
-
-
-def _jse_bucket_sql(key_expr: str) -> str:
-    return (
-        f"CAST(('0x' || substr(md5(CAST({key_expr} AS VARCHAR) || ':jse' ||"
-        f" CAST(r AS VARCHAR)), 1, 15)) AS BIGINT) % {_JSE_W}"
-    )
-
-
-def _jse_bucket(key, r):
-    return md5_long(
-        F.concat_ws("", key.cast("string"), F.lit(":jse"), r.cast("string"))
-    ) % _JSE_W
+_SQL_JSE_BUCKET = sql_salted_bucket("k", ":jse", _JSE_W)
 
 
 @query(
@@ -63,10 +51,10 @@ def _jse_bucket(key, r):
     oracle=f"""
     WITH ra AS (SELECT o_orderkey AS k, unnest([0, 1, 2, 3]) AS r FROM orders),
     rb AS (SELECT l_orderkey AS k, unnest([0, 1, 2, 3]) AS r FROM lineitem),
-    ska AS (SELECT r, {_jse_bucket_sql('k')} AS b,
+    ska AS (SELECT r, {_SQL_JSE_BUCKET} AS b,
                    CAST(count(*) AS BIGINT) AS cnt
             FROM ra GROUP BY 1, 2),
-    skb AS (SELECT r, {_jse_bucket_sql('k')} AS b,
+    skb AS (SELECT r, {_SQL_JSE_BUCKET} AS b,
                    CAST(count(*) AS BIGINT) AS cnt
             FROM rb GROUP BY 1, 2),
     ip AS (
@@ -119,7 +107,9 @@ def join_size_estimate_frame(a: DataFrame, b: DataFrame) -> DataFrame:
     def sketch(kc: DataFrame) -> DataFrame:
         return (
             kc.select("k", "n", rs)
-            .select("r", _jse_bucket(F.col("k"), F.col("r")).alias("b"), "n")
+            .select(
+                "r", salted_bucket(F.col("k"), ":jse", F.col("r"), _JSE_W).alias("b"), "n"
+            )
             .groupBy("r", "b")
             .agg(F.sum("n").cast("bigint").alias("cnt"))
         )

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from . import _SQL_TOKS, query, table
 from ..ops import text as X
+from ..ops.hashing import md5_long, sql_md5_long
 
 # ---------------------------------------------------------------------------
 # orders_price_volume_mix — per priority segment: 1997 vs 1998
@@ -126,10 +127,10 @@ def pvm_frame(orders: DataFrame) -> DataFrame:
 # train_mlm_masking_stats — BERT-style masking audit per source:
 # select 15% of token positions by md5 threshold; of the selected,
 # 80% become [MASK], 10% a random token, 10% stay — the selector and
-# the 80/10/10 split are two digit groups of ONE md5_long-convention
-# hash of (doc_id, position) — the ops/hashing.py 15-hex-char bigint —
-# so both engines replay every decision. Output per source: token count,
-# selected, masked/random/kept, selected ppm (should hug 150000).
+# the 80/10/10 split are two digit groups of ONE md5_long hash of
+# (doc_id, position), so both engines replay every decision. Output
+# per source: token count, selected, masked/random/kept, selected ppm
+# (should hug 150000).
 # ---------------------------------------------------------------------------
 
 _MLM_SEL_PCT = 15
@@ -143,16 +144,13 @@ _MLM_SEL_PCT = 15
              unnest(generate_series(1, len({_SQL_TOKS}))) AS pos
       FROM documents
     ),
-    dec AS (
+    h AS (
       SELECT source,
-             CAST(('0x' || substr(md5('mlm:' || CAST(doc_id AS VARCHAR) || ':'
-                                      || CAST(pos AS VARCHAR)), 1, 15))
-                  AS BIGINT) % 100 AS sel_d,
-             (CAST(('0x' || substr(md5('mlm:' || CAST(doc_id AS VARCHAR)
-                                       || ':' || CAST(pos AS VARCHAR)), 1, 15))
-                   AS BIGINT) // 100) % 10 AS split_d
+             {sql_md5_long("'mlm:' || CAST(doc_id AS VARCHAR) || ':' || CAST(pos AS VARCHAR)")}
+               AS h
       FROM tok
-    )
+    ),
+    dec AS (SELECT source, h % 100 AS sel_d, (h // 100) % 10 AS split_d FROM h)
     SELECT source,
            CAST(count(*) AS BIGINT) AS n_tokens,
            CAST(sum(CASE WHEN sel_d < {_MLM_SEL_PCT} THEN 1 ELSE 0 END)
@@ -184,14 +182,15 @@ def mlm_masking_frame(docs: DataFrame) -> DataFrame:
             F.sequence(F.lit(1), F.size(X.tokens(F.col("text"))))
         ).alias("pos"),
     )
-    h = (
-        "CAST(conv(substr(md5(concat('mlm:', CAST(doc_id AS STRING), ':',"
-        " CAST(pos AS STRING))), 1, 15), 16, 10) AS BIGINT)"
+    h = md5_long(
+        F.concat(
+            F.lit("mlm:"), F.col("doc_id").cast("string"), F.lit(":"), F.col("pos").cast("string")
+        )
     )
-    dec = tok.select(
+    dec = tok.select("source", h.alias("h")).select(
         "source",
-        F.expr(f"({h}) % 100").cast("bigint").alias("sel_d"),
-        F.expr(f"(({h}) div 100) % 10").cast("bigint").alias("split_d"),
+        (F.col("h") % 100).alias("sel_d"),
+        F.expr("(h div 100) % 10").alias("split_d"),
     )
     sel = f"sel_d < {_MLM_SEL_PCT}"
     return (

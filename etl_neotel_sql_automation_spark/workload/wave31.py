@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from . import query, table
+from ..ops.hashing import sql_md5_long
 from .wave23 import _BH_K, _BH_QUERIES
 from .wave24 import _rerank_sql, binary_rerank_frame
 
@@ -277,12 +278,11 @@ _RRM_SAMPLE_MOD = 4
 def _rerank_sampled_sql(select_clause: str) -> str:
     """The _rerank_sql text with every embeddings scan replaced by the
     hash-sampled view (queries always kept; corpus ids kept when the
-    15-hex-digit md5 prefix is 0 mod _RRM_SAMPLE_MOD — the exact
-    predicate of corpus_mining._margin_sides_sql)."""
+    md5_long is 0 mod _RRM_SAMPLE_MOD — the exact predicate of
+    corpus_mining._margin_sides_sql)."""
     sampled = (
         f"(SELECT * FROM embeddings WHERE vec_id < {_BH_QUERIES}"
-        f" OR CAST(('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 15))"
-        f" AS BIGINT) % {_RRM_SAMPLE_MOD} = 0) embs"
+        f" OR {sql_md5_long('vec_id')} % {_RRM_SAMPLE_MOD} = 0) embs"
     )
     return _rerank_sql(select_clause).replace(
         "FROM embeddings", f"FROM {sampled}"
@@ -291,8 +291,8 @@ def _rerank_sampled_sql(select_clause: str) -> str:
 
 def sampled_emb(emb: DataFrame) -> DataFrame:
     """Spark twin of the sampled view: keep every query vector and the
-    md5 hash-sample of the corpus (same 15-hex-digit prefix arithmetic
-    as the DuckDB predicate, so both engines keep identical ids)."""
+    md5 hash-sample of the corpus (the DuckDB predicate's md5_long, so
+    both engines keep identical ids)."""
     from .corpus_mining import _margin_sample_pred
 
     return emb.filter(

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from . import query, table
 from ..ops import dedup as D
-from ..ops.hashing import md5_long, sql_md5_long
+from ..ops.hashing import hash_split, sql_hash_split
 from .llm_ops import _minhash_oracle
 
 # expected cross-split shares under hash-independence, ppm (90/5/5):
@@ -62,18 +62,9 @@ def split_leakage_frame(docs: DataFrame) -> DataFrame:
     cand = D.minhash_lsh_candidates(docs, hash_fn="md5").select(
         "id_a", "id_b"
     )
-
-    def split_of(c: str):
-        b = md5_long(F.col(c)) % 100
-        return (
-            F.when(b < 90, F.lit("train"))
-            .when(b < 95, F.lit("eval"))
-            .otherwise(F.lit("test"))
-        )
-
     pairs = cand.select(
-        F.least(split_of("id_a"), split_of("id_b")).alias("split_lo"),
-        F.greatest(split_of("id_a"), split_of("id_b")).alias("split_hi"),
+        F.least(hash_split("id_a"), hash_split("id_b")).alias("split_lo"),
+        F.greatest(hash_split("id_a"), hash_split("id_b")).alias("split_hi"),
     )
     g = pairs.groupBy("split_lo", "split_hi").agg(
         F.count("*").cast("bigint").alias("n_pairs")
@@ -109,12 +100,7 @@ def split_leakage_frame(docs: DataFrame) -> DataFrame:
     oracle=f"""
     WITH cand AS (SELECT id_a, id_b FROM ({_minhash_oracle()})),
     lab AS (
-      SELECT CASE WHEN {sql_md5_long("id_a")} % 100 < 90 THEN 'train'
-                  WHEN {sql_md5_long("id_a")} % 100 < 95 THEN 'eval'
-                  ELSE 'test' END AS sa,
-             CASE WHEN {sql_md5_long("id_b")} % 100 < 90 THEN 'train'
-                  WHEN {sql_md5_long("id_b")} % 100 < 95 THEN 'eval'
-                  ELSE 'test' END AS sb
+      SELECT {sql_hash_split("id_a")} AS sa, {sql_hash_split("id_b")} AS sb
       FROM cand
     ),
     p AS (

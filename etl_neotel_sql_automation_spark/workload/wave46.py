@@ -35,33 +35,16 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from . import query, table
-from ..ops.hashing import md5_long, sql_md5_long
+from ..ops.hashing import hash_split, md5_long, sql_hash_split, sql_md5_long
 
 _CB_CAL_MOD = 4  # calibration = md5 hash-sample of the eval split
 _CB_ALPHA_NUM, _CB_ALPHA_DEN = 9, 10  # 90% nominal coverage
 
 
-def _split_col(c: str):
-    b = md5_long(F.col(c)) % 100
-    return (
-        F.when(b < 90, F.lit("train"))
-        .when(b < 95, F.lit("eval"))
-        .otherwise(F.lit("test"))
-    )
-
-
-def _sql_split(c: str) -> str:
-    return (
-        f"CASE WHEN {sql_md5_long(c)} % 100 < 90 THEN 'train'"
-        f" WHEN {sql_md5_long(c)} % 100 < 95 THEN 'eval'"
-        " ELSE 'test' END"
-    )
-
-
 def conformal_bounds_frame(docs: DataFrame) -> DataFrame:
     """Frame core of quality_conformal_bounds (scaling-probe entry)."""
     base = docs.select(
-        "doc_id", "source", "n_chars", _split_col("doc_id").alias("split")
+        "doc_id", "source", "n_chars", hash_split("doc_id").alias("split")
     )
     mu = (
         base.filter(F.col("split") == "train")
@@ -142,7 +125,7 @@ def conformal_bounds_frame(docs: DataFrame) -> DataFrame:
     oracle=f"""
     WITH base AS (
       SELECT doc_id, source, n_chars,
-             {_sql_split("doc_id")} AS split
+             {sql_hash_split("doc_id")} AS split
       FROM documents
     ),
     mu AS (

@@ -33,17 +33,8 @@ from pyspark.sql import functions as F
 from . import query, table
 from ..ops import dedup as D
 from ..ops import graph as G
-from ..ops.hashing import md5_long, sql_md5_long
+from ..ops.hashing import hash_split, sql_hash_split
 from .llm_ops import _minhash_oracle
-
-
-def _split_of(c) -> F.Column:
-    b = md5_long(c) % 100
-    return (
-        F.when(b < 90, F.lit("train"))
-        .when(b < 95, F.lit("eval"))
-        .otherwise(F.lit("test"))
-    )
 
 
 def split_cluster_routing_frame(docs: DataFrame) -> DataFrame:
@@ -78,8 +69,8 @@ def split_cluster_routing_frame(docs: DataFrame) -> DataFrame:
         .select(
             "doc_id",
             "cluster_id",
-            _split_of(F.col("doc_id")).alias("naive_split"),
-            _split_of(F.col("cluster_id")).alias("routed_split"),
+            hash_split("doc_id").alias("naive_split"),
+            hash_split("cluster_id").alias("routed_split"),
         )
     )
     leak_after = (
@@ -135,13 +126,6 @@ def split_cluster_routing_frame(docs: DataFrame) -> DataFrame:
 
 
 def _routing_oracle() -> str:
-    def split(c: str) -> str:
-        return (
-            f"CASE WHEN {sql_md5_long(c)} % 100 < 90 THEN 'train'"
-            f" WHEN {sql_md5_long(c)} % 100 < 95 THEN 'eval'"
-            " ELSE 'test' END"
-        )
-
     return f"""
     WITH RECURSIVE cand AS (SELECT id_a, id_b FROM ({_minhash_oracle()})),
     edges AS (
@@ -158,8 +142,8 @@ def _routing_oracle() -> str:
     ),
     lab AS (
       SELECT doc_id, cluster_id,
-             {split("doc_id")} AS naive_split,
-             {split("cluster_id")} AS routed_split
+             {sql_hash_split("doc_id")} AS naive_split,
+             {sql_hash_split("cluster_id")} AS routed_split
       FROM clusters
     ),
     leak_after AS (

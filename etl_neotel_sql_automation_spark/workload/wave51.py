@@ -32,24 +32,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import _DEC, _SQL_TOKS, query, table
-from .curation import _W_BUCKETS
+from .curation import hashed_logit, sql_hashed_logit
 from ..ops import text as X
 
 
 def roc_auc_frame(docs: DataFrame) -> DataFrame:
     """Frame core of quality_roc_auc (scaling-probe entry): exact AUC
     of the hashed-classifier logit against label = (lang = 'en')."""
-    toks = X.tokens("text")
-    weights = F.transform(
-        toks,
-        lambda t: F.conv(F.substring(F.md5(F.lower(t)), 1, 15), 16, 10)
-        .cast("long")
-        % _W_BUCKETS
-        - 1000,
-    )
-    logit = F.aggregate(weights, F.lit(0).cast("long"), lambda acc, x: acc + x)
     scored = docs.select(
-        logit.alias("score"),
+        hashed_logit(X.tokens("text")).alias("score"),
         (F.col("lang") == "en").cast("long").alias("label"),
     )
     cv = scored.groupBy("score").agg(
@@ -98,9 +89,7 @@ def roc_auc_frame(docs: DataFrame) -> DataFrame:
     "quality_roc_auc",
     oracle=f"""
     WITH scored AS (
-      SELECT CAST(coalesce(list_sum(list_transform({_SQL_TOKS},
-               t -> CAST(('0x' || substr(md5(lower(t)), 1, 15)) AS BIGINT)
-                    % {_W_BUCKETS} - 1000)), 0) AS BIGINT) AS score,
+      SELECT {sql_hashed_logit(_SQL_TOKS)} AS score,
              CAST(lang = 'en' AS BIGINT) AS label
       FROM documents
     ),

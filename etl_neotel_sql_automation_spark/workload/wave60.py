@@ -30,12 +30,31 @@ everything after the second aggregate is constant-size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import query, table
+from ..ops.hashing import md5_long, sql_md5_long
 
 _N_PERMS = 20
+
+SQL_PERM_ARM = (
+    "CAST(CASE WHEN seed = -1 THEN user_id % 2 ELSE "
+    + sql_md5_long("CAST(user_id AS VARCHAR) || '_' || CAST(seed AS VARCHAR)")
+    + " % 2 END AS INTEGER)"
+)
+
+
+def perm_arm() -> Column:
+    """Arm (0/1) of ``user_id`` under ``seed``: seed -1 is the observed
+    user_id parity, any other seed the parity of md5_long(user_id || '_'
+    || seed). Spark twin of SQL_PERM_ARM."""
+    seeded = F.concat(F.col("user_id").cast("string"), F.lit("_"), F.col("seed").cast("string"))
+    return (
+        F.when(F.col("seed") == -1, F.col("user_id") % 2)
+        .otherwise(md5_long(seeded) % 2)
+        .cast("int")
+    )
 
 
 def permutation_test_frame(ev: DataFrame) -> DataFrame:
@@ -51,12 +70,7 @@ def permutation_test_frame(ev: DataFrame) -> DataFrame:
     ).select(
         F.col("seed").cast("int").alias("seed"),
         "v",
-        F.expr(
-            "CAST(CASE WHEN seed = -1 THEN user_id % 2"
-            " ELSE CAST(conv(substring(md5(concat(CAST(user_id AS STRING),"
-            " '_', CAST(seed AS STRING))), 1, 15), 16, 10) AS BIGINT)"
-            " % 2 END AS INT)"
-        ).alias("arm"),
+        perm_arm().alias("arm"),
     )
     g = e.groupBy("seed").agg(
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
@@ -117,10 +131,7 @@ def permutation_test_frame(ev: DataFrame) -> DataFrame:
     ),
     e AS (
       SELECT CAST(seed AS INTEGER) AS seed, v,
-             CAST(CASE WHEN seed = -1 THEN user_id % 2
-                  ELSE CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)
-                       || '_' || CAST(seed AS VARCHAR)), 1, 15)) AS BIGINT)
-                       % 2 END AS INTEGER) AS arm
+             {SQL_PERM_ARM} AS arm
       FROM u CROSS JOIN
         (SELECT unnest(generate_series(-1, {_N_PERMS - 1})) AS seed)
     ),

@@ -26,6 +26,7 @@ from . import GRAPH_SUPP_OFFSET, _SQL_TOKS, purchase_graph, purchase_pairs, quer
 from ..ops import similarity as S
 from ..ops import text as X
 from ..ops.graph import bfs
+from ..ops.hashing import md5_long, sql_md5_long
 from .corpus_mining import BM25_SCORED_SQL, bm25_doc_scores
 from .llm_ops import _SQL_QUALITY
 from .wave6d import _EDGES_SQL
@@ -700,11 +701,7 @@ _SHUF_SEED = "ep1"
 _SHUF_SHARDS = 8
 _SHUF_HEAD = 5
 
-_SHUF_KEY_SQL = (
-    "CAST(('0x' || substr(md5('"
-    + _SHUF_SEED
-    + ":' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)"
-)
+_SHUF_KEY_SQL = sql_md5_long(f"'{_SHUF_SEED}:' || CAST(doc_id AS VARCHAR)")
 
 
 @query(
@@ -743,8 +740,6 @@ def train_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 def epoch_shuffle_frame(docs: DataFrame) -> DataFrame:
     """train_epoch_shuffle over any documents-shaped frame — the
     probe-reusable body."""
-    from ..ops.hashing import md5_long
-
     key = md5_long(F.concat(F.lit(_SHUF_SEED + ":"), F.col("doc_id").cast("string")))
     keyed = docs.select("doc_id", key.alias("key"), (key % _SHUF_SHARDS).alias("shard"))
     wp = W.partitionBy("shard").orderBy("key", "doc_id")

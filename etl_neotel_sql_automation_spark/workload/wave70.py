@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import query, table
+from .wave60 import SQL_PERM_ARM, perm_arm
 
 _N_PERMS = 20
 _ALPHA_PPM = 100_000  # alpha = 0.10
@@ -56,12 +57,7 @@ def bh_fdr_frame(ev: DataFrame) -> DataFrame:
         F.explode(F.expr(f"sequence(-1, {_N_PERMS - 1})")).alias("seed"),
     ).select(
         F.col("seed").cast("int").alias("seed"),
-        F.expr(
-            "CAST(CASE WHEN seed = -1 THEN user_id % 2"
-            " ELSE CAST(conv(substring(md5(concat(CAST(user_id AS STRING),"
-            " '_', CAST(seed AS STRING))), 1, 15), 16, 10) AS BIGINT)"
-            " % 2 END AS INT)"
-        ).alias("arm"),
+        perm_arm().alias("arm"),
         "m_value",
         "m_conv",
         "m_events",
@@ -184,10 +180,7 @@ _SQL_ARMS = ", ".join(
     ),
     e AS (
       SELECT CAST(seed AS INTEGER) AS seed,
-             CAST(CASE WHEN seed = -1 THEN user_id % 2
-                  ELSE CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)
-                       || '_' || CAST(seed AS VARCHAR)), 1, 15)) AS BIGINT)
-                       % 2 END AS INTEGER) AS arm,
+             {SQL_PERM_ARM} AS arm,
              m_value, m_conv, m_events, m_purch
       FROM u CROSS JOIN
         (SELECT unnest(generate_series(-1, {_N_PERMS - 1})) AS seed)

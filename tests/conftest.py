@@ -6,8 +6,17 @@ from etl_neotel_sql_automation_spark.session import get_spark
 
 
 @pytest.fixture(scope="session")
-def spark():
-    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
+def spark(tmp_path_factory):
+    # a fresh warehouse per session: the default ./spark-warehouse is
+    # shared by every process started in the checkout, and registered
+    # queries drop and rewrite fixed-name managed tables there
+    warehouse = str(tmp_path_factory.mktemp("spark-warehouse"))
+    s = get_spark(
+        app_name="tests",
+        master="local[4]",
+        shuffle_partitions=4,
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
+    )
     yield s
     # keep session alive across test modules; stopped at interpreter exit
 

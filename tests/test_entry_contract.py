@@ -58,3 +58,17 @@ def test_allowlisted_empties_are_nonzero_at_sf001(spark):
     qs = entrymod.queries()
     for name in EMPTY_OK_SF0001:
         assert qs[name](spark, "/root/testdata/sf0.01").limit(1).collect(), name
+
+
+def test_session_warehouse_is_outside_the_checkout(spark):
+    """Registered queries drop and rewrite fixed-name managed tables
+    (dedup_embedding_indexed's ``lsh_idx_registered``), so a warehouse
+    under the working directory is shared with every other process
+    started there — an oracle sweep run beside the tests deleted the
+    table files under them. The test session keeps its own."""
+    from urllib.parse import urlparse
+
+    warehouse = os.path.realpath(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for d in {os.path.realpath(os.getcwd()), os.path.realpath(repo)}:
+        assert os.path.commonpath([warehouse, d]) != d, (warehouse, d)

@@ -1,16 +1,19 @@
-"""The exact cosine and the exact Jaccard are each written once:
-``ops.similarity.cos6`` is the round-6 quotient ``dot(a, b) / (|a| *
-|b|)`` that every similarity oracle replays, ``ops.dedup.jaccard6`` the
-round-6 quotient ``n / (a + b - n)`` that every Jaccard oracle replays,
-and every other module scores through them. A second hand-written copy
-can drift from the oracle rule (a different rounding, a per-pair norm),
-so the package may hold exactly one of each. Static, so a new module
-cannot bring a copy back."""
+"""The exact cosine, the exact Jaccard and the cross-engine hash are
+each written once: ``ops.similarity.cos6`` is the round-6 quotient
+``dot(a, b) / (|a| * |b|)`` that every similarity oracle replays,
+``ops.dedup.jaccard6`` the round-6 quotient ``n / (a + b - n)`` that
+every Jaccard oracle replays, ``ops.hashing`` the md5 -> 60-bit rule
+(first 15 hex chars of md5) and the 60-bit word table on each engine,
+and every other module goes through them. A second hand-written copy
+can drift from the oracle rule (a different rounding, a per-pair norm,
+another prefix length), so the package may hold exactly one of each.
+Static, so a new module cannot bring a copy back."""
 
 from __future__ import annotations
 
 import ast
 import os
+import re
 
 PACKAGE = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -87,3 +90,59 @@ def test_cosine_quotient_written_once_in_cos6():
 
 def test_jaccard_quotient_written_once_in_jaccard6():
     assert _quotients(_is_jaccard_quotient) == [(os.path.join("ops", "dedup.py"), "jaccard6")]
+
+
+_MD5_PREFIX = re.compile(r"substr(?:ing)?\(\s*(?:F\.)?md5\(")
+
+
+def _md5_prefix_len(src: str, start: int) -> str | None:
+    """Length argument of the ``substr(md5(...), 1, N)`` opened at
+    ``start`` (just past ``md5(``), skipping the nested md5 argument."""
+    depth, i = 1, start
+    while depth and i < len(src):
+        depth += {"(": 1, ")": -1}.get(src[i], 0)
+        i += 1
+    m = re.match(r"\s*,\s*1\s*,\s*(\d+)", src[i:])
+    return m.group(1) if m else None
+
+
+def _md5_rule_copies() -> list[tuple[str, str]]:
+    """(module path, enclosing function) of every 15-char md5 prefix
+    taken in Spark or DuckDB text — the md5 -> 60-bit rule spelled out.
+    A 16-char prefix (``wave9``'s string digest) is a different rule."""
+    found = []
+    for root, _, files in os.walk(PACKAGE):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            with open(path) as fh:
+                src = fh.read()
+            funcs = [
+                n for n in ast.walk(ast.parse(src)) if isinstance(n, ast.FunctionDef)
+            ]
+            for m in _MD5_PREFIX.finditer(src):
+                if _md5_prefix_len(src, m.end()) != "15":
+                    continue
+                line = src.count("\n", 0, m.start()) + 1
+                scope = [fn.name for fn in funcs if fn.lineno <= line <= fn.end_lineno]
+                found.append((os.path.relpath(path, PACKAGE), (["<module>"] + scope)[-1]))
+    return found
+
+
+def test_md5_rule_written_once_per_engine_in_hashing():
+    hashing = os.path.join("ops", "hashing.py")
+    assert _md5_rule_copies() == [(hashing, "md5_long"), (hashing, "sql_md5_long")]
+
+
+def test_bit_table_built_only_in_hashing():
+    """The 60-bit word table (``bit_or`` over one-bit masks) is built in
+    one function per engine, ``ops.hashing.bit_words`` / ``sql_bit_words``."""
+    found = []
+    for root, _, files in os.walk(PACKAGE):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                with open(os.path.join(root, f)) as fh:
+                    if re.search(r"bit_or\(", fh.read()):
+                        found.append(os.path.relpath(os.path.join(root, f), PACKAGE))
+    assert found == [os.path.join("ops", "hashing.py")]

@@ -106,7 +106,11 @@ def main() -> int:
     # one JVM accumulate localCheckpoint blocks and broadcast state
     # faster than the ContextCleaner reaps them — the 1g default OOMed
     # 82 queries into the sf0.1 sweep (r5 BUILDLOG).
+    # Its own warehouse: registered queries drop and rewrite fixed-name
+    # managed tables, so a shared ./spark-warehouse lets a concurrent
+    # test run in the same checkout delete this sweep's files.
     import os
+    import tempfile
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -114,6 +118,7 @@ def main() -> int:
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="check-oracle-warehouse-"))
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
