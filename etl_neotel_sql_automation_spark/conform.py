@@ -27,11 +27,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions import (
-    _ident,
     clean_name,
     date_dayfirst,
     float0,
     int0,
+    time_cell_sql,
     time_minutes_sql,
     time_str_to_minutes,
 )
@@ -113,7 +113,7 @@ def conform(df: DataFrame, spec: ConformSpec) -> DataFrame:
         arr = "_times"
         while arr in spec.final_cols:
             arr += "_"
-        cells = ", ".join(f"CAST({_ident(c)} AS STRING)" for c in times)
+        cells = ", ".join(map(time_cell_sql, times))
         df = df.select(*projection, F.expr(f"transform(array({cells}), x -> {time_minutes_sql('x')})").alias(arr))
         projection = [
             F.coalesce(F.col(arr)[times.index(c)], F.lit(0.0)).alias(c) if c in times else c

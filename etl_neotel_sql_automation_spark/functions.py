@@ -9,14 +9,14 @@ column expressions** — no Python UDFs, so whole-stage codegen,
 predicate pushdown and column pruning stay intact (SURVEY.md §2.10).
 Time cells parse with one anchored regex rather than a split/trim/cast
 tree per part. The time rule is one SQL definition,
-:func:`time_minutes_sql`, over any string expression:
-:func:`time_str_to_minutes` applies it to one column, and ``conform``
-applies it once per report, as a lambda over an array of the report's
-time columns. Written out once per column, the 26 time columns of
-``estados_operativos`` generated a method of 47,411 bytecode bytes, past
-the 8,000 bytes above which HotSpot does not JIT-compile a method, so
-the stage ran in the bytecode interpreter; shared, the stage's largest
-method is 3,119 bytes.
+:func:`time_minutes_sql`, over a stripped string cell
+(:func:`time_cell_sql`): :func:`time_str_to_minutes` applies it to one
+column, and ``conform`` applies it once per report, as a lambda over an
+array of the report's time cells. Written out once per column, the 26
+time columns of ``estados_operativos`` generated a method of 47,411
+bytecode bytes, past the 8,000 bytes above which HotSpot does not
+JIT-compile a method, so the stage ran in the bytecode interpreter;
+shared, the stage's largest method is 3,119 bytes.
 
 Every expression is total (never raises) and ANSI-safe: all parsing
 uses ``try_*`` forms, so behavior is identical whether the session has
@@ -87,14 +87,22 @@ def time_str_to_minutes(c: str) -> Column:
     autodetect two-pass (``procesar_columnas_tiempo`` main.py:465-498):
     a value without ``:`` falls through to the numeric branch.
     """
-    return F.expr(time_minutes_sql(f"CAST({_ident(c)} AS STRING)"))
+    return F.expr(time_minutes_sql(time_cell_sql(c)))
 
 
-def time_minutes_sql(x: str) -> str:
+def time_cell_sql(c: str) -> str:
+    """Column ``c`` as the stripped STRING cell :func:`time_minutes_sql`
+    reads."""
+    return f"TRIM(BOTH '{_PY_STRIP}' FROM CAST({_ident(c)} AS STRING))"
+
+
+def time_minutes_sql(s: str) -> str:
     """The rule of :func:`time_str_to_minutes` as SQL text over the
-    STRING-typed SQL expression ``x``; ``conform`` applies it once, as
-    a lambda over all of a report's time columns."""
-    s = f"TRIM(BOTH '{_PY_STRIP}' FROM {x})"
+    stripped STRING-typed SQL expression ``s`` (:func:`time_cell_sql`);
+    ``conform`` applies it once, as a lambda over all of a report's
+    time cells. The rule reads ``s`` about eight times, and a lambda
+    body is evaluated interpreted, without common-subexpression reuse,
+    so the cell is stripped before it reaches the rule."""
     h, m, sec = (f"regexp_extract({s}, '{_HMS_RE}', {i})" for i in (1, 2, 3))
     # An unmatched group extracts as "": a missing seconds part is 0, a
     # failed match or a part or sum that overflows a long is null -> 0.0.

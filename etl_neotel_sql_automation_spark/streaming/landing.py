@@ -38,7 +38,7 @@ from ..io_sinks import load_partitioned
 from ..io_sources import header_schema, sniff_csv_dialect
 from ..ops.hashing import BLOOM_K, TABLE_BITS, WORD_BITS, bit_cell, bit_words, bloom_probes
 from ..schema import ConformSpec
-from ..workload import read_events, read_parquet
+from ..workload import cents, read_events, read_parquet
 
 
 def infer_landing_schema(spark: SparkSession, landing_dir: str | Path) -> tuple[T.StructType, str, str]:
@@ -593,7 +593,7 @@ def stream_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = events_stream(spark, sf_dir)
     priced = events.select(
         "ts",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
+        cents().alias("cents"),
         (
             (
                 F.unix_micros("ts")
@@ -765,15 +765,15 @@ def stream_pchart_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def stream_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The wave-42 sample-ratio-mismatch guardrail as a REAL streaming
+    """The sample-ratio-mismatch guardrail as a REAL streaming
     monitor — the shape it runs in production, where assignment health
     must alarm DURING the experiment, not at readout: events stream in
     (availableNow), per-user dedup is genuine streaming state
     (dropDuplicates on the assignment unit), the per-arm distinct-user
     counts are a streaming aggregation in complete mode, and the
     chi-square + verdict layer is applied display-side to the emitted
-    2-row table (workload.wave42.srm_readout — shared verbatim with
-    the batch query). Must equal events_srm_check row-for-row; the
+    2-row table (workload.experiments.srm_readout — shared verbatim
+    with the batch query). Must equal events_srm_check row-for-row; the
     registered query carries SRM_ORACLE verbatim (policy test:
     tests/test_wave42.py::test_streaming_srm_equals_batch).
 
@@ -781,40 +781,35 @@ def stream_srm_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality every SRM monitor inherently tracks); the arm
     aggregate is 2 rows.
     """
-    from ..workload.wave42 import srm_readout
+    from ..workload.experiments import arm, srm_readout
 
     src = events_stream(spark, sf_dir)
-    arm = (
-        src.select(
-            "user_id", (F.col("user_id") % 2).cast("int").alias("arm")
-        )
+    arms = (
+        src.select("user_id", arm(2).alias("arm"))
         .dropDuplicates(["user_id"])
         .groupBy("arm")
         .agg(F.count("*").cast("bigint").alias("n_users"))
     )
-    return srm_readout(run_available_now(arm, "complete"))
+    return srm_readout(run_available_now(arms, "complete"))
 
 
 def stream_welch_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The wave-48 Welch t readout as a REAL streaming monitor — the
+    """The Welch t readout as a REAL streaming monitor — the
     continuous-metric sibling of stream_srm_monitor: per-user value
     sums are genuine streaming state (a user-keyed streaming
     aggregation in complete mode — updatable as late events arrive,
-    unlike the SRM monitor's insert-only dedup), and the Welch
+    unlike the SRM monitor's insert-only dedup), built by the batch
+    query's own workload.experiments.user_cents, and the Welch
     arm/moment/t layer is applied display-side to the emitted per-user
-    table (workload.wave48.welch_readout — shared verbatim with the
-    batch query). Must equal events_welch_ttest row-for-row (policy
+    table (workload.experiments.welch_readout — shared verbatim with
+    the batch query). Must equal events_welch_ttest row-for-row (policy
     test: tests/test_wave61.py::test_streaming_welch_equals_batch).
 
     Scale: state is one (user_id, sum) row per user — the assignment
     unit every per-user experiment metric inherently tracks; the arm
     readout runs over 2 rows.
     """
-    from ..workload.wave48 import welch_readout
+    from ..workload.experiments import user_cents, welch_readout
 
-    src = events_stream(spark, sf_dir)
-    u = src.groupBy("user_id").agg(
-        F.expr("CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)")
-        .alias("v")
-    )
+    u = user_cents(events_stream(spark, sf_dir))
     return welch_readout(run_available_now(u, "complete"))

@@ -19,11 +19,13 @@ Determinism rules every entry follows:
 
 from __future__ import annotations
 
+import importlib
 import os
+import pkgutil
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 from ..ops.dedup import fan_out
@@ -77,6 +79,17 @@ _SQL_QV = "list_transform(CAST(embedding AS DOUBLE[]), x -> round(x * 1000000))"
 # Exact wide integer for moment sums and closed forms, cast identically on
 # both engines (DuckDB maps it to HUGEINT-range decimals).
 _DEC = "DECIMAL(38,0)"
+
+# Money value in exact integer cents: the same text on both engines, so
+# Spark columns (:func:`cents`) and DuckDB oracles splice one rule.
+_SQL_CENTS = "CAST(round(value * 100) AS BIGINT)"
+
+
+def cents() -> Column:
+    """:data:`_SQL_CENTS` as a Spark column."""
+    from pyspark.sql import functions as F
+
+    return F.expr(_SQL_CENTS)
 
 
 @dataclass(frozen=True)
@@ -189,111 +202,10 @@ _LOADED = False
 
 
 def _ensure_loaded() -> None:
-    """Import all workload modules so their decorators populate REGISTRY."""
+    """Import every workload module, in name order, so their decorators
+    populate REGISTRY."""
     global _LOADED
     if not _LOADED:
-        from . import (  # noqa: F401
-            advanced,
-            analytics_extra,
-            advanced2,
-            breadth,
-            corpus_mining,
-            corpus_stats,
-            curation,
-            etl_surface,
-            final_wave,
-            graph_ops,
-            insights,
-            scale_diag,
-            sql_surface,
-            llm_ops,
-            multimodal_extra,
-            native_aggs,
-            relational,
-            tpch_extra,
-            train_prep,
-            timeseries,
-            quality,
-            temporal,
-            tpch_wave3,
-            tpch_wave4,
-            tpch_wave5,
-            wave6,
-            wave6b,
-            wave6c,
-            wave6d,
-            wave7,
-            wave8,
-            wave9,
-            wave10,
-            wave11,
-            wave12,
-            wave13,
-            wave14,
-            wave15,
-            wave16,
-            wave17,
-            wave18,
-            wave19,
-            wave20,
-            wave21,
-            wave22,
-            wave23,
-            wave24,
-            wave25,
-            wave26,
-            wave27,
-            wave28,
-            wave29,
-            wave30,
-            wave31,
-            wave32,
-            wave33,
-            wave34,
-            wave35,
-            wave36,
-            wave37,
-            wave38,
-            wave39,
-            wave40,
-            wave41,
-            wave42,
-            wave43,
-            wave44,
-            wave45,
-            wave46,
-            wave47,
-            wave48,
-            wave49,
-            wave50,
-            wave51,
-            wave52,
-            wave53,
-            wave54,
-            wave55,
-            wave56,
-            wave57,
-            wave58,
-            wave59,
-            wave60,
-            wave61,
-            wave62,
-            wave63,
-            wave64,
-            wave65,
-            wave66,
-            wave67,
-            wave68,
-            wave69,
-            wave70,
-            wave71,
-            wave72,
-            wave73,
-            wave74,
-            wave75,
-            wave76,
-            wave77,
-            wave78,
-        )
-
+        for name in sorted(m.name for m in pkgutil.iter_modules(__path__)):
+            importlib.import_module(f"{__name__}.{name}")
         _LOADED = True

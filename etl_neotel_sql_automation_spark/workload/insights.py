@@ -610,77 +610,6 @@ def events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Pooled two-proportion z statistic from the four exact counts; one
-# identically-written e0-literal IEEE expression on both engines.
-_AB_Z = (
-    "round((c0 * 1.0e0 / n0 - c1 * 1.0e0 / n1)"
-    " / sqrt(((c0 + c1) * 1.0e0 / (n0 + n1))"
-    "        * (1.0e0 - (c0 + c1) * 1.0e0 / (n0 + n1))"
-    "        * (1.0e0 / n0 + 1.0e0 / n1)), 6)"
-)
-
-
-@query(
-    "events_ab_test",
-    oracle=f"""
-    WITH c AS (
-      SELECT
-        count(DISTINCT CASE WHEN user_id % 2 = 0 THEN user_id END) AS n0,
-        count(DISTINCT CASE WHEN user_id % 2 = 0 AND event_type = 'purchase'
-                            AND value > 150.0e0 THEN user_id END) AS c0,
-        count(DISTINCT CASE WHEN user_id % 2 = 1 THEN user_id END) AS n1,
-        count(DISTINCT CASE WHEN user_id % 2 = 1 AND event_type = 'purchase'
-                            AND value > 150.0e0 THEN user_id END) AS c1
-      FROM events
-    )
-    SELECT n0, c0, n1, c1,
-           c0 * 1000000 // n0 AS cr0_ppm,
-           c1 * 1000000 // n1 AS cr1_ppm,
-           {_AB_Z} AS z
-    FROM c
-    """,
-)
-def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion A/B test readout: users hash-split into variants
-    (user_id parity — the deterministic stand-in for an assignment
-    column), conversion = any 'purchase' event, and the pooled
-    two-proportion z statistic computed from the four exact distinct
-    counts in one e0-literal IEEE expression rounded identically on
-    both engines. This is the experimentation-readout operator every
-    product-analytics warehouse ends up running nightly.
-
-    Scale shape: ONE pass over events — four conditional
-    count-distincts in a single hash aggregate (each is a user-keyed
-    distinct, combinable map-side) — then scalar arithmetic on a
-    1-row frame. No joins, no windows; at 100 TB the cost is the one
-    distinct-user shuffle, shared by all four counts.
-    """
-    return ab_test_frame(table(spark, sf_dir, "events"))
-
-
-def ab_test_frame(ev: DataFrame) -> DataFrame:
-    """The events_ab_test plan over any events-shaped frame (user_id,
-    event_type, value) — shared with tools/scale_probe.py events so
-    the scaling probe measures the registered query's exact plan."""
-    even = F.col("user_id") % 2 == 0
-    purch = (F.col("event_type") == "purchase") & (F.col("value") > 150.0)
-    c = ev.agg(
-        F.countDistinct(F.when(even, F.col("user_id"))).alias("n0"),
-        F.countDistinct(F.when(even & purch, F.col("user_id"))).alias("c0"),
-        F.countDistinct(F.when(~even, F.col("user_id"))).alias("n1"),
-        F.countDistinct(F.when(~even & purch, F.col("user_id"))).alias("c1"),
-    )
-    return c.select(
-        "n0",
-        "c0",
-        "n1",
-        "c1",
-        F.expr("c0 * 1000000 div n0").alias("cr0_ppm"),
-        F.expr("c1 * 1000000 div n1").alias("cr1_ppm"),
-        F.expr(_AB_Z).alias("z"),
-    )
-
-
 @query(
     "orders_cohort_ltv",
     oracle="""

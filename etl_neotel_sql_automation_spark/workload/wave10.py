@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from . import query, table
+from . import _SQL_CENTS, cents, query, table
 
 # ---------------------------------------------------------------------------
 # streaming_hourly_ohlc — tick-to-bar as a STREAMING aggregation: the
@@ -36,10 +36,10 @@ from . import query, table
 
 @query(
     "streaming_hourly_ohlc",
-    oracle="""
+    oracle=f"""
     WITH r AS (
       SELECT date_trunc('hour', ts) AS hour_start,
-             CAST(round(value * 100) AS BIGINT) AS cents,
+             {_SQL_CENTS} AS cents,
              date_diff('microsecond', date_trunc('hour', ts), ts) * 16777216
                + event_id AS k
       FROM events
@@ -170,10 +170,10 @@ def window_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_twap_daily",
-    oracle="""
+    oracle=f"""
     WITH r AS (
       SELECT event_type, ts, event_id,
-             CAST(round(value * 100) AS BIGINT) AS cents,
+             {_SQL_CENTS} AS cents,
              CAST(date_trunc('day', ts) AS DATE) AS day
       FROM events
     ),
@@ -200,7 +200,7 @@ def events_twap_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
+        cents().alias("cents"),
         F.to_date(F.date_trunc("day", "ts")).alias("day"),
     )
     nxt = F.lead("ts").over(

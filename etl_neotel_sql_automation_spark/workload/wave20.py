@@ -1,24 +1,17 @@
-"""Round-6 wave-20 workloads: experimentation machinery and tail/
-changepoint structure — CUPED variance reduction (the pre-period
-covariate adjustment every modern experimentation platform applies
-before reading an A/B test), minimum-detectable-effect power analysis
-(the "how long must this test run" readout beside events_ab_test),
-the Hill tail-index estimator (DOES customer spend have a power-law
-tail — the number that justifies Pareto/winsorization policies,
-beside the registered Zipf/Benford fits), and exact single-changepoint
+"""Round-6 wave-20 workloads: tail and changepoint structure — the
+Hill tail-index estimator (DOES customer spend have a power-law tail —
+the number that justifies Pareto/winsorization policies, beside the
+registered Zipf/Benford fits), and exact single-changepoint
 localization by between-class variance (CUSUM detects that a shift
 happened; this says WHERE, maximizing the split score over the day
 support).
 
-Determinism rules (house style): all moment sums are exact BIGINTs in
-cents (DECIMAL(38,0)/HUGEINT closed forms, final division in double,
-round(…, 6) — the corr precedent); ln terms per-term-rounded to
+Determinism rules (house style): ln terms per-term-rounded to
 micro-nats over ratios >= 1 (non-negative); the changepoint score is
 DEFINED on the kilodollar-quantized daily series so the argmax
 comparison is pure integer arithmetic with an earliest-day tiebreak.
 
-Scale notes: CUPED/power are single combinable moment passes keyed by
-user then arm; Hill is a k-bounded TakeOrdered (no full sort
+Scale notes: Hill is a k-bounded TakeOrdered (no full sort
 materialization); the changepoint scan is one window over the DAY
 support.
 """
@@ -30,200 +23,6 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from . import query, table
-
-# ---------------------------------------------------------------------------
-# events_cuped_adjustment — per-user pre/post value sums (split at
-# Jan 16), treatment = user_id parity, theta = cov(pre, post)/var(pre)
-# pooled over all users. Adjusted arm means subtract
-# theta * (pre_mean_arm - pre_mean_grand). Variance reduction is
-# rho^2 (the fraction of post variance the covariate explains).
-# ---------------------------------------------------------------------------
-
-_CUPED_SPLIT = "2024-01-16 00:00:00"
-
-
-@query(
-    "events_cuped_adjustment",
-    oracle=f"""
-    WITH u AS (
-      SELECT user_id, CAST(user_id % 2 AS INTEGER) AS arm,
-             CAST(sum(CASE WHEN ts < TIMESTAMP '{_CUPED_SPLIT}'
-                           THEN CAST(round(value * 100) AS BIGINT)
-                           ELSE 0 END) AS BIGINT) AS pre,
-             CAST(sum(CASE WHEN ts >= TIMESTAMP '{_CUPED_SPLIT}'
-                           THEN CAST(round(value * 100) AS BIGINT)
-                           ELSE 0 END) AS BIGINT) AS post
-      FROM events GROUP BY user_id
-    ),
-    m AS (
-      SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(pre) AS BIGINT) AS sx,
-             CAST(sum(post) AS BIGINT) AS sy,
-             CAST(sum(CAST(pre AS HUGEINT) * pre) AS HUGEINT) AS sxx,
-             CAST(sum(CAST(post AS HUGEINT) * post) AS HUGEINT) AS syy,
-             CAST(sum(CAST(pre AS HUGEINT) * post) AS HUGEINT) AS sxy
-      FROM u
-    ),
-    arm AS (
-      SELECT arm, CAST(count(*) AS BIGINT) AS n_users,
-             CAST(sum(pre) AS BIGINT) AS pre_sum,
-             CAST(sum(post) AS BIGINT) AS post_sum
-      FROM u GROUP BY arm
-    )
-    SELECT arm.arm, arm.n_users,
-           round(arm.post_sum * 1.0e0 / arm.n_users, 6) AS post_mean_cents,
-           round(arm.post_sum * 1.0e0 / arm.n_users
-                 - (CAST(m.n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)
-                    / CAST(m.n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE))
-                   * (arm.pre_sum * 1.0e0 / arm.n_users
-                      - m.sx * 1.0e0 / m.n), 6) AS adjusted_mean_cents,
-           round(CAST(m.n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)
-                 / CAST(m.n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE), 6)
-             AS theta,
-           round(CAST(m.n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)
-                 * CAST(m.n * sxy - CAST(sx AS HUGEINT) * sy AS DOUBLE)
-                 / CAST(m.n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE)
-                 / CAST(m.n * syy - CAST(sy AS HUGEINT) * sy AS DOUBLE), 6)
-             AS var_reduction
-    FROM arm CROSS JOIN m ORDER BY arm.arm
-    """,
-)
-def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED-adjusted arm means of post-period user value (pre-period
-    sum as covariate, pooled theta), plus theta and the rho^2 variance
-    reduction — exact cent moment sums, floats only in the final
-    closed form."""
-    return cuped_frame(table(spark, sf_dir, "events"))
-
-
-def cuped_frame(events: DataFrame) -> DataFrame:
-    """Frame core of events_cuped_adjustment (scaling-probe entry)."""
-    split = F.lit(_CUPED_SPLIT).cast("timestamp")
-    cents = F.expr("CAST(round(value * 100) AS BIGINT)")
-    u = events.groupBy("user_id").agg(
-        F.sum(F.when(F.col("ts") < split, cents).otherwise(F.lit(0)))
-        .cast("bigint")
-        .alias("pre"),
-        F.sum(F.when(F.col("ts") >= split, cents).otherwise(F.lit(0)))
-        .cast("bigint")
-        .alias("post"),
-    ).withColumn("arm", (F.col("user_id") % 2).cast("int"))
-    dec = "DECIMAL(38,0)"
-    m = u.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("pre").cast("bigint").alias("sx"),
-        F.sum("post").cast("bigint").alias("sy"),
-        F.sum(F.expr(f"CAST(pre AS {dec}) * pre")).cast(dec).alias("sxx"),
-        F.sum(F.expr(f"CAST(post AS {dec}) * post")).cast(dec).alias("syy"),
-        F.sum(F.expr(f"CAST(pre AS {dec}) * post")).cast(dec).alias("sxy"),
-    )
-    arm = u.groupBy("arm").agg(
-        F.count("*").cast("bigint").alias("n_users"),
-        F.sum("pre").cast("bigint").alias("pre_sum"),
-        F.sum("post").cast("bigint").alias("post_sum"),
-    )
-    covn = f"CAST(n * sxy - CAST(sx AS {dec}) * sy AS DOUBLE)"
-    varxn = f"CAST(n * sxx - CAST(sx AS {dec}) * sx AS DOUBLE)"
-    varyn = f"CAST(n * syy - CAST(sy AS {dec}) * sy AS DOUBLE)"
-    return (
-        arm.crossJoin(F.broadcast(m))  # 1-row pooled moments
-        .select(
-            "arm",
-            "n_users",
-            F.expr("round(post_sum * 1.0e0 / n_users, 6)").alias(
-                "post_mean_cents"
-            ),
-            F.expr(
-                f"round(post_sum * 1.0e0 / n_users - ({covn} / {varxn})"
-                " * (pre_sum * 1.0e0 / n_users - sx * 1.0e0 / n), 6)"
-            ).alias("adjusted_mean_cents"),
-            F.expr(f"round({covn} / {varxn}, 6)").alias("theta"),
-            F.expr(
-                f"round({covn} * {covn} / {varxn} / {varyn}, 6)"
-            ).alias("var_reduction"),
-        )
-        .orderBy("arm")
-    )
-
-
-# ---------------------------------------------------------------------------
-# events_power_mde — the power-analysis companion of events_ab_test
-# (same conversion definition): pooled conversion rate, the absolute
-# minimum detectable effect at alpha = .05 two-sided / power = .80
-# with the CURRENT arm sizes, and the per-arm sample size a 5%
-# RELATIVE lift would need. z constants are pinned literals so both
-# engines compute the identical closed form.
-# ---------------------------------------------------------------------------
-
-_Z_SUM = "2.801585"  # z_{0.975} + z_{0.80} = 1.959964 + 0.841621
-
-
-@query(
-    "events_power_mde",
-    oracle=f"""
-    WITH c AS (
-      SELECT
-        count(DISTINCT CASE WHEN user_id % 2 = 0 THEN user_id END) AS n0,
-        count(DISTINCT CASE WHEN user_id % 2 = 1 THEN user_id END) AS n1,
-        count(DISTINCT CASE WHEN event_type = 'purchase'
-                            AND value > 150.0e0 THEN user_id END) AS conv
-      FROM events
-    )
-    SELECT CAST(n0 AS BIGINT) AS n0, CAST(n1 AS BIGINT) AS n1,
-           CAST((1000000 * conv) // (n0 + n1) AS BIGINT) AS p_pooled_ppm,
-           round({_Z_SUM} * sqrt(
-                 (conv * 1.0e0 / (n0 + n1)) * (1.0e0 - conv * 1.0e0 / (n0 + n1))
-                 * (1.0e0 / n0 + 1.0e0 / n1)), 6) AS mde_abs,
-           CAST(ceil(2.0e0 * (conv * 1.0e0 / (n0 + n1))
-                     * (1.0e0 - conv * 1.0e0 / (n0 + n1))
-                     * {_Z_SUM} * {_Z_SUM}
-                     / ((0.05e0 * conv / (n0 + n1))
-                        * (0.05e0 * conv / (n0 + n1))))
-                AS BIGINT) AS n_required_per_arm
-    FROM c
-    """,
-)
-def events_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Power analysis for the registered A/B readout: pooled
-    conversion, absolute MDE at the current arm sizes, and the per-arm
-    n a 5% relative lift needs (alpha=.05 two-sided, power=.80)."""
-    return power_mde_frame(table(spark, sf_dir, "events"))
-
-
-def power_mde_frame(events: DataFrame) -> DataFrame:
-    """Frame core of events_power_mde (scaling-probe entry)."""
-    c = events.agg(
-        F.countDistinct(
-            F.when(F.col("user_id") % 2 == 0, F.col("user_id"))
-        ).alias("n0"),
-        F.countDistinct(
-            F.when(F.col("user_id") % 2 == 1, F.col("user_id"))
-        ).alias("n1"),
-        F.countDistinct(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("value") > 150.0),
-                F.col("user_id"),
-            )
-        ).alias("conv"),
-    )
-    p = "(conv * 1.0e0 / (n0 + n1))"
-    return c.select(
-        F.col("n0").cast("bigint").alias("n0"),
-        F.col("n1").cast("bigint").alias("n1"),
-        F.expr("CAST((1000000 * conv) div (n0 + n1) AS BIGINT)").alias(
-            "p_pooled_ppm"
-        ),
-        F.expr(
-            f"round({_Z_SUM} * sqrt({p} * (1.0e0 - {p})"
-            " * (1.0e0 / n0 + 1.0e0 / n1)), 6)"
-        ).alias("mde_abs"),
-        F.expr(
-            f"CAST(ceil(2.0e0 * {p} * (1.0e0 - {p}) * {_Z_SUM} * {_Z_SUM}"
-            f" / ((0.05e0 * conv / (n0 + n1))"
-            f" * (0.05e0 * conv / (n0 + n1)))) AS BIGINT)"
-        ).alias("n_required_per_arm"),
-    )
-
 
 # ---------------------------------------------------------------------------
 # agg_hill_tail_index — Hill's estimator over the top-k order values:

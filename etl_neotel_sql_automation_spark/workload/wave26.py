@@ -1,131 +1,15 @@
-"""Round-6 wave-26 workloads: sequential experimentation and demand
-structure — the SPRT sequential A/B monitor (the peeking-safe
-companion to events_ab_test / events_power_mde: a cumulative
-log-likelihood-ratio walk over the day support with pinned Wald
-boundaries — read daily WITHOUT inflating false positives), and the
-intra-week demand concentration profile (which weekdays carry the
-revenue, with the max-share weekday and its lift over uniform — the
-staffing/capacity readout beside the seasonal decomposition).
-
-Determinism rules (house style): the SPRT's per-outcome LLR
-increments are micro-nat constants derived from PINNED literal
-hypothesis rates (both engines round ln of the same literals — the
-per-term micro-nat precedent); the cumulative walk and its
-boundary-crossing argmin run over the bounded day support; demand
-shares in integer ppm.
+"""Round-6 wave-26 workload: the intra-week demand concentration
+profile (which weekdays carry the revenue, with the max-share weekday
+and its lift over uniform — the staffing/capacity readout beside the
+seasonal decomposition), demand shares in integer ppm.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from . import query, table
-
-# ---------------------------------------------------------------------------
-# events_sprt_monitor — H0: treatment converts at p0 = 20%; H1: at
-# p1 = 26% (a 30% relative lift). Each treatment-arm user contributes
-# ln(p1/p0) if converted else ln((1-p1)/(1-p0)); users are ordered by
-# their first-seen day, the LLR accumulates per day, and Wald's
-# boundaries ln(19) / ln(1/19) (alpha = beta = 0.05) decide. Output:
-# per-day cumulative LLR walk with the standing decision.
-# ---------------------------------------------------------------------------
-
-# The weights ln(0.26/0.20)*1e6, ln(0.74/0.80)*1e6 and boundaries
-# ±ln(19)*1e6 are computed by each engine from the same inline
-# literals (micro-rounded), keeping oracle and frame in lock-step.
-
-
-@query(
-    "events_sprt_monitor",
-    oracle="""
-    WITH inc AS (
-      SELECT CAST(round(ln(0.26e0 / 0.20e0) * 1.0e6) AS BIGINT) AS w_conv,
-             CAST(round(ln(0.74e0 / 0.80e0) * 1.0e6) AS BIGINT) AS w_miss,
-             CAST(round(ln(19.0e0) * 1.0e6) AS BIGINT) AS upper_b
-    ),
-    u AS (
-      SELECT user_id,
-             CAST(min(date_trunc('day', ts)) AS DATE) AS first_day,
-             max(CASE WHEN event_type = 'purchase' AND value > 150.0e0
-                      THEN 1 ELSE 0 END) AS converted
-      FROM events WHERE user_id % 2 = 1
-      GROUP BY user_id
-    ),
-    daily AS (
-      SELECT u.first_day AS day,
-             CAST(count(*) AS BIGINT) AS n_users,
-             CAST(sum(u.converted) AS BIGINT) AS n_conv
-      FROM u GROUP BY u.first_day
-    ),
-    walk AS (
-      SELECT day, n_users, n_conv,
-             CAST(sum(n_conv * (SELECT w_conv FROM inc)
-                      + (n_users - n_conv) * (SELECT w_miss FROM inc))
-                  OVER (ORDER BY day) AS BIGINT) AS llr_micronats
-      FROM daily
-    )
-    SELECT day, n_users, n_conv, llr_micronats,
-           CASE WHEN llr_micronats >= (SELECT upper_b FROM inc) THEN 'ACCEPT_H1'
-                WHEN llr_micronats <= -(SELECT upper_b FROM inc) THEN 'ACCEPT_H0'
-                ELSE 'CONTINUE' END AS decision
-    FROM walk ORDER BY day
-    """,
-)
-def events_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald SPRT walk over the treatment arm's daily cohorts
-    (H0 p=0.20 vs H1 p=0.26, alpha=beta=0.05): cumulative LLR in
-    micro-nats and the standing decision per day."""
-    return sprt_frame(table(spark, sf_dir, "events"))
-
-
-def sprt_frame(ev: DataFrame) -> DataFrame:
-    """Frame core of events_sprt_monitor (scaling-probe entry)."""
-    u = (
-        ev.filter(F.col("user_id") % 2 == 1)
-        .groupBy("user_id")
-        .agg(
-            F.min(F.date_trunc("day", F.col("ts"))).cast("date").alias(
-                "first_day"
-            ),
-            F.max(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("value") > 150.0),
-                    1,
-                ).otherwise(0)
-            ).alias("converted"),
-        )
-    )
-    daily = u.groupBy(F.col("first_day").alias("day")).agg(
-        F.count("*").cast("bigint").alias("n_users"),
-        F.sum("converted").cast("bigint").alias("n_conv"),
-    )
-    w_conv = "CAST(round(ln(0.26e0 / 0.20e0) * 1.0e6) AS BIGINT)"
-    w_miss = "CAST(round(ln(0.74e0 / 0.80e0) * 1.0e6) AS BIGINT)"
-    upper = "CAST(round(ln(19.0e0) * 1.0e6) AS BIGINT)"
-    walk = daily.select(
-        "day",
-        "n_users",
-        "n_conv",
-        F.expr(
-            f"CAST(sum(n_conv * ({w_conv}) + (n_users - n_conv) * ({w_miss}))"
-            " OVER (ORDER BY day) AS BIGINT)"
-        ).alias("llr_micronats"),
-    )
-    return walk.select(
-        "day",
-        "n_users",
-        "n_conv",
-        "llr_micronats",
-        F.expr(
-            f"CASE WHEN llr_micronats >= ({upper}) THEN 'ACCEPT_H1'"
-            f" WHEN llr_micronats <= -({upper}) THEN 'ACCEPT_H0'"
-            " ELSE 'CONTINUE' END"
-        ).alias("decision"),
-    ).orderBy("day")
-
 
 # ---------------------------------------------------------------------------
 # orders_weekday_concentration — where in the week the money lands:

@@ -31,15 +31,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import _DEC, query, table
+from . import _DEC, _SQL_CENTS, cents, query, table
 
 
 def neyman_frame(ev: DataFrame) -> DataFrame:
     """Frame core of sample_neyman_allocation (scaling-probe entry)."""
     u = ev.groupBy("user_id").agg(
         F.expr("CAST(least(7, count(*) div 25) AS INT)").alias("stratum"),
-        F.expr("CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)")
-        .alias("v"),
+        F.sum(cents()).cast("bigint").alias("v"),
     )
     s = u.groupBy("stratum").agg(
         F.count("*").cast("bigint").alias("n_h"),
@@ -100,11 +99,11 @@ def neyman_frame(ev: DataFrame) -> DataFrame:
 
 @query(
     "sample_neyman_allocation",
-    oracle="""
+    oracle=f"""
     WITH u AS (
       SELECT user_id,
              CAST(least(7, count(*) // 25) AS INTEGER) AS stratum,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS v
+             CAST(sum({_SQL_CENTS}) AS BIGINT) AS v
       FROM events GROUP BY user_id
     ),
     s AS (

@@ -4,7 +4,9 @@ each written once: ``ops.similarity.cos6`` is the round-6 quotient
 ``ops.dedup.jaccard6`` the round-6 quotient ``n / (a + b - n)`` that
 every Jaccard oracle replays, ``ops.hashing`` the md5 -> 60-bit rule
 (first 15 hex chars of md5) and the 60-bit word table on each engine,
-and every other module goes through them. A second hand-written copy
+``workload._SQL_CENTS`` the money-in-cents rule ``round(value * 100)``
+(one SQL text both engines read), ``workload.experiments.sql_arm`` the
+``user_id % k`` arm split, and every other module goes through them. A second hand-written copy
 can drift from the oracle rule (a different rounding, a per-pair norm,
 another prefix length), so the package may hold exactly one of each.
 Static, so a new module cannot bring a copy back."""
@@ -146,3 +148,34 @@ def test_bit_table_built_only_in_hashing():
                     if re.search(r"bit_or\(", fh.read()):
                         found.append(os.path.relpath(os.path.join(root, f), PACKAGE))
     assert found == [os.path.join("ops", "hashing.py")]
+
+
+def _copies(pattern: str) -> dict[str, int]:
+    """Package module path -> number of matches of ``pattern``."""
+    found = {}
+    for root, _, files in os.walk(PACKAGE):
+        for f in sorted(files):
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path) as fh:
+                    n = len(re.findall(pattern, fh.read()))
+                if n:
+                    found[os.path.relpath(path, PACKAGE)] = n
+    return found
+
+
+def test_cents_rule_written_once_in_workload_init():
+    """``round(value * 100)``, as SQL text or over ``F.col("value")``,
+    is written once: ``workload._SQL_CENTS``, which DuckDB oracles
+    splice and ``workload.cents()`` parses for Spark."""
+    rule = r"round\(\s*(?:F\.col\(\s*[\"']value[\"']\s*\)|value)\s*\*\s*100\s*\)"
+    assert _copies(rule) == {os.path.join("workload", "__init__.py"): 1}
+
+
+def test_arm_split_written_only_in_experiments():
+    """The arm split, ``user_id`` modulo 2, 4 or a variable arm count,
+    is written once, in ``workload.experiments.sql_arm``; the Spark
+    ``arm`` parses that text. (``user_id % 5`` in ``temporal`` is a
+    divide-by-zero guard, not an arm.)"""
+    split = r"user_id[\"']?\)?\s*%\s*(?:[24]\b|\{)"
+    assert _copies(split) == {os.path.join("workload", "experiments.py"): 1}

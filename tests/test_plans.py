@@ -86,13 +86,13 @@ TRIPWIRE_EXCLUDED = frozenset({
     # test_streaming_pchart_equals_batch (streaming == batch
     # quality_pchart_returns row-for-row; PCHART_ORACLE verbatim)
     "streaming_pchart_returns",
-    # r8 wave 42 — policy test: tests/test_wave42.py
+    # experiments — policy test: tests/test_wave42.py
     # test_streaming_srm_equals_batch (streaming == batch
     # events_srm_check row-for-row; SRM_ORACLE verbatim)
     "streaming_srm_monitor",
-    # test_streaming_welch_equals_batch (tests/test_wave61.py:
-    # streaming == batch events_welch_ttest row-for-row; WELCH_ORACLE
-    # verbatim)
+    # experiments — policy test: tests/test_wave61.py
+    # test_streaming_welch_equals_batch (streaming == batch
+    # events_welch_ttest row-for-row; WELCH_ORACLE verbatim)
     "streaming_welch_monitor",
 })
 # The families the exclusions come from; used only by the meta-guard.

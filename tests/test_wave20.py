@@ -29,7 +29,7 @@ def test_cuped_perfect_covariate_equalizes_arms(spark, tmp_path):
     """post = pre exactly for every user (rho = 1): theta = 1,
     var_reduction = 1, and the adjusted means of both arms collapse to
     the same value even though the raw means differ."""
-    from etl_neotel_sql_automation_spark.workload.wave20 import (
+    from etl_neotel_sql_automation_spark.workload.experiments import (
         events_cuped_adjustment,
     )
 
@@ -54,7 +54,7 @@ def test_cuped_useless_covariate_is_identity(spark, tmp_path):
     NULL/undefined — but the POST means must still be reported
     unadjusted-readable: here we pin the raw means and that
     var_reduction is not a finite lie (NaN/NULL accepted)."""
-    from etl_neotel_sql_automation_spark.workload.wave20 import (
+    from etl_neotel_sql_automation_spark.workload.experiments import (
         events_cuped_adjustment,
     )
 
@@ -76,7 +76,7 @@ def test_cuped_useless_covariate_is_identity(spark, tmp_path):
 def test_power_mde_hand_computed(spark, tmp_path):
     """100 users per arm, 50 converters total (p = 0.25):
     mde = 2.801585 * sqrt(0.25 * 0.75 * (1/100 + 1/100))."""
-    from etl_neotel_sql_automation_spark.workload.wave20 import events_power_mde
+    from etl_neotel_sql_automation_spark.workload.experiments import events_power_mde
 
     ts = datetime.datetime(2024, 1, 10)
     rows = []

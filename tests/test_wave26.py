@@ -29,7 +29,7 @@ def test_sprt_accepts_h1_at_hand_computed_crossing(spark, tmp_path):
     (262364). ln(19)*1e6 = 2944439, so the walk crosses ACCEPT_H1 at
     user 12 (12 * 262364 = 3148368 >= 2944439; 11 users are short).
     Day 1 has 11 users (CONTINUE), day 2 adds 1 (ACCEPT_H1)."""
-    from etl_neotel_sql_automation_spark.workload.wave26 import (
+    from etl_neotel_sql_automation_spark.workload.experiments import (
         events_sprt_monitor,
     )
 
@@ -52,7 +52,7 @@ def test_sprt_accepts_h1_at_hand_computed_crossing(spark, tmp_path):
 def test_sprt_accepts_h0_on_all_misses(spark, tmp_path):
     """No conversions: each user adds ln(0.925) ~= -77962 micro-nats;
     38 users cross -ln(19) (38 * 77962 = 2962556 >= 2944439)."""
-    from etl_neotel_sql_automation_spark.workload.wave26 import (
+    from etl_neotel_sql_automation_spark.workload.experiments import (
         events_sprt_monitor,
     )
 

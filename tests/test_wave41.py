@@ -21,7 +21,7 @@ def _ev(rows, spark):
 
 
 def test_experiment_pipeline_hand_replay(spark):
-    from etl_neotel_sql_automation_spark.workload.wave41 import (
+    from etl_neotel_sql_automation_spark.workload.experiments import (
         experiment_pipeline_frame,
     )
 

@@ -33,7 +33,7 @@ def test_srm_verdict_ladder(spark):
     """chi2 = (n0-n1)^2 * 1e6 // n against the pinned thresholds:
     50/50 -> OK (chi2 0); 60/40 of 100 -> 4.0 > 3.841459 SUSPECT;
     70/30 of 100 -> 16.0 > 10.827566 SRM_ALARM. All exact integers."""
-    from etl_neotel_sql_automation_spark.workload.wave42 import srm_frame
+    from etl_neotel_sql_automation_spark.workload.experiments import srm_frame
 
     for n0, n1, chi2, verdict in (
         (50, 50, 0, "OK"),
@@ -51,7 +51,7 @@ def test_did_hand_replay(spark):
     """Four users, deltas computed by hand: control (users 2, 4) moves
     +100 and +300 cents; treatment (users 1, 3) moves +500 and +900.
     DiD = 700 - 200 = 500 cents; SE and t replayed with float math."""
-    from etl_neotel_sql_automation_spark.workload.wave42 import did_frame
+    from etl_neotel_sql_automation_spark.workload.experiments import did_frame
 
     pre_day = datetime.datetime(2024, 1, 10)
     post_day = datetime.datetime(2024, 1, 20)
@@ -79,7 +79,7 @@ def test_streaming_srm_equals_batch(spark):
     counts, verdict applied display-side) must produce exactly the
     batch events_srm_check rows — the cross-query consistency the
     oracle differential checks only engine-by-engine."""
-    from etl_neotel_sql_automation_spark.workload.wave42 import (
+    from etl_neotel_sql_automation_spark.workload.experiments import (
         events_srm_check,
         streaming_srm_monitor,
     )

@@ -11,7 +11,7 @@ import math
 
 
 def test_welch_hand_replay(spark):
-    from etl_neotel_sql_automation_spark.workload.wave48 import welch_frame
+    from etl_neotel_sql_automation_spark.workload.experiments import welch_frame
 
     t = datetime.datetime(2024, 1, 10)
     # control (users 2, 4): totals 100, 300 dollars; treatment

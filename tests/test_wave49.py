@@ -10,7 +10,7 @@ import datetime
 
 
 def test_post_stratification_kills_simpsons_confound(spark):
-    from etl_neotel_sql_automation_spark.workload.wave49 import (
+    from etl_neotel_sql_automation_spark.workload.experiments import (
         post_stratified_frame,
     )
 

@@ -10,7 +10,7 @@ import datetime
 
 
 def test_anova_partition_replayed_by_hand(spark):
-    from etl_neotel_sql_automation_spark.workload.wave50 import anova_frame
+    from etl_neotel_sql_automation_spark.workload.experiments import anova_frame
 
     ts = datetime.datetime(2024, 1, 1)
     # user -> total cents: arm0 {0: 100, 4: 300}, arm1 {1: 200, 5: 200},

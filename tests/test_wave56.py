@@ -11,7 +11,7 @@ import datetime
 
 
 def test_qini_curve_replayed_by_hand(spark):
-    from etl_neotel_sql_automation_spark.workload.wave56 import qini_frame
+    from etl_neotel_sql_automation_spark.workload.experiments import qini_frame
 
     pre = datetime.datetime(2024, 1, 5)
     post = datetime.datetime(2024, 1, 20)
@@ -54,7 +54,7 @@ def test_qini_negative_branch_truncates_toward_zero(spark):
     negative — the sign-explicit division must truncate toward zero
     identically to the hand value (3 users: deciles of unequal size
     exercise the non-divisible branch)."""
-    from etl_neotel_sql_automation_spark.workload.wave56 import qini_frame
+    from etl_neotel_sql_automation_spark.workload.experiments import qini_frame
 
     pre = datetime.datetime(2024, 1, 5)
     post = datetime.datetime(2024, 1, 20)

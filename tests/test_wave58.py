@@ -11,7 +11,7 @@ import math
 
 
 def test_tukey_pairs_replayed_by_hand(spark):
-    from etl_neotel_sql_automation_spark.workload.wave58 import tukey_frame
+    from etl_neotel_sql_automation_spark.workload.experiments import tukey_frame
 
     ts = datetime.datetime(2024, 1, 1)
     cents = {0: 100, 4: 300, 1: 200, 5: 200, 2: 400, 6: 600, 3: 100, 7: 100}

@@ -18,7 +18,7 @@ def _arm(user_id: int, seed: int) -> int:
 
 
 def test_permutation_test_matches_hashlib_replay(spark):
-    from etl_neotel_sql_automation_spark.workload.wave60 import (
+    from etl_neotel_sql_automation_spark.workload.experiments import (
         permutation_test_frame,
     )
 

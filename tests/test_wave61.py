@@ -11,10 +11,8 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_streaming_welch_equals_batch(spark):
-    from etl_neotel_sql_automation_spark.workload.wave48 import (
+    from etl_neotel_sql_automation_spark.workload.experiments import (
         events_welch_ttest,
-    )
-    from etl_neotel_sql_automation_spark.workload.wave61 import (
         streaming_welch_monitor,
     )
 

@@ -30,7 +30,7 @@ def _events(spark, users):
 
 
 def test_ips_snips_replayed_by_hand(spark):
-    from etl_neotel_sql_automation_spark.workload.wave62 import ips_frame
+    from etl_neotel_sql_automation_spark.workload.experiments import ips_frame
 
     # uid -> (pre_n, post cents); policy treats pre_n >= 5
     users = {
@@ -58,7 +58,7 @@ def test_ips_unbiased_when_policy_equals_log(spark):
     match the IPS estimate is 2 * total / N, which equals the logged
     average only after the propensity correction cancels: SNIPS (the
     matched mean) must equal the logged mean exactly."""
-    from etl_neotel_sql_automation_spark.workload.wave62 import ips_frame
+    from etl_neotel_sql_automation_spark.workload.experiments import ips_frame
 
     users = {
         1: (6, 900),   # arm 1, pi 1 -> match

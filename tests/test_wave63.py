@@ -13,7 +13,7 @@ import math
 
 
 def test_sandwich_terms_replayed_by_hand(spark):
-    from etl_neotel_sql_automation_spark.workload.wave63 import (
+    from etl_neotel_sql_automation_spark.workload.experiments import (
         cluster_se_frame,
     )
 

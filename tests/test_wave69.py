@@ -17,7 +17,7 @@ def _ts(week: int, dow: int = 2) -> datetime.datetime:
 
 
 def test_staggered_event_study_replayed(spark):
-    from etl_neotel_sql_automation_spark.workload.wave69 import (
+    from etl_neotel_sql_automation_spark.workload.experiments import (
         event_study_frame,
     )
 

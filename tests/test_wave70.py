@@ -19,7 +19,7 @@ def _arm(uid: int, seed: int) -> int:
 
 
 def test_bh_fdr_matches_python_replay(spark):
-    from etl_neotel_sql_automation_spark.workload.wave70 import bh_fdr_frame
+    from etl_neotel_sql_automation_spark.workload.experiments import bh_fdr_frame
 
     ts = datetime.datetime(2024, 1, 1)
     # uid -> (n_views, n_purchases, view_cents, purch_cents)

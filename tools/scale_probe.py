@@ -45,13 +45,12 @@ from etl_neotel_sql_automation_spark.ops.geo import grid_nearest  # noqa: E402
 from etl_neotel_sql_automation_spark.ops.text import sparse_cosine_topk  # noqa: E402
 from etl_neotel_sql_automation_spark.session import get_spark  # noqa: E402
 from etl_neotel_sql_automation_spark.workload import (  # noqa: E402
-    corpus_mining, corpus_stats, curation, final_wave, insights, quality,
-    wave7, wave8, wave12, wave13, wave14, wave15, wave16, wave17, wave18,
-    wave19, wave20, wave21, wave22, wave23, wave24, wave25, wave26, wave27,
-    wave29, wave31, wave32, wave33, wave34, wave35, wave36, wave37, wave38,
-    wave39, wave40, wave41, wave42, wave43, wave44, wave45, wave46, wave50,
-    wave51, wave52, wave53, wave54, wave55, wave56, wave57, wave58, wave59,
-    wave60, wave62, wave63, wave64, wave65, wave66, wave68, wave69, wave70,
+    corpus_mining, corpus_stats, curation, experiments, final_wave, insights,
+    quality, wave7, wave8, wave12, wave13, wave14, wave15, wave16, wave17,
+    wave18, wave19, wave20, wave21, wave22, wave23, wave24, wave25, wave26,
+    wave27, wave29, wave31, wave32, wave33, wave34, wave35, wave36, wave37,
+    wave38, wave39, wave40, wave43, wave44, wave45, wave46, wave51, wave52,
+    wave53, wave54, wave55, wave57, wave59, wave64, wave65, wave66, wave68,
     wave71, wave72, wave73, wave74, wave75, wave76, wave77, wave78,
 )
 from tools import synth  # noqa: E402
@@ -346,7 +345,7 @@ FAMILIES = {
         "rolling_wau_sketch": lambda t: quality.wau_sketch_frame(t["events"]),
         "markov_transitions": lambda t: insights.markov_frame(t["events"]),
         "lifecycle_weekly": lambda t: insights.lifecycle_frame(t["events"]),
-        "ab_test_readout": lambda t: insights.ab_test_frame(t["events"]),
+        "ab_test_readout": lambda t: experiments.ab_test_frame(t["events"]),
     },
     "dedup": {
         "exact": lambda t: D.exact_groups(t["docs"]),
@@ -517,8 +516,8 @@ FAMILIES = {
             t["orders_prio"], t["cust_nation"].withColumn("c_name", F.lit("c"))
         ),
         "seasonal": lambda t: wave19.seasonal_decompose_frame(t["orders_prio"]),
-        "cuped": lambda t: wave20.cuped_frame(t["purchase_events"]),
-        "power_mde": lambda t: wave20.power_mde_frame(t["purchase_events"]),
+        "cuped": lambda t: experiments.cuped_frame(t["purchase_events"]),
+        "power_mde": lambda t: experiments.power_mde_frame(t["purchase_events"]),
         "hill": lambda t: wave20.hill_frame(t["orders_prio"]),
         "best_split": lambda t: wave20.best_split_frame(t["orders_prio"]),
         "dup_payments": lambda t: wave21.duplicate_payments_frame(t["orders_prio"]),
@@ -531,7 +530,7 @@ FAMILIES = {
         "nrr": lambda t: wave25.nrr_frame(t["orders_prio"]),
         "scorecard": _wave17_scorecard,
         "stickiness": lambda t: wave25.stickiness_frame(t["purchase_events"]),
-        "sprt": lambda t: wave26.sprt_frame(t["purchase_events"]),
+        "sprt": lambda t: experiments.sprt_frame(t["purchase_events"]),
         "weekday_mix": lambda t: wave26.weekday_concentration_frame(t["orders_prio"]),
         "contrastive": lambda t: wave27.contrastive_pairs_frame(t["documents"]),
         "rolling_median": lambda t: wave27.rolling_median_frame(t["orders_prio"]),
@@ -582,9 +581,9 @@ FAMILIES = {
         "deployed": lambda t: wave36.hilbert_layout_deployed_frame(t.ckpt("orders_like")),
     },
     "wave41": {
-        "experiment_e2e": lambda t: wave41.experiment_pipeline_frame(t.ckpt("events5")),
-        "srm": lambda t: wave42.srm_frame(t.ckpt("events5")),
-        "did": lambda t: wave42.did_frame(t.ckpt("events5")),
+        "experiment_e2e": lambda t: experiments.experiment_pipeline_frame(t.ckpt("events5")),
+        "srm": lambda t: experiments.srm_frame(t.ckpt("events5")),
+        "did": lambda t: experiments.did_frame(t.ckpt("events5")),
         "split_leakage": lambda t: wave43.split_leakage_frame(t.ckpt("documents")),
         "threshold_sweep": lambda t: wave44.dedup_threshold_sweep_frame(
             t.ckpt("documents")
@@ -593,14 +592,14 @@ FAMILIES = {
         "reconcile": _wave41_reconcile,
     },
     "wave50": {
-        "anova_f": lambda t: wave50.anova_frame(t.ckpt("events5")),
-        "qini": lambda t: wave56.qini_frame(t.ckpt("events5")),
-        "tukey": lambda t: wave58.tukey_frame(t.ckpt("events5")),
-        "permutation": lambda t: wave60.permutation_test_frame(t.ckpt("events5")),
-        "ips": lambda t: wave62.ips_frame(t.ckpt("events5")),
-        "cluster_se": lambda t: wave63.cluster_se_frame(t.ckpt("events5")),
-        "event_study": lambda t: wave69.event_study_frame(t.ckpt("events5")),
-        "bh_fdr": lambda t: wave70.bh_fdr_frame(t.ckpt("events5")),
+        "anova_f": lambda t: experiments.anova_frame(t.ckpt("events5")),
+        "qini": lambda t: experiments.qini_frame(t.ckpt("events5")),
+        "tukey": lambda t: experiments.tukey_frame(t.ckpt("events5")),
+        "permutation": lambda t: experiments.permutation_test_frame(t.ckpt("events5")),
+        "ips": lambda t: experiments.ips_frame(t.ckpt("events5")),
+        "cluster_se": lambda t: experiments.cluster_se_frame(t.ckpt("events5")),
+        "event_study": lambda t: experiments.event_study_frame(t.ckpt("events5")),
+        "bh_fdr": lambda t: experiments.bh_fdr_frame(t.ckpt("events5")),
         "neyman": lambda t: wave72.neyman_frame(t.ckpt("events5")),
         "roc_auc": lambda t: wave51.roc_auc_frame(t.ckpt("documents")),
         "isotonic": lambda t: wave54.isotonic_frame(t.ckpt("documents")),
